@@ -8,9 +8,12 @@ the block manager (r12 verdict #3 found two corpus-sized violations).
 from multiple plan branches (it deduplicates the subtree outright) and
 for per-iteration lineage truncation in iterative operators.
 
-Centralizing the choice also gives the same-session A/B harness
-(``tools/ab_cache_r13.py``) a seam to interleave both strategies in
-one process without shipping env-var scaffolding in operator code.
+The module exists so the corpus-cache policy lives in one place:
+call :func:`cache_corpus` rather than naming a storage level. The
+minhash signature table goes through it, as do the graph edge list,
+the IVF assignment, the semantic-hybrid cosine pairs and the
+coordinated-sample orders; older call sites still spell
+``MEMORY_AND_DISK`` themselves.
 """
 
 from __future__ import annotations

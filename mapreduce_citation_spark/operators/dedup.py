@@ -27,6 +27,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cache_corpus
 from ..functions.text_funcs import (
     MINHASH_P,
     minhash_int_duck,
@@ -142,24 +143,6 @@ pairs AS (
 )"""
 
 
-#: dedup_minhash_lsh's signature-table materialization strategy —
-#: injectable so tools/ab_minhash.py can A/B the r6 ``localCheckpoint``
-#: variant against the r7 ``persist`` rule within ONE session (the
-#: repo's drift discipline: cross-window numbers never prove a
-#: regression). Production default stays ``persist`` — the measured
-#: 500k-doc scale choice (NOTES r7 #2/#4: localCheckpoint pins
-#: deserialized rows on-heap; persist is columnar and evictable).
-SIG_MATERIALIZE = "persist"
-
-
-def _materialize_sig(sig: DataFrame) -> DataFrame:
-    if SIG_MATERIALIZE == "localCheckpoint":
-        return sig.localCheckpoint()
-    if SIG_MATERIALIZE == "none":
-        return sig
-    return sig.persist(StorageLevel.MEMORY_AND_DISK)
-
-
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
@@ -176,30 +159,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Signatures/bands are pure map-side higher-order expressions (one
     codegen span, no shuffle); the only shuffles are the band-bucket
     self-join and the candidate→shingle verify joins — each keyed,
-    each linear in candidates, never in n². The verify strategy is
-    parameterized (equijoin vs per-pair ``array_intersect``) for the
-    r11-advisory hot-shingle A/B; both are exact, same output."""
+    each linear in candidates, never in n²."""
     return minhash_lsh_pairs(_docs(spark, sf_dir))
 
 
-def minhash_lsh_pairs(d: DataFrame, verify: str = "equijoin") -> DataFrame:
+def minhash_lsh_pairs(d: DataFrame) -> DataFrame:
     """Candidate generation + exact verify for ``dedup_minhash_lsh``.
 
-    ``verify`` picks the exact-Jaccard verification plan (identical
-    outputs, different data movement — the r11 verdict advisory's
-    A/B surface, measured in tools/ab_minhash_verify.py):
-
-    - ``"equijoin"``: re-derive EXPLODED shingles for candidate docs,
-      self-join on the shingle value (x.doc < y.doc), count matches
-      per pair. Each shingle row moves once, but a shingle shared by
-      m candidate docs emits C(m, 2) join rows — quadratic within a
-      hot shingle's value group.
-    - ``"intersect"``: re-derive shingle ARRAYS for candidate docs,
-      join each candidate pair to its two arrays, intersect
-      row-locally (the ``dedup_clusters`` shape). Arrays move once
-      per pair membership (a doc in p pairs ships its array p times),
-      but hot shingles cost nothing — work is Σ over pairs of
-      |A| + |B|, immune to value-group skew."""
+    Verification re-derives EXPLODED shingles for candidate docs,
+    self-joins on the shingle value (x.doc < y.doc) and counts matches
+    per pair. Each shingle row moves once, but a shingle shared by m
+    candidate docs emits C(m, 2) join rows — quadratic within a hot
+    shingle's value group. The per-pair ``array_intersect`` shape is
+    immune to that skew but lost on the ×100 corpus
+    (AB_MINHASH_VERIFY_r12.json)."""
     n_perm, n_bands, rows_per_band = 16, 4, 4
     # one pass: exploded distinct shingles, md5-digested ONCE each;
     # the 16 permutations are universal-hash integer arithmetic
@@ -218,7 +191,7 @@ def minhash_lsh_pairs(d: DataFrame, verify: str = "equijoin") -> DataFrame:
     # materialize the signature table once: the band self-join below
     # would otherwise evaluate the whole shingle+hash pipeline twice
     # (self-join sides only share work up to the last exchange)
-    sig = _materialize_sig(sig)
+    sig = cache_corpus(sig)
     band_cols = [
         F.concat(
             F.lit(f"{b}:"),
@@ -259,34 +232,6 @@ def minhash_lsh_pairs(d: DataFrame, verify: str = "equijoin") -> DataFrame:
     # degrades gracefully to a shuffle semi-join when candidates grow)
     cand_docs = d.join(docs_in_cand, "doc_id", "left_semi")
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    if verify == "intersect":
-        sha = cand_docs.select(
-            "doc_id", F.expr(_SH_SPARK).alias("sh")
-        )
-        pairs = (
-            cand.join(
-                sha.select(
-                    F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-                ),
-                "doc_a",
-            )
-            .join(
-                sha.select(
-                    F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-                ),
-                "doc_b",
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                "n_a",
-                "n_b",
-                F.size(F.array_intersect("sh_a", "sh_b")).alias("n_common"),
-            )
-        )
-        return pairs.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= 0.8
-        )
     exc = exploded_word_shingles(cand_docs, 3)
     common = (
         exc.alias("x")
@@ -334,55 +279,27 @@ def _ppjoin_pair_filters(num: int = 4, den: int = 5) -> "F.Column":
     return length_ok & positional_ok
 
 
-#: Rarest-first prefix derivation shape (r15, VERDICT r14 #3).
-#: "inrow" (default): after the per-shingle document-frequency attach,
-#: group each doc's (df, s) pairs with a complete-mode aggregate
-#: (repartition(doc_id) first — the r6 near-unique-key rule), sort
-#: rarest-first INSIDE the row and slice to the probe prefix BEFORE
-#: exploding. Versus the window shape this drops the sizes
-#: aggregate+join and both sorts (the ranking window's Exchange+Sort
-#: and the SMJ sorts of ranked⋈sizes), and only the ~n/5 prefix rows
-#: enter the downstream plan instead of every ranked shingle.
-#: "window": the pre-r15 df-join + row_number window + sizes join,
-#: kept reachable for the committed same-session A/B (tools/ab_r15.py).
-PREFIX_RANK = "inrow"
-
-
 def _rarest_prefix(ex: DataFrame) -> DataFrame:
     """(doc_id, s, rk, n_sh) PROBE-prefix rows — rk ≤ n_sh −
     ⌈0.8·n_sh⌉ + 1 under the global rarest-first (df, s) total order
     (document frequency over the full ``ex`` stream, shingle text as
     tie-break). Shared by ``dedup_ngram_jaccard`` and
     ``incremental_ingest_report``. Prefix/PPJoin correctness holds for
-    ANY total order applied consistently to both join sides, and both
-    variants implement the SAME (df ASC, s ASC) order — ``array_sort``
-    on struct(df, s) compares fields in declaration order with binary
-    string comparison, exactly ``orderBy("df", "s")`` — so the prefix
-    row sets are identical, not merely output-equivalent. ``ex`` must
-    be per-doc distinct (it is: ``exploded_word_shingles`` dedups), so
-    (df, s) is a strict total order within a doc and both the window
-    rank and the in-row sort are deterministic."""
-    from pyspark.sql import Window
+    ANY total order applied consistently to both join sides.
 
+    After the per-shingle document-frequency attach, each doc's
+    (df, s) pairs are grouped with a complete-mode aggregate
+    (repartition(doc_id) first — the r6 near-unique-key rule), sorted
+    rarest-first INSIDE the row and sliced to the probe prefix BEFORE
+    exploding, so only the ~n/5 prefix rows enter the downstream plan.
+    ``array_sort`` on struct(df, s) compares fields in declaration
+    order with binary string comparison, exactly ``orderBy("df", "s")``.
+    ``ex`` must be per-doc distinct (it is: ``exploded_word_shingles``
+    dedups), so (df, s) is a strict total order within a doc and the
+    ranks are deterministic. A row_number window + sizes join gives
+    the same rows but was slower (AB_R15_SF1.json)."""
     df_g = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     withdf = ex.join(df_g, "s")
-    if PREFIX_RANK == "window":
-        sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        ranked = withdf.select(
-            "doc_id",
-            "s",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("df", "s"))
-            .alias("rk"),
-        )
-        return (
-            ranked.join(sizes, "doc_id")
-            .filter(
-                F.col("rk")
-                <= F.col("n_sh") - F.expr("(4 * n_sh + 4) div 5") + 1
-            )
-            .select("doc_id", "s", "rk", "n_sh")
-        )
     grouped = (
         withdf.repartition(F.col("doc_id"))
         .groupBy("doc_id")
@@ -466,12 +383,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ceil(0.8·n) = (4n+4) div 5; ceil(8·n/9) = (8n+8) div 9. The
     # index prefix is a SUBSET of the probe prefix (ℓi ≤ ℓp for all
     # n), so only the probe stream is computed (``_rarest_prefix``,
-    # the shared rarest-first derivation — shape toggled by
-    # PREFIX_RANK) — and persisted (corpus-proportional ~n/5 of the
-    # shingle stream, read by both join sides; without it the index
-    # branch re-runs the whole df-join + ranking derivation, and the
-    # two sides' differing filters defeat ReusedExchange — measured
-    # 98.7 s vs 73.8 s at 500k docs for the recompute variant).
+    # the shared rarest-first derivation) — and persisted
+    # (corpus-proportional ~n/5 of the shingle stream, read by both
+    # join sides; without it the index branch re-runs the whole
+    # df-join + ranking derivation, and the two sides' differing
+    # filters defeat ReusedExchange — measured 98.7 s vs 73.8 s at
+    # 500k docs for the recompute variant).
     probe = _rarest_prefix(ex).persist(StorageLevel.MEMORY_AND_DISK)
     index = probe.filter(
         F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
@@ -597,28 +514,18 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def incremental_ingest_report(
-    d: DataFrame, delta_pred, asymmetric: bool = True
-) -> DataFrame:
+def incremental_ingest_report(d: DataFrame, delta_pred) -> DataFrame:
     """Delta-vs-base dedup report: see ``dedup_incremental_ingest``
     (the registered %8 instance — %7 was the rejected first cut, see
     its docstring) for semantics and scale notes; pytest drives this
     on a planted corpus.
 
-    The candidate join is ALWAYS the asymmetric index/probe split.
-    r9 first implemented the r8 verdict's size-conditional branch
-    (symmetric probe×probe when the delta side is large, motivated by
-    r8c's cross-window ~16% fraction-cohort regression) — then the
-    same-session interleaved A/B the house rules demand
-    (`tools/ab_ingest_branch.py`, AB_INGEST_BRANCH_r09.json) showed
-    asymmetric strictly faster on BOTH cohort shapes at the 100×
-    point (fixed 625-doc delta: 33.1 → 26.9 s; fraction 62.5k-doc
-    delta: 35.4 → 24.8 s, 1.42×; outputs identical), so the r8c
-    regression was window drift and the heuristic was retired before
-    it could ship the slower plan. ``asymmetric=False`` keeps the
-    symmetric single-join shape reachable for measurement; both
-    branches are lossless prefix-filter plans against the same
-    brute-force oracle."""
+    The candidate join is ALWAYS the asymmetric index/probe split. A
+    size-conditional symmetric probe×probe branch was retired after
+    the same-session interleaved A/B showed asymmetric strictly faster
+    on both cohort shapes at the 100× point, outputs identical
+    (AB_INGEST_BRANCH_r09.json). The plan is a lossless prefix filter
+    checked against the brute-force oracle."""
     # exact: digest semi-join, delta probes base
     h = d.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h"))
     exact = (
@@ -633,51 +540,41 @@ def incremental_ingest_report(
     )
     # near: one shingle stream feeds df counts, prefixes, verify; the
     # probe prefix comes from the shared rarest-first derivation
-    # (``_rarest_prefix`` — shape toggled by PREFIX_RANK)
+    # (``_rarest_prefix``)
     ex = exploded_word_shingles(d, 3).persist(StorageLevel.MEMORY_AND_DISK)
     pref = _rarest_prefix(ex)
-    if asymmetric:
-        # Asymmetric index/probe prefixes (same theorem as
-        # dedup_ngram_jaccard): each true pair's SMALLER doc (under
-        # the (n_sh, doc_id) total order) only needs its ~|y|/9 index
-        # prefix. The sides here are FIXED (delta vs base), so the
-        # split becomes two complementary branches — delta-probe ×
-        # base-index where the base doc is smaller, delta-index ×
-        # base-probe otherwise — each pair lands in exactly one. Both
-        # branches read ONE persisted probe-prefix cache (the index
-        # prefix is a further rank filter over the same rows —
-        # persisting avoids recomputing the df-join + ranking window
-        # per branch, the ReusedExchange lesson from the self-join
-        # variant).
-        pref = pref.persist(StorageLevel.MEMORY_AND_DISK)
-        idx_filter = (
-            F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
-        )
-        a_ge_b = (F.col("a.n_sh") > F.col("b.n_sh")) | (
-            (F.col("a.n_sh") == F.col("b.n_sh"))
-            & (F.col("a.doc_id") >= F.col("b.doc_id"))
-        )
-        delta_probe, delta_index = (
-            pref.filter(delta_pred),
-            pref.filter(delta_pred).filter(idx_filter),
-        )
-        base_probe, base_index = (
-            pref.filter(~delta_pred),
-            pref.filter(~delta_pred).filter(idx_filter),
-        )
-        cand = (
-            _ingest_pairs(delta_probe, base_index, a_ge_b)
-            .unionAll(_ingest_pairs(delta_index, base_probe, ~a_ge_b))
-            .distinct()
-        )
-    else:
-        # symmetric probe×probe join (the pre-r8c shape, kept
-        # measurable): one join, no persisted prefix cache (each side
-        # is read once — the shared df-join+window shuffle is reused
-        # via ReusedExchange)
-        cand = _ingest_pairs(
-            pref.filter(delta_pred), pref.filter(~delta_pred), F.lit(True)
-        ).distinct()
+    # Asymmetric index/probe prefixes (same theorem as
+    # dedup_ngram_jaccard): each true pair's SMALLER doc (under the
+    # (n_sh, doc_id) total order) only needs its ~|y|/9 index prefix.
+    # The sides here are FIXED (delta vs base), so the split becomes
+    # two complementary branches — delta-probe × base-index where the
+    # base doc is smaller, delta-index × base-probe otherwise — each
+    # pair lands in exactly one. Both branches read ONE persisted
+    # probe-prefix cache (the index prefix is a further rank filter
+    # over the same rows — persisting avoids recomputing the df-join +
+    # ranking per branch, the ReusedExchange lesson from the self-join
+    # variant).
+    pref = pref.persist(StorageLevel.MEMORY_AND_DISK)
+    idx_filter = (
+        F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
+    )
+    a_ge_b = (F.col("a.n_sh") > F.col("b.n_sh")) | (
+        (F.col("a.n_sh") == F.col("b.n_sh"))
+        & (F.col("a.doc_id") >= F.col("b.doc_id"))
+    )
+    delta_probe, delta_index = (
+        pref.filter(delta_pred),
+        pref.filter(delta_pred).filter(idx_filter),
+    )
+    base_probe, base_index = (
+        pref.filter(~delta_pred),
+        pref.filter(~delta_pred).filter(idx_filter),
+    )
+    cand = (
+        _ingest_pairs(delta_probe, base_index, a_ge_b)
+        .unionAll(_ingest_pairs(delta_index, base_probe, ~a_ge_b))
+        .distinct()
+    )
     common = (
         cand.select("doc_d", "doc_b")
         .join(ex.select(F.col("doc_id").alias("doc_d"), "s"), "doc_d")
@@ -1387,8 +1284,6 @@ def dedup_semantic_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache, once). The pair count is DATA-DEPENDENT (dup-rate ×
     # corpus — near-corpus-sized on a duplicate-heavy crawl), so the
     # r6 cache rule applies (r13 audit — was localCheckpoint).
-    from ..cache import cache_corpus
-
     pairs = cache_corpus(dedup_embedding_cosine(spark, sf_dir))
     d = _docs(spark, sf_dir)
     pair_ids = pairs.select(F.col("vec_a").alias("doc_id")).union(

@@ -124,18 +124,12 @@ def citation_coupling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rank_fold_expr(exact_fold: bool, dangling: bool = False) -> str:
-    """The per-key rank summation, in the two strategies ``pagerank``
-    exposes: a key-sorted ordered fold over (k, v) structs (bitwise
-    deterministic, per-key memory ∝ in-degree) or plain associative
-    ``sum`` (map-side partials, constant state — the at-scale form).
-    The dangling variant coalesces the empty aggregate to 0."""
-    if exact_fold:
-        fold = (
-            "aggregate(array_sort(collect_list(kv)), 0D, (acc, x) -> acc + x.v)"
-        )
-    else:
-        fold = "sum(kv.v)"
+def _rank_fold_expr(dangling: bool = False) -> str:
+    """The per-key rank summation ``pagerank`` uses: a key-sorted
+    ordered fold over (k, v) structs (bitwise deterministic, per-key
+    memory ∝ in-degree). The dangling variant coalesces the empty
+    aggregate to 0."""
+    fold = "aggregate(array_sort(collect_list(kv)), 0D, (acc, x) -> acc + x.v)"
     return f"coalesce({fold}, 0D)" if dangling else fold
 
 
@@ -143,7 +137,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 8,
     damping: float = 0.85,
-    exact_fold: bool = True,
 ) -> DataFrame:
     """DataFrame-iterative PageRank (power method).
 
@@ -157,22 +150,13 @@ def pagerank(
     :func:`pagerank_fixed_point` (associative AND hash-exact — r12
     verdict #1 judged it strictly dominant); this float formulation
     survives as the reference arithmetic the pure-python replay tests
-    pin both summation strategies against.
+    pin it against.
 
-    ``exact_fold`` selects the summation strategy — the exactness/
-    scale trade made explicit:
-
-    - ``True`` (default): per-target contribution sums and the
-      dangling sum are KEY-SORTED folds (collect_list → array_sort →
-      ordered aggregate), so every double is independent of partition
-      order. Costs per-key list memory proportional to in-degree —
-      fine at fixture scale, wrong for a skewed 100 TB graph (the
-      reason it left the gate path).
-    - ``False`` (scale mode): plain ``F.sum`` — associative map-side
-      partial aggregation, constant per-key state. Ranks differ from
-      the sorted fold only by float association order (≤ ulps per
-      iteration; both modes agree with the pure-python replay to 1e-9
-      in pytest).
+    Per-target contribution sums and the dangling sum are KEY-SORTED
+    folds (collect_list → array_sort → ordered aggregate), so every
+    double is independent of partition order. Costs per-key list
+    memory proportional to in-degree — fine at fixture scale, wrong
+    for a skewed 100 TB graph (the reason it left the gate path).
     """
     # materialize the loop-invariant relations once, and break lineage
     # every iteration (localCheckpoint) — otherwise iteration k re-runs
@@ -236,7 +220,7 @@ def pagerank(
                     F.col("node").alias("k"), F.col("rank").alias("v")
                 ).alias("kv")
             )
-            .agg(F.expr(_rank_fold_expr(exact_fold, dangling=True)).alias("_dangling"))
+            .agg(F.expr(_rank_fold_expr(dangling=True)).alias("_dangling"))
         )
         contribs = (
             edges_w.join(
@@ -251,7 +235,7 @@ def pagerank(
                 ).alias("kv"),
             )
             .groupBy("node")
-            .agg(F.expr(_rank_fold_expr(exact_fold)).alias("in_rank"))
+            .agg(F.expr(_rank_fold_expr()).alias("in_rank"))
         )
         # same association order as the python replay oracle:
         # (1-d)/n + (d * dangling) / n, then + d * in_rank
@@ -1213,24 +1197,20 @@ def pagerank_fixed_point(
 ) -> DataFrame:
     """PageRank with integer-quantized (fixed-point) arithmetic — the
     summation strategy that is BOTH cluster-scale and bitwise
-    deterministic, resolving the exactness/scale trade that
-    :func:`pagerank`'s ``exact_fold`` flag exposes:
-
-    - gate mode (``exact_fold=True``) is deterministic but pays
-      per-key ``collect_list`` memory ∝ in-degree;
-    - scale mode (``exact_fold=False``) is a plain associative
-      ``F.sum`` but float association order drifts by ulps per run;
-    - THIS variant stores ranks as BIGINT multiples of ``1/scale``
-      (1e-15). Every per-edge contribution is an integer floor
-      division, every reduction a plain ``F.sum`` over BIGINT —
-      associative and exact, so map-side partial aggregation engages
-      (constant per-key state, no lists) and the result is identical
-      regardless of partition order, task retries, or cluster size.
-      Damping 0.85 is the exact rational 17/20 applied as integer
-      multiply-then-floor-divide.
+    deterministic. A key-sorted float fold (:func:`pagerank`) is
+    deterministic but pays per-key ``collect_list`` memory ∝
+    in-degree; a plain float ``F.sum`` is associative but its
+    association order drifts by ulps per run. This variant stores
+    ranks as BIGINT multiples of ``1/scale`` (1e-15). Every per-edge
+    contribution is an integer floor division, every reduction a plain
+    ``F.sum`` over BIGINT — associative and exact, so map-side partial
+    aggregation engages (constant per-key state, no lists) and the
+    result is identical regardless of partition order, task retries,
+    or cluster size. Damping 0.85 is the exact rational 17/20 applied
+    as integer multiply-then-floor-divide.
 
     Quantization truncates ≤1 unit (1e-15) per floor division, so
-    ranks agree with the float variants to ~1e-12 after 6 iterations
+    ranks agree with the float :func:`pagerank` to ~1e-12 after 6 iterations
     (pinned in pytest) while the DuckDB oracle replays the integer
     algorithm hash-exactly. All operands are nonnegative, so Spark's
     ``div`` (truncate toward zero) and DuckDB's ``//`` (floor) agree.
@@ -2421,21 +2401,13 @@ def citation_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return random_walks(_edges(spark, sf_dir))
 
 
-def random_walks(e: DataFrame, per_hop_deg: bool = True) -> DataFrame:
+def random_walks(e: DataFrame) -> DataFrame:
     """The walk core on a prepared (from_paper, to_paper) edge frame —
     shared by the registered query and tools/scaling_walks.py.
 
-    r14 measured and REJECTED (AB_R14_INROW*.json, guide §1.1's
-    "the ideal plan is usually slower at first"): folding the landing
-    node's degree into the adjacency row (``per_hop_deg=False``) drops
-    the per-hop frontier⋈degree join, but attaching ``deg_b`` costs an
-    extra EDGE-sized exchange at build time (the degree join keys on
-    ``b`` while the ranking window keyed on ``a``), and the removed
-    joins were only node-sized probes whose adj-join exchange is
-    shared anyway (hash(a) satisfies the (a, idx) clustering). Same-
-    session interleaved A/B at sf1: deg-in-adj 0.78× — consistently
-    slower pairwise. The two-join shape ships; the refuted variant
-    stays reachable for the committed A/B."""
+    Folding the landing node's degree into the adjacency row instead
+    of the per-hop frontier⋈degree join was 0.78× at sf1: it adds an
+    edge-sized exchange at build time (AB_R14_INROW_SF1.json)."""
     und = (
         e.select(F.col("from_paper").alias("a"), F.col("to_paper").alias("b"))
         .union(e.select(F.col("to_paper"), F.col("from_paper")))
@@ -2456,28 +2428,12 @@ def random_walks(e: DataFrame, per_hop_deg: bool = True) -> DataFrame:
         "b",
         F.row_number().over(Window.partitionBy("a").orderBy("b")).alias("idx"),
     )
-    if not per_hop_deg:
-        # the landing node's degree rides in the adjacency row; deg is
-        # node-sized and already checkpointed, so the attach is one
-        # broadcast-or-SMJ join at build time
-        adj_rows = adj_rows.join(
-            deg.select(F.col("a").alias("b"), F.col("deg").alias("deg_b")),
-            "b",
-        )
     adj = (
         adj_rows.repartition(F.col("a"), F.col("idx"))
         .sortWithinPartitions("a", "idx")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # the start frontier needs _deg only when the degree rides in the
-    # adjacency row (per_hop_deg=False); the shipped per-hop-join path
-    # re-derives it at hop 1, so carrying it there was dead weight
-    # (r15 cleanup, VERDICT r14 #8 — Catalyst pruned it anyway)
-    fr = (
-        deg.select(F.col("a").alias("start"))
-        if per_hop_deg
-        else deg.select(F.col("a").alias("start"), F.col("deg").alias("_deg"))
-    )
+    fr = deg.select(F.col("a").alias("start"))
     cols: list[str] = []
     cur = "start"
     # adj is re-joined every hop, and from hop 2 on it is already in
@@ -2487,33 +2443,25 @@ def random_walks(e: DataFrame, per_hop_deg: bool = True) -> DataFrame:
     # unambiguous.
     for k in range(1, WALK_LEN + 1):
         dk, ak = f"_d{k}", f"_a{k}"
-        if per_hop_deg:
-            want = fr.join(
-                deg.alias(dk), fr[cur] == F.col(f"{dk}.a")
-            ).select(
-                "start",
-                *cols,
-                F.col(cur).alias("_cur"),
-                F.col(f"{dk}.deg").alias("_deg"),
-            )
-        else:
-            want = fr.select(
-                "start", *cols, F.col(cur).alias("_cur"), "_deg"
-            )
+        want = fr.join(
+            deg.alias(dk), fr[cur] == F.col(f"{dk}.a")
+        ).select(
+            "start",
+            *cols,
+            F.col(cur).alias("_cur"),
+            F.col(f"{dk}.deg").alias("_deg"),
+        )
         want = want.select(
             "start",
             *cols,
             "_cur",
             F.expr(_walk_pick_spark("start", "_cur", k)).alias("_widx"),
         )
-        sel = [F.col(f"{ak}.b").alias(f"v{k}")]
-        if not per_hop_deg:
-            sel.append(F.col(f"{ak}.deg_b").alias("_deg"))
         fr = want.join(
             adj.alias(ak),
             (F.col("_cur") == F.col(f"{ak}.a"))
             & (F.col("_widx") == F.col(f"{ak}.idx")),
-        ).select("start", *cols, *sel)
+        ).select("start", *cols, F.col(f"{ak}.b").alias(f"v{k}"))
         cols.append(f"v{k}")
         cur = f"v{k}"
     return fr.select("start", *cols)

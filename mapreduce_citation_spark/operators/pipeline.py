@@ -24,25 +24,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
-#: corpus_curation_funnel's stage-2 exact-dedup shape (r15, VERDICT
-#: r14 #1 — MEASURED AND REJECTED). The "keeper" variant (digest-only
-#: groupBy keeper table + doc_id semi-join, the dedup_exact shape)
-#: was the r14 verdict's named candidate; the same-session interleaved
-#: A/Bs refuted it: embedded funnel 0.91× at sf0.1, ISOLATED stage-2
-#: fragment 0.54× at sf1 (5/5 pairwise losses — AB_R15.json /
-#: AB_R15_SF1.json). Why it loses, per guide §8's own crux: the
-#: funnel needs the SURVIVING FULL ROWS, so the keeper decision must
-#: be re-attached — an extra full pass over the survivors for the
-#: digest aggregate plus a join that, whenever the keeper set outgrows
-#: the broadcast threshold (i.e. at any real scale), re-shuffles the
-#: payload by doc_id anyway. The window shape moves the payload
-#: exactly once under the digest with no second pass. dedup_exact
-#: itself never re-attaches (its OUTPUT is the digest table), which
-#: is why keeper is right there and wrong here. "window" ships;
-#: "keeper" stays reachable for the committed A/B (tools/ab_r15.py).
-FUNNEL_EXACT_DEDUP = "window"
-
-
 @register(
     "pipeline_filter_funnel",
     oracle=f"""
@@ -463,35 +444,20 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "n_chars", F.expr(QG_KEEP_SPARK).alias("keep")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     s1 = base.filter(F.col("keep")).drop("keep")
-    if FUNNEL_EXACT_DEDUP == "window":
-        # r14 shape, kept reachable for the A/B: Exchange+Sort of the
-        # (digest, text, n_chars) payload under md5(text)
-        w = Window.partitionBy(
-            F.md5(F.col("text").cast("binary"))
-        ).orderBy("doc_id")
-        s2 = (
-            s1.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    else:
-        # r15 keeper shape (guide §2.3 / §8: decide with small rows,
-        # move the payload zero times): min-doc_id keeper per digest
-        # computed digest-only (map-side partial agg, 16-byte key +
-        # 8-byte doc_id on the wire), then a doc_id semi-join keeps
-        # exactly the _rn == 1 rows (doc_id is unique, so min-per-
-        # digest ≡ first-by-orderBy(doc_id)). The keeper set is
-        # doc_id-only — AQE broadcasts it from measured size at bench
-        # scale, so the survivor payload is never exchanged; at
-        # cluster scale a too-big keeper set degrades to one payload
-        # shuffle by doc_id, which the old shape paid anyway (by
-        # digest, plus a Sort).
-        keep2 = (
-            s1.groupBy(F.md5(F.col("text").cast("binary")).alias("_h"))
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        s2 = s1.join(keep2, "doc_id", "left_semi")
+    # stage 2: exact dedup keeps the min doc_id per md5(text) — one
+    # Exchange+Sort of the payload under the digest. A digest-only
+    # keeper table + doc_id semi-join lost here (AB_R15_SF1.json): the
+    # funnel needs the surviving full rows, so the keeper must be
+    # re-attached with a second pass and, past the broadcast
+    # threshold, a payload shuffle by doc_id.
+    w = Window.partitionBy(
+        F.md5(F.col("text").cast("binary"))
+    ).orderBy("doc_id")
+    s2 = (
+        s1.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
     s2 = s2.persist(StorageLevel.MEMORY_AND_DISK)
     # stage 3: near dedup — reuse the registered cluster operator's
     # exact output (corpus-level cluster membership); survivors not in

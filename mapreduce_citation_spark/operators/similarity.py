@@ -543,87 +543,51 @@ def knn_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # own result's input).
     from ..cache import cache_corpus
 
-    if IVF_ASSIGN == "window":
-        # retired r13 shape, reachable for tools/ab_r14.py: crossJoin
-        # with the centroid TABLE + row_number over vec_id — an
-        # Exchange+Sort of corpus×k rows with the embedding payload
-        # riding along, and a 2-rows-per-vector cache
-        cdot = (
-            "aggregate(zip_with(embedding, cvec, (x, y) -> CAST(x AS DOUBLE) * y), "
-            "0D, (a, b) -> a + b)"
+    # r14 (guide §2.4, the kmeans in-row argmin applied here): pack
+    # the centroids into ONE array row and take the top-2 INSIDE
+    # each point row (array_sort with an explicit (csim DESC,
+    # cent_id ASC) comparator — the same SQL comparison semantics
+    # a row_number window would use). No corpus×k Exchange+Sort, and
+    # the cache holds ONE row per vector (top-2 ids as a 2-element
+    # array) instead of two embedding-bearing rows (AB_R14_INROW.json).
+    carr = cent.agg(
+        F.array_sort(F.collect_list(F.struct("cent_id", "cvec"))).alias(
+            "cents"
         )
-        scored_cent = n.crossJoin(F.broadcast(cent)).select(
-            "vec_id", "embedding", "nrm", "cent_id",
-            (F.expr(cdot) / F.col("nrm")).alias("csim"),
+    )
+    top2 = (
+        "slice(array_sort("
+        "transform(cents, c -> named_struct("
+        "'csim', aggregate(zip_with(embedding, c.cvec, "
+        "(x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, b) -> a + b) / nrm, "
+        "'cent_id', c.cent_id)), "
+        "(l, r) -> CASE WHEN l.csim > r.csim THEN -1 "
+        "WHEN l.csim < r.csim THEN 1 "
+        "WHEN l.cent_id < r.cent_id THEN -1 "
+        "WHEN l.cent_id > r.cent_id THEN 1 ELSE 0 END), 1, 2)"
+    )
+    ranked = cache_corpus(
+        n.crossJoin(F.broadcast(carr)).select(
+            "vec_id", "embedding", "nrm", F.expr(top2).alias("_t2")
         )
-        w_assign = Window.partitionBy("vec_id").orderBy(
-            F.col("csim").desc(), F.col("cent_id").asc()
+    )
+    corpus = ranked.select(
+        F.expr("_t2[0].cent_id").alias("cent_id"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_emb"),
+        F.col("nrm").alias("n_nrm"),
+    )
+    probes = (
+        ranked.filter(F.col("vec_id") < 10)
+        .select(
+            F.explode(F.expr("transform(_t2, t -> t.cent_id)")).alias(
+                "cent_id"
+            ),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            F.col("nrm").alias("q_nrm"),
         )
-        ranked = cache_corpus(
-            scored_cent.withColumn("crank", F.row_number().over(w_assign))
-            .filter(F.col("crank") <= 2)
-        )
-        corpus = ranked.filter(F.col("crank") == 1).select(
-            F.col("cent_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("n_emb"),
-            F.col("nrm").alias("n_nrm"),
-        )
-        probes = (
-            ranked.filter((F.col("vec_id") < 10) & (F.col("crank") <= 2))
-            .select(
-                F.col("cent_id"),
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                F.col("nrm").alias("q_nrm"),
-            )
-        )
-    else:
-        # r14 (guide §2.4, the kmeans in-row argmin applied here): pack
-        # the centroids into ONE array row and take the top-2 INSIDE
-        # each point row (array_sort with an explicit (csim DESC,
-        # cent_id ASC) comparator — the same SQL comparison semantics
-        # the window ordering used). The corpus×k Exchange+Sort is
-        # gone and the cache holds ONE row per vector (top-2 ids as a
-        # 2-element array) instead of two embedding-bearing rows.
-        carr = cent.agg(
-            F.array_sort(F.collect_list(F.struct("cent_id", "cvec"))).alias(
-                "cents"
-            )
-        )
-        top2 = (
-            "slice(array_sort("
-            "transform(cents, c -> named_struct("
-            "'csim', aggregate(zip_with(embedding, c.cvec, "
-            "(x, y) -> CAST(x AS DOUBLE) * y), 0D, (a, b) -> a + b) / nrm, "
-            "'cent_id', c.cent_id)), "
-            "(l, r) -> CASE WHEN l.csim > r.csim THEN -1 "
-            "WHEN l.csim < r.csim THEN 1 "
-            "WHEN l.cent_id < r.cent_id THEN -1 "
-            "WHEN l.cent_id > r.cent_id THEN 1 ELSE 0 END), 1, 2)"
-        )
-        ranked = cache_corpus(
-            n.crossJoin(F.broadcast(carr)).select(
-                "vec_id", "embedding", "nrm", F.expr(top2).alias("_t2")
-            )
-        )
-        corpus = ranked.select(
-            F.expr("_t2[0].cent_id").alias("cent_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("n_emb"),
-            F.col("nrm").alias("n_nrm"),
-        )
-        probes = (
-            ranked.filter(F.col("vec_id") < 10)
-            .select(
-                F.explode(F.expr("transform(_t2, t -> t.cent_id)")).alias(
-                    "cent_id"
-                ),
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                F.col("nrm").alias("q_nrm"),
-            )
-        )
+    )
     dot = (
         "aggregate(zip_with(q_emb, n_emb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "0D, (a, b) -> a + b)"
@@ -1020,12 +984,6 @@ _KM_SCALE = 1 << 20
 _KM_K = 8
 _KM_ITERS = 3
 
-#: Squared L2 distance between two BIGINT vectors (Spark SQL HOF).
-#: Magnitude: diff ≤ 2^21, squared ≤ 2^42, ×64 dims ≤ 2^48 — safely
-#: inside BIGINT for the per-point distance and the corpus-wide
-#: inertia sum.
-_KM_DIST = "aggregate(zip_with(xq, cvec, (a, b) -> (a - b) * (a - b)), 0L, (s, v) -> s + v)"
-
 #: In-row argmin over the packed centroid array (r14, guide §2.4):
 #: one struct per centroid with its squared-L2 distance, then
 #: ``array_min`` — struct ordering is field-lexicographic, so the min
@@ -1038,16 +996,6 @@ _KM_BEST = (
     " 0L, (s, v) -> s + v), "
     "'cent_id', c.cent_id)))"
 )
-
-#: Assignment-pass strategy — "inrow" (shipped) vs "window" (the
-#: retired corpus×k row_number shape), injectable so tools/ab_r14.py
-#: can interleave both within ONE session (the repo's drift rule:
-#: cross-window numbers never prove anything).
-KM_ASSIGN = "inrow"
-
-#: Same switch for knn_ivf_ann's coarse-centroid assignment.
-IVF_ASSIGN = "inrow"
-
 
 def kmeans_fixed_point(
     e: DataFrame,
@@ -1069,9 +1017,9 @@ def kmeans_fixed_point(
     of partition order or cluster size.
 
     Per iteration (the textbook distributed plan):
-    - assignment: points × broadcast centroid table (k rows), squared
-      L2 distance as a zip_with fold, argmin via row_number — the
-      corpus never shuffles for scoring;
+    - assignment: points × the broadcast packed centroid array,
+      squared L2 distance as a zip_with fold, argmin inside the row —
+      the corpus never shuffles for scoring;
     - update: posexplode members → per-(cluster, dim) integer SUM and
       COUNT, centroid component = ``sum div count``. Spark's ``div``
       and DuckDB's ``//`` both truncate toward zero (probed: -7//2 =
@@ -1102,27 +1050,14 @@ def kmeans_fixed_point(
     )
 
     def assign(centroids: DataFrame) -> DataFrame:
-        # r14 (guide §2.4 — remove shuffles outright): the previous
-        # shape crossJoined each point with the k-row centroid TABLE
-        # and ranked the k scored copies with row_number over
-        # Window.partitionBy(vec_id) — an Exchange+Sort of corpus×k
-        # rows (xq payload riding along) per assignment pass, 4 passes
-        # per query. Packing the centroids into ONE array row and
-        # taking the (dist, cent_id)-min INSIDE the point row keeps
-        # scoring entirely map-side: zero exchanges per pass, and the
-        # argmin arithmetic/tie-break is identical (integer operands,
-        # struct ordering = dist ASC, cent_id ASC). ``rk`` stays in
-        # the schema (constant 1) for the window-shape consumers.
-        # The retired window shape stays reachable (KM_ASSIGN) for the
-        # same-session A/B in tools/ab_r14.py.
-        if KM_ASSIGN == "window":
-            scored = q.crossJoin(F.broadcast(centroids)).select(
-                "vec_id", "xq", "cent_id", F.expr(_KM_DIST).alias("dist")
-            )
-            w = Window.partitionBy("vec_id").orderBy(
-                F.col("dist").asc(), F.col("cent_id").asc()
-            )
-            return scored.withColumn("rk", F.row_number().over(w))
+        # Packing the centroids into ONE array row and taking the
+        # (dist, cent_id)-min INSIDE the point row keeps scoring
+        # map-side: zero exchanges per pass, with the oracle's
+        # row_number tie-break (integer operands, struct ordering =
+        # dist ASC, cent_id ASC). A per-centroid row_number window
+        # costs an Exchange+Sort of corpus×k rows per pass
+        # (AB_R14_KMEANS_SF1B.json). ``rk`` stays in the schema
+        # (constant 1) for the consumers that filter on it.
         carr = centroids.agg(
             F.array_sort(F.collect_list(F.struct("cent_id", "cvec"))).alias(
                 "cents"

@@ -1421,15 +1421,6 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: verbatim in >= 2 distinct documents.
 BOILER_SEG, BOILER_MIN_DOCS = 8, 2
 
-#: r15 (VERDICT r14 #6): the (doc_id, n_tok, segs) base frame has two
-#: consumers — the segment-hash stream and the final apply join — so
-#: without a cache the scan + tokenize + segment transform runs twice
-#: (the r7 cache rule: same projection, no distinguishing pushdown →
-#: cache). "persist" (default) materializes it MEMORY_AND_DISK;
-#: "none" keeps the recompute shape reachable for tools/ab_r15.py.
-BOILER_BASE_CACHE = "persist"
-
-
 @register(
     "text_boilerplate_strip",
     oracle=f"""
@@ -1511,10 +1502,9 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"ELSE array() END"
         ).alias("segs"),
     )
-    if BOILER_BASE_CACHE == "persist":
-        # two consumers (hash stream + apply join) — cache so the
-        # tokenize/segment pass runs once (r7 rule; A/B'd in r15)
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # two consumers (hash stream + apply join) — cache so the
+    # tokenize/segment pass runs once (r7 rule; AB_R15_SF1.json)
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
     # (doc_id, h) pair stream has two consumers (the df count and the
     # hits join) — persisted columnar/evictable so the segment hashes
     # compute once (r7 cache rule: same projection, no distinguishing

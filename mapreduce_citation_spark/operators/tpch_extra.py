@@ -34,15 +34,6 @@ QTY = "CAST(l_quantity AS DECIMAL(12,2))"
 RETAIL = "CAST(p_retailprice AS DECIMAL(12,2))"
 
 
-#: q21's "no other late supplier" derivation (r15, VERDICT r14 #5).
-#: "count" (default): one orderkey-keyed countDistinct over the slim
-#: persisted ``late`` table; orders with exactly one distinct late
-#: suppkey keep ALL their late rows via an orderkey semi-join.
-#: "selfjoin": the pre-r15 late×late semi + (orderkey, suppkey) anti
-#: pair, kept reachable for the committed A/B (tools/ab_r15.py).
-Q21_SOLE = "count"
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -523,10 +514,10 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (ship-lag > 90 days as the lateness signal):
     suppliers who were the SOLE late supplier on a multi-supplier
     order. EXISTS → left-semi on (orderkey, other-supplier present);
-    NOT EXISTS → left-anti on (orderkey, other-supplier late). Both
-    probe sides are pre-aggregated distinct key sets, so the semi/anti
-    joins stream lineitem once each — the de-correlated plan TPC-H's
-    official variants hand-write."""
+    NOT EXISTS → left-semi on orders with exactly one distinct late
+    supplier. Both probe sides are pre-aggregated orderkey sets, so
+    the semi joins stream lineitem once each — the de-correlated plan
+    TPC-H's official variants hand-write."""
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     s = _t(spark, sf_dir, "supplier")
@@ -535,7 +526,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAY"))
         .select("l_orderkey", "l_suppkey")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    l1, l2 = late.alias("l1"), late.alias("l3")
+    l1 = late.alias("l1")
     # EXISTS another supplier on the order — checked ONLY for orders
     # that have a late line at all: the semi-join against the (small)
     # late-order set runs before the supplier distinct-count, so the
@@ -557,34 +548,18 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         multi, F.col("l1.l_orderkey") == multi.l_orderkey, "left_semi"
     )
     # NOT EXISTS another LATE supplier on the order
-    if Q21_SOLE == "selfjoin":
-        # pre-r15 shape: late×late semi (orderkey equi + suppkey
-        # non-equi), then an (orderkey, suppkey)-keyed anti join
-        other_late = (
-            l1.alias("x")
-            .join(
-                l2,
-                (F.col("x.l_orderkey") == F.col("l3.l_orderkey"))
-                & (F.col("x.l_suppkey") != F.col("l3.l_suppkey")),
-                "left_semi",
-            )
-        )
-        sole_late = with_other.join(
-            other_late, ["l_orderkey", "l_suppkey"], "left_anti"
-        )
-    else:
-        # r15 (guide §2.4): "no other late supplier on the order" ⇔
-        # the order has exactly ONE distinct late suppkey, so one
-        # orderkey-keyed countDistinct (partial-aggregated, key-only
-        # output → AQE-broadcast probe side) replaces the late×late
-        # semi join AND the (orderkey, suppkey) anti shuffle
-        nls = (
-            late.groupBy("l_orderkey")
-            .agg(F.countDistinct("l_suppkey").alias("_nls"))
-            .filter(F.col("_nls") == 1)
-            .select("l_orderkey")
-        )
-        sole_late = with_other.join(nls, "l_orderkey", "left_semi")
+    # ⇔ the order has exactly ONE distinct late suppkey, so one
+    # orderkey-keyed countDistinct (partial-aggregated, key-only output
+    # → AQE-broadcast probe side) stands in for a late×late semi join
+    # plus an (orderkey, suppkey) anti shuffle: one SMJ fewer, timing
+    # flat (AB_R15_SF1.json)
+    nls = (
+        late.groupBy("l_orderkey")
+        .agg(F.countDistinct("l_suppkey").alias("_nls"))
+        .filter(F.col("_nls") == 1)
+        .select("l_orderkey")
+    )
+    sole_late = with_other.join(nls, "l_orderkey", "left_semi")
     return (
         sole_late.join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
         .groupBy("s_name")

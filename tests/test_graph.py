@@ -184,36 +184,6 @@ def test_coupling_symmetric_threshold(spark, sf_dir):
     assert all(r["n_shared"] >= 3 and r["citer_a"] < r["citer_b"] for r in rows)
 
 
-def test_pagerank_scale_mode_agrees_and_drops_listfold(spark):
-    """exact_fold=False (the 100 TB path: plain associative F.sum, no
-    per-key list) must agree with gate mode to float-association
-    tolerance, and its plan must contain no collect_list — i.e. it
-    really buys map-side partial aggregation."""
-    from mapreduce_citation_spark.operators.graph import pagerank
-
-    edges = [
-        ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"),
-        ("e", "c"),
-    ]
-    df = spark.createDataFrame(edges, ["from_paper", "to_paper"])
-    exact = {r["node"]: r["rank"] for r in pagerank(df, iterations=6).collect()}
-    fast = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, iterations=6, exact_fold=False).collect()
-    }
-    assert exact.keys() == fast.keys()
-    for v in exact:
-        assert fast[v] == pytest.approx(exact[v], abs=1e-9)
-
-    # aggregation shape: scale mode must use the associative sum
-    # (map-side partials), never a per-key list fold
-    from mapreduce_citation_spark.operators.graph import _rank_fold_expr
-
-    assert "collect_list" not in _rank_fold_expr(False)
-    assert "collect_list" not in _rank_fold_expr(False, dangling=True)
-    assert "collect_list" in _rank_fold_expr(True)
-
-
 def test_pagerank_fixed_point_agrees_and_is_integer_exact(spark):
     """Fixed-point mode (the benched at-scale strategy) must agree
     with gate mode to quantization tolerance on every rank, produce

@@ -5,6 +5,10 @@ batch shape) are pinned here."""
 
 from __future__ import annotations
 
+import collections
+import itertools
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2369,11 +2373,20 @@ def test_paragraph_ingest_planted_and_batching_independent(spark):
         arts.unpersist()
 
 
+def _word_shingles_py(text: str, k: int = 3) -> set[str]:
+    """Distinct word k-shingles over whitespace tokens, empties dropped
+    — the ``functions/text_funcs.shingles_spark`` rule (Java ``\\s``
+    is the ASCII whitespace class, not Python's ``str.split()``)."""
+    t = [w for w in re.split(r"[ \t\n\x0b\f\r]+", text) if w]
+    return {" ".join(t[i:i + k]) for i in range(len(t) - k + 1)}
+
+
 def test_minhash_verify_modes_agree(spark):
-    """The two exact-Jaccard verify plans (shingle-value equijoin vs
-    per-pair array_intersect — the r12 A/B surface) are the same
-    computation: identical pair sets and jaccard values on a planted
-    corpus with both a hot-shingle clique and ordinary near-dups."""
+    """The shipped exact-Jaccard verify (shingle-value equijoin) against
+    a pure-Python Jaccard on a planted corpus with a hot-shingle clique
+    (6 docs sharing a 30-token core), a near-dup pair and a loner:
+    every returned jaccard equals Python's value exactly, and the
+    returned pairs are exactly the pairs Python puts at J ≥ 0.8."""
     from mapreduce_citation_spark.operators.dedup import minhash_lsh_pairs
 
     core = " ".join(f"hot{i:02d}" for i in range(30))
@@ -2383,13 +2396,49 @@ def test_minhash_verify_modes_agree(spark):
     rows.append((101, " ".join(w[:39] + ["zz"])))          # near-dup pair
     rows.append((200, " ".join(f"x{i:02d}" for i in range(40))))  # loner
     d = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = {
+    got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(d, verify="equijoin").collect()
+        for r in minhash_lsh_pairs(d).collect()
     }
-    b = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(d, verify="intersect").collect()
+    sh = {i: _word_shingles_py(t) for i, t in rows}
+    want = {}
+    for a, b in itertools.combinations(sorted(sh), 2):
+        n_common = len(sh[a] & sh[b])
+        j = n_common / (len(sh[a]) + len(sh[b]) - n_common)
+        if j >= 0.8:
+            want[(a, b)] = j
+    assert got == want
+    assert (100, 101) in got
+    assert not any(200 in pair for pair in got)
+
+
+def test_rarest_prefix_matches_python_replay(spark, sf_dir):
+    """``_rarest_prefix`` PREFIX ROWS (not just operator output) on the
+    fixture corpus equal a pure-Python replay: document frequency per
+    shingle, each doc's distinct shingles ordered (df ASC, s ASC), rank
+    rk from 1, kept while rk ≤ n − ⌈0.8·n⌉ + 1."""
+    import pyarrow.parquet as pq
+
+    from mapreduce_citation_spark.operators import dedup
+
+    d = dedup._docs(spark, sf_dir)
+    got = {
+        (r["doc_id"], r["s"], r["rk"], r["n_sh"])
+        for r in dedup._rarest_prefix(
+            dedup.exploded_word_shingles(d, 3)
+        ).collect()
     }
-    assert a == b and (100, 101) in a
-    assert all(v >= 0.8 for v in a.values())
+    docs = pq.read_table(
+        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
+    ).to_pylist()
+    sh = {r["doc_id"]: _word_shingles_py(r["text"]) for r in docs}
+    df = collections.Counter(s for ss in sh.values() for s in ss)
+    want = set()
+    for doc_id, ss in sh.items():
+        n = len(ss)
+        keep = n + (-4 * n // 5) + 1  # n − ⌈4n/5⌉ + 1, integer-exact
+        for rk, s in enumerate(sorted(ss, key=lambda s: (df[s], s)), 1):
+            if rk <= keep:
+                want.add((doc_id, s, rk, n))
+    assert got, "empty prefix stream — fixture or derivation broken"
+    assert got == want
