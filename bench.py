@@ -178,9 +178,10 @@ def _compare_block(
       must show up raw, not only after normalization (which would
       otherwise fabricate flags in a fast window).
 
-    A raw ratio alone never proves a regression on this drifting VM
-    (CLAUDE.md); the house adjudication rule — same-session 7-run
-    treatment — is unchanged, this only picks which flags demand it."""
+    A raw ratio alone never proves a regression on this drifting VM;
+    a flag is adjudicated by an interleaved A/B against the baseline's
+    revision (``python tools/ab.py REV NAME``), this only picks which
+    flags demand it."""
     prior = _prior_artifact(sf)
     if prior is None:
         return None

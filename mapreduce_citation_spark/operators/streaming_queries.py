@@ -136,15 +136,9 @@ def _stateful_shuffle_partitions(
     multi-core state commit even on tiny fixtures), capped at the
     session default (a cluster deployment raises the session value —
     at 100 TB this returns the cap, i.e. behavior is unchanged where
-    state actually needs to spread). $SPARK_GRAFT_STREAM_SHUFFLE_
-    PARTITIONS overrides: a number forces that count, "session"
-    disables the adaptation (the pre-r15 behavior, kept for A/Bs).
+    state actually needs to spread). The cap wins over the floor: a
+    session below 4 partitions keeps its own value.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env == "session":
-        return None
-    if env:
-        return env
     src = os.path.join(sf_dir, table)
     try:
         if os.path.isdir(src):
@@ -159,7 +153,7 @@ def _stateful_shuffle_partitions(
         return None
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = (total + _STREAM_PART_BYTES - 1) // _STREAM_PART_BYTES
-    return str(max(4, min(session, n)))
+    return str(min(session, max(4, n)))
 
 
 def _drain_stateful(

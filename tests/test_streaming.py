@@ -1302,3 +1302,65 @@ def test_hard_kill_and_resume_from_checkpoint_fresh_jvm(spark, sf_dir, tmp_path)
     )
     assert rows(snap) == rows(ref)
     assert rows(snap) == rows(batch)
+
+
+class _StubSpark:
+    """Just the ``spark.conf.get`` the partition rule reads; no JVM."""
+
+    def __init__(self, session_parts: int):
+        self.conf = self
+        self._parts = str(session_parts)
+
+    def get(self, key):
+        assert key == "spark.sql.shuffle.partitions"
+        return self._parts
+
+
+def _sparse(path, mb):
+    with open(path, "wb"):
+        pass
+    os.truncate(path, mb * 1024 * 1024)
+
+
+def test_stateful_shuffle_partitions_rule(tmp_path, monkeypatch):
+    """One partition per 32 MB of source, floored at 4 and capped at
+    the session value; the cap wins when the session is below 4."""
+    from mapreduce_citation_spark.operators.streaming_queries import (
+        _stateful_shuffle_partitions as rule,
+    )
+
+    tiny = tmp_path / "tiny"
+    tiny.mkdir()
+    (tiny / "events.parquet").write_bytes(b"x" * 1024)
+    assert rule(_StubSpark(32), str(tiny)) == "4"
+    assert rule(_StubSpark(2), str(tiny)) == "2"
+
+    big = tmp_path / "big"
+    big.mkdir()
+    _sparse(big / "events.parquet", 200)
+    assert rule(_StubSpark(32), str(big)) == "7"
+
+    # a directory source counts its parquet parts only (not _SUCCESS,
+    # checksums or other side files)
+    parts = tmp_path / "dir" / "events.parquet"
+    parts.mkdir(parents=True)
+    for i in range(3):
+        _sparse(parts / f"part-{i}.parquet", 50)
+    _sparse(parts / ".part-0.parquet.crc.tmp", 1024)
+    assert rule(_StubSpark(32), str(tmp_path / "dir")) == "5"
+
+    assert rule(_StubSpark(32), str(tmp_path / "missing")) is None
+
+    # the rule reads no environment knob: an environment that answers
+    # "session" to every name leaves it unchanged
+    class _AnyEnv(dict):
+        def get(self, key, default=None):
+            return "session"
+
+        def __getitem__(self, key):
+            return "session"
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "environ", _AnyEnv())
+        got = rule(_StubSpark(32), str(tiny))
+    assert got == "4"

@@ -1,0 +1,113 @@
+"""Tests of the measuring tools under ``tools/``: the import guard, the
+repack checksum and the two-revision A/B harness."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import importlib
+import json
+import os
+import subprocess
+import sys
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from tools.ab import normalize_plan
+from tools.repack_rowgroups import _checksum
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_OWN = ("mapreduce_citation_spark", "bench", "tools")
+
+
+def _own_imports(path: str):
+    """(module, name) for every ``from <own module> import name`` and
+    (module, None) for every ``import <own module>`` in one file."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0:
+            if node.module.split(".")[0] in _OWN:
+                for alias in node.names:
+                    yield node.module, alias.name
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] in _OWN:
+                    yield alias.name, None
+
+
+def test_tools_imports_resolve():
+    """A tool that imports a name the package no longer has fails here,
+    not when someone next runs it."""
+    missing = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "tools", "*.py"))):
+        for module, name in _own_imports(path):
+            mod = importlib.import_module(module)
+            if name is None or hasattr(mod, name):
+                continue
+            try:
+                importlib.import_module(f"{module}.{name}")
+            except ModuleNotFoundError:
+                missing.append(f"{os.path.basename(path)}: {module}.{name}")
+    assert not missing, missing
+
+
+def test_repack_checksum_covers_every_column(tmp_path):
+    """Two files that differ only in their second column must not get
+    the same checksum."""
+    one, two = str(tmp_path / "one.parquet"), str(tmp_path / "two.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), one)
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "w"]}), two)
+    con = duckdb.connect()
+    assert _checksum(con, one) == _checksum(con, one)
+    assert _checksum(con, one)[0] == _checksum(con, two)[0] == 3
+    assert _checksum(con, one) != _checksum(con, two)
+
+
+def test_normalize_plan_strips_run_dependent_ids():
+    a = (
+        "(3) Exchange\nInput [2]: [paper_id#123, citations#45L]\n"
+        "Arguments: hashpartitioning(paper_id#123, 4), ENSURE_REQUIREMENTS, "
+        "[plan_id=17]\n(1) Scan ExistingRDD\nMapPartitionsRDD[217] at "
+        "localCheckpoint\n"
+    )
+    b = (
+        a.replace("#123", "#9").replace("#45L", "#6L")
+        .replace("plan_id=17", "plan_id=2").replace("RDD[217]", "RDD[220]")
+    )
+    assert normalize_plan(a) == normalize_plan(b)
+    assert normalize_plan(a) == (
+        "(3) Exchange\nInput [2]: [paper_id#, citations#]\n"
+        "Arguments: hashpartitioning(paper_id#, 4), ENSURE_REQUIREMENTS\n"
+        "(1) Scan ExistingRDD\nMapPartitionsRDD[N] at localCheckpoint\n"
+    )
+    assert normalize_plan(a) != normalize_plan(a.replace(", 4)", ", 5)"))
+
+
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(ROOT, ".git")),
+    reason="ab.py compares against a git revision; this checkout has none",
+)
+def test_ab_head_against_worktree_end_to_end(sf_dir, tmp_path):
+    """HEAD against the working tree on a query neither side changes:
+    exit 0, one digest over all runs, identical plans."""
+    ab = [sys.executable, os.path.join(ROOT, "tools", "ab.py")]
+    out = tmp_path / "ab.json"
+    run = subprocess.run(
+        [*ab, "HEAD", "top_cited", "--sf-dir", sf_dir, "--json", str(out)],
+        cwd=ROOT, capture_output=True, text=True, timeout=900,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    q = json.loads(out.read_text())["queries"]["top_cited"]
+    assert len(q["digests"]) == 1 and q["digests"][0][0] == 30
+    assert len(q["base"]["runs_s"]) == len(q["change"]["runs_s"]) == 5
+
+    plans = subprocess.run(
+        [*ab, "--plans", "HEAD", "top_cited", "--sf-dir", sf_dir],
+        cwd=ROOT, capture_output=True, text=True, timeout=900,
+    )
+    assert plans.returncode == 0, plans.stdout[-3000:] + plans.stderr[-3000:]
+    assert "top_cited: identical" in plans.stdout

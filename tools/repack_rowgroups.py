@@ -26,12 +26,14 @@ import pyarrow.parquet as pq
 
 def _checksum(con: duckdb.DuckDBPyConnection, path: str) -> tuple[int, int]:
     """(row count, order-independent sum of per-row hashes) — the same
-    set-level standard the repo's A/B tools use."""
+    set-level standard the repo's A/B tools use. The hash is over the
+    whole row as one struct: ``COLUMNS(*)`` would expand into one SUM
+    per column."""
     n, h = con.execute(
         "SELECT COUNT(*), "
-        "COALESCE(SUM(CAST(hash(COLUMNS(*)::VARCHAR) AS HUGEINT)), 0) "
-        f"% 18446744073709551616 FROM read_parquet('{path}')"
-    ).fetchone()[:2]
+        "COALESCE(SUM(CAST(hash(t::VARCHAR) AS HUGEINT)), 0) "
+        f"% 18446744073709551616 FROM read_parquet('{path}') t"
+    ).fetchone()
     return int(n), int(h)
 
 
