@@ -124,140 +124,60 @@ def citation_coupling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rank_fold_expr(dangling: bool = False) -> str:
-    """The per-key rank summation ``pagerank`` uses: a key-sorted
-    ordered fold over (k, v) structs (bitwise deterministic, per-key
-    memory ∝ in-degree). The dangling variant coalesces the empty
-    aggregate to 0."""
-    fold = "aggregate(array_sort(collect_list(kv)), 0D, (acc, x) -> acc + x.v)"
-    return f"coalesce({fold}, 0D)" if dangling else fold
+def _fixpoint(
+    edges: DataFrame, labels: DataFrame, cap: int, longest: bool = False
+) -> tuple[DataFrame, int, bool]:
+    """Monotone label propagation along ``edges`` to its fixpoint, at
+    most ``cap`` rounds — the one loop behind connected components,
+    both SCC passes and condensation layering.
 
+    ``edges`` is a loop-invariant (src, dst) table the caller has laid
+    out once and persisted (MEMORY_AND_DISK, columnar, evictable — the
+    r6 cache rule). The cached relation keeps its outputPartitioning
+    and ordering, so when it is repartitioned + sorted on ``src`` (the
+    min-label callers) each round's sort-merge join exchanges/sorts
+    only the label table. ``labels`` is a
+    (key, value) table. Each round every key takes the min of its
+    value and its in-neighbours' values — or, ``longest``, the max of
+    its value and 1 + theirs (longest-path relaxation). Both folds are
+    monotone, so a key changed iff a neighbour's candidate beat it:
+    the changed flag rides the step itself and is counted from the
+    checkpointed rows — no extra old×new join per round. Lineage is
+    broken every round (localCheckpoint on the label table only).
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 8,
-    damping: float = 0.85,
-) -> DataFrame:
-    """DataFrame-iterative PageRank (power method).
-
-    Per iteration: contributions = edges ⋈ ranks (shuffle on
-    from/node), then sum per target (shuffle on to). Dangling mass
-    (nodes with no out-edges — every 'part' in the bipartite graph)
-    is redistributed uniformly so total rank stays 1. Returns
-    (node, rank).
-
-    PYTEST-ONLY since r13: the registered ``citation_pagerank`` runs
-    :func:`pagerank_fixed_point` (associative AND hash-exact — r12
-    verdict #1 judged it strictly dominant); this float formulation
-    survives as the reference arithmetic the pure-python replay tests
-    pin it against.
-
-    Per-target contribution sums and the dangling sum are KEY-SORTED
-    folds (collect_list → array_sort → ordered aggregate), so every
-    double is independent of partition order. Costs per-key list
-    memory proportional to in-degree — fine at fixture scale, wrong
-    for a skewed 100 TB graph (the reason it left the gate path).
-    """
-    # materialize the loop-invariant relations once, and break lineage
-    # every iteration (localCheckpoint) — otherwise iteration k re-runs
-    # iterations 1..k-1 and the job is O(k²) in shuffles.
-    #
-    # The edge table is the loop's big side (the 100 TB relation) and
-    # is joined on from_paper EVERY iteration, so it pays its shuffle
-    # ONCE here: repartition + sortWithinPartitions on the join key,
-    # then persist — the cached relation keeps its outputPartitioning
-    # AND ordering (unlike localCheckpoint, whose ExistingRDD scan
-    # forgets both — probed on pyspark 4.1), so each iteration's
-    # sort-merge join exchanges/sorts only the ranks side. Measured at
-    # sf0.1: ~25-30% off the 6-iteration wall time.
-    #
-    # out_deg rides INSIDE the edge layout (a window count over the
-    # same partitioning — no join, no extra shuffle), and each rank
-    # row carries a loop-invariant is_dangling flag, so an iteration
-    # no longer joins ranks×out_deg in either branch: the dangling
-    # mass is a plain filter+fold over the checkpointed ranks and the
-    # contribution join is the only rank shuffle. Two rank-table
-    # shuffle joins per iteration removed vs the r4 shape.
-    from pyspark.sql import Window
-
-    edges_w = (
-        edges.repartition(F.col("from_paper"))
-        .sortWithinPartitions("from_paper")
-        .withColumn(
-            "out_deg", F.count(F.lit(1)).over(Window.partitionBy("from_paper"))
+    Returns ``(labels, iterations, converged)``: iterations counts the
+    rounds run (the converging round re-derives an unchanged table);
+    converged=False means the cap hit first and the labeling may be
+    partial."""
+    key, val = labels.columns
+    if longest:
+        agg, fold = F.max(val) + F.lit(1), F.greatest
+    else:
+        agg, fold = F.min(val), F.least
+    labels = labels.localCheckpoint()
+    for it in range(1, cap + 1):
+        best = (
+            edges.join(labels, edges.src == labels[key])
+            .groupBy(F.col("dst").alias(key))
+            .agg(agg.alias("_best"))
         )
-        .persist()
-    )
-    # node set + dangling flag in ONE aggregation: tag citer
-    # occurrences False / cited occurrences True and take min(bool)
-    # per node (false < true) — a node with any out-edge is
-    # non-dangling. Replaces distinct-union + distinct + join.
-    nodes = (
-        edges_w.select(
-            F.col("from_paper").alias("node"),
-            F.lit(False).alias("is_dangling"),
-        )
-        .union(edges_w.select("to_paper", F.lit(True)))
-        .groupBy("node")
-        .agg(F.min("is_dangling").alias("is_dangling"))
-        .localCheckpoint()
-    )
-    n_total = nodes.count()
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n_total).alias("rank"), "is_dangling"
-    )
-    for _ in range(iterations):
-        # Dangling mass as a LAZY 1-row aggregate folded in via a
-        # broadcast crossJoin (the q22 lazy-scalar pattern,
-        # relational.py) — no driver-side collect per iteration: the
-        # whole iteration is ONE job, and at 100 TB the dangling sum
-        # rides the same pass instead of costing an extra full scan of
-        # the ranks per iteration.
-        dangling = (
-            ranks.filter(F.col("is_dangling"))
+        cand = F.coalesce("_best", F.col(val))
+        stepped = (
+            labels.join(best, key, "left")
             .select(
-                F.struct(
-                    F.col("node").alias("k"), F.col("rank").alias("v")
-                ).alias("kv")
-            )
-            .agg(F.expr(_rank_fold_expr(dangling=True)).alias("_dangling"))
-        )
-        contribs = (
-            edges_w.join(
-                ranks.filter(~F.col("is_dangling")),
-                edges_w.from_paper == F.col("node"),
-            )
-            .select(
-                F.col("to_paper").alias("node"),
-                F.struct(
-                    F.col("from_paper").alias("k"),
-                    (F.col("rank") / F.col("out_deg")).alias("v"),
-                ).alias("kv"),
-            )
-            .groupBy("node")
-            .agg(F.expr(_rank_fold_expr()).alias("in_rank"))
-        )
-        # same association order as the python replay oracle:
-        # (1-d)/n + (d * dangling) / n, then + d * in_rank
-        base = F.lit((1.0 - damping) / n_total) + (
-            F.lit(damping) * F.col("_dangling")
-        ) / F.lit(float(n_total))
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (base + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))).alias(
-                    "rank"
+                key,
+                fold(val, cand).alias(val),
+                (cand > F.col(val) if longest else cand < F.col(val)).alias(
+                    "_changed"
                 ),
-                "is_dangling",
             )
             .localCheckpoint()
         )
-    # ranks are checkpointed (eagerly materialized), so the cached
-    # edge layout is no longer referenced
-    edges_w.unpersist()
-    return ranks.select("node", "rank")
+        changed = stepped.filter(F.col("_changed")).count()
+        labels = stepped.drop("_changed")
+        if changed == 0:
+            return labels, it, True
+    return labels, cap, False
 
 
 def connected_components(
@@ -267,73 +187,46 @@ def connected_components(
 
     Each node starts labeled with itself; every iteration each node
     takes the min label among itself and its neighbors (edges treated
-    undirected); stop when no label changes. Iterations are join+agg
-    on node id; lineage broken per iteration (localCheckpoint on the
-    O(nodes) label table only). Returns (node, component) where
-    component is the smallest node label in the component.
+    undirected); stop when no label changes. Returns (node, component)
+    where component is the smallest node label in the component.
 
     The undirected edge list is the loop's corpus-sized invariant and
-    is probed on ``b`` every iteration, so it pays its shuffle ONCE:
-    repartition + sortWithinPartitions on the join key, then persist
-    (MEMORY_AND_DISK, columnar, evictable — the r6 cache rule). The
-    cached relation keeps its outputPartitioning and ordering, so each
-    iteration's sort-merge join exchanges/sorts only the node-sized
-    label table — the same loop-invariant layout every PageRank-family
-    loop here uses (see pagerank_fixed_point). Label monotonicity
-    (min-fold never raises a label) lets the fixpoint check ride the
-    step itself: a label changed iff some neighbor's label undercut
-    it, so the changed flag is computed inline and counted from the
-    checkpointed rows — no extra old×new join per iteration."""
+    is probed on its label-source side every iteration, so it pays its
+    shuffle ONCE — the layout and the inline fixpoint check are
+    :func:`_fixpoint`'s. ``stats`` (optional) records ``iterations``
+    (rounds RUN) and ``converged`` (False: the cap hit first and the
+    labeling may be partial — the signal the auto dispatcher keys on)."""
     und = (
-        edges.select(F.col("from_paper").alias("a"), F.col("to_paper").alias("b"))
-        .union(edges.select(F.col("to_paper"), F.col("from_paper")))
+        edges.select(F.col("to_paper").alias("src"), F.col("from_paper").alias("dst"))
+        .union(edges.select("from_paper", "to_paper"))
         .distinct()
-        .repartition(F.col("b"))
-        .sortWithinPartitions("b")
+        .repartition(F.col("src"))
+        .sortWithinPartitions("src")
         .persist()
     )
-    labels = (
-        und.select(F.col("a").alias("node"))
+    labels, iterations, converged = _fixpoint(
+        und,
+        und.select(F.col("dst").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint()
+        .select("node", F.col("node").alias("component")),
+        max_iterations,
     )
-    converged = False
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
-        neighbor_min = (
-            und.join(labels, und.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        stepped = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    "component", F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_min", F.col("component")) < F.col("component")
-                ).alias("_changed"),
-            )
-            .localCheckpoint()
-        )
-        changed = stepped.filter(F.col("_changed")).count()
-        labels = stepped.drop("_changed")
-        if changed == 0:
-            converged = True
-            break
     und.unpersist()
     if stats is not None:
-        # iterations = label-propagation rounds RUN (the converging
-        # round re-derives an unchanged label set); converged=False
-        # means the cap hit first and the labeling may be partial —
-        # the signal the auto dispatcher keys on
         stats["iterations"] = iterations
         stats["converged"] = converged
     return labels
+
+
+def _component_sizes(labels: DataFrame, key: str = "component") -> DataFrame:
+    """The top-20 component-size report: members per label, largest
+    first, ties by label."""
+    return (
+        labels.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("n_nodes"))
+        .orderBy(F.col("n_nodes").desc(), F.col(key).asc())
+        .limit(20)
+    )
 
 
 def _components_oracle(iters: int = 20) -> str:
@@ -394,13 +287,7 @@ def citation_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation (see ``_components_oracle``) so the driver gate is a
     hard hash match; pytest additionally replays with a union-find
     oracle."""
-    labels = connected_components(_edges(spark, sf_dir))
-    return (
-        labels.groupBy("component")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy(F.col("n_nodes").desc(), F.col("component").asc())
-        .limit(20)
-    )
+    return _component_sizes(connected_components(_edges(spark, sf_dir)))
 
 
 def connected_components_star(
@@ -519,13 +406,7 @@ def citation_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement, and pytest separately pins the star path against a
     union-find replay on a long-path graph where 20 min-label rounds
     would NOT converge (the shape star contraction exists for)."""
-    labels = connected_components_star(_edges(spark, sf_dir))
-    return (
-        labels.groupBy("component")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy(F.col("n_nodes").desc(), F.col("component").asc())
-        .limit(20)
-    )
+    return _component_sizes(connected_components_star(_edges(spark, sf_dir)))
 
 
 #: Auto-dispatch probe budget: min-label rounds tried before declaring
@@ -539,9 +420,7 @@ COMPONENTS_PROBE_ROUNDS = 4
 
 
 def connected_components_auto(
-    edges: DataFrame,
-    probe_rounds: int = COMPONENTS_PROBE_ROUNDS,
-    stats: dict | None = None,
+    edges: DataFrame, stats: dict | None = None
 ) -> DataFrame:
     """Connected components with the r10-measured decision rule
     ENCODED (r10 verdict #6 — it previously lived only in SCALE.md
@@ -557,12 +436,12 @@ def connected_components_auto(
 
     Diameter is unknown up front (computing it costs a BFS — as much
     as the job itself), so dispatch is a BOUNDED PROBE: run min-label
-    for at most ``probe_rounds`` rounds; if it reaches its fixpoint
-    the labels are final — return them (small-diameter case, probe IS
-    the answer, nothing wasted). If the cap hits first, the graph is
-    deep: discard the partial labels (a non-converged min-label table
-    is not a valid labeling) and run star contraction. Worst case
-    wastes ``probe_rounds`` cheap label rounds; in exchange the
+    for at most ``COMPONENTS_PROBE_ROUNDS`` rounds; if it reaches its
+    fixpoint the labels are final — return them (small-diameter case,
+    probe IS the answer, nothing wasted). If the cap hits first, the
+    graph is deep: discard the partial labels (a non-converged
+    min-label table is not a valid labeling) and run star contraction.
+    Worst case wastes the probe's cheap label rounds; in exchange the
     common shallow case never pays star's per-round edge rewrites.
 
     ``stats`` (optional) records ``mode`` ("min_label" | "star") and
@@ -570,16 +449,13 @@ def connected_components_auto(
     branch fired."""
     probe: dict = {}
     labels = connected_components(
-        edges, max_iterations=probe_rounds, stats=probe
+        edges, max_iterations=COMPONENTS_PROBE_ROUNDS, stats=probe
     )
-    if probe["converged"]:
-        if stats is not None:
-            stats["mode"] = "min_label"
-            stats["probe_iterations"] = probe["iterations"]
-        return labels
     if stats is not None:
-        stats["mode"] = "star"
+        stats["mode"] = "min_label" if probe["converged"] else "star"
         stats["probe_iterations"] = probe["iterations"]
+    if probe["converged"]:
+        return labels
     return connected_components_star(edges, stats=stats)
 
 
@@ -598,13 +474,7 @@ def citation_components_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     and min-label serves the result; the long-path dispatch to star is
     pinned by pytest on the 60-node path the r10 diameter probe
     measured."""
-    labels = connected_components_auto(_edges(spark, sf_dir))
-    return (
-        labels.groupBy("component")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy(F.col("n_nodes").desc(), F.col("component").asc())
-        .limit(20)
-    )
+    return _component_sizes(connected_components_auto(_edges(spark, sf_dir)))
 
 
 #: SCC iteration budget. Outer rounds = FW-BW partition-refinement
@@ -632,72 +502,38 @@ SCC_INNER_ROUNDS = 13
 SCC_INNER_ESCALATION = 8
 
 
-def _min_label_directed(
-    edges_keyed: DataFrame,
-    nodes: DataFrame,
-    rounds: int,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Min-label propagation along DIRECTED edges to fixpoint (capped):
-    every node starts as its own label; each round a node takes the min
-    of its label and its in-neighbors' labels. ``edges_keyed`` is
-    (src, dst) already repartitioned/sorted on ``src`` — the probe side
-    of the per-round join — so iterations exchange only the node-sized
-    label table (the loop-invariant layout every iterative operator
-    here uses). Monotone min-fold: the changed flag rides the step
-    itself, no old×new join (see :func:`connected_components`).
+def _escalating_fixpoint(
+    edges: DataFrame,
+    labels: DataFrame,
+    budget: int,
+    what: str,
+    risk: str,
+    longest: bool = False,
+) -> tuple[DataFrame, int, bool]:
+    """:func:`_fixpoint` under a round budget mirrored in an unrolled
+    oracle — a budget that can no longer bind SILENTLY (r13 ADVICE).
 
-    r13 (ADVICE): the cap can no longer bind SILENTLY. If ``rounds``
-    (the oracle-mirrored budget) is exhausted before ``changed == 0``,
-    propagation ESCALATES — continues up to
-    ``rounds × SCC_INNER_ESCALATION`` — and reports what happened via
-    ``stats``: ``converged`` (fixpoint reached), ``iterations`` (rounds
-    actually run), ``cap_extended`` (escalation fired). A truncated
-    label table short of its fixpoint is not a valid labeling: under
-    FW-BW refinement it would split an SCC across classes irreversibly
-    while the outer loop still stabilized (refinement only splits,
-    never re-merges)."""
-    labels = nodes.select("node", F.col("node").alias("lab")).localCheckpoint()
-    converged = False
-    hard_cap = rounds * SCC_INNER_ESCALATION
-    it = 0
-    while it < hard_cap:
-        it += 1
-        nbr = (
-            edges_keyed.join(labels, edges_keyed.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lab").alias("nm"))
-        )
-        stepped = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least("lab", F.coalesce("nm", F.col("lab"))).alias("lab"),
-                (F.coalesce("nm", F.col("lab")) < F.col("lab")).alias("_chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = stepped.filter(F.col("_chg")).count()
-        labels = stepped.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats["iterations"] = it
-        stats["converged"] = converged
-        stats["cap_extended"] = it > rounds
+    If ``budget`` is exhausted before the fixpoint, propagation
+    ESCALATES — continues up to ``budget × SCC_INNER_ESCALATION`` —
+    and the caller reports it (``iterations > budget`` is its
+    ``cap_extended``); if even that cap binds, a RuntimeWarning names
+    ``what`` did not converge and the ``risk`` it carries. A truncated
+    table short of its fixpoint is not a valid labeling: under FW-BW
+    refinement it would split an SCC across classes irreversibly while
+    the outer loop still stabilized (refinement only splits, never
+    re-merges)."""
+    hard_cap = budget * SCC_INNER_ESCALATION
+    labels, iterations, converged = _fixpoint(edges, labels, hard_cap, longest)
     if not converged:
         import warnings
 
         warnings.warn(
-            f"min-label propagation did not reach its fixpoint within "
-            f"{hard_cap} rounds (budget {rounds} × escalation "
-            f"{SCC_INNER_ESCALATION}); the resulting SCC partition may "
-            f"be over-split",
+            f"{what} did not reach its fixpoint within {hard_cap} rounds "
+            f"(budget {budget} × escalation {SCC_INNER_ESCALATION}); {risk}",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
-    return labels
+    return labels, iterations, converged
 
 
 def strongly_connected_components(
@@ -773,25 +609,30 @@ def strongly_connected_components(
             .filter(F.col("cs") == F.col("cd"))
             .select("src", "dst")
         )
-        ef = (
-            same_cls.repartition(F.col("src"))
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        eb = (
-            same_cls.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
+        # forward on the class-restricted edges, backward on their
+        # reversal; each pass keyed on its probe side and persisted
+        fb = []
+        for directed in (
+            same_cls,
+            same_cls.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        ):
+            keyed = (
+                directed.repartition(F.col("src"))
+                .sortWithinPartitions("src")
+                .persist()
             )
-            .repartition(F.col("src"))
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        fstat: dict = {}
-        bstat: dict = {}
-        fwd = _min_label_directed(ef, nodes, inner_rounds, stats=fstat)
-        bwd = _min_label_directed(eb, nodes, inner_rounds, stats=bstat)
-        inner_extended = inner_extended or fstat["cap_extended"] or bstat["cap_extended"]
-        inner_converged = inner_converged and fstat["converged"] and bstat["converged"]
+            lab, it, ok = _escalating_fixpoint(
+                keyed,
+                nodes.select("node", F.col("node").alias("lab")),
+                inner_rounds,
+                "min-label propagation",
+                "the resulting SCC partition may be over-split",
+            )
+            keyed.unpersist()
+            inner_extended = inner_extended or it > inner_rounds
+            inner_converged = inner_converged and ok
+            fb.append(lab)
+        fwd, bwd = fb
         # refinement label: length-prefixed pair encoding — injective
         # for ARBITRARY node-id strings (a bare 'f|b' join collides
         # when ids may contain the delimiter: ('a','a|a|a') vs
@@ -816,8 +657,6 @@ def strongly_connected_components(
             .filter(F.col("cls") != F.col("prev"))
             .count()
         )
-        ef.unpersist()
-        eb.unpersist()
         p = newp
         if ndiff == 0:
             # label strings reproduced themselves: classes are stable
@@ -933,12 +772,8 @@ def citation_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics on planted shapes (2-cycle vs DAG chain, the
     diamond that defeats the single-pass (fwd, bwd) heuristic, a
     3-cycle with a tail) against the fixture-free definition."""
-    labels = strongly_connected_components(_edges(spark, sf_dir))
-    return (
-        labels.groupBy("scc_id")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy(F.col("n_nodes").desc(), F.col("scc_id").asc())
-        .limit(20)
+    return _component_sizes(
+        strongly_connected_components(_edges(spark, sf_dir)), "scc_id"
     )
 
 
@@ -995,7 +830,7 @@ def citation_scc_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 0:12794 … 6:5), so synchronous one-hop-per-round relaxation needs 6
 #: productive rounds + 1 confirming; 8 leaves one round of margin.
 #: The cap cannot bind silently — same escalation + stats discipline
-#: as ``_min_label_directed``.
+#: as the SCC passes (``_escalating_fixpoint``).
 LAYER_ROUNDS = 8
 
 
@@ -1012,15 +847,15 @@ def condensation_layers(
     path from any source, computed by synchronous max-relaxation
     (Bellman-Ford on a DAG with unit weights, integer arithmetic —
     hash-exact by construction). Monotone and idempotent at the
-    fixpoint, so the same escalation discipline as
-    :func:`_min_label_directed` applies when the mirrored budget
+    fixpoint, so the same escalation discipline as the SCC passes
+    (:func:`_escalating_fixpoint`) applies when the mirrored budget
     binds. Returns (scc_id, layer).
 
     Scale shape: the condensation edge list is the loop's invariant —
-    repartitioned + sorted on the probe key (dst SCC) and persisted
-    once; each round exchanges only the scc-sized layer table and the
-    per-SCC max is a plain associative aggregate (map-side combine,
-    constant per-key state). Nothing is node-grain inside the loop.
+    repartitioned + sorted on the dst SCC and persisted once; each
+    round joins it to the scc-sized layer table, and the per-SCC max
+    is a plain associative aggregate (map-side combine, constant
+    per-key state). Nothing is node-grain inside the loop.
 
     ``labels`` (node, scc_id) skips the SCC labeling when the caller
     already materialized one (the registered query computes it once
@@ -1040,61 +875,25 @@ def condensation_layers(
             "dst",
         )
         .filter(F.col("a") != F.col("b"))
-        .select("a", "b")
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .distinct()
-        .repartition(F.col("b"))
-        .sortWithinPartitions("b")
+        .repartition(F.col("dst"))
+        .sortWithinPartitions("dst")
         .persist()
     )
-    layers = (
-        labels.select(F.col("scc_id"))
-        .distinct()
-        .select("scc_id", F.lit(0).alias("layer"))
-        .localCheckpoint()
+    layers, iterations, converged = _escalating_fixpoint(
+        cond,
+        labels.select("scc_id").distinct().select("scc_id", F.lit(0).alias("layer")),
+        rounds,
+        "condensation layering",
+        "layers may understate depth",
+        longest=True,
     )
-    converged = False
-    hard_cap = rounds * SCC_INNER_ESCALATION
-    it = 0
-    while it < hard_cap:
-        it += 1
-        pred_max = (
-            cond.join(layers, cond.a == layers.scc_id)
-            .groupBy(F.col("b").alias("scc_id"))
-            .agg((F.max("layer") + F.lit(1)).alias("pm"))
-        )
-        stepped = (
-            layers.join(pred_max, "scc_id", "left")
-            .select(
-                "scc_id",
-                F.greatest("layer", F.coalesce("pm", F.col("layer"))).alias(
-                    "layer"
-                ),
-                (F.coalesce("pm", F.col("layer")) > F.col("layer")).alias(
-                    "_chg"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = stepped.filter(F.col("_chg")).count()
-        layers = stepped.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
     cond.unpersist()
     if stats is not None:
-        stats["iterations"] = it
+        stats["iterations"] = iterations
         stats["converged"] = converged
-        stats["cap_extended"] = it > rounds
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"condensation layering did not reach its fixpoint within "
-            f"{hard_cap} rounds (budget {rounds} × escalation "
-            f"{SCC_INNER_ESCALATION}); layers may understate depth",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+        stats["cap_extended"] = iterations > rounds
     return layers
 
 
@@ -1185,40 +984,80 @@ def citation_scc_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: rank mass is ~1.0 → ~1e15 units, so every sum and every 17×
 #: product stays far below the 9.2e18 BIGINT ceiling.
 _FP_SCALE = 10**15
+#: Damping 0.85 as the exact rational 17/20, applied as integer
+#: multiply-then-floor-divide.
+_D_NUM, _D_DEN = 17, 20
 
 
 def pagerank_fixed_point(
     edges: DataFrame,
     iterations: int = 8,
-    scale: int = _FP_SCALE,
-    d_num: int = 17,
-    d_den: int = 20,
+    seeds: DataFrame | None = None,
+    n_seeds: int | None = None,
     plan_probe: list | None = None,
 ) -> DataFrame:
-    """PageRank with integer-quantized (fixed-point) arithmetic — the
+    """PageRank (power method) over a directed (from_paper, to_paper)
+    edge list with integer-quantized (fixed-point) arithmetic — the
     summation strategy that is BOTH cluster-scale and bitwise
-    deterministic. A key-sorted float fold (:func:`pagerank`) is
-    deterministic but pays per-key ``collect_list`` memory ∝
-    in-degree; a plain float ``F.sum`` is associative but its
-    association order drifts by ulps per run. This variant stores
-    ranks as BIGINT multiples of ``1/scale`` (1e-15). Every per-edge
-    contribution is an integer floor division, every reduction a plain
-    ``F.sum`` over BIGINT — associative and exact, so map-side partial
-    aggregation engages (constant per-key state, no lists) and the
-    result is identical regardless of partition order, task retries,
-    or cluster size. Damping 0.85 is the exact rational 17/20 applied
-    as integer multiply-then-floor-divide.
+    deterministic. Returns (node, rank_q): ranks as BIGINT multiples
+    of ``1/_FP_SCALE`` (1e-15).
 
+    Per iteration: contributions = edges ⋈ ranks (shuffle on
+    from/node), then sum per target (shuffle on to). The (1−d) share
+    and the dangling mass (nodes with no out-edges — every 'part' in
+    the bipartite graph) teleport to the TELEPORT SET:
+
+    - ``seeds=None``: every node — classic PageRank, total rank stays
+      ~1. The set test is a literal true, which Catalyst folds away,
+      so this plan carries no per-row seed test.
+    - a ``seeds`` (node) table of ``n_seeds`` rows: only the seeds —
+      PERSONALIZED PageRank, whose stationary distribution measures
+      proximity to the seed set (the "related items" query). The
+      caller passes the count it already knows; counting here would
+      cost a job.
+
+    Determinism: a key-sorted float fold is deterministic but pays
+    per-key ``collect_list`` memory ∝ in-degree (OOM bait on a
+    power-law graph); a plain float ``F.sum`` is associative but its
+    association order drifts by ulps per run. Here every per-edge
+    contribution is an integer floor division and every reduction a
+    plain ``F.sum`` over BIGINT — associative and exact, so map-side
+    partial aggregation engages (constant per-key state, no lists) and
+    the result is identical regardless of partition order, task
+    retries, or cluster size. Damping 0.85 is ``_D_NUM/_D_DEN``.
     Quantization truncates ≤1 unit (1e-15) per floor division, so
-    ranks agree with the float :func:`pagerank` to ~1e-12 after 6 iterations
-    (pinned in pytest) while the DuckDB oracle replays the integer
-    algorithm hash-exactly. All operands are nonnegative, so Spark's
-    ``div`` (truncate toward zero) and DuckDB's ``//`` (floor) agree.
+    ranks agree with float power iteration to well inside 1e-9 after
+    6 iterations (pinned in pytest) while the DuckDB oracles replay
+    the integer algorithm hash-exactly. All operands are nonnegative,
+    so Spark's ``div`` (truncate toward zero) and DuckDB's ``//``
+    (floor) agree.
+
+    ``plan_probe`` (a list) collects each iteration's pre-checkpoint
+    plan: the returned table's lineage is checkpoint-truncated, so
+    plan pins (e.g. no ``collect_list``) must observe the plan each
+    iteration's job runs.
     """
-    # loop-invariant edge layout: one shuffle+sort on the join key,
-    # cached with partitioning/ordering intact, out_deg riding inside
-    # it via a window count and is_dangling riding inside the rank
-    # rows — see pagerank() for the rationale and measured wins
+    if seeds is not None and not n_seeds:
+        raise ValueError("a seeds table needs its row count n_seeds >= 1")
+    # Materialize the loop-invariant relations once, and break lineage
+    # every iteration (localCheckpoint) — otherwise iteration k re-runs
+    # iterations 1..k-1 and the job is O(k²) in shuffles.
+    #
+    # The edge table is the loop's big side (the 100 TB relation) and
+    # is joined on from_paper EVERY iteration, so it pays its shuffle
+    # ONCE here: repartition + sortWithinPartitions on the join key,
+    # then persist — the cached relation keeps its outputPartitioning
+    # AND ordering (unlike localCheckpoint, whose ExistingRDD scan
+    # forgets both — probed on pyspark 4.1), so each iteration's
+    # sort-merge join exchanges/sorts only the ranks side. Measured at
+    # sf0.1: ~25-30% off the 6-iteration wall time.
+    #
+    # out_deg rides INSIDE the edge layout (a window count over the
+    # same partitioning — no join, no extra shuffle), and each rank
+    # row carries a loop-invariant is_dangling flag, so an iteration
+    # never joins ranks×out_deg: the dangling mass is a plain
+    # filter+sum over the checkpointed ranks and the contribution join
+    # is the only rank shuffle.
     from pyspark.sql import Window
 
     edges_w = (
@@ -1232,7 +1071,7 @@ def pagerank_fixed_point(
     # node set + dangling flag in ONE aggregation: tag citer
     # occurrences False / cited occurrences True and take min(bool)
     # per node (false < true) — a node with any out-edge is
-    # non-dangling. Replaces distinct-union + distinct + join.
+    # non-dangling.
     nodes = (
         edges_w.select(
             F.col("from_paper").alias("node"),
@@ -1241,17 +1080,37 @@ def pagerank_fixed_point(
         .union(edges_w.select("to_paper", F.lit(True)))
         .groupBy("node")
         .agg(F.min("is_dangling").alias("is_dangling"))
-        .localCheckpoint()
     )
-    n_total = nodes.count()
+    if seeds is not None:
+        nodes = nodes.join(
+            seeds.select(F.col("node").alias("_s")),
+            F.col("node") == F.col("_s"),
+            "left",
+        ).select("node", "is_dangling", F.col("_s").isNotNull().alias("is_seed"))
+    nodes = nodes.localCheckpoint()
+    carry = nodes.columns[1:]
+    in_set = F.lit(True) if seeds is None else F.col("is_seed")
+    n_set = nodes.count() if seeds is None else n_seeds
     # (1-d)·scale/n as one exact python int: ((den-num)·scale // den) // n
-    base1 = ((d_den - d_num) * scale // d_den) // n_total
+    base = ((_D_DEN - _D_NUM) * _FP_SCALE // _D_DEN) // n_set
+    teleport = F.when(
+        in_set,
+        F.lit(base)
+        + F.expr(f"(({_D_NUM} * _dangling_q) div {_D_DEN}) div {n_set}"),
+    ).otherwise(F.lit(0))
     ranks = nodes.select(
-        "node", F.lit(scale // n_total).cast("long").alias("rank_q"), "is_dangling"
+        "node",
+        F.when(in_set, F.lit(_FP_SCALE // n_set))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("rank_q"),
+        *carry,
     )
     for _ in range(iterations):
-        # lazy 1-row dangling fold, same shape as pagerank(): BIGINT
-        # sum needs no ordering discipline at all
+        # Dangling mass as a LAZY 1-row aggregate folded in via a
+        # broadcast crossJoin (the q22 lazy-scalar pattern,
+        # relational.py) — no driver-side collect per iteration, and
+        # the BIGINT sum needs no ordering discipline at all.
         dangling = (
             ranks.filter(F.col("is_dangling"))
             .agg(
@@ -1278,25 +1137,36 @@ def pagerank_fixed_point(
             .select(
                 "node",
                 (
-                    F.lit(base1)
-                    + F.expr(
-                        f"(({d_num} * _dangling_q) div {d_den}) div {n_total}"
-                    )
-                    + F.expr(f"({d_num} * coalesce(in_q, 0L)) div {d_den}")
+                    teleport
+                    + F.expr(f"({_D_NUM} * coalesce(in_q, 0L)) div {_D_DEN}")
                 )
                 .cast("long")
                 .alias("rank_q"),
-                "is_dangling",
+                *carry,
             )
         )
         if plan_probe is not None:
-            # the returned table's lineage is checkpoint-truncated, so
-            # plan pins (e.g. no-collect_list) must observe the
-            # PRE-checkpoint iteration plan — the one each job runs
             plan_probe.append(stepped)
         ranks = stepped.localCheckpoint()
     edges_w.unpersist()
     return ranks.select("node", "rank_q")
+
+
+def _top_ranks(ranks: DataFrame, *cols: str) -> DataFrame:
+    """The top-20 PageRank report: by rank_q, ties by node, with the
+    rank double derived from the same BIGINT (so it stays
+    hash-exact)."""
+    return (
+        ranks.orderBy(F.col("rank_q").desc(), F.col("node").asc())
+        .limit(20)
+        .select(
+            "node",
+            *cols,
+            (F.col("rank_q").cast("double") / F.lit(float(_FP_SCALE))).alias(
+                "rank"
+            ),
+        )
+    )
 
 
 def _pagerank_fp_oracle(
@@ -1383,23 +1253,13 @@ def citation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-exact at the same time, so the driver gate stays a hard
     match without the per-key sorted-fold memory the float gate mode
     paid (r12 verdict #1: one aggregation buffer held in-degree-many
-    structs — OOM bait on a power-law graph at 100×). The float
-    arithmetic (:func:`pagerank`, both fold modes) remains
-    pytest-only, replayed against pure python; ranks agree to ~1e-12
-    after 6 iterations. The absence of ``collect_list`` from this
-    plan is pinned by ``test_pagerank_flagship_plan_has_no_listfold``.
+    structs — OOM bait on a power-law graph at 100×). Pytest pins the
+    ranks against a pure-python integer replay (exact) and a float
+    power iteration (within 1e-9). The absence of ``collect_list``
+    from this plan is pinned by
+    ``test_pagerank_flagship_plan_has_no_listfold``.
     """
-    ranks = pagerank_fixed_point(_edges(spark, sf_dir), iterations=6)
-    return (
-        ranks.orderBy(F.col("rank_q").desc(), F.col("node").asc())
-        .limit(20)
-        .select(
-            "node",
-            (F.col("rank_q").cast("double") / F.lit(float(_FP_SCALE))).alias(
-                "rank"
-            ),
-        )
-    )
+    return _top_ranks(pagerank_fixed_point(_edges(spark, sf_dir), iterations=6))
 
 
 @register(
@@ -1415,17 +1275,28 @@ def citation_pagerank_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``citation_pagerank`` (which converged onto this arithmetic in
     r13 — r12 verdict #1); benching both would time the same plan
     twice, so only the flagship carries the bench flag now."""
-    ranks = pagerank_fixed_point(_edges(spark, sf_dir), iterations=6)
+    return _top_ranks(
+        pagerank_fixed_point(_edges(spark, sf_dir), iterations=6), "rank_q"
+    )
+
+
+def _cocitation(e: DataFrame) -> DataFrame:
+    """The co-citation PROJECTION of a (from_paper, to_paper) edge
+    list: undirected paper pairs (u, v), u < v, cited together by ≥2
+    citers — the community-structure graph the triangle, k-core,
+    personalized-PageRank, label-propagation and BFS queries run on
+    (the raw citation graph is bipartite and triangle-free)."""
+    a, b = e.alias("a"), e.alias("b")
     return (
-        ranks.orderBy(F.col("rank_q").desc(), F.col("node").asc())
-        .limit(20)
-        .select(
-            "node",
-            "rank_q",
-            (F.col("rank_q").cast("double") / F.lit(float(_FP_SCALE))).alias(
-                "rank"
-            ),
+        a.join(
+            b,
+            (F.col("a.from_paper") == F.col("b.from_paper"))
+            & (F.col("a.to_paper") < F.col("b.to_paper")),
         )
+        .groupBy(F.col("a.to_paper").alias("u"), F.col("b.to_paper").alias("v"))
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+        .select("u", "v")
     )
 
 
@@ -1520,20 +1391,7 @@ def citation_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle closes wedges on the simple id-orientation — the triangle
     set is orientation-invariant, so the per-node counts must agree
     exactly."""
-    e = _edges(spark, sf_dir)
-    a, b = e.alias("a"), e.alias("b")
-    proj = (
-        a.join(
-            b,
-            (F.col("a.from_paper") == F.col("b.from_paper"))
-            & (F.col("a.to_paper") < F.col("b.to_paper")),
-        )
-        .groupBy(F.col("a.to_paper").alias("u"), F.col("b.to_paper").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-    )
-    return triangle_counts(proj)
+    return triangle_counts(_cocitation(_edges(spark, sf_dir)))
 
 
 def kcore_peel(proj: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -1611,20 +1469,7 @@ def citation_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     papers with their residual degrees — the density-core extraction
     a community-mining pipeline runs after projection. The oracle
     unrolls the identical four rounds (materialized CTEs)."""
-    e = _edges(spark, sf_dir)
-    a, b = e.alias("a"), e.alias("b")
-    proj = (
-        a.join(
-            b,
-            (F.col("a.from_paper") == F.col("b.from_paper"))
-            & (F.col("a.to_paper") < F.col("b.to_paper")),
-        )
-        .groupBy(F.col("a.to_paper").alias("u"), F.col("b.to_paper").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-    )
-    return kcore_peel(proj, k=3, rounds=4)
+    return kcore_peel(_cocitation(_edges(spark, sf_dir)), k=3, rounds=4)
 
 
 @register(
@@ -1663,91 +1508,6 @@ def citation_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(MAX(d) AS BIGINT)").alias("max_degree"),
         F.expr("CAST(SUM(d) AS BIGINT)").alias("total_citations"),
     )
-
-
-def personalized_pagerank_fixed_point(
-    und: DataFrame,
-    seeds: DataFrame,
-    n_seeds: int,
-    iterations: int = 4,
-    scale: int = _FP_SCALE,
-    d_num: int = 17,
-    d_den: int = 20,
-) -> DataFrame:
-    """PERSONALIZED PageRank in the fixed-point strategy
-    (:func:`pagerank_fixed_point`'s arithmetic, different restart
-    vector): teleport mass — the (1−d) share and any dangling mass —
-    returns ONLY to the ``n_seeds`` seed nodes instead of spreading
-    uniformly, so the stationary distribution measures proximity to
-    the seed set (the "related items" query). ``und`` is a directed
-    edge list (``from_paper`` → ``to_paper``); ``seeds`` is a
-    bounded (node) table. All-BIGINT arithmetic — associative sums,
-    map-side combine, bit-identical under any partitioning."""
-    from pyspark.sql import Window
-
-    edges_w = (
-        und.repartition(F.col("from_paper"))
-        .sortWithinPartitions("from_paper")
-        .withColumn(
-            "out_deg", F.count(F.lit(1)).over(Window.partitionBy("from_paper"))
-        )
-        .persist()
-    )
-    nodes = (
-        edges_w.select(F.col("from_paper").alias("node"),
-                       F.lit(False).alias("is_dangling"))
-        .union(edges_w.select("to_paper", F.lit(True)))
-        .groupBy("node")
-        .agg(F.min("is_dangling").alias("is_dangling"))
-        .join(seeds.select(F.col("node").alias("_s")),
-              F.col("node") == F.col("_s"), "left")
-        .select("node", "is_dangling", F.col("_s").isNotNull().alias("is_seed"))
-        .localCheckpoint()
-    )
-    base_s = ((d_den - d_num) * scale // d_den) // n_seeds
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(scale // n_seeds))
-        .otherwise(F.lit(0)).cast("long").alias("rank_q"),
-        "is_dangling",
-        "is_seed",
-    )
-    for _ in range(iterations):
-        dangling = ranks.filter(F.col("is_dangling")).agg(
-            F.coalesce(F.sum("rank_q"), F.lit(0)).cast("long").alias("_dq")
-        )
-        contribs = (
-            edges_w.join(
-                ranks.filter(~F.col("is_dangling")),
-                edges_w.from_paper == F.col("node"),
-            )
-            .select(F.col("to_paper").alias("node"),
-                    F.expr("rank_q div out_deg").alias("v"))
-            .groupBy("node")
-            .agg(F.sum("v").cast("long").alias("in_q"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.when(
-                        F.col("is_seed"),
-                        F.lit(base_s)
-                        + F.expr(f"(({d_num} * _dq) div {d_den}) div {n_seeds}"),
-                    ).otherwise(F.lit(0))
-                    + F.expr(f"({d_num} * coalesce(in_q, 0L)) div {d_den}")
-                )
-                .cast("long")
-                .alias("rank_q"),
-                "is_dangling",
-                "is_seed",
-            )
-            .localCheckpoint()
-        )
-    edges_w.unpersist()
-    return ranks.select("node", "rank_q", "is_seed")
 
 
 _PPR_PROJ_CTES = """
@@ -1835,20 +1595,7 @@ def citation_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFram
     arithmetic as ``citation_pagerank_scale``, different restart
     vector; the projection is undirected so no node dangles and the
     at-scale plan is pure associative sums + a bounded seed join."""
-    e = _edges(spark, sf_dir)
-    a, b = e.alias("a"), e.alias("b")
-    proj = (
-        a.join(
-            b,
-            (F.col("a.from_paper") == F.col("b.from_paper"))
-            & (F.col("a.to_paper") < F.col("b.to_paper")),
-        )
-        .groupBy(F.col("a.to_paper").alias("u"), F.col("b.to_paper").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    proj = _cocitation(_edges(spark, sf_dir)).localCheckpoint()
     und = proj.select(F.col("u").alias("from_paper"), F.col("v").alias("to_paper")).unionAll(
         proj.select(F.col("v").alias("from_paper"), F.col("u").alias("to_paper"))
     )
@@ -1859,15 +1606,8 @@ def citation_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFram
         .limit(2)
         .select("node")
     )
-    ranks = personalized_pagerank_fixed_point(und, seeds, n_seeds=2, iterations=4)
-    return (
-        ranks.orderBy(F.col("rank_q").desc(), F.col("node").asc())
-        .limit(20)
-        .select(
-            "node",
-            "rank_q",
-            (F.col("rank_q").cast("double") / F.lit(float(_FP_SCALE))).alias("rank"),
-        )
+    return _top_ranks(
+        pagerank_fixed_point(und, iterations=4, seeds=seeds, n_seeds=2), "rank_q"
     )
 
 
@@ -2055,20 +1795,7 @@ def citation_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture convergence). Every round is the same keyed
     join+count+argmax plan — at 100 TB each is three node-keyed
     shuffles with map-side combine on the vote counts."""
-    e = _edges(spark, sf_dir)
-    a, b = e.alias("a"), e.alias("b")
-    proj = (
-        a.join(
-            b,
-            (F.col("a.from_paper") == F.col("b.from_paper"))
-            & (F.col("a.to_paper") < F.col("b.to_paper")),
-        )
-        .groupBy(F.col("a.to_paper").alias("u"), F.col("b.to_paper").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-    )
-    return label_propagation(proj)
+    return label_propagation(_cocitation(_edges(spark, sf_dir)))
 
 
 # --- HITS: hubs and authorities on the bipartite citation graph -----------
@@ -2279,20 +2006,7 @@ def citation_bfs_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the visited set — at 100 TB the frontier and visited
     tables partition by node id and the traversal is |E(frontier)|
     work per level, never corpus-wide."""
-    e = _edges(spark, sf_dir)
-    a, b = e.alias("a"), e.alias("b")
-    proj = (
-        a.join(
-            b,
-            (F.col("a.from_paper") == F.col("b.from_paper"))
-            & (F.col("a.to_paper") < F.col("b.to_paper")),
-        )
-        .groupBy(F.col("a.to_paper").alias("u"), F.col("b.to_paper").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
+    proj = _cocitation(_edges(spark, sf_dir)).localCheckpoint()
     und_deg = (
         proj.select(F.col("u").alias("node"))
         .unionAll(proj.select(F.col("v").alias("node")))

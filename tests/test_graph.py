@@ -1,4 +1,4 @@
-"""Graph-operator tests: PageRank vs a pure-python replay, plus
+"""Graph-operator tests: PageRank vs pure-python replays, plus
 structural sanity for co-citation/coupling."""
 
 from __future__ import annotations
@@ -28,23 +28,65 @@ def _python_pagerank(edges, iterations=6, damping=0.85):
     return ranks
 
 
-def test_pagerank_matches_python_replay(spark):
-    from mapreduce_citation_spark.operators.graph import pagerank
+def _python_pagerank_fp(edges, iterations=6):
+    """Integer replay of ``pagerank_fixed_point``: the same floor
+    divisions in the same order, dangling mass included."""
+    from mapreduce_citation_spark.operators.graph import _FP_SCALE as S
 
-    edges = [
-        ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"),
-        ("e", "c"),  # e and d are only-citers; c is the hub
-    ]
+    nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
+    n = len(nodes)
+    out = defaultdict(set)
+    for a, b in edges:
+        out[a].add(b)
+    ranks = {v: S // n for v in nodes}
+    for _ in range(iterations):
+        dangling = sum(r for v, r in ranks.items() if not out[v])
+        base = ((3 * S) // 20) // n + ((17 * dangling) // 20) // n
+        contrib = {v: 0 for v in nodes}
+        for a in nodes:
+            for b in out[a]:
+                contrib[b] += ranks[a] // len(out[a])
+        ranks = {v: base + (17 * contrib[v]) // 20 for v in nodes}
+    return ranks
+
+
+# y and z cite nothing: their rank is dangling mass, spread to every node
+_PR_EDGES = [
+    ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"),
+    ("e", "c"), ("c", "z"), ("a", "y"),
+]
+
+
+def _fp_ranks(spark, edges, iterations=6):
+    from mapreduce_citation_spark.operators.graph import pagerank_fixed_point
+
     df = spark.createDataFrame(edges, ["from_paper", "to_paper"])
-    got = {r["node"]: r["rank"] for r in pagerank(df, iterations=6).collect()}
-    want = _python_pagerank(edges, iterations=6)
+    rows = pagerank_fixed_point(df, iterations=iterations).collect()
+    return {r["node"]: r["rank_q"] for r in rows}
+
+
+def test_pagerank_matches_python_replay(spark):
+    """``pagerank_fixed_point`` scaled back to floats stays within 1e-9
+    of the float power iteration, dangling mass included."""
+    from mapreduce_citation_spark.operators.graph import _FP_SCALE
+
+    got = {v: q / _FP_SCALE for v, q in _fp_ranks(spark, _PR_EDGES).items()}
+    want = _python_pagerank(_PR_EDGES, iterations=6)
     assert got.keys() == want.keys()
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-9)
     # total mass conserved
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-    # the hub out-ranks everything
-    assert max(got, key=got.get) == "c"
+    assert max(got, key=got.get) == "c"  # the hub out-ranks everything
+
+
+def test_pagerank_fixed_point_agrees_and_is_integer_exact(spark):
+    """``pagerank_fixed_point`` equals the integer replay exactly (same
+    floor divisions in the same order) and is bit-identical across
+    repeated runs (integer sums are associative — no float drift)."""
+    got = _fp_ranks(spark, _PR_EDGES)
+    assert got == _python_pagerank_fp(_PR_EDGES, iterations=6)
+    assert _fp_ranks(spark, _PR_EDGES) == got
 
 
 def test_connected_components_vs_union_find(spark):
@@ -184,40 +226,6 @@ def test_coupling_symmetric_threshold(spark, sf_dir):
     assert all(r["n_shared"] >= 3 and r["citer_a"] < r["citer_b"] for r in rows)
 
 
-def test_pagerank_fixed_point_agrees_and_is_integer_exact(spark):
-    """Fixed-point mode (the benched at-scale strategy) must agree
-    with gate mode to quantization tolerance on every rank, produce
-    the same top ordering, and be bit-identical across repeated runs
-    (integer sums are associative — no float drift to tolerate)."""
-    from mapreduce_citation_spark.operators.graph import (
-        _FP_SCALE,
-        pagerank,
-        pagerank_fixed_point,
-    )
-
-    edges = [
-        ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"),
-        ("e", "c"), ("c", "e"), ("b", "a"),
-    ]
-    df = spark.createDataFrame(edges, ["from_paper", "to_paper"])
-    exact = {r["node"]: r["rank"] for r in pagerank(df, iterations=6).collect()}
-    fp1 = {
-        r["node"]: r["rank_q"]
-        for r in pagerank_fixed_point(df, iterations=6).collect()
-    }
-    assert exact.keys() == fp1.keys()
-    # quantization truncates <=1 unit (1e-15) per floor division;
-    # 6 iterations over this graph stay well inside 1e-9
-    for v in exact:
-        assert fp1[v] / _FP_SCALE == pytest.approx(exact[v], abs=1e-9)
-    # deterministic replay: a second run returns the same integers
-    fp2 = {
-        r["node"]: r["rank_q"]
-        for r in pagerank_fixed_point(df, iterations=6).collect()
-    }
-    assert fp1 == fp2
-
-
 def test_pagerank_flagship_plan_has_no_listfold(spark):
     """r13 (r12 verdict #1): the registered ``citation_pagerank`` runs
     the fixed-point arithmetic — its per-iteration physical plan must
@@ -302,7 +310,7 @@ def test_personalized_pagerank_localizes_to_seed_community(spark):
     bit-for-bit."""
     from mapreduce_citation_spark.operators.graph import (
         _FP_SCALE,
-        personalized_pagerank_fixed_point,
+        pagerank_fixed_point,
     )
 
     A = [("a1", "a2"), ("a1", "a3"), ("a2", "a3")]
@@ -314,8 +322,8 @@ def test_personalized_pagerank_localizes_to_seed_community(spark):
     seeds = spark.createDataFrame([("a1",), ("a2",)], ["node"])
     got = {
         r["node"]: r["rank_q"]
-        for r in personalized_pagerank_fixed_point(
-            und, seeds, n_seeds=2, iterations=4
+        for r in pagerank_fixed_point(
+            und, iterations=4, seeds=seeds, n_seeds=2
         ).collect()
     }
 

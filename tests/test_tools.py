@@ -16,7 +16,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from tools.ab import normalize_plan
+from mapreduce_citation_spark.registry import all_specs
+from tools.ab import normalize_plan, run_query
 from tools.repack_rowgroups import _checksum
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -85,6 +86,26 @@ def test_normalize_plan_strips_run_dependent_ids():
         "(1) Scan ExistingRDD\nMapPartitionsRDD[N] at localCheckpoint\n"
     )
     assert normalize_plan(a) != normalize_plan(a.replace(", 4)", ", 5)"))
+
+
+def test_ab_run_counts_stream_micro_batch_jobs(spark, sf_dir):
+    """A stream's micro-batches run under the stream's own job group,
+    not the caller's. A run's job count includes them, so on a
+    streaming family it exceeds what the calling thread's group sees
+    for the same build and drain (2 at the fixture scale)."""
+    fn = all_specs()["streaming_tumbling_counts"].fn
+    sc = spark.sparkContext
+    sc.setJobGroup("caller", "build + drain")
+    try:
+        spark.catalog.clearCache()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        caller = len(sc.statusTracker().getJobIdsForGroup("caller"))
+    finally:
+        sc._jsc.clearJobGroup()
+    run = run_query(spark, fn, sf_dir)
+    assert run["digest"][0] > 0
+    assert run["jobs"] > caller >= 1
 
 
 @pytest.mark.skipif(

@@ -15,10 +15,10 @@ tree, then run ``ab.py HEAD NAME``.
 
 Per query: one untimed warm run per side, then 5 pairs, alternating
 base/change and change/base. A run clears the SQL cache, then builds
-the frame and drains it to the noop sink under its own job group
-(streaming micro-batches run under their stream's group, uncounted),
-then takes an untimed digest: row count plus the decimal sum of
-``xxhash64`` over the sorted columns. The JSON report gives per side
+the frame and drains it to the noop sink, counting every job the JVM
+launched meanwhile (streaming micro-batches included), then takes an
+untimed digest: row count plus the decimal sum of ``xxhash64`` over
+the sorted columns. The JSON report gives per side
 the runs, median, q1-q3 and jobs per run, and the change's pairwise
 wins. ``--plans`` diffs ``explain("formatted")`` of the two sides
 after normalising the run-dependent ids. Either mode exits 1, naming
@@ -53,6 +53,30 @@ def normalize_plan(plan: str) -> str:
     return re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
 
 
+def run_query(spark, fn, sf_dir: str) -> dict:
+    """One timed run of a registered query function: build + noop
+    drain seconds, the jobs launched meanwhile, and the digest.
+
+    Jobs are the difference of the scheduler's job-id counter across
+    build and drain, so jobs of every thread count — the micro-batches
+    of a stream run under the stream's own job group. Exact as long as
+    the JVM runs one query at a time, which a worker does."""
+    from pyspark.sql import functions as F
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    spark.catalog.clearCache()
+    jobs0, t0 = dag.numTotalJobs(), time.perf_counter()
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    sec = time.perf_counter() - t0
+    jobs = dag.numTotalJobs() - jobs0
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*sorted(df.columns)).cast("decimal(38,0)")),
+    ).first()
+    return {"sec": sec, "jobs": jobs, "digest": [int(row[0]), int(row[1] or 0)]}
+
+
 def worker(tree: str, sf_dir: str) -> None:
     """Answer one ``run NAME`` or ``plan NAME`` per stdin line with one
     JSON line, using the package in ``tree``."""
@@ -64,37 +88,22 @@ def worker(tree: str, sf_dir: str) -> None:
 
     if not os.path.realpath(pkg.__file__).startswith(os.path.join(tree, "")):
         raise SystemExit(f"worker for {tree} imported {pkg.__file__}")
-    from pyspark.sql import functions as F
-
     from mapreduce_citation_spark.plans.explain import explain_str
     from mapreduce_citation_spark.registry import all_specs
     from mapreduce_citation_spark.session import get_spark
 
     spark = get_spark("ab")
     spark.sparkContext.setLogLevel("ERROR")
-    sc, specs = spark.sparkContext, all_specs()
-    for n, line in enumerate(sys.stdin):
+    specs = all_specs()
+    for line in sys.stdin:
         cmd, name = line.split()
-        spark.catalog.clearCache()
         if cmd == "plan":
+            spark.catalog.clearCache()
             plan = explain_str(specs[name].fn(spark, sf_dir), "formatted")
-            out.write(json.dumps({"plan": normalize_plan(plan)}) + "\n")
-            continue
-        group = f"ab-run{n}"
-        sc.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        df = specs[name].fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        sec = time.perf_counter() - t0
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        sc.setJobGroup(f"{group}-digest", name)
-        row = df.agg(
-            F.count(F.lit(1)),
-            F.sum(F.xxhash64(*sorted(df.columns)).cast("decimal(38,0)")),
-        ).first()
-        digest = [int(row[0]), int(row[1] or 0)]
-        out.write(json.dumps({"sec": sec, "jobs": jobs, "digest": digest}) + "\n")
+            reply = {"plan": normalize_plan(plan)}
+        else:
+            reply = run_query(spark, specs[name].fn, sf_dir)
+        out.write(json.dumps(reply) + "\n")
 
 
 def ask(procs: dict, side: str, cmd: str, name: str) -> dict:
