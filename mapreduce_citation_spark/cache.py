@@ -9,11 +9,11 @@ from multiple plan branches (it deduplicates the subtree outright) and
 for per-iteration lineage truncation in iterative operators.
 
 The module exists so the corpus-cache policy lives in one place:
-call :func:`cache_corpus` rather than naming a storage level. The
-minhash signature table goes through it, as do the graph edge list,
-the IVF assignment, the semantic-hybrid cosine pairs and the
-coordinated-sample orders; older call sites still spell
-``MEMORY_AND_DISK`` themselves.
+call :func:`cache_corpus` rather than naming a storage level. Every
+cache in ``operators/dedup.py`` goes through it, as do the audio
+MinHash units, the graph edge list, the IVF assignment and the
+coordinated-sample orders; call sites in the other operator modules
+still spell ``MEMORY_AND_DISK`` themselves.
 """
 
 from __future__ import annotations

@@ -23,7 +23,6 @@ integer coefficients; SimHash reads md5 hex digits as sign bits.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,6 +87,176 @@ def exploded_word_shingles(
         )
     )
     return out.dropDuplicates(["doc_id", "s"]) if distinct else out
+
+
+# --- shared near-dup stages: MinHash-LSH candidates, exact verify ----------
+#
+# Every near-dup operator is candidate generation (an equi-join on band
+# or prefix keys) followed by an exact Jaccard verify on candidates
+# only. Units are keyed by a caller-given key list (``doc_id``;
+# ``doc_id, pidx``; ``aud_id``) and pair columns are named by
+# ``_side``: doc_id -> doc_a/doc_b, pidx -> pidx_a/pidx_b, aud_id ->
+# aud_a/aud_b, with set sizes n_a/n_b.
+
+
+def _side(key: str, side: str) -> str:
+    return f"{key.removesuffix('_id')}_{side}"
+
+
+def _key_lt(keys: list[str], a: str, b: str) -> "F.Column":
+    """Unit ``a`` precedes unit ``b``: a plain compare on one key, a
+    struct compare on several — each unordered pair is emitted once."""
+    if len(keys) == 1:
+        return F.col(f"{a}.{keys[0]}") < F.col(f"{b}.{keys[0]}")
+    return F.struct(*[F.col(f"{a}.{k}") for k in keys]) < F.struct(
+        *[F.col(f"{b}.{k}") for k in keys]
+    )
+
+
+def _band_keys(h, n_bands: int = 4, rows_per_band: int = 4) -> "F.Column":
+    """The exploded LSH ``band_key`` column: one ``"b:h,h,h,h"`` string
+    per band ``b`` over signature entries ``h(i)`` — the string the
+    DuckDB oracles build with ``b || ':' || array_to_string(...)``."""
+    rows = [range(b * rows_per_band, (b + 1) * rows_per_band) for b in range(n_bands)]
+    band_cols = [
+        F.concat(F.lit(f"{b}:"), F.concat_ws(",", *map(h, r))).alias(f"band{b}")
+        for b, r in enumerate(rows)
+    ]
+    return F.explode(F.array(*band_cols)).alias("band_key")
+
+
+def minhash_lsh_candidates(
+    hashed: DataFrame,
+    keys: list[str],
+    materialize,
+    size: str = "n_sh",
+    n_perm: int = 16,
+    n_bands: int = 4,
+    rows_per_band: int = 4,
+) -> DataFrame:
+    """MinHash-LSH candidate pairs from (keys…, h) rows of per-unit
+    distinct 64-bit shingle digests: (a-keys…, b-keys…, n_a, n_b),
+    distinct, a-unit before b-unit.
+
+    The ``n_perm`` permutations are universal-hash integer arithmetic
+    ((a_i·h + b_i) mod P, inlined literal coefficients) over the one
+    digest per shingle — codegen'd long math whose mins map-side
+    combine. ``materialize`` caches the signature table (the band
+    self-join would otherwise evaluate the whole shingle+hash pipeline
+    once per side: self-join sides share work only up to the last
+    exchange); each caller passes its own cache for its table size.
+    The set size (``size``) rides along with the band rows so pairs
+    already carry both sizes — re-joining the signatures for sizes
+    would re-run the shingle pipeline."""
+    sig = hashed.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias(size),
+        *[
+            F.min(F.expr(f"({ca} * h + {cb}) % {MINHASH_P}")).alias(f"h{i}")
+            for i, (ca, cb) in enumerate(minhash_params(n_perm))
+        ],
+    )
+    bands = materialize(sig).select(
+        *keys, size, _band_keys(lambda i: F.col(f"h{i}"), n_bands, rows_per_band)
+    )
+    return (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            (F.col("a.band_key") == F.col("b.band_key")) & _key_lt(keys, "a", "b"),
+        )
+        .select(
+            *[F.col(f"a.{k}").alias(_side(k, "a")) for k in keys],
+            *[F.col(f"b.{k}").alias(_side(k, "b")) for k in keys],
+            F.col(f"a.{size}").alias("n_a"),
+            F.col(f"b.{size}").alias("n_b"),
+        )
+        .distinct()
+    )
+
+
+def _jaccard(common: "F.Column", n_a: "F.Column", n_b: "F.Column") -> "F.Column":
+    """Exact Jaccard |A∩B| / (|A| + |B| − |A∩B|) from the overlap and
+    the two set sizes."""
+    return common / (n_a + n_b - common)
+
+
+def verified_pairs(
+    cand: DataFrame,
+    common: DataFrame,
+    pair: list[str],
+    sizes: tuple[str, str] = ("n_a", "n_b"),
+    threshold: float = 0.8,
+) -> DataFrame:
+    """(pair…, jaccard) for the candidates whose :func:`_jaccard`
+    reaches ``threshold``; ``common`` holds ``n_common`` = |A∩B| per
+    pair, ``cand`` the two set sizes."""
+    jac = _jaccard(F.col("n_common"), *(F.col(c) for c in sizes))
+    return (
+        cand.join(common, pair)
+        .select(*pair, jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _shingle_join_verify(
+    cand: DataFrame, units: DataFrame, keys: list[str], shingles
+) -> DataFrame:
+    """Verify shape of the MinHash families: re-derive EXPLODED
+    shingles (``shingles(frame)`` → keys…, s) only for candidate units
+    — the semi-join runs before the shingle rebuild, so it touches
+    ~|candidates| units, not the corpus — self-join them on the
+    shingle value and count matches per pair.
+
+    Each shingle row moves once, but a shingle shared by m candidate
+    units emits C(m, 2) join rows — quadratic within a hot shingle's
+    value group. The per-pair ``array_intersect`` shape is immune to
+    that skew but lost on the ×100 corpus (AB_MINHASH_VERIFY_r12.json);
+    candidate sets with popular items want :func:`pair_overlap`."""
+    a_cols = [_side(k, "a") for k in keys]
+    b_cols = [_side(k, "b") for k in keys]
+    cand_keys = (
+        cand.select(*[F.col(c).alias(k) for c, k in zip(a_cols, keys)])
+        .union(cand.select(*b_cols))
+        .distinct()
+    )
+    # no broadcast hint on the data-dependent candidate set — AQE
+    # decides from its measured size (broadcasts at fixture scale,
+    # degrades gracefully to a shuffle semi-join when candidates grow)
+    exc = shingles(units.join(cand_keys, keys, "left_semi"))
+    common = (
+        exc.alias("x")
+        .join(exc.alias("y"), (F.col("x.s") == F.col("y.s")) & _key_lt(keys, "x", "y"))
+        .groupBy(
+            *[F.col(f"x.{k}").alias(c) for k, c in zip(keys, a_cols)],
+            *[F.col(f"y.{k}").alias(c) for k, c in zip(keys, b_cols)],
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return verified_pairs(cand, common, a_cols + b_cols)
+
+
+def pair_overlap(
+    cand: DataFrame,
+    pair: tuple[str, str],
+    units_a: DataFrame,
+    units_b: DataFrame,
+    unit: str = "doc_id",
+    item: str = "s",
+) -> DataFrame:
+    """PAIR-KEYED overlap count: (a, b, n_common) for each candidate
+    pair, as cand ⋈ units_a(a) ⋈ units_b(b) on (b, item). Linear in
+    |cand|·items-per-unit whatever an item's popularity — the shape
+    for candidate sets whose items are shared by many units (the
+    prefix-filter families and audio grams; joining on the bare item
+    costs Σ_g df(g)²). ``units_*`` are (unit, item) rows."""
+    a, b = pair
+    return (
+        cand.select(a, b)
+        .join(units_a.select(F.col(unit).alias(a), item), a)
+        .join(units_b.select(F.col(unit).alias(b), item), [b, item])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
 
 
 @register(
@@ -164,86 +333,16 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_lsh_pairs(d: DataFrame) -> DataFrame:
-    """Candidate generation + exact verify for ``dedup_minhash_lsh``.
-
-    Verification re-derives EXPLODED shingles for candidate docs,
-    self-joins on the shingle value (x.doc < y.doc) and counts matches
-    per pair. Each shingle row moves once, but a shingle shared by m
-    candidate docs emits C(m, 2) join rows — quadratic within a hot
-    shingle's value group. The per-pair ``array_intersect`` shape is
-    immune to that skew but lost on the ×100 corpus
-    (AB_MINHASH_VERIFY_r12.json)."""
-    n_perm, n_bands, rows_per_band = 16, 4, 4
-    # one pass: exploded distinct shingles, md5-digested ONCE each;
-    # the 16 permutations are universal-hash integer arithmetic
-    # ((a_i*h + b_i) mod P, inlined literal coefficients) over that
-    # digest — all codegen'd long math, ~16× less hashing than one
-    # md5 per permutation, and the mins map-side-combine
-    ex = exploded_word_shingles(d, 3)
-    exh = ex.select("doc_id", F.expr(shingle_int_hash_spark("s")).alias("h"))
-    sig = exh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.expr(f"({a} * h + {b}) % {MINHASH_P}")).alias(f"h{i}")
-            for i, (a, b) in enumerate(minhash_params(n_perm))
-        ],
+    """Candidate generation + exact verify for ``dedup_minhash_lsh``:
+    the shared MinHash-LSH stage over exploded distinct shingles,
+    md5-digested ONCE each (~16× less hashing than one md5 per
+    permutation), then the shingle-value self-join verify."""
+    exh = exploded_word_shingles(d, 3).select(
+        "doc_id", F.expr(shingle_int_hash_spark("s")).alias("h")
     )
-    # materialize the signature table once: the band self-join below
-    # would otherwise evaluate the whole shingle+hash pipeline twice
-    # (self-join sides only share work up to the last exchange)
-    sig = cache_corpus(sig)
-    band_cols = [
-        F.concat(
-            F.lit(f"{b}:"),
-            F.concat_ws(
-                ",", *[F.col(f"h{b * rows_per_band + j}") for j in range(rows_per_band)]
-            ),
-        ).alias(f"band{b}")
-        for b in range(n_bands)
-    ]
-    # n_sh rides along with the band rows so candidate pairs already
-    # carry both set sizes — re-joining sig for sizes would re-run the
-    # whole shingle+hash pipeline (the expensive part: higher-order
-    # shingle lambdas are interpreted, not codegen'd)
-    bands = sig.select(
-        "doc_id", "n_sh", F.explode(F.array(*band_cols)).alias("band_key")
-    )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), (F.col("a.band_key") == F.col("b.band_key"))
-              & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .distinct()
-    )
-    # verify candidates with exact Jaccard: re-derive shingles ONLY for
-    # candidate docs — the semi-join runs BEFORE shingle construction,
-    # so the (expensive) shingle pipeline re-runs over ~|candidates|
-    # documents, not the whole corpus
-    docs_in_cand = cand.select(F.col("doc_a").alias("doc_id")).union(
-        cand.select("doc_b")
-    ).distinct()
-    # no broadcast hint on the data-dependent candidate set — AQE
-    # decides from its measured size (broadcasts at fixture scale,
-    # degrades gracefully to a shuffle semi-join when candidates grow)
-    cand_docs = d.join(docs_in_cand, "doc_id", "left_semi")
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    exc = exploded_word_shingles(cand_docs, 3)
-    common = (
-        exc.alias("x")
-        .join(exc.alias("y"), (F.col("x.s") == F.col("y.s"))
-              & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .groupBy(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        cand.join(common, ["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
+    cand = minhash_lsh_candidates(exh, ["doc_id"], cache_corpus)
+    return _shingle_join_verify(
+        cand, d, ["doc_id"], lambda docs: exploded_word_shingles(docs, 3)
     )
 
 
@@ -279,27 +378,35 @@ def _ppjoin_pair_filters(num: int = 4, den: int = 5) -> "F.Column":
     return length_ok & positional_ok
 
 
-def _rarest_prefix(ex: DataFrame) -> DataFrame:
+def _rarest_prefix(ex: DataFrame, df: DataFrame | None = None) -> DataFrame:
     """(doc_id, s, rk, n_sh) PROBE-prefix rows — rk ≤ n_sh −
-    ⌈0.8·n_sh⌉ + 1 under the global rarest-first (df, s) total order
-    (document frequency over the full ``ex`` stream, shingle text as
-    tie-break). Shared by ``dedup_ngram_jaccard`` and
-    ``incremental_ingest_report``. Prefix/PPJoin correctness holds for
-    ANY total order applied consistently to both join sides.
+    ⌈0.8·n_sh⌉ + 1 under the global rarest-first (df, s) total order,
+    shingle text as tie-break. The one prefix derivation of
+    ``dedup_ngram_jaccard`` and both ingest paths. Prefix/PPJoin
+    correctness holds for ANY total order applied consistently to
+    both join sides.
 
-    After the per-shingle document-frequency attach, each doc's
-    (df, s) pairs are grouped with a complete-mode aggregate
-    (repartition(doc_id) first — the r6 near-unique-key rule), sorted
-    rarest-first INSIDE the row and sliced to the probe prefix BEFORE
-    exploding, so only the ~n/5 prefix rows enter the downstream plan.
-    ``array_sort`` on struct(df, s) compares fields in declaration
-    order with binary string comparison, exactly ``orderBy("df", "s")``.
-    ``ex`` must be per-doc distinct (it is: ``exploded_word_shingles``
-    dedups), so (df, s) is a strict total order within a doc and the
-    ranks are deterministic. A row_number window + sizes join gives
-    the same rows but was slower (AB_R15_SF1.json)."""
-    df_g = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    withdf = ex.join(df_g, "s")
+    Document frequency is counted over the full ``ex`` stream, or, when
+    a (s, df) table is given, read from it with df 0 for shingles it
+    lacks — the per-batch delta ranked under the base's order.
+
+    After the df attach, each doc's (df, s) pairs are grouped with a
+    complete-mode aggregate (repartition(doc_id) first — the r6
+    near-unique-key rule), sorted rarest-first INSIDE the row and
+    sliced to the probe prefix BEFORE exploding, so only the ~n/5
+    prefix rows enter the downstream plan. ``array_sort`` on
+    struct(df, s) compares fields in declaration order with binary
+    string comparison, exactly ``orderBy("df", "s")``. ``ex`` must be
+    per-doc distinct (it is: ``exploded_word_shingles`` dedups), so
+    (df, s) is a strict total order within a doc and the ranks are
+    deterministic. A row_number window + sizes join gives the same rows
+    but was slower (AB_R15_SF1.json)."""
+    if df is None:
+        withdf = ex.join(ex.groupBy("s").agg(F.count(F.lit(1)).alias("df")), "s")
+    else:
+        withdf = ex.join(df, "s", "left").select(
+            "doc_id", "s", F.coalesce("df", F.lit(0)).alias("df")
+        )
     grouped = (
         withdf.repartition(F.col("doc_id"))
         .groupBy("doc_id")
@@ -322,6 +429,13 @@ def _rarest_prefix(ex: DataFrame) -> DataFrame:
             "n_sh",
         )
     )
+
+
+def _ingest_idx_filter() -> "F.Column":
+    """The INDEX prefix within a probe prefix: rk ≤ n_sh − ⌈8·n_sh/9⌉
+    + 1, PPJoin's bound for the smaller doc of a pair with J ≥ 0.8
+    (built lazily — Column construction needs an active SparkContext)."""
+    return F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
 
 
 @register(
@@ -366,33 +480,22 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
        (pair, shingle) — linear in |cand|·shingles-per-doc, immune to
        shingle popularity.
 
-    The shingle cache is persist(MEMORY_AND_DISK) — corpus-sized reuse
-    cache, per the r6 memory rule (localCheckpoint pins deserialized
+    The shingle cache is ``cache_corpus`` — corpus-sized reuse cache,
+    per the r6 memory rule (localCheckpoint pins deserialized
     rows on-heap); df counts, sizes, prefixes and verify all read it."""
     d = _docs(spark, sf_dir)
-    ex = exploded_word_shingles(d, 3).persist(StorageLevel.MEMORY_AND_DISK)
-    # Asymmetric index/probe prefixes (PPJoin's indexing theorem): for
-    # a pair with J ≥ t the FIRST common shingle in the one global
-    # order lies within the PROBE prefix |x| − ⌈t·|x|⌉ + 1 of the
-    # LARGER doc x (O ≥ t·|x|) and within the shorter INDEX prefix
-    # |y| − ⌈(2t/(1+t))·|y|⌉ + 1 of the SMALLER doc y (with the length
-    # filter, O ≥ (2t/(1+t))·|y|). At t = 0.8 the index side keeps
-    # ~|y|/9 shingles vs the probe side's ~|y|/5 — the candidate join's
-    # smaller input, lossless. "Smaller" is the (n_sh, doc_id) total
-    # order, so each pair is generated exactly once (probe = greater).
-    # ceil(0.8·n) = (4n+4) div 5; ceil(8·n/9) = (8n+8) div 9. The
-    # index prefix is a SUBSET of the probe prefix (ℓi ≤ ℓp for all
-    # n), so only the probe stream is computed (``_rarest_prefix``,
-    # the shared rarest-first derivation) — and persisted
-    # (corpus-proportional ~n/5 of the shingle stream, read by both
-    # join sides; without it the index branch re-runs the whole
-    # df-join + ranking derivation, and the two sides' differing
-    # filters defeat ReusedExchange — measured 98.7 s vs 73.8 s at
-    # 500k docs for the recompute variant).
-    probe = _rarest_prefix(ex).persist(StorageLevel.MEMORY_AND_DISK)
-    index = probe.filter(
-        F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
-    )
+    ex = cache_corpus(exploded_word_shingles(d, 3))
+    # PPJoin's indexing theorem: for a pair with J ≥ t the FIRST common
+    # shingle lies within the PROBE prefix |x| − ⌈t·|x|⌉ + 1 of the
+    # LARGER doc x and, with the length filter, within the INDEX prefix
+    # |y| − ⌈(2t/(1+t))·|y|⌉ + 1 of the SMALLER doc y ("smaller" in the
+    # (n_sh, doc_id) total order, so each pair is generated once). The
+    # index prefix is a SUBSET of the probe prefix, so only the probe
+    # stream is computed — and persisted: without it the index branch
+    # re-runs the df-join + ranking, and the two sides' differing
+    # filters defeat ReusedExchange (98.7 s vs 73.8 s at 500k docs).
+    probe = cache_corpus(_rarest_prefix(ex))
+    index = probe.filter(_ingest_idx_filter())
     a_gt_b = (F.col("a.n_sh") > F.col("b.n_sh")) | (
         (F.col("a.n_sh") == F.col("b.n_sh"))
         & (F.col("a.doc_id") > F.col("b.doc_id"))
@@ -413,19 +516,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    common = (
-        cand.select("doc_a", "doc_b")
-        .join(ex.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-        .join(ex.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        cand.join(common, ["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    common = pair_overlap(cand, ("doc_a", "doc_b"), ex, ex)
+    return verified_pairs(cand, common, ["doc_a", "doc_b"])
 
 
 #: Shared by the batch operator and its foreachBatch streaming twin
@@ -538,54 +630,64 @@ def incremental_ingest_report(d: DataFrame, delta_pred) -> DataFrame:
         # materialize so the digest scans run once
         .localCheckpoint()
     )
-    # near: one shingle stream feeds df counts, prefixes, verify; the
-    # probe prefix comes from the shared rarest-first derivation
-    # (``_rarest_prefix``)
-    ex = exploded_word_shingles(d, 3).persist(StorageLevel.MEMORY_AND_DISK)
-    pref = _rarest_prefix(ex)
-    # Asymmetric index/probe prefixes (same theorem as
-    # dedup_ngram_jaccard): each true pair's SMALLER doc (under the
-    # (n_sh, doc_id) total order) only needs its ~|y|/9 index prefix.
-    # The sides here are FIXED (delta vs base), so the split becomes
-    # two complementary branches — delta-probe × base-index where the
-    # base doc is smaller, delta-index × base-probe otherwise — each
-    # pair lands in exactly one. Both branches read ONE persisted
-    # probe-prefix cache (the index prefix is a further rank filter
-    # over the same rows — persisting avoids recomputing the df-join +
-    # ranking per branch, the ReusedExchange lesson from the self-join
-    # variant).
-    pref = pref.persist(StorageLevel.MEMORY_AND_DISK)
-    idx_filter = (
-        F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
+    # near: one shingle stream feeds df counts, prefixes, verify. Both
+    # sides' prefix streams read ONE persisted probe-prefix cache (the
+    # index prefix is a further rank filter over the same rows —
+    # persisting avoids recomputing the df-join + ranking per branch,
+    # the ReusedExchange lesson from the self-join variant).
+    ex = cache_corpus(exploded_word_shingles(d, 3))
+    pref = cache_corpus(_rarest_prefix(ex))
+    return _ingest_rejections(
+        exact, pref.filter(delta_pred), pref.filter(~delta_pred), ex, ex
     )
+
+
+def _ingest_rejections(
+    exact: DataFrame,
+    delta_pref: DataFrame,
+    base_pref: DataFrame,
+    delta_sh: DataFrame,
+    base_sh: DataFrame,
+) -> DataFrame:
+    """(doc_id, reason) rejection rows from the delta's exact-duplicate
+    set, the two sides' probe-prefix streams and their (doc_id, s)
+    shingle streams — the tail both ingest paths share.
+
+    Asymmetric index/probe prefixes (same theorem as
+    ``dedup_ngram_jaccard``): each true pair's SMALLER doc (under the
+    (n_sh, doc_id) total order) only needs its ~|y|/9 index prefix.
+    The sides here are FIXED (delta vs base), so the split becomes two
+    complementary branches — delta-probe × base-index where the base
+    doc is smaller, delta-index × base-probe otherwise — each pair
+    lands in exactly one. Verify is pair-keyed; 'exact' wins over
+    'near'."""
+    idx = _ingest_idx_filter()
     a_ge_b = (F.col("a.n_sh") > F.col("b.n_sh")) | (
         (F.col("a.n_sh") == F.col("b.n_sh"))
         & (F.col("a.doc_id") >= F.col("b.doc_id"))
     )
-    delta_probe, delta_index = (
-        pref.filter(delta_pred),
-        pref.filter(delta_pred).filter(idx_filter),
-    )
-    base_probe, base_index = (
-        pref.filter(~delta_pred),
-        pref.filter(~delta_pred).filter(idx_filter),
-    )
+
+    def pairs(a_side: DataFrame, b_side: DataFrame, a_bigger) -> DataFrame:
+        # delta(a) × base(b) on the shared shingle, oriented, with
+        # PPJoin's length/positional filters
+        return a_side.alias("a").join(
+            b_side.alias("b"),
+            (F.col("a.s") == F.col("b.s")) & a_bigger & _ppjoin_pair_filters(),
+        ).select(
+            F.col("a.doc_id").alias("doc_d"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n_sh").alias("n_d"),
+            F.col("b.n_sh").alias("n_b"),
+        )
+
     cand = (
-        _ingest_pairs(delta_probe, base_index, a_ge_b)
-        .unionAll(_ingest_pairs(delta_index, base_probe, ~a_ge_b))
+        pairs(delta_pref, base_pref.filter(idx), a_ge_b)
+        .unionAll(pairs(delta_pref.filter(idx), base_pref, ~a_ge_b))
         .distinct()
     )
-    common = (
-        cand.select("doc_d", "doc_b")
-        .join(ex.select(F.col("doc_id").alias("doc_d"), "s"), "doc_d")
-        .join(ex.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_d", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("n_d") + F.col("n_b") - F.col("n_common"))
+    common = pair_overlap(cand, ("doc_d", "doc_b"), delta_sh, base_sh)
     near = (
-        cand.join(common, ["doc_d", "doc_b"])
-        .filter(jac >= 0.8)
+        verified_pairs(cand, common, ["doc_d", "doc_b"], ("n_d", "n_b"))
         .select(F.col("doc_d").alias("doc_id"))
         .distinct()
     )
@@ -598,34 +700,28 @@ def incremental_ingest_report(d: DataFrame, delta_pred) -> DataFrame:
     )
 
 
-def _ingest_pairs(a_side: DataFrame, b_side: DataFrame, a_bigger) -> DataFrame:
-    """Delta(a) × base(b) prefix equi-join on the shared shingle, with
-    the pair-orientation predicate and PPJoin's length/positional
-    filters — one branch of the asymmetric index/probe split (see
-    ``incremental_ingest_report``)."""
-    return (
-        a_side.alias("a")
-        .join(
-            b_side.alias("b"),
-            (F.col("a.s") == F.col("b.s"))
-            & a_bigger
-            & _ppjoin_pair_filters(),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_d"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("n_d"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-    )
+class _Frames:
+    """Persisted frames filled and released together."""
+
+    def __init__(self, *frames: DataFrame) -> None:
+        self._frames = frames
+
+    def materialize(self):
+        """Eagerly fill the persisted frames (one pass over the base)
+        so the first micro-batch doesn't absorb the cache-fill cost.
+        ``count()`` is a fine cache FILLER (InMemoryRelation
+        materializes whole partitions of the cached plan; the r6
+        count-prunes rule is about timing DOWNSTREAM plans)."""
+        for f in self._frames:
+            f.count()
+        return self
+
+    def unpersist(self) -> None:
+        for f in self._frames:
+            f.unpersist()
 
 
-def _ingest_idx_filter() -> "F.Column":
-    # built lazily — Column construction needs an active SparkContext
-    return F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
-
-
-class IngestBase:
+class IngestBase(_Frames):
     """Precomputed base-side artifacts for delta-vs-base ingest dedup —
     the production shape: at a 100 TB base these are outputs of
     previous ingest runs, derived ONCE and persisted, so every delta
@@ -656,35 +752,20 @@ class IngestBase:
         prefixes: DataFrame,
         shingles: DataFrame,
     ) -> None:
+        super().__init__(digests, df, prefixes, shingles)
         self.digests = digests
         self.df = df
         self.prefixes = prefixes
         self.shingles = shingles
-        self._frames = (digests, df, prefixes, shingles)
-
-    def materialize(self) -> "IngestBase":
-        """Eagerly fill the persisted frames (one pass over the base)
-        so the first micro-batch doesn't absorb the cache-fill cost.
-        ``count()`` is a fine cache FILLER (InMemoryRelation
-        materializes whole partitions of the cached plan; the r6
-        count-prunes rule is about timing DOWNSTREAM plans)."""
-        for f in self._frames:
-            f.count()
-        return self
-
-    def unpersist(self) -> None:
-        for f in self._frames:
-            f.unpersist()
 
 
 def prepare_ingest_base(base: DataFrame) -> IngestBase:
     """Derive the base corpus's ingest-dedup artifacts once (digest
     set, shingle stream, shingle document frequencies, PPJoin probe
-    prefixes), persisted MEMORY_AND_DISK per the corpus-cache rule.
-    Pair with :func:`ingest_report_against_base` for the per-batch
-    side; see :class:`IngestBase` for the partitioning contract."""
-    from pyspark.sql import Window
-
+    prefixes from :func:`_rarest_prefix` over the cached df table),
+    persisted MEMORY_AND_DISK per the corpus-cache rule. Pair with
+    :func:`ingest_report_against_base` for the per-batch side; see
+    :class:`IngestBase` for the partitioning contract."""
     # Every frame is cached PARTITIONED AND LOCALLY SORTED under the
     # join key its per-batch probe uses: InMemoryTableScan propagates
     # the cached plan's outputPartitioning AND outputOrdering, so a
@@ -695,39 +776,21 @@ def prepare_ingest_base(base: DataFrame) -> IngestBase:
     # ENSURE_REQUIREMENTS; without the sortWithinPartitions, SMJ
     # re-sorted it per batch whenever the delta side is too large for
     # AQE's broadcast conversion). The local sorts run once at prep.
-    digests = (
+    digests = cache_corpus(
         base.select(F.md5(F.col("text").cast("binary")).alias("h"))
         .distinct()
         .sortWithinPartitions("h")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    ex_b = (
+    ex_b = cache_corpus(
         exploded_word_shingles(base, 3)
         .repartition(F.col("doc_id"), F.col("s"))
         .sortWithinPartitions("doc_id", "s")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    df_b = (
-        ex_b.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .sortWithinPartitions("s")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    df_b = cache_corpus(
+        ex_b.groupBy("s").agg(F.count(F.lit(1)).alias("df")).sortWithinPartitions("s")
     )
-    sizes_b = ex_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ranked_b = ex_b.join(df_b, "s").select(
-        "doc_id",
-        "s",
-        F.row_number()
-        .over(Window.partitionBy("doc_id").orderBy("df", "s"))
-        .alias("rk"),
-    )
-    prefixes = (
-        ranked_b.join(sizes_b, "doc_id")
-        .filter(F.col("rk") <= F.col("n_sh") - F.expr("(4 * n_sh + 4) div 5") + 1)
-        .select("doc_id", "s", "rk", "n_sh")
-        .repartition(F.col("s"))
-        .sortWithinPartitions("s")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    prefixes = cache_corpus(
+        _rarest_prefix(ex_b, df_b).repartition(F.col("s")).sortWithinPartitions("s")
     )
     return IngestBase(digests, df_b, prefixes, ex_b)
 
@@ -750,7 +813,7 @@ def ingest_base_fingerprint(base: DataFrame) -> str:
     order-independent sum of each row's 60-bit md5 prefix over
     ``doc_id || NUL || text``. ONE cheap column scan — the disk
     index exists to skip the expensive prep (shingle explode, df
-    aggregation, per-doc ranking window), not the linear read.
+    aggregation, per-doc prefix sort), not the linear read.
     Deterministic across sessions and partitionings; any row edit,
     insert, or delete moves it."""
     row = (
@@ -817,10 +880,8 @@ def load_or_build_ingest_base(
     frames = {}
     for name, keys in _INGEST_BASE_PARTS:
         loaded = spark.read.parquet(os.path.join(root, f"{name}.parquet"))
-        frames[name] = (
-            loaded.repartition(*[F.col(k) for k in keys])
-            .sortWithinPartitions(*keys)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        frames[name] = cache_corpus(
+            loaded.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(*keys)
         )
     return IngestBase(**frames).materialize()
 
@@ -850,74 +911,15 @@ def ingest_report_against_base(
     are appended to ``caches`` when given, so a ``foreachBatch`` driver
     can unpersist them at the end of each epoch (ADVICE r8: per-batch
     caches must not accumulate for the life of the session)."""
-    from pyspark.sql import Window
-
     hd = delta.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h"))
-    exact = (
-        hd.join(base.digests, "h", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    exact = cache_corpus(
+        hd.join(base.digests, "h", "left_semi").select("doc_id").distinct()
     )
-    ex_d = exploded_word_shingles(delta, 3).persist(StorageLevel.MEMORY_AND_DISK)
-    sizes_d = ex_d.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ranked_d = (
-        ex_d.join(base.df, "s", "left")
-        .select("doc_id", "s", F.coalesce("df", F.lit(0)).alias("df"))
-        .select(
-            "doc_id",
-            "s",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("df", "s"))
-            .alias("rk"),
-        )
-    )
-    pref_d = (
-        ranked_d.join(sizes_d, "doc_id")
-        .filter(F.col("rk") <= F.col("n_sh") - F.expr("(4 * n_sh + 4) div 5") + 1)
-        .select("doc_id", "s", "rk", "n_sh")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    delta_probe, delta_index = pref_d, pref_d.filter(_ingest_idx_filter())
-    base_probe, base_index = (
-        base.prefixes,
-        base.prefixes.filter(_ingest_idx_filter()),
-    )
-    a_ge_b = (F.col("a.n_sh") > F.col("b.n_sh")) | (
-        (F.col("a.n_sh") == F.col("b.n_sh"))
-        & (F.col("a.doc_id") >= F.col("b.doc_id"))
-    )
-    cand = (
-        _ingest_pairs(delta_probe, base_index, a_ge_b)
-        .unionAll(_ingest_pairs(delta_index, base_probe, ~a_ge_b))
-        .distinct()
-    )
-    common = (
-        cand.select("doc_d", "doc_b")
-        .join(ex_d.select(F.col("doc_id").alias("doc_d"), "s"), "doc_d")
-        .join(
-            base.shingles.select(F.col("doc_id").alias("doc_b"), "s"),
-            ["doc_b", "s"],
-        )
-        .groupBy("doc_d", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("n_d") + F.col("n_b") - F.col("n_common"))
-    near = (
-        cand.join(common, ["doc_d", "doc_b"])
-        .filter(jac >= 0.8)
-        .select(F.col("doc_d").alias("doc_id"))
-        .distinct()
-    )
+    ex_d = cache_corpus(exploded_word_shingles(delta, 3))
+    pref_d = cache_corpus(_rarest_prefix(ex_d, base.df))
     if caches is not None:
         caches.extend([exact, ex_d, pref_d])
-    return (
-        exact.select("doc_id", F.lit("exact").alias("reason"))
-        .unionAll(
-            near.join(exact, "doc_id", "left_anti")
-            .select("doc_id", F.lit("near").alias("reason"))
-        )
-    )
+    return _ingest_rejections(exact, pref_d, base.prefixes, ex_d, base.shingles)
 
 
 @register(
@@ -968,7 +970,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize: the block self-join would otherwise run the (HOF,
     # interpreted) simhash pipeline once per side
-    s = s.persist(StorageLevel.MEMORY_AND_DISK)
+    s = cache_corpus(s)
     blocks = [(0, 1, 11), (1, 12, 11), (2, 23, 10)]  # (id, start, len), 1-based
     block_cols = [
         F.concat_ws(":", F.lit(i), F.substring("simhash", st, ln)).alias(f"blk{i}")
@@ -1074,7 +1076,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scanned 2× just for candidates). Keys come from the vectorized
     # Arrow/numpy kernel — bitwise identical to the SQL fold the
     # DuckDB oracle mirrors (see lsh_band_keys_pandas docstring).
-    bands = lsh_band_keys_pandas(e, 6, 8).persist(StorageLevel.MEMORY_AND_DISK)
+    bands = cache_corpus(lsh_band_keys_pandas(e, 6, 8))
     cand = (
         bands.alias("x")
         .join(bands.alias("y"), (F.col("x.band_key") == F.col("y.band_key"))
@@ -1474,7 +1476,7 @@ def exact_substring_pairs(
     row (:func:`_doc_distinct_grams`) — no global distinct
     aggregate."""
 
-    g = _doc_distinct_grams(d, k).persist(StorageLevel.MEMORY_AND_DISK)
+    g = cache_corpus(_doc_distinct_grams(d, k))
     # df-count with NO partial aggregate: digests are near-unique
     # within any map partition (reduction factor ~1), so the partial
     # hash map buffers the whole gram stream for nothing — measured
@@ -1576,7 +1578,7 @@ def substring_span_stats(d: DataFrame, k: int = _ESK) -> DataFrame:
     the only remaining documents re-scan is the final per-doc length
     join, which reads just (doc_id, length)."""
 
-    g = _char_grams(d, k).persist(StorageLevel.MEMORY_AND_DISK)
+    g = cache_corpus(_char_grams(d, k))
     spans = _merged_dup_spans(g, k)
     per_doc = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_dup_spans"),
@@ -1674,7 +1676,7 @@ def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides (same disk-evictable columnar cache rationale as
     # exact_substring_pairs); per-doc gram dedup is the aggregate-free
     # array_distinct path (_doc_distinct_grams)
-    g = _doc_distinct_grams(d).persist(StorageLevel.MEMORY_AND_DISK)
+    g = cache_corpus(_doc_distinct_grams(d))
     bench = g.where(F.col("doc_id") % 10 == 0)
     train = g.where(F.col("doc_id") % 10 != 0)
     hits = train.alias("t").join(
@@ -1759,7 +1761,7 @@ def dedup_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same string, which is the point of the check."""
 
     d = _docs(spark, sf_dir)
-    g = _char_grams(d).persist(StorageLevel.MEMORY_AND_DISK)
+    g = cache_corpus(_char_grams(d))
     spans = _merged_dup_spans(g, _ESK)
     spans_arr = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("sp")
@@ -1919,7 +1921,14 @@ def dedup_paragraph_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle rebuild). Nothing is ever all-pairs in the paragraph
     count."""
     base = _paragraph_base(spark, sf_dir, with_tokens=False)
-    removed = _paragraph_removed(base)
+    return _para_report(base, _paragraph_removed(base))
+
+
+def _para_report(segs: DataFrame, removed: DataFrame) -> DataFrame:
+    """Per-doc paragraph report over (doc_id, n_tok, segs) rows and
+    the (doc_id, pidx) rows to remove: paragraph count, removed count,
+    surviving token count and the md5 digest of the sorted removed
+    indices (md5 of '' when none)."""
     seg = PARA_SEG
     rem = removed.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_dup_paras"),
@@ -1928,17 +1937,14 @@ def dedup_paragraph_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x -> CAST(x AS STRING))))"
         ).alias("removed_digest"),
     )
-    return (
-        base.join(rem, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.size("segs").cast("long").alias("n_paras"),
-            F.coalesce("n_dup_paras", F.lit(0)).cast("long").alias("n_dup_paras"),
-            (F.col("n_tok") - F.coalesce("n_dup_paras", F.lit(0)) * seg)
-            .cast("long")
-            .alias("kept_tokens"),
-            F.coalesce("removed_digest", F.md5(F.lit(""))).alias("removed_digest"),
-        )
+    return segs.join(rem, "doc_id", "left").select(
+        "doc_id",
+        F.size("segs").cast("long").alias("n_paras"),
+        F.coalesce("n_dup_paras", F.lit(0)).cast("long").alias("n_dup_paras"),
+        (F.col("n_tok") - F.coalesce("n_dup_paras", F.lit(0)) * seg)
+        .cast("long")
+        .alias("kept_tokens"),
+        F.coalesce("removed_digest", F.md5(F.lit(""))).alias("removed_digest"),
     )
 
 
@@ -1976,9 +1982,7 @@ def _paragraph_base(
     # base feeds the paragraph stream AND the final per-doc output —
     # persist so tokenization/segmentation runs once (r7 cache rule:
     # same projection, no distinguishing pushdown between consumers)
-    return _doc_segs(_docs(spark, sf_dir), with_tokens).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    return cache_corpus(_doc_segs(_docs(spark, sf_dir), with_tokens))
 
 
 def _paragraph_removed(base: DataFrame) -> DataFrame:
@@ -1988,104 +1992,45 @@ def _paragraph_removed(base: DataFrame) -> DataFrame:
     verified partner strictly earlier in (doc_id, pidx) order".
     Shared by the report (``dedup_paragraph_neardup``) and the apply
     (``dedup_paragraph_strip``)."""
-    n_perm, n_bands, rows_per_band = PARA_N_PERM, PARA_N_BANDS, PARA_ROWS_PER_BAND
     # The doc_id repartition goes BELOW the base cache, not above it:
     # under AQE a cached repartition reports UnknownPartitioning to
     # its consumers, so an upstream exchange would not be reused by
     # the (doc_id, pidx) signature aggregate anyway — placed here, the
     # explodes and the aggregate all ride one post-cache exchange
-    paras = base.repartition(F.col("doc_id")).select(
-        "doc_id", F.posexplode("segs").alias("pidx", "ptext")
-    ).select("doc_id", F.col("pidx").cast("long").alias("pidx"), "ptext")
-    ex = paras.select(
-        "doc_id",
-        "pidx",
-        F.explode(F.expr(shingles_spark("ptext", 3))).alias("s"),
-    )
-    exh = ex.select(
+    paras = _paragraphs(base.repartition(F.col("doc_id")))
+    exh = _para_shingles(paras).select(
         "doc_id", "pidx", F.expr(shingle_int_hash_spark("s")).alias("h")
     )
-    sig = exh.groupBy("doc_id", "pidx").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.expr(f"({a} * h + {b}) % {MINHASH_P}")).alias(f"h{i}")
-            for i, (a, b) in enumerate(minhash_params(n_perm))
-        ],
+    keys = ["doc_id", "pidx"]
+    cand = minhash_lsh_candidates(
+        exh, keys, cache_corpus, "n_sh", PARA_N_PERM, PARA_N_BANDS, PARA_ROWS_PER_BAND
     )
-    # two references below (both sides of the band self-join) — the
-    # same materialization rule as dedup_minhash_lsh's signature table
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    band_cols = [
-        F.concat(
-            F.lit(f"{b}:"),
-            F.concat_ws(
-                ",",
-                *[F.col(f"h{b * rows_per_band + j}") for j in range(rows_per_band)],
-            ),
-        ).alias(f"band{b}")
-        for b in range(n_bands)
-    ]
-    bands = sig.select(
-        "doc_id", "pidx", "n_sh", F.explode(F.array(*band_cols)).alias("band_key")
-    )
-    a_key = F.struct(F.col("a.doc_id"), F.col("a.pidx"))
-    b_key = F.struct(F.col("b.doc_id"), F.col("b.pidx"))
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_key") == F.col("b.band_key")) & (a_key < b_key),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.pidx").alias("pidx_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.pidx").alias("pidx_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .distinct()
-    )
-    # three references below (both branches of cand_keys' union plus
-    # the final pairs join) — persist so the band self-join + distinct
-    # subtree runs once, the same rule that materializes ``sig`` above
-    # (r11 ADVICE; candidate-pair-sized, never corpus²)
-    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    # exact verification on candidates only: semi-join BEFORE the
-    # shingle rebuild, so the rebuild touches ~|candidate paragraphs|
-    cand_keys = (
-        cand.select(F.col("doc_a").alias("doc_id"), F.col("pidx_a").alias("pidx"))
-        .union(cand.select("doc_b", "pidx_b"))
-        .distinct()
-    )
-    pc = paras.join(cand_keys, ["doc_id", "pidx"], "left_semi")
-    exc = pc.select(
-        "doc_id",
-        "pidx",
-        F.explode(F.expr(shingles_spark("ptext", 3))).alias("s"),
-    )
-    xk = F.struct(F.col("x.doc_id"), F.col("x.pidx"))
-    yk = F.struct(F.col("y.doc_id"), F.col("y.pidx"))
-    common = (
-        exc.alias("x")
-        .join(exc.alias("y"), (F.col("x.s") == F.col("y.s")) & (xk < yk))
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("x.pidx").alias("pidx_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("y.pidx").alias("pidx_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    pairs = (
-        cand.join(common, ["doc_a", "pidx_a", "doc_b", "pidx_b"])
-        .select("doc_a", "pidx_a", "doc_b", "pidx_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    # three references below (both branches of the verify's candidate
+    # key union plus its final pairs join) — persist so the band
+    # self-join + distinct subtree runs once, the same rule that
+    # materializes the signatures (r11 ADVICE; candidate-pair-sized,
+    # never corpus²)
+    pairs = _shingle_join_verify(cache_corpus(cand), paras, keys, _para_shingles)
     return pairs.select(
         F.col("doc_b").alias("doc_id"), F.col("pidx_b").alias("pidx")
     ).distinct()
+
+
+def _paragraphs(segs_frame: DataFrame) -> DataFrame:
+    """(doc_id, pidx, ptext) rows of a (doc_id, segs) frame."""
+    return segs_frame.select(
+        "doc_id", F.posexplode("segs").alias("pidx", "ptext")
+    ).select("doc_id", F.col("pidx").cast("long").alias("pidx"), "ptext")
+
+
+def _para_shingles(paras: DataFrame) -> DataFrame:
+    """(doc_id, pidx, s) exploded word 3-shingles of (doc_id, pidx,
+    ptext) paragraph rows."""
+    return paras.select(
+        "doc_id",
+        "pidx",
+        F.explode(F.expr(shingles_spark("ptext", 3))).alias("s"),
+    )
 
 
 def _para_strip_oracle() -> str:
@@ -2179,10 +2124,7 @@ def _para_sigs(segs_frame: DataFrame) -> DataFrame:
     the exploded min-agg the batch family uses (which pays a doc_id
     exchange it then reuses — the ingest delta is consumed in place,
     so there is nothing to reuse)."""
-    paras = segs_frame.select(
-        "doc_id", F.posexplode("segs").alias("pidx", "ptext")
-    ).select("doc_id", F.col("pidx").cast("long").alias("pidx"), "ptext")
-    return paras.select(
+    return _paragraphs(segs_frame).select(
         "doc_id",
         "pidx",
         F.expr(shingles_spark("ptext", 3)).alias("sh"),
@@ -2198,22 +2140,14 @@ def _para_sigs(segs_frame: DataFrame) -> DataFrame:
 def _para_bands(sigs: DataFrame) -> DataFrame:
     """(doc_id, pidx, band_key) — the LSH band explode, band strings
     identical to the batch family's and the DuckDB CTEs'."""
-    rpb = PARA_ROWS_PER_BAND
-    band_cols = [
-        F.concat(
-            F.lit(f"{b}:"),
-            F.concat_ws(
-                ",", *[F.col("mh")[b * rpb + j] for j in range(rpb)]
-            ),
-        ).alias(f"band{b}")
-        for b in range(PARA_N_BANDS)
-    ]
     return sigs.select(
-        "doc_id", "pidx", F.explode(F.array(*band_cols)).alias("band_key")
+        "doc_id",
+        "pidx",
+        _band_keys(lambda i: F.col("mh")[i], PARA_N_BANDS, PARA_ROWS_PER_BAND),
     )
 
 
-class ParagraphIngestBase:
+class ParagraphIngestBase(_Frames):
     """Precomputed base-side artifacts for paragraph-grain ingest
     dedup — the Dolma-style pipeline's live half (r11 verdict #3): at
     a 100 TB base these are outputs of previous runs, derived once, so
@@ -2227,18 +2161,9 @@ class ParagraphIngestBase:
     per-batch probes plan no Exchange/Sort on the base side."""
 
     def __init__(self, sigs: DataFrame, bands: DataFrame) -> None:
+        super().__init__(sigs, bands)
         self.sigs = sigs
         self.bands = bands
-        self._frames = (sigs, bands)
-
-    def materialize(self) -> "ParagraphIngestBase":
-        for f in self._frames:
-            f.count()
-        return self
-
-    def unpersist(self) -> None:
-        for f in self._frames:
-            f.unpersist()
 
 
 def prepare_paragraph_base(base_docs: DataFrame) -> ParagraphIngestBase:
@@ -2247,17 +2172,13 @@ def prepare_paragraph_base(base_docs: DataFrame) -> ParagraphIngestBase:
     side), persisted MEMORY_AND_DISK under their probe keys. One
     tokenize/shingle/sign pass over the base; bands derive from the
     cached signature table, not a second pass."""
-    sigs = (
+    sigs = cache_corpus(
         _para_sigs(_doc_segs(base_docs))
         .repartition(F.col("doc_id"), F.col("pidx"))
         .sortWithinPartitions("doc_id", "pidx")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    bands = (
-        _para_bands(sigs)
-        .repartition(F.col("band_key"))
-        .sortWithinPartitions("band_key")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    bands = cache_corpus(
+        _para_bands(sigs).repartition(F.col("band_key")).sortWithinPartitions("band_key")
     )
     return ParagraphIngestBase(sigs, bands)
 
@@ -2293,39 +2214,23 @@ def paragraph_ingest_report(
     final report join; delta signatures feed bands + verify) are
     appended to ``caches`` for the foreachBatch driver to unpersist
     per epoch."""
-    dseg = _doc_segs(delta).persist(StorageLevel.MEMORY_AND_DISK)
-    dsig = _para_sigs(dseg).persist(StorageLevel.MEMORY_AND_DISK)
+    dseg = cache_corpus(_doc_segs(delta))
+    dsig = cache_corpus(_para_sigs(dseg))
     if caches is not None:
         caches.extend([dseg, dsig])
+    def unit(side: str) -> list:
+        return [F.col(k).alias(_side(k, side)) for k in ("doc_id", "pidx")]
+
     cand = (
         _para_bands(dsig)
-        .select(
-            F.col("doc_id").alias("doc_d"),
-            F.col("pidx").alias("pidx_d"),
-            "band_key",
-        )
-        .join(
-            base.bands.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("pidx").alias("pidx_b"),
-                "band_key",
-            ),
-            "band_key",
-        )
+        .select(*unit("d"), "band_key")
+        .join(base.bands.select(*unit("b"), "band_key"), "band_key")
         .select("doc_d", "pidx_d", "doc_b", "pidx_b")
         .distinct()
     )
-    x = dsig.select(
-        F.col("doc_id").alias("doc_d"),
-        F.col("pidx").alias("pidx_d"),
-        F.col("sh").alias("sh_d"),
-        F.col("n_sh").alias("n_d"),
-    )
+    x = dsig.select(*unit("d"), F.col("sh").alias("sh_d"), F.col("n_sh").alias("n_d"))
     y = base.sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("pidx").alias("pidx_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
+        *unit("b"), F.col("sh").alias("sh_b"), F.col("n_sh").alias("n_b")
     )
     common = F.size(F.array_intersect("sh_d", "sh_b")).cast("long")
     pairs = (
@@ -2334,30 +2239,14 @@ def paragraph_ingest_report(
         .select(
             "doc_d",
             "pidx_d",
-            (common / (F.col("n_d") + F.col("n_b") - common)).alias("jaccard"),
+            _jaccard(common, F.col("n_d"), F.col("n_b")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= 0.8)
     )
     removed = pairs.select(
         F.col("doc_d").alias("doc_id"), F.col("pidx_d").alias("pidx")
     ).distinct()
-    rem = removed.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_dup_paras"),
-        F.expr(
-            "md5(concat_ws(',', transform(array_sort(collect_list(pidx)), "
-            "x -> CAST(x AS STRING))))"
-        ).alias("removed_digest"),
-    )
-    seg = PARA_SEG
-    return dseg.join(rem, "doc_id", "left").select(
-        "doc_id",
-        F.size("segs").cast("long").alias("n_paras"),
-        F.coalesce("n_dup_paras", F.lit(0)).cast("long").alias("n_dup_paras"),
-        (F.col("n_tok") - F.coalesce("n_dup_paras", F.lit(0)) * seg)
-        .cast("long")
-        .alias("kept_tokens"),
-        F.coalesce("removed_digest", F.md5(F.lit(""))).alias("removed_digest"),
-    )
+    return _para_report(dseg, removed)
 
 
 def _para_ingest_oracle() -> str:

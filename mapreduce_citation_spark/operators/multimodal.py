@@ -33,8 +33,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..cache import cache_corpus
 from ..registry import register
 from ..sources.readers import load_table
+from .dedup import minhash_lsh_candidates, pair_overlap, verified_pairs
 
 #: Schema of an ingested multimodal asset: payload + typed metadata.
 ASSET_SCHEMA = StructType(
@@ -446,14 +448,14 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants (every planted pair differs in ≤ 1 dHash bit, so total
     recall of the planted set is part of the hash gate).
 
-    Pairing is the SimHash pigeonhole strategy (dedup.py:314): 3
-    blocks of 22/21/21 bits — a pair within Hamming ≤ 2 matches
-    exactly on ≥ 1 block — so candidates come from a block equi-join,
-    never all-pairs; the exact distance is codegen'd bit_count(xor)
-    over the two 32-bit signature halves. At 100 TB: signatures are
-    64 bits per image (payloads never shuffle), the block join is the
-    only exchange, and recall is guaranteed by construction rather
-    than probabilistic."""
+    Pairing is the SimHash pigeonhole strategy
+    (``dedup_simhash_pairs``): 3 blocks of 22/21/21 bits — a pair
+    within Hamming ≤ 2 matches exactly on ≥ 1 block — so candidates
+    come from a block equi-join, never all-pairs; the exact distance
+    is codegen'd bit_count(xor) over the two 32-bit signature halves.
+    At 100 TB: signatures are 64 bits per image (payloads never
+    shuffle), the block join is the only exchange, and recall is
+    guaranteed by construction rather than probabilistic."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     sigs = image_dhash_signatures(build_media_assets(d))
     return hamming_band_pairs(sigs, "img_id", "img_a", "img_b")
@@ -463,12 +465,12 @@ def hamming_band_pairs(
     sigs: DataFrame, id_col: str, out_a: str, out_b: str
 ) -> DataFrame:
     """Pairs of 64-bit signatures within Hamming distance ≤ 2 via the
-    SimHash pigeonhole strategy (dedup.py:314): 3 blocks of 22/21/21
-    bits — any pair within Hamming ≤ 2 agrees exactly on ≥ 1 block —
-    so candidates come from a block equi-join, never all-pairs; the
-    exact distance is codegen'd bit_count(xor) over the two 32-bit
-    signature halves. Shared by the image-dHash and audio-fingerprint
-    near-dup operators.
+    SimHash pigeonhole strategy (``dedup_simhash_pairs``): 3 blocks
+    of 22/21/21 bits — any pair within Hamming ≤ 2 agrees exactly on
+    ≥ 1 block — so candidates come from a block equi-join, never
+    all-pairs; the exact distance is codegen'd bit_count(xor) over the
+    two 32-bit signature halves. Shared by the image-dHash and
+    audio-fingerprint near-dup operators.
 
     ``sigs``: (id_col, dh) with dh a 64-char '0'/'1' string. Output:
     (out_a, out_b, hamming) with out_a < out_b, hamming ≤ 2."""
@@ -1213,90 +1215,37 @@ def multimodal_audio_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     end-to-end, so even LSH's probabilistic recall is bit-reproducible
     across engines."""
 
-    from ..functions.text_funcs import (
-        MINHASH_P,
-        minhash_params,
-        shingle_int_hash_spark,
-    )
+    from ..functions.text_funcs import shingle_int_hash_spark
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    units = audio_pcm_units(build_media_assets(d)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    units = cache_corpus(audio_pcm_units(build_media_assets(d)))
     dg = shingle_int_hash_spark(f"substring(pcm, i, {_AMH_K})")
-    grams = units.select(
-        "aud_id",
-        F.explode(
-            F.expr(
-                f"array_distinct(transform("
-                f"sequence(1, length(pcm) - {_AMH_K} + 1), i -> {dg}))"
-            )
-        ).alias("h"),
-    )
-    sig = (
-        grams.groupBy("aud_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_g"),
-            *[
-                F.min(F.expr(f"({a} * h + {b}) % {MINHASH_P}")).alias(f"h{i}")
-                for i, (a, b) in enumerate(minhash_params(16))
-            ],
+    grams = F.explode(
+        F.expr(
+            f"array_distinct(transform("
+            f"sequence(1, length(pcm) - {_AMH_K} + 1), i -> {dg}))"
         )
-        .localCheckpoint()  # one row per recording — tiny; band join below
-    )
-    band_cols = [
-        F.concat(
-            F.lit(f"{b}:"),
-            F.concat_ws(",", *[F.col(f"h{b * 4 + j}") for j in range(4)]),
-        ).alias(f"band{b}")
-        for b in range(4)
-    ]
-    bands = sig.select(
-        "aud_id", "n_g", F.explode(F.array(*band_cols)).alias("band_key")
-    )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.aud_id") < F.col("b.aud_id")),
-        )
-        .select(
-            F.col("a.aud_id").alias("aud_a"),
-            F.col("b.aud_id").alias("aud_b"),
-            F.col("a.n_g").alias("n_a"),
-            F.col("b.n_g").alias("n_b"),
-        )
-        .distinct()
+    ).alias("h")
+    # one row per recording — tiny, so the signature table is a
+    # localCheckpoint, not a corpus cache
+    cand = minhash_lsh_candidates(
+        units.select("aud_id", grams),
+        ["aud_id"],
+        lambda sig: sig.localCheckpoint(),
+        size="n_g",
     )
     # PAIR-KEYED verify (measured restructure, see NOTES r6c): the
     # dedup-family shape — join candidate units' grams on bare gram
     # equality, then filter to candidate pairs — costs Σ_g df_cand(g)²
     # rows, and the synthetic corpus's frequent PCM 8-grams are shared
     # by hundreds of candidate units. Keying the intersection BY PAIR
-    # (cand ⋈ grams(aud_a) ⋈ grams(aud_b) on (aud_b, h)) is linear in
-    # |cand|·grams-per-unit regardless of gram popularity.
+    # is linear in |cand|·grams-per-unit regardless of gram popularity.
     def cand_grams(side: str) -> DataFrame:
         ids = cand.select(F.col(side).alias("aud_id")).distinct()
-        return units.join(ids, "aud_id", "left_semi").select(
-            F.col("aud_id").alias(side),
-            F.explode(
-                F.expr(
-                    f"array_distinct(transform("
-                    f"sequence(1, length(pcm) - {_AMH_K} + 1), i -> {dg}))"
-                )
-            ).alias("h"),
-        )
-    common = (
-        cand.select("aud_a", "aud_b")
-        .join(cand_grams("aud_a"), "aud_a")
-        .join(cand_grams("aud_b"), ["aud_b", "h"])
-        .groupBy("aud_a", "aud_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+        return units.join(ids, "aud_id", "left_semi").select("aud_id", grams)
+
+    common = pair_overlap(
+        cand, ("aud_a", "aud_b"), cand_grams("aud_a"), cand_grams("aud_b"),
+        unit="aud_id", item="h",
     )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        cand.join(common, ["aud_a", "aud_b"])
-        .select("aud_a", "aud_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= _AMH_J)
-    )
+    return verified_pairs(cand, common, ["aud_a", "aud_b"], threshold=_AMH_J)

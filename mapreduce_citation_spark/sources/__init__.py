@@ -2,7 +2,6 @@ from .readers import (
     EDGE_SCHEMA,
     load_table,
     load_tables,
-    read_edges_csv,
     read_edges_text,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "EDGE_SCHEMA",
     "load_table",
     "load_tables",
-    "read_edges_csv",
     "read_edges_text",
 ]

@@ -14,10 +14,12 @@ line is lost or duplicated whatever the boundaries cut through;
 property-tested across adversarial split layouts in
 ``tests/test_sources_sinks.py``).
 
-Parsing applies the reference's scan semantics (ops #1-4): trim,
-drop blank lines and ``#`` comments, split on the separator, drop
-rows without exactly two non-empty fields (the ``malformed="drop"``
-policy of ``readers.read_edges_text``).
+Parsing applies the reference's scan semantics (ops #1-4) exactly as
+``readers.read_edges_text`` (``malformed="drop"``) does, in one
+``_parse_edge_line`` shared by the batch and stream readers: drop the
+line terminator, trim spaces (only spaces, as Spark's ``trim``), drop
+blank lines and ``#`` comments, split on the separator, drop rows
+without exactly two non-empty fields.
 """
 
 from __future__ import annotations
@@ -36,6 +38,9 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
+from pyspark.sql.types import StructType
+
+from .readers import EDGE_SCHEMA
 
 
 class EdgeRangePartition(InputPartition):
@@ -130,14 +135,8 @@ class EdgeListReader(DataSourceReader):
                 raw = f.readline()
                 if not raw:
                     break
-                line = raw.decode("utf-8", errors="replace").strip()
-                if not line or line.startswith(comment):
-                    continue
-                fields = line.split(sep)
-                if len(fields) != 2 or not fields[0] or not fields[1]:
-                    continue  # malformed="drop" (reference mapper.py:74-80)
-                row = (fields[0], fields[1])
-                if self._keep(row):
+                row = _parse_edge_line(raw, sep, comment)
+                if row is not None and self._keep(row):
                     yield row
 
 
@@ -146,8 +145,8 @@ class EdgeListDataSource(DataSource):
     def name(cls) -> str:
         return "edgelist"
 
-    def schema(self) -> str:
-        return "from_paper string, to_paper string"
+    def schema(self) -> StructType:
+        return EDGE_SCHEMA
 
     def reader(self, schema) -> EdgeListReader:
         return EdgeListReader(self.options)
@@ -172,7 +171,13 @@ def register_edgelist_source(spark) -> None:
 
 
 def _parse_edge_line(raw: bytes, sep: str, comment: str):
-    line = raw.decode("utf-8", errors="replace").strip()
+    """(from_paper, to_paper) of one raw line, or None for a blank,
+    comment or malformed line (``malformed="drop"``, reference
+    mapper.py:74-80). Spark's text scan ends a line at ``\n``,
+    ``\r\n`` or a final ``\r`` and ``trim`` removes spaces only, so a
+    tab or vertical tab at either end stays part of the line."""
+    line = raw.decode("utf-8", errors="replace")
+    line = line.removesuffix("\n").removesuffix("\r").strip(" ")
     if not line or line.startswith(comment):
         return None
     fields = line.split(sep)

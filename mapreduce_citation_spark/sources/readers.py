@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-#: Schema of the citation edge list: "from_paper cites to_paper".
+#: Schema of the citation edge list: "from_paper cites to_paper" (the
+#: ``edgelist`` connector's schema).
 #: IDs stay strings end-to-end — lexicographic tie-break ordering is
 #: semantic (reference: master/master.py:218 sorts the string id).
 EDGE_SCHEMA = StructType(
@@ -126,26 +127,6 @@ def read_edges_text(
     else:
         from_paper, to_paper = F.when(ok, from_paper), F.when(ok, to_paper)
     return located.select(from_paper.alias("from_paper"), to_paper.alias("to_paper"))
-
-
-def read_edges_csv(
-    spark: SparkSession, path: str, sep: str = "\t", comment: str = "#"
-) -> DataFrame:
-    """Schema'd CSV variant of the edge scan (DROPMALFORMED).
-
-    Lets the CSV datasource handle comments and malformed rows
-    natively. It does not trim, so it gives the same result as
-    ``read_edges_text(..., malformed='drop')`` only on files without
-    space-padded rows: a padded ID keeps its spaces and counts as
-    another paper. On the benchmark's seed-1 edge list (0.5 % of rows
-    padded) 6,725 of the 111,035 citation-count rows differ.
-    """
-    return (
-        spark.read.schema(EDGE_SCHEMA)
-        .options(sep=sep, comment=comment, mode="DROPMALFORMED")
-        .csv(path)
-        .filter(F.col("from_paper").isNotNull() & F.col("to_paper").isNotNull())
-    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

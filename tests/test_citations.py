@@ -9,7 +9,7 @@ import pytest
 
 from mapreduce_citation_spark.citations import CitationAnalytics, edges_from_orders
 from mapreduce_citation_spark.plans import assert_in_plan
-from mapreduce_citation_spark.sources.readers import read_edges_csv, read_edges_text
+from mapreduce_citation_spark.sources.readers import read_edges_text
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "citations_small.txt")
 
@@ -43,12 +43,6 @@ def test_edge_scan_fail_raises(spark):
         # collect, not count: count() prunes the projected columns, so the
         # raise_error expression would be optimized away before evaluating
         read_edges_text(spark, FIXTURE, malformed="fail").collect()
-
-
-def test_csv_reader_agrees_with_text_reader(spark):
-    a = read_edges_text(spark, FIXTURE)
-    b = read_edges_csv(spark, FIXTURE)
-    assert sorted(a.collect()) == sorted(b.collect())
 
 
 def test_citation_counts(analytics):

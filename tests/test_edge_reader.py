@@ -9,9 +9,10 @@ import pytest
 
 from mapreduce_citation_spark.plans import assert_in_plan, assert_not_in_plan
 from mapreduce_citation_spark.sources.edgelist_datasource import (
+    EdgeListSimpleStreamReader,
     register_edgelist_source,
 )
-from mapreduce_citation_spark.sources.readers import read_edges_csv, read_edges_text
+from mapreduce_citation_spark.sources.readers import read_edges_text
 
 
 def reference_parse(lines, sep, comment="#"):
@@ -101,10 +102,31 @@ def test_readers_agree_on_literal_separator(spark, tmp_path, sep):
     lines = ["# header", f"a{sep}b", "", f"c{sep}d", "e", f"f{sep}g{sep}h"]
     path = _write(tmp_path, lines)
     text = read_edges_text(spark, path, sep=sep)
-    csv = read_edges_csv(spark, path, sep=sep)
     source = spark.read.format("edgelist").option("path", path).option("sep", sep).load()
-    for df in (text, csv, source):
+    for df in (text, source):
         assert sorted(map(tuple, df.collect())) == [("a", "b"), ("c", "d")]
+
+
+def test_connector_trims_like_text_reader(spark, tmp_path):
+    """The batch and stream connectors parse a line as ``read_edges_text``
+    does: the line terminator (LF or CRLF) goes, then spaces only — a
+    tab or vertical tab at either end stays part of the line."""
+    register_edgelist_source(spark)
+    path = tmp_path / "edges.txt"
+    path.write_bytes(b"a\tb\t\n\tc\td\ne\tf\x0b\ng\th\ni\tj\r\n k\tl \r\n")
+    want = [("e", "f\x0b"), ("g", "h"), ("i", "j"), ("k", "l")]
+    assert sorted(map(tuple, read_edges_text(spark, str(path)).collect())) == want
+    for splits in (1, 3):
+        batch = (
+            spark.read.format("edgelist")
+            .option("path", str(path))
+            .option("splits", str(splits))
+            .load()
+        )
+        assert sorted(map(tuple, batch.collect())) == want, f"splits={splits}"
+    stream = EdgeListSimpleStreamReader({"path": str(path)})
+    rows, end = stream.read(stream.initialOffset())
+    assert sorted(rows) == want and end == {"line": 6}
 
 
 @pytest.mark.parametrize(

@@ -2416,29 +2416,44 @@ def test_rarest_prefix_matches_python_replay(spark, sf_dir):
     """``_rarest_prefix`` PREFIX ROWS (not just operator output) on the
     fixture corpus equal a pure-Python replay: document frequency per
     shingle, each doc's distinct shingles ordered (df ASC, s ASC), rank
-    rk from 1, kept while rk ≤ n − ⌈0.8·n⌉ + 1."""
+    rk from 1, kept while rk ≤ n − ⌈0.8·n⌉ + 1. Twice: df counted over
+    the whole corpus, and the ``doc_id % 8 = 0`` cohort ranked under
+    the other docs' df table, shingles that table lacks at df 0 (the
+    per-batch ingest delta)."""
     import pyarrow.parquet as pq
 
     from mapreduce_citation_spark.operators import dedup
 
+    def rows(frame):
+        return {(r["doc_id"], r["s"], r["rk"], r["n_sh"]) for r in frame.collect()}
+
+    def replay(sh, df):
+        want = set()
+        for doc_id, ss in sh.items():
+            n = len(ss)
+            keep = n + (-4 * n // 5) + 1  # n − ⌈4n/5⌉ + 1, integer-exact
+            for rk, s in enumerate(sorted(ss, key=lambda s: (df[s], s)), 1):
+                if rk <= keep:
+                    want.add((doc_id, s, rk, n))
+        return want
+
     d = dedup._docs(spark, sf_dir)
-    got = {
-        (r["doc_id"], r["s"], r["rk"], r["n_sh"])
-        for r in dedup._rarest_prefix(
-            dedup.exploded_word_shingles(d, 3)
-        ).collect()
-    }
+    ex = dedup.exploded_word_shingles(d, 3)
     docs = pq.read_table(
         f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
     ).to_pylist()
     sh = {r["doc_id"]: _word_shingles_py(r["text"]) for r in docs}
-    df = collections.Counter(s for ss in sh.values() for s in ss)
-    want = set()
-    for doc_id, ss in sh.items():
-        n = len(ss)
-        keep = n + (-4 * n // 5) + 1  # n − ⌈4n/5⌉ + 1, integer-exact
-        for rk, s in enumerate(sorted(ss, key=lambda s: (df[s], s)), 1):
-            if rk <= keep:
-                want.add((doc_id, s, rk, n))
+    got = rows(dedup._rarest_prefix(ex))
     assert got, "empty prefix stream — fixture or derivation broken"
+    assert got == replay(sh, collections.Counter(s for ss in sh.values() for s in ss))
+
+    delta = F.col("doc_id") % 8 == 0
+    base_df = ex.filter(~delta).groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+    got = rows(dedup._rarest_prefix(ex.filter(delta), base_df))
+    sh_d = {i: ss for i, ss in sh.items() if i % 8 == 0}
+    df_b = collections.Counter(
+        s for i, ss in sh.items() if i % 8 != 0 for s in ss
+    )  # a Counter reads 0 for shingles absent from the base
+    want = replay(sh_d, df_b)
+    assert want and any(df_b[s] == 0 for _, s, _, _ in want)
     assert got == want

@@ -39,6 +39,11 @@ QUERIES = (
     "citation_bfs_depths",
     "dedup_clusters",
     "multimodal_phash_clusters",
+    "dedup_paragraph_neardup",
+    "dedup_paragraph_strip",
+    "dedup_paragraph_ingest",
+    "multimodal_audio_minhash_pairs",
+    "streaming_ingest_dedup_near",
 )
 
 #: Iterative queries rerun at other partition counts (citation_scc_layers

@@ -17,7 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from mapreduce_citation_spark.registry import all_specs
-from tools.ab import normalize_plan, run_query
+from tools.ab import normalize_plan, run_query, worker_env
 from tools.repack_rowgroups import _checksum
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -86,6 +86,26 @@ def test_normalize_plan_strips_run_dependent_ids():
         "(1) Scan ExistingRDD\nMapPartitionsRDD[N] at localCheckpoint\n"
     )
     assert normalize_plan(a) != normalize_plan(a.replace(", 4)", ", 5)"))
+
+
+def test_ab_worker_heap_is_a_quarter_of_host_memory(tmp_path):
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` each A/B worker gets a quarter
+    of ``MemTotal``, clamped to 1g-8g; a value the caller set wins."""
+    meminfo = tmp_path / "meminfo"
+
+    def heap(gib: int, environ: dict | None = None) -> str:
+        meminfo.write_text(
+            f"MemTotal:       {gib * 1024 * 1024} kB\nMemFree:        1024 kB\n"
+        )
+        return worker_env(environ or {"PATH": "/bin"}, str(meminfo))[
+            "SPARK_GRAFT_DRIVER_MEM"
+        ]
+
+    assert heap(16) == "4096m"
+    assert heap(2) == "1024m"
+    assert heap(64) == "8192m"
+    assert heap(16, {"SPARK_GRAFT_DRIVER_MEM": "2g"}) == "2g"
+    assert worker_env({"PATH": "/bin"}, str(meminfo))["PATH"] == "/bin"
 
 
 def test_ab_run_counts_stream_micro_batch_jobs(spark, sf_dir):

@@ -13,6 +13,11 @@ tree only, so session confs and checkpoint releases cannot leak from
 one side into the other. A conf A/B: edit the conf in the working
 tree, then run ``ab.py HEAD NAME``.
 
+Each worker's driver heap is ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+a quarter of the host's memory clamped to 1g-8g (``worker_env``):
+two JVMs at the session's 8g default next to a third JVM can exhaust a
+16 GB host.
+
 Per query: one untimed warm run per side, then 5 pairs, alternating
 base/change and change/base. A run clears the SQL cache, then builds
 the frame and drains it to the noop sink, counting every job the JVM
@@ -51,6 +56,18 @@ def normalize_plan(plan: str) -> str:
     plan = re.sub(r",? ?\[plan_id=\d+\]", "", plan)
     plan = re.sub(r"#\d+L?", "#", plan)
     return re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+
+
+def worker_env(environ: dict, meminfo: str = "/proc/meminfo") -> dict:
+    """A worker's environment: ``environ``, plus, when it sets no
+    ``SPARK_GRAFT_DRIVER_MEM``, a driver heap of a quarter of the
+    host's ``MemTotal`` clamped to 1g-8g (in MiB)."""
+    env = dict(environ)
+    if "SPARK_GRAFT_DRIVER_MEM" not in env:
+        with open(meminfo) as fh:
+            kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+        env["SPARK_GRAFT_DRIVER_MEM"] = f"{min(8192, max(1024, kib // 4 // 1024))}m"
+    return env
 
 
 def run_query(spark, fn, sf_dir: str) -> dict:
@@ -168,9 +185,10 @@ def main(argv: list[str]) -> int:
         archive = subprocess.run([*git, "archive", sha], check=True,
                                  stdout=subprocess.PIPE).stdout
         subprocess.run(["tar", "-x", "-C", tmp], input=archive, check=True)
+        env = worker_env(os.environ)
         procs = {side: subprocess.Popen(
             [sys.executable, os.path.realpath(__file__), "--worker", tree, sf_dir],
-            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, env=env,
         ) for side, tree in zip(SIDES, (os.path.realpath(tmp), CHANGE_TREE))}
         bad = []
         if args.plans:
