@@ -98,6 +98,12 @@ def exploded_word_shingles(
 # ``_side``: doc_id -> doc_a/doc_b, pidx -> pidx_a/pidx_b, aud_id ->
 # aud_a/aud_b, with set sizes n_a/n_b.
 
+#: MinHash-LSH geometry (16 permutations, 4 bands × 4 rows) — ONE
+#: definition feeding the Spark candidate stage of every MinHash family
+#: (documents, paragraphs, audio) and the paragraph DuckDB oracle CTEs
+#: (``_para_ctes``), so the two engines cannot silently desync.
+MINHASH_N_PERM, MINHASH_N_BANDS, MINHASH_ROWS_PER_BAND = 16, 4, 4
+
 
 def _side(key: str, side: str) -> str:
     return f"{key.removesuffix('_id')}_{side}"
@@ -113,14 +119,16 @@ def _key_lt(keys: list[str], a: str, b: str) -> "F.Column":
     )
 
 
-def _band_keys(h, n_bands: int = 4, rows_per_band: int = 4) -> "F.Column":
+def _band_keys(h) -> "F.Column":
     """The exploded LSH ``band_key`` column: one ``"b:h,h,h,h"`` string
     per band ``b`` over signature entries ``h(i)`` — the string the
     DuckDB oracles build with ``b || ':' || array_to_string(...)``."""
-    rows = [range(b * rows_per_band, (b + 1) * rows_per_band) for b in range(n_bands)]
+    n = MINHASH_ROWS_PER_BAND
     band_cols = [
-        F.concat(F.lit(f"{b}:"), F.concat_ws(",", *map(h, r))).alias(f"band{b}")
-        for b, r in enumerate(rows)
+        F.concat(
+            F.lit(f"{b}:"), F.concat_ws(",", *map(h, range(b * n, (b + 1) * n)))
+        ).alias(f"band{b}")
+        for b in range(MINHASH_N_BANDS)
     ]
     return F.explode(F.array(*band_cols)).alias("band_key")
 
@@ -130,34 +138,31 @@ def minhash_lsh_candidates(
     keys: list[str],
     materialize,
     size: str = "n_sh",
-    n_perm: int = 16,
-    n_bands: int = 4,
-    rows_per_band: int = 4,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs from (keys…, h) rows of per-unit
     distinct 64-bit shingle digests: (a-keys…, b-keys…, n_a, n_b),
     distinct, a-unit before b-unit.
 
-    The ``n_perm`` permutations are universal-hash integer arithmetic
-    ((a_i·h + b_i) mod P, inlined literal coefficients) over the one
-    digest per shingle — codegen'd long math whose mins map-side
-    combine. ``materialize`` caches the signature table (the band
-    self-join would otherwise evaluate the whole shingle+hash pipeline
-    once per side: self-join sides share work only up to the last
-    exchange); each caller passes its own cache for its table size.
-    The set size (``size``) rides along with the band rows so pairs
-    already carry both sizes — re-joining the signatures for sizes
-    would re-run the shingle pipeline."""
+    The ``MINHASH_N_PERM`` permutations are universal-hash integer
+    arithmetic ((a_i·h + b_i) mod P, inlined literal coefficients) over
+    the one digest per shingle — codegen'd long math whose mins
+    map-side combine. ``materialize`` caches the signature table (the
+    band self-join would otherwise evaluate the whole shingle+hash
+    pipeline once per side: self-join sides share work only up to the
+    last exchange); each caller passes its own cache for its table
+    size. The set size (``size``) rides along with the band rows so
+    pairs already carry both sizes — re-joining the signatures for
+    sizes would re-run the whole shingle+hash pipeline, whose
+    expensive part is the higher-order shingle lambdas (interpreted,
+    not codegen'd)."""
     sig = hashed.groupBy(*keys).agg(
         F.count(F.lit(1)).alias(size),
         *[
             F.min(F.expr(f"({ca} * h + {cb}) % {MINHASH_P}")).alias(f"h{i}")
-            for i, (ca, cb) in enumerate(minhash_params(n_perm))
+            for i, (ca, cb) in enumerate(minhash_params(MINHASH_N_PERM))
         ],
     )
-    bands = materialize(sig).select(
-        *keys, size, _band_keys(lambda i: F.col(f"h{i}"), n_bands, rows_per_band)
-    )
+    bands = materialize(sig).select(*keys, size, _band_keys(lambda i: F.col(f"h{i}")))
     return (
         bands.alias("a")
         .join(
@@ -401,6 +406,7 @@ def _rarest_prefix(ex: DataFrame, df: DataFrame | None = None) -> DataFrame:
     (df, s) is a strict total order within a doc and the ranks are
     deterministic. A row_number window + sizes join gives the same rows
     but was slower (AB_R15_SF1.json)."""
+    # integer ceil: ⌈0.8·n⌉ = ⌈4n/5⌉ = (4n + 4) div 5
     if df is None:
         withdf = ex.join(ex.groupBy("s").agg(F.count(F.lit(1)).alias("df")), "s")
     else:
@@ -435,6 +441,7 @@ def _ingest_idx_filter() -> "F.Column":
     """The INDEX prefix within a probe prefix: rk ≤ n_sh − ⌈8·n_sh/9⌉
     + 1, PPJoin's bound for the smaller doc of a pair with J ≥ 0.8
     (built lazily — Column construction needs an active SparkContext)."""
+    # 2t/(1+t) = 8/9 at t = 0.8; integer ceil ⌈8n/9⌉ = (8n + 8) div 9
     return F.col("rk") <= F.col("n_sh") - F.expr("(8 * n_sh + 8) div 9") + 1
 
 
@@ -489,11 +496,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle lies within the PROBE prefix |x| − ⌈t·|x|⌉ + 1 of the
     # LARGER doc x and, with the length filter, within the INDEX prefix
     # |y| − ⌈(2t/(1+t))·|y|⌉ + 1 of the SMALLER doc y ("smaller" in the
-    # (n_sh, doc_id) total order, so each pair is generated once). The
-    # index prefix is a SUBSET of the probe prefix, so only the probe
-    # stream is computed — and persisted: without it the index branch
-    # re-runs the df-join + ranking, and the two sides' differing
-    # filters defeat ReusedExchange (98.7 s vs 73.8 s at 500k docs).
+    # (n_sh, doc_id) total order, so each pair is generated once). At
+    # t = 0.8 the index side keeps ~|y|/9 shingles vs the probe side's
+    # ~|y|/5 — the candidate join's smaller input, lossless. The index
+    # prefix is a SUBSET of the probe prefix, so only the probe stream
+    # (~n/5 of the shingle stream, read by both join sides) is computed
+    # — and persisted: without it the index branch re-runs the df-join
+    # + ranking, and the two sides' differing filters defeat
+    # ReusedExchange (98.7 s vs 73.8 s at 500k docs).
     probe = cache_corpus(_rarest_prefix(ex))
     index = probe.filter(_ingest_idx_filter())
     a_gt_b = (F.col("a.n_sh") > F.col("b.n_sh")) | (
@@ -1798,12 +1808,6 @@ def dedup_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: segment is counted in token totals but is not a paragraph).
 PARA_SEG = 16
 
-#: LSH geometry for the paragraph family — ONE definition feeding both
-#: the Spark pipeline (``_paragraph_removed``) and the DuckDB oracle
-#: CTEs (``_para_ctes``), so the two engines cannot silently desync
-#: (r11 ADVICE: the oracle had hardcoded the 16/4/4 split).
-PARA_N_PERM, PARA_N_BANDS, PARA_ROWS_PER_BAND = 16, 4, 4
-
 _PARA_TOK_D = tokens_duck("text")
 _PARA_TOK_S = tokens_spark("text")
 
@@ -1839,14 +1843,14 @@ sh AS (
 ),
 sigs AS (
   SELECT doc_id, pidx, shingles,
-         {minhash_int_duck('shingles', PARA_N_PERM)} AS mh FROM sh
+         {minhash_int_duck('shingles', MINHASH_N_PERM)} AS mh FROM sh
 ),
 bands AS (
   SELECT doc_id, pidx,
-         unnest(list_transform(generate_series(0, {PARA_N_BANDS - 1}),
+         unnest(list_transform(generate_series(0, {MINHASH_N_BANDS - 1}),
                 b -> b || ':' || array_to_string(
-                  mh[b * {PARA_ROWS_PER_BAND} + 1:
-                     b * {PARA_ROWS_PER_BAND} + {PARA_ROWS_PER_BAND}],
+                  mh[b * {MINHASH_ROWS_PER_BAND} + 1:
+                     b * {MINHASH_ROWS_PER_BAND} + {MINHASH_ROWS_PER_BAND}],
                   ','))) AS band_key
   FROM sigs
 ),
@@ -2002,9 +2006,7 @@ def _paragraph_removed(base: DataFrame) -> DataFrame:
         "doc_id", "pidx", F.expr(shingle_int_hash_spark("s")).alias("h")
     )
     keys = ["doc_id", "pidx"]
-    cand = minhash_lsh_candidates(
-        exh, keys, cache_corpus, "n_sh", PARA_N_PERM, PARA_N_BANDS, PARA_ROWS_PER_BAND
-    )
+    cand = minhash_lsh_candidates(exh, keys, cache_corpus)
     # three references below (both branches of the verify's candidate
     # key union plus its final pairs join) — persist so the band
     # self-join + distinct subtree runs once, the same rule that
@@ -2133,18 +2135,14 @@ def _para_sigs(segs_frame: DataFrame) -> DataFrame:
         "pidx",
         "sh",
         F.size("sh").cast("long").alias("n_sh"),
-        F.expr(minhash_int_spark("sh", PARA_N_PERM)).alias("mh"),
+        F.expr(minhash_int_spark("sh", MINHASH_N_PERM)).alias("mh"),
     )
 
 
 def _para_bands(sigs: DataFrame) -> DataFrame:
     """(doc_id, pidx, band_key) — the LSH band explode, band strings
     identical to the batch family's and the DuckDB CTEs'."""
-    return sigs.select(
-        "doc_id",
-        "pidx",
-        _band_keys(lambda i: F.col("mh")[i], PARA_N_BANDS, PARA_ROWS_PER_BAND),
-    )
+    return sigs.select("doc_id", "pidx", _band_keys(lambda i: F.col("mh")[i]))
 
 
 class ParagraphIngestBase(_Frames):
@@ -2281,14 +2279,14 @@ sh AS (
 ),
 sigs AS (
   SELECT doc_id, pidx, shingles,
-         {minhash_int_duck('shingles', PARA_N_PERM)} AS mh FROM sh
+         {minhash_int_duck('shingles', MINHASH_N_PERM)} AS mh FROM sh
 ),
 bands AS (
   SELECT doc_id, pidx,
-         unnest(list_transform(generate_series(0, {PARA_N_BANDS - 1}),
+         unnest(list_transform(generate_series(0, {MINHASH_N_BANDS - 1}),
                 b -> b || ':' || array_to_string(
-                  mh[b * {PARA_ROWS_PER_BAND} + 1:
-                     b * {PARA_ROWS_PER_BAND} + {PARA_ROWS_PER_BAND}],
+                  mh[b * {MINHASH_ROWS_PER_BAND} + 1:
+                     b * {MINHASH_ROWS_PER_BAND} + {MINHASH_ROWS_PER_BAND}],
                   ','))) AS band_key
   FROM sigs
 ),

@@ -1,4 +1,4 @@
-"""Custom Python DataSource for the reference's edge-list text format
+r"""Custom Python DataSource for the reference's edge-list text format
 (pyspark 4 ``pyspark.sql.datasource`` API).
 
 This makes SURVEY.md §2 op #5 — INPUT RANGE PARTITIONING, the piece
@@ -14,12 +14,16 @@ line is lost or duplicated whatever the boundaries cut through;
 property-tested across adversarial split layouts in
 ``tests/test_sources_sinks.py``).
 
-Parsing applies the reference's scan semantics (ops #1-4) exactly as
+Parsing applies the reference's scan semantics (ops #1-4) as
 ``readers.read_edges_text`` (``malformed="drop"``) does, in one
 ``_parse_edge_line`` shared by the batch and stream readers: drop the
 line terminator, trim spaces (only spaces, as Spark's ``trim``), drop
 blank lines and ``#`` comments, split on the separator, drop rows
-without exactly two non-empty fields.
+without exactly two non-empty fields. The two readers agree on
+LF and CRLF files. Known difference: Spark's text scan also ends a
+line at a bare ``\r`` mid-file, while this connector splits lines on
+``\n`` only, so ``a\tb\rc\td\n`` is two rows from ``read_edges_text``
+and none (a malformed three-field line) here.
 """
 
 from __future__ import annotations
@@ -171,11 +175,14 @@ def register_edgelist_source(spark) -> None:
 
 
 def _parse_edge_line(raw: bytes, sep: str, comment: str):
-    """(from_paper, to_paper) of one raw line, or None for a blank,
+    r"""(from_paper, to_paper) of one raw line, or None for a blank,
     comment or malformed line (``malformed="drop"``, reference
-    mapper.py:74-80). Spark's text scan ends a line at ``\n``,
-    ``\r\n`` or a final ``\r`` and ``trim`` removes spaces only, so a
-    tab or vertical tab at either end stays part of the line."""
+    mapper.py:74-80). Lines are split on ``\n`` by the callers; the
+    ``\n`` or ``\r\n`` terminator is dropped here, and, as Spark's
+    ``trim``, only spaces are trimmed, so a tab or vertical tab at
+    either end stays part of the line. A bare ``\r`` inside a line is
+    kept (Spark's text scan would end the line there; see the module
+    docstring)."""
     line = raw.decode("utf-8", errors="replace")
     line = line.removesuffix("\n").removesuffix("\r").strip(" ")
     if not line or line.startswith(comment):
