@@ -399,10 +399,13 @@ def _rarest_prefix(ex: DataFrame, df: DataFrame | None = None) -> DataFrame:
     complete-mode aggregate (repartition(doc_id) first — the r6
     near-unique-key rule), sorted rarest-first INSIDE the row and
     sliced to the probe prefix BEFORE exploding, so only the ~n/5
-    prefix rows enter the downstream plan. ``array_sort`` on
+    prefix rows enter the downstream plan. ``sort_array`` on
     struct(df, s) compares fields in declaration order with binary
-    string comparison, exactly ``orderBy("df", "s")``. ``ex`` must be
-    per-doc distinct (it is: ``exploded_word_shingles`` dedups), so
+    string comparison, exactly ``orderBy("df", "s")``; unlike
+    ``array_sort`` it plans no lambda comparator (the structs are never
+    null, so the two agree), and it built the 100× ingest base faster
+    in 6 of 7 interleaved pairs. ``ex`` must be per-doc distinct (it
+    is: ``exploded_word_shingles`` dedups), so
     (df, s) is a strict total order within a doc and the ranks are
     deterministic. A row_number window + sizes join gives the same rows
     but was slower (AB_R15_SF1.json)."""
@@ -423,7 +426,7 @@ def _rarest_prefix(ex: DataFrame, df: DataFrame | None = None) -> DataFrame:
             "doc_id",
             F.size("_ds").cast("long").alias("n_sh"),
             F.expr(
-                "slice(array_sort(_ds), 1, "
+                "slice(sort_array(_ds), 1, "
                 "size(_ds) - (4 * size(_ds) + 4) div 5 + 1)"
             ).alias("_pref"),
         )
@@ -603,10 +606,10 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifacts from the corpus (in production they are precomputed
     outputs of previous runs — ``prepare_ingest_base`` +
     ``ingest_report_against_base`` are exactly that split, used by
-    the streaming twin). Measured (tools/scaling_ingest.py,
-    SCALING_INGEST_r09.json): a FIXED 625-doc delta against base
-    5k → 50k → 500k runs 3.3/7.8/25.6 s — 2.4×/3.3× per 10× decade,
-    sub-linear in base, with the rejection set byte-identical at all
+    the streaming twin). Measured (SCALING_INGEST_r09.json; now
+    ``tools/scale.py ingest_fixed_delta --inputs corpus``): a FIXED
+    625-doc delta against base 5k → 50k → 500k runs 3.3/7.8/25.6 s —
+    2.4×/3.3× per 10× decade, sub-linear in base, with the rejection set byte-identical at all
     three points (the construction falsifier). Verify is pair-keyed
     (popularity-immune). The exactness argument is the prefix-filter
     + PPJoin theorems, pair-symmetric, so no true ≥0.8 pair is

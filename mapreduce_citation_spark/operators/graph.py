@@ -2117,7 +2117,7 @@ def citation_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def random_walks(e: DataFrame) -> DataFrame:
     """The walk core on a prepared (from_paper, to_paper) edge frame —
-    shared by the registered query and tools/scaling_walks.py.
+    shared by the registered query and ``tools/scale.py random_walks``.
 
     Folding the landing node's degree into the adjacency row instead
     of the per-hop frontier⋈degree join was 0.78× at sf1: it adds an

@@ -17,16 +17,36 @@ scale-conscious configuration:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    """Cores to use locally; driver exports SPARK_GRAFT_CPUS."""
+    """Cores to use locally; driver exports SPARK_GRAFT_CPUS, which
+    must be a positive integer."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
-        return max(1, int(env))
+        try:
+            cores = int(env)
+        except ValueError:
+            cores = 0
+        if cores < 1:
+            raise ValueError(f"SPARK_GRAFT_CPUS={env!r}: expected a positive integer")
+        return cores
     return os.cpu_count() or 4
+
+
+def driver_memory() -> str:
+    """The driver heap: SPARK_GRAFT_DRIVER_MEM in the JVM's size syntax
+    (``8g``, ``4096m``, ``512mb``), default 8g. Checked here, so a bad
+    value fails before a JVM starts rather than inside one."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    if not re.fullmatch(r"[1-9]\d*([kmgtp]b?|b)?", mem, re.IGNORECASE):
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={mem!r}: expected a size such as 8g or 4096m"
+        )
+    return mem
 
 
 def get_spark(
@@ -42,6 +62,7 @@ def get_spark(
     than per-query so plans are reproducible.
     """
     cores = cpus or default_parallelism()
+    mem = driver_memory()
     parts = shuffle_partitions or cores
     builder = (
         SparkSession.builder.appName(app_name)
@@ -95,7 +116,7 @@ def get_spark(
         # blocks since the gram cache became disk-evictable. Estimates
         # gate at 16 MB (above), measurements at 64 MB.
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

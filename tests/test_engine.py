@@ -139,3 +139,40 @@ def test_partition_pruned_join_uses_dpp_and_matches_flat(spark, sf_dir):
         for r in join_partition_flat(spark, sf_dir).collect()
     }
     assert got == want and got
+
+
+@pytest.mark.parametrize("var, value", [
+    ("SPARK_GRAFT_CPUS", "abc"),
+    ("SPARK_GRAFT_CPUS", "0"),
+    ("SPARK_GRAFT_CPUS", "-2"),
+    ("SPARK_GRAFT_DRIVER_MEM", "lots"),
+    ("SPARK_GRAFT_DRIVER_MEM", "8 g"),
+])
+def test_session_rejects_malformed_env_before_any_jvm(monkeypatch, var, value):
+    """A malformed core count or heap size raises a ValueError naming
+    the variable and its value, before the session builder is touched."""
+    from mapreduce_citation_spark import session
+
+    class NoBuilder:
+        @property
+        def builder(self):
+            raise AssertionError("the session builder was reached")
+
+    monkeypatch.setattr(session, "SparkSession", NoBuilder())
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "4g")
+    monkeypatch.setenv(var, value)
+    with pytest.raises(ValueError, match=f"{var}='{value}'"):
+        session.get_spark("bad-env")
+
+
+def test_session_accepts_jvm_size_syntax(monkeypatch):
+    from mapreduce_citation_spark import session
+
+    for mem in ("8g", "4096m", "512MB", "2T", "1048576k"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", mem)
+        assert session.driver_memory() == mem
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    assert session.driver_memory() == "8g"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "12")
+    assert session.default_parallelism() == 12

@@ -1,5 +1,5 @@
 """Tests of the measuring tools under ``tools/``: the import guard, the
-repack checksum and the two-revision A/B harness."""
+repack checksum, the two-revision A/B harness and the scale curves."""
 
 from __future__ import annotations
 
@@ -17,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from mapreduce_citation_spark.registry import all_specs
+from tools import scale
 from tools.ab import normalize_plan, run_query, worker_env
 from tools.repack_rowgroups import _checksum
 
@@ -152,3 +153,107 @@ def test_ab_head_against_worktree_end_to_end(sf_dir, tmp_path):
     )
     assert plans.returncode == 0, plans.stdout[-3000:] + plans.stderr[-3000:]
     assert "top_cited: identical" in plans.stdout
+
+
+def _points(*facts: dict) -> list[dict]:
+    """Scale points at K = 1, 10, 100 with the given facts."""
+    return [{"k": k, **f} for k, f in zip((1, 10, 100), facts)]
+
+
+def _holds(check, points: list[dict]) -> bool:
+    try:
+        for pt in points:
+            check(pt, points[0])
+    except AssertionError:
+        return False
+    return True
+
+
+@pytest.mark.parametrize("check, linear, leaky", [
+    (scale.exact("rows"),
+     _points({"rows": 7}, {"rows": 70}, {"rows": 700}),
+     _points({"rows": 7}, {"rows": 71}, {"rows": 700})),
+    (scale.exact("edges", "rows"),
+     _points({"edges": 5, "rows": 3}, {"edges": 50, "rows": 30}),
+     _points({"edges": 5, "rows": 3}, {"edges": 51, "rows": 30})),
+    (scale.near("rows"),
+     _points({"rows": 100}, {"rows": 1040}, {"rows": 9600}),
+     _points({"rows": 100}, {"rows": 1060})),
+    (scale.nonzero("dup_sum"),
+     _points({"dup_sum": 3}, {"dup_sum": 30}),
+     _points({"dup_sum": 0}, {"dup_sum": 0})),
+    (scale.fixed_rows(8),
+     _points({"rows": 8}, {"rows": 8}, {"rows": 8}),
+     _points({"rows": 8}, {"rows": 9})),
+    (scale.planted_floor(50),
+     _points({"rows": 50}, {"rows": 512}),
+     _points({"rows": 50}, {"rows": 499})),
+    (scale.funnel_stages,
+     _points({"stages": {"0_total": 5000, "1_q": 900, "2_e": 800, "3_n": 700, "4_d": 600}},
+             {"stages": {"0_total": 50000, "1_q": 1000, "2_e": 900, "3_n": 800, "4_d": 700}}),
+     _points({"stages": {"0_total": 5000, "1_q": 900, "2_e": 800, "3_n": 700, "4_d": 600}},
+             {"stages": {"0_total": 50001, "1_q": 1000, "2_e": 900, "3_n": 800, "4_d": 700}})),
+    (scale.walks_contained,
+     _points({"crossers": 0}, {"crossers": 0}),
+     _points({"crossers": 0}, {"crossers": 1})),
+    (scale.fixed_delta,
+     _points({"delta": 625}, {"delta": 625}, {"delta": 625}),
+     _points({"delta": 625}, {"delta": 626})),
+    (scale.same_rejections,
+     _points({"rejections": [[8, "exact"], [16, "near"]]},
+             {"rejections": [[8, "exact"], [16, "near"]]}),
+     _points({"rejections": [[8, "exact"], [16, "near"]]},
+             {"rejections": [[8, "exact"], [16, "exact"]]})),
+], ids=lambda v: getattr(v, "__name__", None))
+def test_scale_check_passes_linear_and_fails_leaky(check, linear, leaky):
+    """Each construction check holds on a K-linear ladder and fails on
+    a leaky one: K·base+1 rows, a drifted rejection set, one walk that
+    crossed replicas."""
+    assert _holds(check, linear)
+    assert not _holds(check, leaky)
+
+
+def test_scale_tables_name_real_queries_and_units():
+    """Every checked or fact-gathering name is a registered query or a
+    unit, and every unit has checks."""
+    specs = all_specs()
+    for name in [*scale.CHECKS, *scale.FACTS]:
+        assert name in specs or name in scale.UNITS, name
+    assert set(scale.UNITS) <= set(scale.CHECKS)
+
+
+def test_scale_replica_ladder_starts_at_one():
+    """Every check compares against the first point, so a replica
+    ladder must start at 1×; the error comes before any staging."""
+    with pytest.raises(ValueError, match="first K must be 1"):
+        scale.ladder(None, "edges:10,100")
+
+
+def test_stage_edges_offsets_each_replica(spark, sf_dir, tmp_path):
+    """k=2 gives twice the base edges; replica 1 is replica 0 with every
+    node id shifted by the stride."""
+    one = spark.read.parquet(scale.stage_edges(spark, 1, sf_dir, str(tmp_path)))
+    two = spark.read.parquet(scale.stage_edges(spark, 2, sf_dir, str(tmp_path)))
+    base = sorted((int(r.from_paper), int(r.to_paper)) for r in one.collect())
+    both = sorted((int(r.from_paper), int(r.to_paper)) for r in two.collect())
+    stride = scale.NODE_STRIDE
+    assert len(base) > 0 and max(max(e) for e in base) < stride
+    assert both == sorted(base + [(a + stride, b + stride) for a, b in base])
+
+
+def test_scale_curve_over_two_fixture_dirs(spark, sf_dir):
+    """One curve over the ladder sf0.001,sf0.01: a point per dir with
+    its K, the output rows, three timed runs with their jobs, and one
+    adjacent-point ratio."""
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    points = scale.ladder(spark, f"{sf_dir},{sf01}")
+    assert [k for _, k in points] == [1, 10]
+    report = scale.curve(spark, "top_cited", points)
+    pts = report["points"]
+    assert [p["rows"] for p in pts] == [30, 30]
+    for p in pts:
+        assert len(p["runs_s"]) == len(p["jobs"]) == scale.RUNS
+        assert p["sec"] == sorted(p["runs_s"])[1] and min(p["jobs"]) >= 1
+    assert report["ratios"] == [
+        {"k_x": 10.0, "time_x": round(pts[1]["sec"] / pts[0]["sec"], 2)}
+    ]

@@ -10,9 +10,11 @@ is about semantics, not client formatting.
 Usage: python tools/check_correctness.py [--json PATH] [query ...]
 
 ``--json PATH`` additionally writes a driver-artifact-style JSON dict
-(per query: rows/schema/hash match flags, row counts, err) so full
-sweeps can be committed as evidence (ADVICE r4: the driver window
-samples 50 queries; the committed artifact covers the rest).
+(per query: rows/schema/hash match flags, row counts, err, and the
+gate's cost: ``spark_s`` for the Spark query into pandas, ``oracle_s``
+for the DuckDB oracle) so full sweeps can be committed as evidence
+(ADVICE r4: the driver window samples 50 queries; the committed
+artifact covers the rest).
 """
 
 from __future__ import annotations
@@ -106,7 +108,7 @@ def main(names: list[str]) -> int:
     use = names or list(qs)
     failures = 0
     for name in use:
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             sdf = qs[name](spark, SF_DIR).toPandas()
         except Exception as e:
@@ -115,9 +117,11 @@ def main(names: list[str]) -> int:
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": None,
                 "oracle_rows": None, "err": f"spark: {e}",
+                "spark_s": round(time.perf_counter() - t0, 3), "oracle_s": None,
             }
             failures += 1
             continue
+        spark_s = round(time.perf_counter() - t0, 3)
         if name not in oracles:
             # every registered query carries a DuckDB oracle as of r6
             # (stats_approx, the last rows-only entry, now emits
@@ -128,9 +132,11 @@ def main(names: list[str]) -> int:
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": len(sdf),
                 "oracle_rows": None, "err": "no_oracle",
+                "spark_s": spark_s, "oracle_s": None,
             }
             failures += 1
             continue
+        t1 = time.perf_counter()
         try:
             odf = con.execute(oracles[name]).fetchdf()
         except Exception as e:
@@ -139,9 +145,11 @@ def main(names: list[str]) -> int:
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": len(sdf),
                 "oracle_rows": None, "err": f"oracle: {e}",
+                "spark_s": spark_s, "oracle_s": round(time.perf_counter() - t1, 3),
             }
             failures += 1
             continue
+        oracle_s = round(time.perf_counter() - t1, 3)
         problems = []
         if len(sdf) != len(odf):
             problems.append(f"rows {len(sdf)} vs {len(odf)}")
@@ -167,12 +175,15 @@ def main(names: list[str]) -> int:
             "spark_rows": len(sdf),
             "oracle_rows": len(odf),
             "err": "; ".join(problems) or None,
+            "spark_s": spark_s,
+            "oracle_s": oracle_s,
         }
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             failures += 1
         else:
-            print(f"PASS  {name} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS  {name} ({len(sdf)} rows, spark {spark_s:.1f}s, "
+                  f"oracle {oracle_s:.1f}s)")
     if json_path:
         import json
 

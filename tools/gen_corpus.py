@@ -45,6 +45,8 @@ import duckdb
 import pandas as pd
 
 STRIDE = 10000
+#: the fixture the expansions copy: sf0.1 holds 5,000 documents
+BASE = "/root/testdata/sf0.1"
 
 
 def _replica_map(k: int) -> pd.DataFrame:
@@ -81,7 +83,7 @@ def rg_clause() -> str:
     return f", ROW_GROUP_SIZE {int(v)}" if v else ""
 
 
-def generate(out_dir: str, k: int, src_dir: str = "/root/testdata/sf0.1") -> str:
+def generate(out_dir: str, k: int, src_dir: str = BASE) -> str:
     src = os.path.join(src_dir, "documents.parquet")
     out = os.path.join(out_dir, "documents.parquet")
     if os.path.exists(out):
@@ -137,7 +139,7 @@ def _coord_map(k: int, dim: int = 64):
 
 
 def generate_embeddings(
-    out_dir: str, k: int, src_dir: str = "/root/testdata/sf0.1"
+    out_dir: str, k: int, src_dir: str = BASE
 ) -> str:
     """Expand embeddings.parquet ×K under vec_id + r·10000 (stride
     preserves the fixed `vec_id < 10` query side: queries stay the 10
@@ -185,5 +187,5 @@ def generate_embeddings(
 
 if __name__ == "__main__":
     out_dir, k = sys.argv[1], int(sys.argv[2])
-    src = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    src = sys.argv[3] if len(sys.argv) > 3 else BASE
     generate(out_dir, k, src)

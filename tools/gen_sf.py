@@ -22,7 +22,7 @@ and every join's output grows exactly ×K:
 Replication CANNOT manufacture cross-replica join or near-dup mass:
 keys never collide across replicas by construction (stride > max key),
 and the corpus constructions were adversarially checked by
-tools/scaling_corpus.py's K-linearity assertion in r6.
+the K-linearity checks of ``tools/scale.py --inputs corpus``.
 
 Fact tables are written PER_THREAD_OUTPUT (a parquet directory) so the
 Spark scan parallelizes; dimensions are single files.

@@ -8,17 +8,17 @@ filled) and each epoch runs ``ingest_report_against_base`` — delta
 shingling plus probe joins against the cached, pre-partitioned base.
 
 This tool measures exactly the claim: a FIXED 625-doc delta (replica
-0's ``%8`` cohort, same as tools/scaling_ingest.py) streamed in 4 real
-micro-batches (maxFilesPerTrigger=1) against bases of 5k / 50k / 500k
-docs. Reported per point: one-time base-prep wall, per-epoch walls
-(timed inside the foreachBatch body), and their median. The fix is
+0's ``%8`` cohort, as in ``tools/scale.py ingest_fixed_delta``)
+streamed in 4 real micro-batches (maxFilesPerTrigger=1) against bases
+of 5k / 50k / 500k docs. Reported per point: one-time base-prep wall,
+per-epoch walls (timed inside the foreachBatch body), and their median. The fix is
 proven if prep wall tracks base size while per-epoch wall does not
 (probe joins still scan the cached base, so mild growth is the honest
 expectation — what must disappear is the ~linear re-derivation term).
 
-Built-in falsifier (same as scaling_ingest.py): replicas share neither
-digests nor shingles with replica 0, so the rejection set must be
-byte-identical at every point — drift aborts the run.
+Built-in falsifier (as in ``ingest_fixed_delta``): replicas share
+neither digests nor shingles with replica 0, so the rejection set must
+be byte-identical at every point — drift aborts the run.
 
 Methodology: per point, 1 warmup stream + 1 measured stream (each
 stream already yields 4 per-epoch samples; the house median-of-3
