@@ -1020,9 +1020,7 @@ def _embedding_cosine_oracle() -> str:
     from .similarity import lsh_band_keys_duck
 
     return f"""
-WITH bands AS (
-  SELECT vec_id, unnest({lsh_band_keys_duck(6, 8)}) AS band_key FROM embeddings
-),
+WITH bands AS ({lsh_band_keys_duck(6, 8)}),
 cand AS (
   SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
   FROM bands x JOIN bands y ON x.band_key = y.band_key AND x.vec_id < y.vec_id
@@ -1062,11 +1060,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from a self-equi-join on the band key; exact cosine is
     verified on candidates only, as an ordered left fold in double.
     The DuckDB oracle mirrors the banding bit-for-bit
-    (``lsh_band_keys_duck``), exactly as ``dedup_minhash_lsh``'s
-    oracle mirrors its MinHash banding — so the cross-engine gate is
-    exact at ANY scale factor, and recall vs. the exhaustive all-pairs
-    ground truth is a separately-pinned pytest property
-    (``test_embedding_cosine_lsh_blocking``).
+    (``lsh_band_keys_duck``, pinned against the kernel by
+    ``test_band_keys_pandas_matches_duck``), exactly as
+    ``dedup_minhash_lsh``'s oracle mirrors its MinHash banding — so
+    the cross-engine gate is exact at ANY scale factor, and recall vs.
+    the exhaustive all-pairs ground truth is a separately-pinned
+    pytest property (``test_embedding_cosine_lsh_blocking``).
 
     Recall math, stated honestly: per-bit agreement is ``p = 1 - θ/π``,
     so at the fixture's 0.5-cosine threshold (p ≈ 2/3, barely above a
@@ -1077,18 +1076,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup dedup actually uses (cosine ≥ 0.9 ⇒ p ≥ 0.93) the SAME
     (6, 8) parameters give 1-(1-0.93⁶)⁸ ≈ 99.98% recall with ~2% of
     pairs touched — pinned by the synthetic high-similarity pytest."""
+    from .similarity import _NORM, lsh_band_keys_pandas
+
     e = load_table(spark, sf_dir, "embeddings")
-    dot_self = (
-        "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "0D, (a, b) -> a + b))"
-    )
-    from .similarity import lsh_band_keys_pandas
 
     # band keys materialized once: the self-join would otherwise run
     # the 48-hyperplane projection per row PER SIDE (embeddings
     # scanned 2× just for candidates). Keys come from the vectorized
-    # Arrow/numpy kernel — bitwise identical to the SQL fold the
-    # DuckDB oracle mirrors (see lsh_band_keys_pandas docstring).
+    # Arrow/numpy kernel — bitwise identical to the oracle's
+    # lsh_band_keys_duck (see lsh_band_keys_pandas docstring).
     bands = cache_corpus(lsh_band_keys_pandas(e, 6, 8))
     cand = (
         bands.alias("x")
@@ -1106,7 +1102,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     # candidate id set is data-dependent: no broadcast hint, AQE decides
     n = e.join(cand_ids, "vec_id", "left_semi").select(
-        "vec_id", "embedding", F.expr(dot_self).alias("nrm")
+        "vec_id", "embedding", F.expr(_NORM).alias("nrm")
     )
     a = n.select(
         F.col("vec_id").alias("vec_a"),
@@ -1233,35 +1229,8 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_hybrid_oracle() -> str:
-    from .similarity import lsh_band_keys_duck
-
     return f"""
-WITH bands AS (
-  SELECT vec_id, unnest({lsh_band_keys_duck(6, 8)}) AS band_key FROM embeddings
-),
-cand AS (
-  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-  FROM bands x JOIN bands y ON x.band_key = y.band_key AND x.vec_id < y.vec_id
-),
-n AS (
-  SELECT vec_id,
-         sqrt(list_reduce(list_transform(embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS nrm,
-         embedding
-  FROM embeddings
-),
-cos AS (
-  SELECT c.vec_a, c.vec_b,
-         list_reduce(list_transform(generate_series(1, 64),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
-              (x, y) -> x + y) / (a.nrm * b.nrm) AS cosine
-  FROM cand c
-  JOIN n a ON a.vec_id = c.vec_a
-  JOIN n b ON b.vec_id = c.vec_b
-  WHERE list_reduce(list_transform(generate_series(1, 64),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)),
-              (x, y) -> x + y) / (a.nrm * b.nrm) >= 0.5
-),
+WITH cos AS ({_embedding_cosine_oracle()}),
 sh AS (
   SELECT doc_id, {_SH_DUCK} AS shingles FROM documents
 )

@@ -7,11 +7,12 @@ Two paths, per the standard ANN playbook:
   side is small by construction; the corpus never shuffles).
 - ``knn_lsh_ann``: sign-random-projection LSH — each vector gets a
   b-bit signature from deterministic md5-derived hyperplanes;
-  candidates share a signature prefix bucket. At 100 TB the bucket
-  join touches ~n/2^b of the corpus per query instead of n. Recall vs
-  the brute-force baseline is asserted in pytest (the LSH query
-  itself is rows-only for the driver: the bucketing is not
-  SQL-oracle-expressible in a reasonable DuckDB query).
+  candidates share a signature bucket. At 100 TB the bucket join
+  touches ~n/2^b of the corpus per query instead of n. The signature
+  comes from the one sign-LSH kernel (``lsh_band_keys_pandas``) and
+  its DuckDB mirror (``lsh_band_keys_duck``) reproduces it bitwise,
+  so the oracle gate is exact; recall vs the brute-force baseline is
+  asserted in pytest.
 
 Dot products are ordered left-folds in double on both engines
 (bit-identical; see operators/dedup.py docstring).
@@ -100,46 +101,13 @@ def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lsh_signature_expr(bits: int = 8) -> str:
-    """b-bit sign-random-projection signature (Spark SQL expression).
-
-    Hyperplane j's component for dimension i is ±1 by the parity of
-    the first hex digit of md5(j || ':' || i) — deterministic, no
-    stored model. Signature bit j = sign(Σ_i h_ji · v_i) ≥ 0.
-    """
-    return (
-        f"concat_ws('', transform(sequence(0, {bits - 1}), j -> "
-        "CASE WHEN aggregate(zip_with(embedding, sequence(0, size(embedding) - 1), "
-        "(x, i) -> CASE WHEN substring(md5(concat(j, ':', i)), 1, 1) < '8' "
-        "THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END), "
-        "0D, (acc, v) -> acc + v) >= 0D THEN '1' ELSE '0' END))"
-    )
-
-
-def lsh_signature_duck(bits: int = 8, dim: int = 64) -> str:
-    """DuckDB mirror of :func:`lsh_signature_expr`: same md5-parity
-    hyperplane components (Spark's ``zip_with`` index is 0-based →
-    ``md5(j || ':' || (i-1))`` under 1-based ``generate_series``),
-    same ordered left fold (DuckDB's ``list_reduce`` seeds with the
-    first element, Spark with 0D; ``0 + x ≡ x`` in IEEE double), same
-    ``>= 0`` sign rule → identical signature strings."""
-    bit = (
-        "CASE WHEN list_reduce(list_transform(generate_series(1, {d}), "
-        "i -> CASE WHEN substr(md5(j || ':' || (i - 1)), 1, 1) < '8' "
-        "THEN CAST(embedding[i] AS DOUBLE) ELSE -CAST(embedding[i] AS DOUBLE) END), "
-        "(a, b) -> a + b) >= 0 THEN '1' ELSE '0' END"
-    ).format(d=dim)
-    return (
-        f"array_to_string(list_transform(generate_series(0, {bits - 1}), j -> {bit}), '')"
-    )
-
-
 def _hyperplane_sign_rows(n_planes: int, dim: int = 64) -> list[list[float]]:
-    """±1 hyperplane components, row j = plane j — the SAME md5 family
-    as :func:`lsh_signature_expr` (first hex digit of md5('j:i') < '8'
-    → +1), but evaluated ONCE at plan-build time in Python and inlined
-    as literals, instead of 64 md5 calls per plane per row in the
-    interpreted HOF expression (~50× less per-row work)."""
+    """±1 hyperplane components, row j = plane j: +1 iff the first hex
+    digit of md5('j:i') < '8' — deterministic, no stored model.
+    Evaluated ONCE at plan-build time in Python and shipped as
+    literals (the numpy sign matrix of :func:`lsh_band_keys_pandas`,
+    the bound sign rows of :func:`lsh_band_keys_duck`), so no md5 runs
+    per row."""
     import hashlib
 
     return [
@@ -151,60 +119,35 @@ def _hyperplane_sign_rows(n_planes: int, dim: int = 64) -> list[list[float]]:
     ]
 
 
-def lsh_band_keys_expr(rows_per_band: int = 6, n_bands: int = 8, dim: int = 64) -> str:
-    """Banded sign-LSH bucket keys (Spark SQL expression →
-    ``array<string>`` of ``'<band>:<bits>'``).
-
-    Band *b* uses hyperplanes ``j = b·r … b·r+r-1``; two vectors are
-    candidates iff they share a key in ≥1 band (probability
-    ``1-(1-p^r)^B`` for per-bit agreement ``p = 1 - θ/π``). Each bit is
-    the sign of an ORDERED left fold of ``x_i · s_ji`` in double, so
-    :func:`lsh_band_keys_duck` reproduces it bitwise. Hyperplane signs
-    are inlined literals (statically unrolled — no md5 in the per-row
-    path, and the whole expression stays a single projection)."""
-    rows = _hyperplane_sign_rows(rows_per_band * n_bands, dim)
-
-    def bit(j: int) -> str:
-        arr = "array(" + ", ".join(f"{s:.0f}D" for s in rows[j]) + ")"
-        return (
-            f"CASE WHEN aggregate(zip_with(embedding, {arr}, "
-            "(x, s) -> CAST(x AS DOUBLE) * s), 0D, (acc, v) -> acc + v) >= 0D "
-            "THEN '1' ELSE '0' END"
-        )
-
-    bands = ", ".join(
-        f"concat('{b}:', "
-        + ", ".join(bit(b * rows_per_band + j) for j in range(rows_per_band))
-        + ")"
-        for b in range(n_bands)
-    )
-    return f"array({bands})"
-
-
 def lsh_band_keys_duck(rows_per_band: int = 6, n_bands: int = 8, dim: int = 64) -> str:
-    """DuckDB mirror of :func:`lsh_band_keys_expr`: same literal
-    hyperplane signs, same ordered left fold (``list_reduce`` over an
-    index-ascending ``list_transform`` ≡ Spark's ``aggregate`` over
-    ``zip_with`` — DuckDB's fold seeds with the first element, Spark's
-    with 0D; ``0 + x ≡ x`` in IEEE double, so the sums are bitwise
-    equal), same ``>= 0`` sign rule → identical band keys."""
+    """DuckDB mirror of :func:`lsh_band_keys_pandas`: one
+    ``(vec_id, band_key)`` query over ``embeddings``, one row per
+    (vector, band). The sign rows are bound once, as a ``MATERIALIZED``
+    CTE with one row per plane. Each (vector, plane) bit is an ordered
+    ``list_reduce`` left fold of ``x_i · s_ji`` in double (DuckDB seeds
+    the fold with the first term, the kernel with 0.0; ``0 + x ≡ x`` in
+    IEEE double, so the sums are bitwise equal) under the kernel's sign
+    rule: ``>= 0`` is bit '1', and DuckDB evaluates ``NaN >= 0`` as
+    TRUE. ``string_agg`` concatenates a band's bits in plane order."""
     rows = _hyperplane_sign_rows(rows_per_band * n_bands, dim)
-
-    def bit(j: int) -> str:
-        arr = "[" + ", ".join(f"{s:.0f}" for s in rows[j]) + "]"
-        return (
-            f"CASE WHEN list_reduce(list_transform(generate_series(1, {dim}), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr}[i])), "
-            "(a, b) -> a + b) >= 0 THEN '1' ELSE '0' END"
-        )
-
-    bands = ", ".join(
-        f"concat('{b}:', "
-        + ", ".join(bit(b * rows_per_band + j) for j in range(rows_per_band))
-        + ")"
-        for b in range(n_bands)
-    )
-    return f"[{bands}]"
+    lit = "[" + ", ".join(
+        "[" + ", ".join(f"{s:.0f}" for s in row) + "]" for row in rows
+    ) + "]"
+    return f"""
+WITH planes AS MATERIALIZED (
+  SELECT j, CAST(({lit})[j + 1] AS DOUBLE[]) AS srow
+  FROM (SELECT unnest(generate_series(0, {len(rows) - 1})) AS j)
+),
+bits AS (
+  SELECT e.vec_id, p.j, p.j // {rows_per_band} AS band,
+         CASE WHEN list_reduce(list_transform(generate_series(1, {dim}),
+              i -> CAST(e.embedding[i] AS DOUBLE) * p.srow[i]),
+              (a, b) -> a + b) >= 0 THEN '1' ELSE '0' END AS bit
+  FROM embeddings e CROSS JOIN planes p
+)
+SELECT vec_id, band || ':' || string_agg(bit, '' ORDER BY j) AS band_key
+FROM bits GROUP BY vec_id, band
+"""
 
 
 def lsh_band_keys_pandas(
@@ -213,23 +156,22 @@ def lsh_band_keys_pandas(
     """Banded sign-LSH bucket keys, computed in the Arrow/numpy path:
     ``(vec_id, embedding) → (vec_id, band_key)`` with one output row
     per (vector, band) — the already-exploded shape the candidate
-    self-join consumes.
+    self-join consumes. Band *b* uses hyperplanes ``j = b·r … b·r+r-1``
+    and its key is ``'<b>:<bits>'``; two vectors are candidates iff
+    they share a key in ≥1 band (probability ``1-(1-p^r)^B`` for
+    per-bit agreement ``p = 1 - θ/π``).
 
-    Produces keys BITWISE IDENTICAL to :func:`lsh_band_keys_expr` /
-    :func:`lsh_band_keys_duck` (pinned by
-    ``test_band_keys_pandas_matches_expr``): the accumulator loops over
-    the ``dim`` dimensions IN ORDER and adds ``x_i · s_ji`` one term at
-    a time (``acc += signs[:, i] * emb[:, i]``), so each row's sum is
-    the exact left-to-right IEEE-double fold the SQL expression
+    Produces keys BITWISE IDENTICAL to :func:`lsh_band_keys_duck`
+    (pinned by ``test_band_keys_pandas_matches_duck``): the accumulator
+    loops over the ``dim`` dimensions IN ORDER and adds ``x_i · s_ji``
+    one term at a time (``acc += signs[:, i] * emb[:, i]``), so each
+    row's sum is the exact left-to-right IEEE-double fold the SQL
     evaluates — only the batching differs (vectorized across rows
     instead of interpreted per row, the same trade proven in
     ``knn_brute_cosine_pandas``). float32 → float64 widening is exact
     and ``x * ±1.0`` is an exact sign flip, so no term differs either.
-
-    This replaces the interpreted higher-order-function fold that cost
-    ~14 ms/row at sf0.01 — a per-row constant that would dominate at
-    billions of vectors, while this kernel is one numpy pass per Arrow
-    batch."""
+    The bit is '0' iff the sum is ``< 0``: a NaN sum gives '1', as
+    ``NaN >= 0`` does on Spark and DuckDB."""
     import numpy as np
     import pandas as pd
 
@@ -246,16 +188,7 @@ def lsh_band_keys_pandas(
             acc = np.zeros((smat.shape[0], emb.shape[0]))
             for i in range(dim):  # ordered left fold, vectorized across rows
                 acc += smat[:, i : i + 1] * emb[:, i]
-            # np.where maps a NaN accumulator to bit '0', but the SQL
-            # folds this claims parity with evaluate NaN >= 0 as TRUE
-            # on both Spark and DuckDB — fail loudly rather than let a
-            # NaN embedding silently break the pinned equivalence.
-            if not np.isfinite(acc).all():
-                raise ValueError(
-                    "lsh_band_keys_pandas: non-finite dot-product "
-                    "accumulator (NaN/Inf embedding component?)"
-                )
-            bits = np.where(acc >= 0.0, "1", "0")  # (planes, n)
+            bits = np.where(acc < 0.0, "0", "1")  # (planes, n)
             vec = pdf["vec_id"].to_numpy()
             band_keys = []
             for b in range(B):
@@ -274,13 +207,14 @@ def lsh_band_keys_pandas(
 
 @register(
     "knn_lsh_ann",
-    oracle="""
-WITH n AS (
-  SELECT vec_id, embedding,
-         sqrt(list_reduce(list_transform(embedding,
+    oracle=f"""
+WITH keys AS ({lsh_band_keys_duck(8, 1)}),
+n AS (
+  SELECT e.vec_id, e.embedding,
+         sqrt(list_reduce(list_transform(e.embedding,
               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), (a, b) -> a + b)) AS nrm,
-         __SIG__ AS sig
-  FROM embeddings
+         k.band_key AS sig
+  FROM embeddings e JOIN keys k ON k.vec_id = e.vec_id
 ),
 scored AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -297,19 +231,21 @@ FROM (
   FROM scored
 )
 WHERE rank <= 5
-""".replace("__SIG__", lsh_signature_duck(8)),
+""",
     tags=("similarity", "knn", "lsh"),
 )
 def knn_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5: candidates restricted to the query's LSH
-    bucket (8-bit sign signature), exact cosine re-rank inside the
-    bucket. Recall vs knn_brute_cosine is asserted in pytest
-    (test_similarity.py); the DuckDB oracle mirrors the signature
-    bitwise (``lsh_signature_duck``), so the driver gate is exact."""
+    bucket, exact cosine re-rank inside the bucket. The 8-bit sign
+    signature is one band of 8 rows from :func:`lsh_band_keys_pandas`,
+    joined back on ``vec_id``; the DuckDB oracle joins the same band
+    from ``lsh_band_keys_duck(8, 1)``, so the oracle gate is exact.
+    Recall vs knn_brute_cosine is asserted in pytest
+    (``tests/test_llm_pipeline.py::test_lsh_ann_results_subset_of_brute_rankings``)."""
     e = _emb(spark, sf_dir)
-    sig = lsh_signature_expr(8)
-    n = e.select(
-        "vec_id", "embedding", F.expr(_NORM).alias("nrm"), F.expr(sig).alias("sig")
+    sig = lsh_band_keys_pandas(e, 8, 1).withColumnRenamed("band_key", "sig")
+    n = e.select("vec_id", "embedding", F.expr(_NORM).alias("nrm")).join(
+        sig, "vec_id"
     )
     q = n.filter(F.col("vec_id") < 10).alias("a")
     c = n.alias("b")

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import collections
 import itertools
+import os
 import re
 
 import pytest
@@ -105,7 +106,7 @@ def test_embedding_lsh_recall_at_high_similarity(spark):
     import math
     import random
 
-    from mapreduce_citation_spark.operators.similarity import lsh_band_keys_expr
+    from mapreduce_citation_spark.operators.similarity import lsh_band_keys_pandas
 
     rng = random.Random(7)
     dim = 64
@@ -129,9 +130,7 @@ def test_embedding_lsh_recall_at_high_similarity(spark):
         vid += 1
 
     e = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    bands = e.select(
-        "vec_id", F.explode(F.expr(lsh_band_keys_expr(6, 8))).alias("band_key")
-    )
+    bands = lsh_band_keys_pandas(e, 6, 8)
     cand = {
         (r["a"], r["b"])
         for r in bands.alias("x")
@@ -151,31 +150,54 @@ def test_embedding_lsh_recall_at_high_similarity(spark):
     assert len(cand) < 0.25 * n * (n - 1) / 2
 
 
-def test_band_keys_pandas_matches_expr(spark, sf_dir):
+def test_band_keys_pandas_matches_duck(spark, sf_dir, tmp_path):
     """The vectorized Arrow/numpy band-key kernel must be BITWISE
-    identical to the interpreted SQL fold it replaced (and therefore to
-    the DuckDB oracle that mirrors that fold): same ordered left-to-
-    right accumulation per row, only batched across rows. Set equality
-    of (vec_id, band_key) is exact equality here — the band prefix
-    makes each vector's 8 keys distinct."""
+    identical to its DuckDB mirror, the oracle side of
+    dedup_embedding_cosine (6, 8) and knn_lsh_ann (8, 1): same ordered
+    left-to-right accumulation per row, only batched across rows.
+    Besides the fixture's embeddings, rows holding a NaN, a +Inf, a
+    −Inf and an all-zero vector pin the sign rule on non-finite and
+    zero sums (both engines evaluate ``NaN >= 0`` as TRUE). Set
+    equality of (vec_id, band_key) is exact equality here — the band
+    prefix makes each vector's keys distinct."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from mapreduce_citation_spark.operators.similarity import (
-        lsh_band_keys_expr,
+        lsh_band_keys_duck,
         lsh_band_keys_pandas,
     )
-    from mapreduce_citation_spark.sources.readers import load_table
 
-    e = load_table(spark, sf_dir, "embeddings")
-    via_expr = {
-        (r["vec_id"], r["band_key"])
-        for r in e.select(
-            "vec_id", F.explode(F.expr(lsh_band_keys_expr(6, 8))).alias("band_key")
-        ).collect()
-    }
-    via_pandas = {
-        (r["vec_id"], r["band_key"])
-        for r in lsh_band_keys_pandas(e, 6, 8).collect()
-    }
-    assert via_pandas == via_expr
+    rng = np.random.default_rng(3)
+    odd = rng.standard_normal((4, 64)).astype(np.float32)
+    odd[0, 5] = np.nan
+    odd[1, 17] = np.inf
+    odd[2, 40] = -np.inf
+    odd[3] = 0.0
+    odd_path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(4), pa.int64()),
+                "embedding": pa.array(list(odd), pa.list_(pa.float32())),
+            }
+        ),
+        odd_path,
+    )
+    for path in (os.path.join(sf_dir, "embeddings.parquet"), odd_path):
+        e = spark.read.parquet(path)
+        with duckdb.connect() as con:
+            con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+            for r, b in ((6, 8), (8, 1)):
+                via_pandas = {
+                    (row["vec_id"], row["band_key"])
+                    for row in lsh_band_keys_pandas(e, r, b).collect()
+                }
+                via_duck = set(con.execute(lsh_band_keys_duck(r, b)).fetchall())
+                assert len(via_pandas) == e.count() * b
+                assert via_pandas == via_duck, (path, r, b)
 
 
 def test_simhash_locality(spark):

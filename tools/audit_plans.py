@@ -8,7 +8,10 @@ physical plan at sf0.01, and flag suspicious patterns:
   that isn't an intentional 1-row scalar fold),
 - row-at-a-time PythonUDF (BatchEvalPython) — the non-Arrow slow path.
 
-Usage: python tools/audit_plans.py [query ...]
+Usage: [SPARK_GRAFT_SF_DIR_CHECK=DIR] python tools/audit_plans.py [query ...]
+
+``SPARK_GRAFT_SF_DIR_CHECK`` points the audit at another fixture dir
+(default: the sf0.01 fixture).
 """
 
 from __future__ import annotations

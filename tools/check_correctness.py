@@ -7,7 +7,12 @@ Values are normalized identically on both sides before hashing
 (floats via repr of float64, timestamps to ISO strings) so the check
 is about semantics, not client formatting.
 
-Usage: python tools/check_correctness.py [--json PATH] [query ...]
+Usage: [SPARK_GRAFT_SF_DIR_CHECK=DIR] python tools/check_correctness.py
+       [--json PATH] [query ...]
+
+``SPARK_GRAFT_SF_DIR_CHECK`` points the check at another fixture dir
+(default: the sf0.01 fixture), e.g. sf0.001 or sf0.1 to prove an
+oracle rewrite at more than one scale.
 
 ``--json PATH`` additionally writes a driver-artifact-style JSON dict
 (per query: rows/schema/hash match flags, row counts, err, and the
