@@ -2,11 +2,18 @@
 
 The streaming surface proper lives in ``streaming/events.py`` (file
 source → watermark/stateful transformations → sinks) and is pinned by
-pytest stream-equals-batch tests. This module makes one end-to-end
-streaming query visible to the driver's correctness gate: the
-callable runs a REAL streaming job (readStream → watermarked tumbling
-aggregation → memory sink, drained with ``processAllAvailable``) and
-returns the sink's table.
+pytest stream-equals-batch tests. This module registers the 19 live
+families with the oracle correctness gate: each callable runs a REAL
+streaming job (readStream → watermarked/stateful plan → sink) and
+returns what it sank.
+
+One drain: every family starts, drains and stops its query through
+``streaming/events.py:_drain`` — memory-sink families through
+``run_to_memory_sink(df, mode, confs)``, which returns the sink table,
+and the epoch-keyed foreachBatch ingest families through
+``run_epochs``. A family's confs are data passed to the drain (the
+sized partition count of ``_sized``, or the transformWithState
+provider), set at query start and restored when it stops.
 
 Why the oracle is exact rather than rows-only: the file source drains
 the fixture in order and the sink runs in ``complete`` output mode, so
@@ -23,7 +30,6 @@ is north-star surface per SURVEY §2.3.
 
 from __future__ import annotations
 
-import itertools
 import os
 import tempfile
 
@@ -39,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import register
+from ..streaming.events import _drain, run_epochs, run_to_memory_sink
 
 #: events.parquet physical schema under nanosAsLong when the fixture
 #: stores TIMESTAMP(NANOS): ts arrives as int64 nanoseconds
@@ -66,13 +73,26 @@ _EVENTS_MICROS_SCHEMA = StructType(
     ]
 )
 
-#: Memory-sink names must be unique per started query within a session.
-_SINK_COUNTER = itertools.count()
-
 #: Staging symlink dirs, one per source-file realpath: repeated
 #: invocations in one process (tests call the readers several times)
 #: reuse the dir instead of leaking a fresh mkdtemp each call.
 _STAGE_DIRS: dict[str, str] = {}
+
+
+def _symlink_stage(sf_dir: str, table: str) -> tuple[str, str]:
+    """(source realpath, staging dir) for one fixture table. The file
+    source requires a directory; the fixture is a single file, so it
+    is exposed through a temp directory holding one symlink (the
+    fixture dir itself holds 10 heterogeneous tables and may be
+    read-only). In production the source is a landing
+    directory or kafka and this shim disappears."""
+    src = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
+    stage = _STAGE_DIRS.get(src)
+    if stage is None or not os.path.isdir(stage):
+        stage = tempfile.mkdtemp(prefix=f"{table}_stream_")
+        os.symlink(src, os.path.join(stage, f"{table}.parquet"))
+        _STAGE_DIRS[src] = stage
+    return src, stage
 
 
 def read_events_parquet_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,17 +102,7 @@ def read_events_parquet_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     hands in an arbitrary session)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # The file source requires a directory; the fixture is a single
-    # file, so expose it through a temp directory of symlinks (the
-    # fixture dir itself holds 10 heterogeneous tables, and /root/
-    # testdata is read-only). In production the source is a landing
-    # directory or kafka and this shim disappears.
-    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    stage = _STAGE_DIRS.get(src)
-    if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="events_stream_")
-        os.symlink(src, os.path.join(stage, "events.parquet"))
-        _STAGE_DIRS[src] = stage
+    src, stage = _symlink_stage(sf_dir, "events")
     # The fixture generator has shipped ts as TIMESTAMP(NANOS) in some
     # rounds and TIMESTAMP(MICROS) in others; a streaming source needs
     # the physical type declared up front, so probe it with a batch
@@ -156,30 +166,17 @@ def _stateful_shuffle_partitions(
     return str(min(session, max(4, n)))
 
 
-def _drain_stateful(
-    spark: SparkSession,
-    sf_dir: str,
-    writer,
-    table: str = "events.parquet",
-):
-    """``writer.start()`` + full drain + stop, with the scale-adaptive
-    stateful-stream partition conf active at query start (the conf is
-    captured into the query's offset metadata at start; it is restored
-    for the session immediately after the drain)."""
-    key = "spark.sql.shuffle.partitions"
-    val = _stateful_shuffle_partitions(spark, sf_dir, table)
-    prev = spark.conf.get(key)
-    if val is not None:
-        spark.conf.set(key, val)
-    try:
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if val is not None:
-            spark.conf.set(key, prev)
+def _sized(
+    spark: SparkSession, sf_dir: str, table: str = "events.parquet"
+) -> dict[str, str | None]:
+    """The stateful-stream partition conf for ``run_to_memory_sink``:
+    :func:`_stateful_shuffle_partitions` of ``table``, active at query
+    start (Spark captures it into the query's offset metadata there)
+    and restored for the session after the drain."""
+    return {
+        "spark.sql.shuffle.partitions":
+            _stateful_shuffle_partitions(spark, sf_dir, table)
+    }
 
 
 @register(
@@ -214,15 +211,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"streaming_tumbling_counts_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name),
-    )
-    return spark.table(name)
+    return run_to_memory_sink(agg, "complete", _sized(spark, sf_dir))
 
 
 @register(
@@ -269,15 +258,7 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"streaming_session_counts_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name),
-    )
-    return spark.table(name)
+    return run_to_memory_sink(agg, "complete", _sized(spark, sf_dir))
 
 
 @register(
@@ -322,15 +303,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    name = f"streaming_dedup_watermark_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name),
-    )
-    return spark.table(name)
+    return run_to_memory_sink(deduped, "append", _sized(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -418,15 +391,7 @@ def streaming_kafka_topic_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("event_id").alias("max_event_id"),
         )
     )
-    name = f"streaming_kafka_topic_counts_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name),
-    )
-    return spark.table(name)
+    return run_to_memory_sink(agg, "complete", _sized(spark, sf_dir))
 
 
 @register(
@@ -472,15 +437,7 @@ def streaming_stream_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
         F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
     )
-    name = f"streaming_stream_stream_funnel_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name),
-    )
-    return spark.table(name)
+    return run_to_memory_sink(joined, "append", _sized(spark, sf_dir))
 
 
 @register(
@@ -514,16 +471,8 @@ def streaming_running_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame
 
     ev = read_events_parquet_stream(spark, sf_dir)
     updates = running_user_counts(ev.select("user_id", "ts"))
-    name = f"streaming_running_user_counts_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        updates.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name),
-    )
     return (
-        spark.table(name)
+        run_to_memory_sink(updates, "update", _sized(spark, sf_dir))
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -585,15 +534,7 @@ def streaming_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("_copy"),
     ).drop("_copy")
     first_touch = planted.dropDuplicates(["user_id", "day"])
-    name = f"streaming_cumulative_users_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        first_touch.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name),
-    )
-    sink = spark.table(name)
+    sink = run_to_memory_sink(first_touch, "append", _sized(spark, sf_dir))
     first = sink.groupBy("user_id").agg(F.min("day").alias("day"))
     daily = first.groupBy("day").agg(
         F.count(F.lit(1)).cast("long").alias("new_users")
@@ -640,39 +581,21 @@ def streaming_running_user_counts_tws(
     )
 
     ev = read_events_parquet_stream(spark, sf_dir)
-    if not HAS_TRANSFORM_WITH_STATE:
-        updates = running_user_counts(ev.select("user_id", "ts"))
-    else:
-        updates = running_user_counts_tws(ev.select("user_id", "ts"))
-    name = f"streaming_running_user_counts_tws_{next(_SINK_COUNTER)}"
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    if HAS_TRANSFORM_WITH_STATE:
-        spark.conf.set(
-            prov_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        q = (
-            updates.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if HAS_TRANSFORM_WITH_STATE:
-            if prev is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, prev)
+    counts = (
+        running_user_counts_tws if HAS_TRANSFORM_WITH_STATE
+        else running_user_counts
+    )
+    provider = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider" if HAS_TRANSFORM_WITH_STATE else None
+    )
+    sunk = run_to_memory_sink(
+        counts(ev.select("user_id", "ts")),
+        "update",
+        {"spark.sql.streaming.stateStore.providerClass": provider},
+    )
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        sunk.groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
             F.max("last_ts").cast("timestamp_ntz").alias("last_ts"),
@@ -714,29 +637,18 @@ def streaming_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = latest_event_state(
         ev.select("user_id", "ts", "event_id", "event_type")
     )
-    name = f"streaming_cdc_compaction_{next(_SINK_COUNTER)}"
-    # deliberately NOT _drain_stateful: the only family where the
+    # deliberately NOT _sized: the only family where the
     # adaptive partition rule LOST its interleaved A/B (0.92×, 0/3
     # pairwise — AB_R15_STREAM_ADAPTIVE.json). Its update-mode
     # latest-state keeps per-user rows hot across every micro-batch,
     # so commit cost scales with state actually written, not instance
     # count — fewer partitions just serialize the same work.
-    q = (
-        updates.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    sunk = run_to_memory_sink(updates, "update")
     w = Window.partitionBy("user_id").orderBy(
         F.col("last_ts").desc(), F.col("last_event_id").desc()
     )
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
+        sunk.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             "user_id",
@@ -783,15 +695,7 @@ def streaming_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("user_id").alias("min_user"),
         F.max("user_id").alias("max_user"),
     )
-    name = f"streaming_stream_static_join_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name),
-    )
-    return spark.table(name)
+    return run_to_memory_sink(agg, "complete", _sized(spark, sf_dir))
 
 
 @register(
@@ -834,15 +738,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = f"streaming_sliding_counts_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name),
-    )
-    return spark.table(name)
+    return run_to_memory_sink(agg, "complete", _sized(spark, sf_dir))
 
 
 _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -852,12 +748,7 @@ def read_documents_parquet_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     """File-source stream over the documents fixture (same staged
     symlink-dir shim as ``read_events_parquet_stream``; no timestamp
     normalization needed — the table has none)."""
-    src = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    stage = _STAGE_DIRS.get(src)
-    if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="documents_stream_")
-        os.symlink(src, os.path.join(stage, "documents.parquet"))
-        _STAGE_DIRS[src] = stage
+    _src, stage = _symlink_stage(sf_dir, "documents")
     return spark.readStream.schema(_DOCS_SCHEMA).parquet(stage)
 
 
@@ -897,21 +788,14 @@ def streaming_quality_gate_counts(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_keep"),
         )
     )
-    name = f"streaming_quality_gate_counts_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name),
-        table="documents.parquet",
+    sunk = run_to_memory_sink(
+        agg, "update", _sized(spark, sf_dir, "documents.parquet")
     )
     w = Window.partitionBy("source").orderBy(
         F.col("n_docs").desc(), F.col("n_keep").desc()
     )
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
+        sunk.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("source", "n_docs", "n_keep")
     )
@@ -974,40 +858,50 @@ def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("first_doc_id"),
         )
     )
-    name = f"streaming_ingest_dedup_{next(_SINK_COUNTER)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_to_memory_sink(agg, "complete")
 
 
-#: Documents staged as 4 parquet chunks (by doc_id range) so the
-#: near-dup ingest family runs REAL multi-batch ingestion under
-#: maxFilesPerTrigger=1 (shared per source realpath per process).
-_DOCS_CHUNK_STAGE: dict[str, str] = {}
+#: Fixture tables staged as 4 parquet chunks (by key range) so the
+#: ingest and incremental-MV families run REAL multi-batch ingestion
+#: under maxFilesPerTrigger=1 (one staging per source realpath per
+#: process).
+_CHUNK_STAGE: dict[str, str] = {}
 
 
-def _staged_doc_chunks(spark: SparkSession, sf_dir: str) -> str:
-    from .dedup import _docs
+def _staged_chunks(
+    spark: SparkSession, sf_dir: str, table: str, key_col: str
+) -> DataFrame:
+    """File-source stream over ``table`` staged as 4 ``key_col``-range
+    chunks, one chunk per micro-batch."""
+    from ..sources.readers import load_table
 
-    key = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    if key not in _DOCS_CHUNK_STAGE:
-        d = tempfile.mkdtemp(prefix="docs_chunks_")
+    key = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
+    if key not in _CHUNK_STAGE:
+        d = tempfile.mkdtemp(prefix=f"{table}_chunks_")
         (
-            _docs(spark, sf_dir)
-            .repartitionByRange(4, "doc_id")
+            load_table(spark, sf_dir, table)
+            .repartitionByRange(4, key_col)
             .write.mode("overwrite")
             .parquet(d)
         )
-        _DOCS_CHUNK_STAGE[key] = d
-    return _DOCS_CHUNK_STAGE[key]
+        _CHUNK_STAGE[key] = d
+    chunks = _CHUNK_STAGE[key]
+    return (
+        spark.readStream.schema(spark.read.parquet(chunks).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(chunks)
+    )
+
+
+def _epoch_report(spark: SparkSession, out: str, schema: str) -> DataFrame:
+    """The epoch-keyed report ``run_epochs`` wrote under ``out``, as
+    ``schema``'s columns. When no epoch wrote (zero rejections in every
+    batch, or an all-empty delta) a bare parquet read of the empty dir
+    raises, so the empty report with the right schema is returned."""
+    empty = spark.createDataFrame([], schema)
+    if not any(e.startswith("epoch_id=") for e in os.listdir(out)):
+        return empty
+    return spark.read.parquet(out).select(empty.columns)
 
 
 from .dedup import INGEST_ORACLE as _INGEST_ORACLE  # noqa: E402
@@ -1053,16 +947,10 @@ def streaming_ingest_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derived all base artifacts inside every epoch, O(base) per
     micro-batch). The MV append is the exactly-once epoch-keyed sink
     the MV/checkpoint-restart tests pin."""
-    from ..streaming.events import write_epoch
     from .dedup import _docs, ingest_report_against_base, load_or_build_ingest_base
 
-    chunks = _staged_doc_chunks(spark, sf_dir)
-    schema = spark.read.parquet(chunks).schema
-    delta_stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks)
-        .filter(F.col("doc_id") % 8 == 0)
+    delta_stream = _staged_chunks(spark, sf_dir, "documents", "doc_id").filter(
+        F.col("doc_id") % 8 == 0
     )
     base = _docs(spark, sf_dir).filter(F.col("doc_id") % 8 != 0)
     # load-or-build the base artifacts from the warehouse-local disk
@@ -1080,59 +968,13 @@ def streaming_ingest_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise leak them for the session (r9 ADVICE)
     try:
         out = tempfile.mkdtemp(prefix="ingest_near_out_")
-        ckpt = tempfile.mkdtemp(prefix="ingest_near_ckpt_")
-
-        def merge(bdf: DataFrame, epoch_id: int) -> None:
-            if bdf.isEmpty():
-                return
-            caches: list[DataFrame] = []
-            try:
-                write_epoch(
-                    ingest_report_against_base(bdf, arts, caches), epoch_id, out
-                )
-            finally:
-                for c in caches:
-                    c.unpersist()
-
-        q = (
-            delta_stream.writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(merge)
-            .start()
+        run_epochs(
+            delta_stream, ingest_report_against_base, arts, out,
+            tempfile.mkdtemp(prefix="ingest_near_ckpt_"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     finally:
         arts.unpersist()
-    if not any(e.startswith("epoch_id=") for e in os.listdir(out)):
-        # zero rejections in every batch (or an all-empty delta):
-        # nothing was written, and a bare parquet read of an empty
-        # dir raises — return the empty report with the right schema
-        return spark.createDataFrame([], "doc_id long, reason string")
-    return spark.read.parquet(out).select("doc_id", "reason")
-
-
-#: Multi-file event staging for the incremental-MV family: fixture →
-#: 4 parquet chunks so maxFilesPerTrigger=1 yields REAL multi-batch
-#: ingestion (one shared staging per source realpath per process).
-_MV_STAGE: dict[str, str] = {}
-
-
-def _staged_event_chunks(spark: SparkSession, sf_dir: str) -> str:
-    from ..sources.readers import load_table
-
-    key = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    if key not in _MV_STAGE:
-        d = tempfile.mkdtemp(prefix="mv_chunks_")
-        (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(4, "event_id")
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-        _MV_STAGE[key] = d
-    return _MV_STAGE[key]
+    return _epoch_report(spark, out, "doc_id long, reason string")
 
 
 @register(
@@ -1165,20 +1007,10 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the standing-state pattern: each day's delta
     merges into per-key state instead of re-scanning history, with
     state size O(keys), not O(events)."""
-    chunks = _staged_event_chunks(spark, sf_dir)
-    schema = spark.read.parquet(chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks)
-    )
+    stream = _staged_chunks(spark, sf_dir, "events", "event_id")
     state_root = tempfile.mkdtemp(prefix="mv_state_")
     merge, latest = make_mv_merge(state_root)
-    q = stream.writeStream.foreachBatch(merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(spark, stream.writeStream.foreachBatch(merge))
     top = latest()
     assert top >= 1, "expected multi-batch incremental ingestion"
     return spark.read.parquet(os.path.join(state_root, f"v{top}")).select(
@@ -1292,18 +1124,7 @@ def streaming_edgelist_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = stream.groupBy(F.col("to_paper").alias("paper_id")).agg(
         F.count(F.lit(1)).alias("citations")
     )
-    name = f"streaming_edgelist_counts_{next(_SINK_COUNTER)}"
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return run_to_memory_sink(counts, "complete")
 
 
 @register(
@@ -1345,15 +1166,7 @@ def streaming_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k", F.pmod("k", F.lit(8)).alias("bucket")
     )
     snapshots = streaming_mg_candidates(keyed, k=100)
-    name = f"streaming_heavy_hitters_mg_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        snapshots.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name),
-    )
-    sunk = spark.table(name)
+    sunk = run_to_memory_sink(snapshots, "update", _sized(spark, sf_dir))
     cand = (
         sunk.withColumn(
             "_mx", F.max("seq").over(Window.partitionBy("bucket"))
@@ -1531,15 +1344,7 @@ def streaming_funnel_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
         )
     )
-    name = f"streaming_funnel_left_outer_{next(_SINK_COUNTER)}"
-    _drain_stateful(
-        spark,
-        sf_dir,
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name),
-    )
-    out = spark.table(name).filter(F.col("user_id") >= 0)
+    out = run_to_memory_sink(joined, "append", _sized(spark, sf_dir)).filter(F.col("user_id") >= 0)
     n_null = out.filter(F.col("purchase_id").isNull()).count()
     assert n_null >= 1, (
         "outer finalization did not flush any unmatched views — "
@@ -1584,20 +1389,14 @@ def streaming_paragraph_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DELTA's paragraphs — signatures are HOF map-side, candidates
     probe the cached band layout, verify is row-local
     ``array_intersect`` per candidate pair."""
-    from ..streaming.events import write_epoch
     from .dedup import (
         _docs,
         paragraph_ingest_report,
         prepare_paragraph_base,
     )
 
-    chunks = _staged_doc_chunks(spark, sf_dir)
-    schema = spark.read.parquet(chunks).schema
-    delta_stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks)
-        .filter(F.col("doc_id") % 8 == 0)
+    delta_stream = _staged_chunks(spark, sf_dir, "documents", "doc_id").filter(
+        F.col("doc_id") % 8 == 0
     )
     arts = prepare_paragraph_base(
         _docs(spark, sf_dir).filter(F.col("doc_id") % 8 != 0)
@@ -1606,38 +1405,14 @@ def streaming_paragraph_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are corpus-sized eager persists (the r9 ADVICE leak rule)
     try:
         out = tempfile.mkdtemp(prefix="para_ingest_out_")
-        ckpt = tempfile.mkdtemp(prefix="para_ingest_ckpt_")
-
-        def merge(bdf: DataFrame, epoch_id: int) -> None:
-            if bdf.isEmpty():
-                return
-            caches: list[DataFrame] = []
-            try:
-                write_epoch(
-                    paragraph_ingest_report(bdf, arts, caches), epoch_id, out
-                )
-            finally:
-                for c in caches:
-                    c.unpersist()
-
-        q = (
-            delta_stream.writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(merge)
-            .start()
+        run_epochs(
+            delta_stream, paragraph_ingest_report, arts, out,
+            tempfile.mkdtemp(prefix="para_ingest_ckpt_"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     finally:
         arts.unpersist()
-    if not any(e.startswith("epoch_id=") for e in os.listdir(out)):
-        # an all-empty delta wrote nothing — empty report, right schema
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_paras long, n_dup_paras long, "
-            "kept_tokens long, removed_digest string",
-        )
-    return spark.read.parquet(out).select(
-        "doc_id", "n_paras", "n_dup_paras", "kept_tokens", "removed_digest"
+    return _epoch_report(
+        spark, out,
+        "doc_id long, n_paras long, n_dup_paras long, "
+        "kept_tokens long, removed_digest string",
     )

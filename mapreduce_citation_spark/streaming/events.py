@@ -18,7 +18,9 @@ them a 100 TB stream accumulates unbounded window state.
 
 from __future__ import annotations
 
+import itertools
 import os
+import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -313,47 +315,90 @@ def write_epoch(batch_df: DataFrame, epoch_id: int, out_path: str) -> None:
     )
 
 
-def run_to_parquet_sink(
-    df: DataFrame, out_path: str, checkpoint_path: str, output_mode: str = "append"
-) -> None:
-    """Exactly-once parquet sink via foreachBatch: each micro-batch is
-    written under its epoch-id partition directory with overwrite
-    (:func:`write_epoch`), so replays after a crash between the
-    parquet write and the checkpoint commit are idempotent — the
-    standard epoch-keyed pattern when the sink itself isn't
+def _drain(spark: SparkSession, writer, confs: dict | None = None) -> None:
+    """The one place a streaming query starts, drains and stops.
+
+    ``confs`` are set for the query's start (Spark captures them into
+    the query's offset metadata there) and restored in a ``finally``
+    once it stops: a key the session had not set is unset again, and a
+    ``None`` value keeps the session's own. ``writer.start()`` →
+    ``processAllAvailable`` → ``stop``, so no failure leaves a query
+    running or a conf changed."""
+    confs = {k: v for k, v in (confs or {}).items() if v is not None}
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+#: Memory-sink names must be unique per started query within a session.
+_SINK_COUNTER = itertools.count()
+
+
+def run_to_memory_sink(
+    df: DataFrame, output_mode: str, confs: dict | None = None
+) -> DataFrame:
+    """Drain a streaming DataFrame into an in-memory table (test/dev
+    sink) under :func:`_drain` and return the table."""
+    name = f"memory_sink_{next(_SINK_COUNTER)}"
+    _drain(
+        df.sparkSession,
+        df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+        confs,
+    )
+    return df.sparkSession.table(name)
+
+
+def run_epochs(
+    stream: DataFrame, report, arts, out: str, ckpt: str
+) -> list[float]:
+    """Drain ``stream`` through ``foreachBatch`` under :func:`_drain`:
+    each non-empty micro-batch runs ``report(batch, arts, caches)`` and
+    lands under its own ``epoch_id=N`` directory of ``out``
+    (:func:`write_epoch`); the caches the report appended are
+    unpersisted at the end of the epoch. Returns the per-epoch walls
+    (report + write), in epoch order."""
+    walls: list[float] = []
+
+    def merge(bdf: DataFrame, epoch_id: int) -> None:
+        if bdf.isEmpty():
+            return
+        caches: list[DataFrame] = []
+        t0 = time.perf_counter()
+        try:
+            write_epoch(report(bdf, arts, caches), epoch_id, out)
+        finally:
+            walls.append(time.perf_counter() - t0)
+            for c in caches:
+                c.unpersist()
+
+    _drain(
+        stream.sparkSession,
+        stream.writeStream.option("checkpointLocation", ckpt).foreachBatch(merge),
+    )
+    return walls
+
+
+def run_to_parquet_sink(df: DataFrame, out_path: str, checkpoint_path: str) -> None:
+    """Exactly-once parquet sink: :func:`run_epochs` with the batch
+    itself as the report, so each micro-batch lands under its epoch-id
+    partition directory with overwrite and a replay after a crash
+    between the parquet write and the checkpoint commit is idempotent
+    — the standard epoch-keyed pattern when the sink itself isn't
     transactional. Readers ``spark.read.parquet(out_path)`` and see
-    ``epoch_id`` as a partition column. Drains all available input,
-    then stops."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        write_epoch(batch_df, epoch_id, out_path)
-
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(write_batch)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "append") -> None:
-    """Drive a streaming DataFrame to completion into an in-memory
-    table (test/dev sink): processAllAvailable drains every pending
-    file, then the query stops."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ``epoch_id`` as a partition column."""
+    run_epochs(df, lambda bdf, _arts, _caches: bdf, None, out_path, checkpoint_path)
 
 
 #: Output/state schemas for the latest-wins CDC compactor.

@@ -1304,6 +1304,57 @@ def test_hard_kill_and_resume_from_checkpoint_fresh_jvm(spark, sf_dir, tmp_path)
     assert rows(snap) == rows(batch)
 
 
+
+_PARTS = "spark.sql.shuffle.partitions"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_STATE = "org.apache.spark.sql.execution.streaming.state."
+
+
+def test_drain_restores_confs_and_stops_queries(spark, sf_dir, stream_dir):
+    """Every live family drains through ``streaming/events.py:_drain``.
+    After a family with sized partitions, the provider-conf family and
+    a foreachBatch drain whose batch function raises, the session's
+    partition count and state-store provider are what they were before
+    (an unset provider stays unset) and no query is left running."""
+    from mapreduce_citation_spark.operators.streaming_queries import (
+        streaming_running_user_counts_tws,
+        streaming_tumbling_counts,
+    )
+    from mapreduce_citation_spark.streaming.events import _drain
+
+    def boom(bdf, epoch_id):
+        raise RuntimeError("planted batch failure")
+
+    def failing(s, _sf_dir):
+        writer = read_event_stream(s, stream_dir).writeStream.foreachBatch(boom)
+        confs = {_PARTS: "3", _PROVIDER: _STATE + "RocksDBStateStoreProvider"}
+        with pytest.raises(Exception, match="planted batch failure"):
+            _drain(s, writer, confs)
+
+    hdfs = _STATE + "HDFSBackedStateStoreProvider"
+    before = spark.conf.get(_PARTS)
+    # above the sized rule's floor of 4 at sf0.001, so the drain moves it
+    spark.conf.set(_PARTS, "6")
+    try:
+        for run, provider in (
+            (streaming_tumbling_counts, None),
+            (streaming_running_user_counts_tws, hdfs),
+            (failing, None),
+            (failing, hdfs),
+        ):
+            if provider is None:
+                spark.conf.unset(_PROVIDER)
+            else:
+                spark.conf.set(_PROVIDER, provider)
+            run(spark, sf_dir)
+            assert spark.conf.get(_PARTS) == "6", run
+            assert spark.conf.get(_PROVIDER, None) == provider, run
+            assert spark.streams.active == [], run
+    finally:
+        spark.conf.set(_PARTS, before)
+        spark.conf.unset(_PROVIDER)
+
+
 class _StubSpark:
     """Just the ``spark.conf.get`` the partition rule reads; no JVM."""
 

@@ -1,5 +1,6 @@
 """Tests of the measuring tools under ``tools/``: the import guard, the
-repack checksum, the two-revision A/B harness and the scale curves."""
+repack checksum, the broadcast-hint audit, the two-revision A/B
+harness and the scale curves."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from mapreduce_citation_spark.registry import all_specs
-from tools import scale
+from tools import audit_plans, scale
 from tools.ab import normalize_plan, run_query, worker_env
 from tools.repack_rowgroups import _checksum
 
@@ -68,6 +69,16 @@ def test_repack_checksum_covers_every_column(tmp_path):
     assert _checksum(con, one)[0] == _checksum(con, two)[0] == 3
     assert _checksum(con, one) != _checksum(con, two)
 
+
+
+def test_broadcast_audit_flags_stale_allowlist_entries(monkeypatch):
+    """The broadcast-hint audit passes on the tree, and an allowlist
+    entry that names no hint in the source is a violation."""
+    assert audit_plans.audit_broadcast_hints() == 0
+    monkeypatch.setitem(
+        audit_plans.BROADCAST_ALLOWLIST, ("similarity.py", "gone"), "stale"
+    )
+    assert audit_plans.audit_broadcast_hints() == 1
 
 def test_normalize_plan_strips_run_dependent_ids():
     a = (

@@ -59,8 +59,6 @@ BROADCAST_ALLOWLIST = {
     ("similarity.py", "ss"): "1-row aggregate (vector-norm scalar fold)",
     ("similarity.py", "m"): "1-row aggregate (power-iteration max-abs fold)",
     ("similarity.py", "v"): "power-iteration direction: exactly dim=64 rows",
-    ("similarity.py", "cent"): "per-label centroids: ≤|labels| rows",
-    ("similarity.py", "centroids"): "k-means centroid table: exactly k=8 rows",
     ("similarity.py", "codebook"): "PQ codebook: K×m constant rows",
     ("similarity.py", "carr"): "1-row packed centroid array (k-means/IVF "
     "in-row argmin, r14): collect_list over the ≤k-row centroid table",
@@ -110,7 +108,10 @@ BROADCAST_ALLOWLIST = {
 
 def audit_broadcast_hints() -> int:
     """Source-level gate: every F.broadcast hint must be allowlisted
-    with a boundedness reason. Returns the number of violations."""
+    with a boundedness reason, and every allowlist entry must still
+    name a hint in the source (a stale entry would wave through a
+    later, unvetted hint on the same name). Returns the number of
+    violations."""
     pkg = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "mapreduce_citation_spark",
@@ -151,9 +152,9 @@ def audit_broadcast_hints() -> int:
                     print(f"FLAG  broadcast hint not allowlisted: "
                           f"{fn}:{node.lineno} F.broadcast({argkey})")
                     bad += 1
-    stale = set(BROADCAST_ALLOWLIST) - seen
-    for key in sorted(stale):
-        print(f"NOTE  stale allowlist entry (no longer in source): {key}")
+    for key in sorted(set(BROADCAST_ALLOWLIST) - seen):
+        print(f"FLAG  stale allowlist entry (no longer in source): {key}")
+        bad += 1
     print(f"broadcast-hint audit: {len(seen)} hints, {bad} violations")
     return bad
 

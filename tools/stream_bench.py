@@ -4,12 +4,18 @@ count for every live streaming family (tag-selected from the registry
 — 19 as of r12).
 
 Measurement: a Python ``StreamingQueryListener`` captures every
-microbatch's ``numInputRows``/``batchId`` while the registered family
-function runs (the functions own their queries internally — the
-listener observes without touching them). Wall time follows the house
-methodology (1 warmup + 3 timed runs, median, same session); batch
-stats come from the last timed run after a settle wait (listener
-events are delivered asynchronously).
+microbatch's ``numInputRows``/``batchId``, its ``durationMs`` phases
+(triggerExecution, addBatch, walCommit, commitOffsets) and its state
+operators' summed ``commitTimeMs``/``numRowsTotal`` while the
+registered family function runs (the functions own their queries
+internally — the listener observes without touching them). Wall time
+follows the house methodology (1 warmup + 3 timed runs, median, same
+session); batch stats come from the last timed run after a settle
+wait (listener events are delivered asynchronously), and each
+family's ``batches`` list plus ``idle_gap_sec`` (that run's wall
+minus its batches' triggerExecution) attribute its time per
+micro-batch (``PROBE_FUNNEL_r09/r14*.json`` hold the earlier records
+of this attribution for ``streaming_funnel_left_outer``).
 
 Caveats recorded in the artifact rather than hidden:
 - rows/s divides SOURCE rows by end-to-end wall time including query
@@ -21,10 +27,11 @@ Caveats recorded in the artifact rather than hidden:
   layout. ``n_batches`` counts all progress events, ``n_data_batches``
   those with rows (no-data batches fire for watermark advancement).
 - ``streaming_running_user_counts_tws`` falls back to its guarded twin
-  on images without google.protobuf (PROBE_TWS_r11.json (re-probed each round; first recorded r08)) and then
-  reports live=false here.
+  on images without google.protobuf (PROBE_TWS_r11.json; re-probed
+  each round, first recorded r08) and then reports live=false here.
 
-Usage: SPARK_GRAFT_SF_DIR=... python tools/stream_bench.py [--json PATH]
+Usage: SPARK_GRAFT_SF_DIR=... python tools/stream_bench.py [FAMILY ...]
+       [--json PATH]
 """
 
 from __future__ import annotations
@@ -39,6 +46,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
 
+#: The per-batch ``durationMs`` phases each batch record keeps.
+_PHASES = ("triggerExecution", "addBatch", "walCommit", "commitOffsets")
+
+
 class _Collector(StreamingQueryListener):
     def __init__(self) -> None:
         self.events: list[dict] = []
@@ -48,9 +59,13 @@ class _Collector(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
+        ops = p.stateOperators
         self.events.append(
             {"rows": int(p.numInputRows), "batch": int(p.batchId),
-             "qid": str(p.id)}
+             "qid": str(p.id),
+             **{f"{k}_ms": p.durationMs.get(k) for k in _PHASES},
+             "state_commit_ms": sum(o.commitTimeMs for o in ops),
+             "state_rows_total": sum(o.numRowsTotal for o in ops)}
         )
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
@@ -123,6 +138,11 @@ def main(args: list[str]) -> int:
             "n_queries": len({b["qid"] for b in batches}),
             "rows_per_sec": round(rows / wall) if rows else 0,
             "live": rows > 0,
+            # last run's wall - its batches' triggerExecution: query
+            # startup, settle and teardown
+            "idle_gap_sec": round(runs[-1] - sum(
+                b["triggerExecution_ms"] or 0 for b in batches) / 1000, 3),
+            "batches": batches,
         }
         report["families"][name] = fam
         print(f"  {name}: {fam['wall_sec_median']}s, {rows} rows, "

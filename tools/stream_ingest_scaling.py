@@ -11,10 +11,11 @@ This tool measures exactly the claim: a FIXED 625-doc delta (replica
 0's ``%8`` cohort, as in ``tools/scale.py ingest_fixed_delta``)
 streamed in 4 real micro-batches (maxFilesPerTrigger=1) against bases
 of 5k / 50k / 500k docs. Reported per point: one-time base-prep wall,
-per-epoch walls (timed inside the foreachBatch body), and their median. The fix is
-proven if prep wall tracks base size while per-epoch wall does not
-(probe joins still scan the cached base, so mild growth is the honest
-expectation — what must disappear is the ~linear re-derivation term).
+per-epoch walls (report + write, from ``run_epochs``), and their
+median. The fix is proven if prep wall tracks base size while
+per-epoch wall does not (probe joins still scan the cached base, so
+mild growth is the honest expectation — what must disappear is the
+~linear re-derivation term).
 
 Built-in falsifier (as in ``ingest_fixed_delta``): replicas share
 neither digests nor shingles with replica 0, so the rejection set must
@@ -78,7 +79,7 @@ def main(args: list[str]) -> int:
         "para": (prepare_paragraph_base, paragraph_ingest_report),
     }[family]
     from mapreduce_citation_spark.session import get_spark
-    from mapreduce_citation_spark.streaming.events import write_epoch
+    from mapreduce_citation_spark.streaming.events import run_epochs
 
     points = [(BASE, 1)]
     for k in (10, 100):
@@ -105,34 +106,12 @@ def main(args: list[str]) -> int:
     def stream_once(arts) -> tuple[list[float], list[tuple[int, str]]]:
         out = tempfile.mkdtemp(prefix="sis_out_")
         ckpt = tempfile.mkdtemp(prefix="sis_ckpt_")
-        epoch_walls: list[float] = []
-
-        def merge(bdf, epoch_id: int) -> None:
-            if bdf.isEmpty():
-                return
-            caches: list = []
-            t0 = time.perf_counter()
-            try:
-                write_epoch(
-                    per_batch(bdf, arts, caches), epoch_id, out
-                )
-            finally:
-                epoch_walls.append(time.perf_counter() - t0)
-                for c in caches:
-                    c.unpersist()
-
-        q = (
+        epoch_walls = run_epochs(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(delta_dir)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(merge)
-            .start()
+            .parquet(delta_dir),
+            per_batch, arts, out, ckpt,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         rej_df = spark.read.parquet(out)
         rej = sorted(
             tuple(r)
