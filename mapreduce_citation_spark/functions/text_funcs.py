@@ -1,19 +1,37 @@
-"""Portable text primitives: tokenization, shingling, MinHash, SimHash.
+"""Portable text primitives: tokens, shingles, bigrams, token segments,
+chunk and pack spans, 60-bit md5 hashes, MinHash, SimHash.
 
 Every primitive is defined TWICE — a Spark SQL expression and a DuckDB
 SQL expression — built from the same template so the oracle-checked
-queries in ``operators/dedup.py`` / ``operators/text.py`` compute
-bit-identical values in both engines. All of it is engine-built-in
-(higher-order array functions + md5); no Python UDFs anywhere, so the
-hot path stays in whole-stage codegen.
+queries in ``operators/dedup.py`` / ``operators/text.py`` /
+``operators/pipeline.py`` compute bit-identical values in both
+engines. Each DuckDB twin is written as DuckDB SQL, never derived from
+the Spark string, so an oracle stays independent of the Spark code.
+All of it is engine-built-in (higher-order array functions + md5); no
+Python UDFs anywhere, so the hot path stays in whole-stage codegen.
+
+The twins:
+- ``TOK_SPARK`` / ``TOK_DUCK``: whitespace tokens of ``text``;
+- ``bigrams_*`` / ``bigram_strings_*``: adjacent-token pairs, as
+  struct(w1, w2) or ``w1|w2``;
+- ``segments_*``: non-overlapping full ``seg``-token segments;
+- ``chunks_*``: overlapping chunk ids and their [start, end) spans;
+- ``pack_spans_*``: window, offset and window count of a document in
+  a packed token stream, from its running token total;
+- ``hex60_*`` / ``EPOCH_HASH_*``: 60-bit md5 prefix as a BIGINT, and
+  its per-(doc_id, epoch) shuffle key;
+- shingles, integer and string MinHash, LSH bands, SimHash, bottom-k.
 
 Portability rules learned the hard way:
-- hashing: md5 is the only hash both engines share; MinHash uses the
-  *string* min of ``md5(i || ':' || shingle)`` per permutation i, so no
-  hex→int conversion is ever needed.
+- hashing: md5 is the only hash both engines share; a 60-bit integer
+  is its first 15 hex digits (``conv`` on Spark, a ``'0x'`` string
+  cast on DuckDB). String MinHash uses the *string* min of
+  ``md5(i || ':' || shingle)`` per permutation i.
 - SimHash: bit j of a token = (hex digit j of md5(token)) < '8'
   (top bit of the nibble) — giving a 32-bit fingerprint as a '0'/'1'
   string, again avoiding integer casts.
+- integer division: Spark ``div`` and DuckDB ``//`` agree on the
+  nonnegative operands the span twins see.
 - folds (``aggregate`` / ``list_reduce``) are left-to-right in both
   engines → deterministic float accumulation.
 """
@@ -29,6 +47,132 @@ def tokens_spark(col: str = "text") -> str:
 
 def tokens_duck(col: str = "text") -> str:
     return f"list_filter(regexp_split_to_array({col}, '\\s+'), x -> x <> '')"
+
+
+#: Tokens of the ``documents.text`` column, the input of every text family.
+TOK_SPARK = tokens_spark("text")
+TOK_DUCK = tokens_duck("text")
+
+
+# --- bigrams, segments, chunks, pack spans ---------------------------------
+
+def bigrams_spark(toks: str) -> str:
+    """Adjacent-token pairs struct(w1, w2) of array ``toks`` (callers
+    keep ``size >= 2``)."""
+    return (
+        f"transform(sequence(1, size({toks}) - 1), "
+        f"i -> struct(element_at({toks}, i) AS w1, element_at({toks}, i + 1) AS w2))"
+    )
+
+
+def bigrams_duck(toks: str) -> str:
+    return (
+        f"list_transform(generate_series(1, len({toks}) - 1), "
+        f"i -> struct_pack(w1 := {toks}[i], w2 := {toks}[i + 1]))"
+    )
+
+
+def bigram_strings_spark(toks: str) -> str:
+    """Adjacent-token pairs of array ``toks`` as ``w1|w2`` strings
+    (callers keep ``size >= 2``)."""
+    return (
+        f"transform(sequence(1, size({toks}) - 1), "
+        f"i -> concat(element_at({toks}, i), '|', element_at({toks}, i + 1)))"
+    )
+
+
+def bigram_strings_duck(toks: str) -> str:
+    return (
+        f"list_transform(generate_series(1, len({toks}) - 1), "
+        f"i -> {toks}[i] || '|' || {toks}[i + 1])"
+    )
+
+
+def segments_spark(toks: str, seg: int) -> str:
+    """Space-joined non-overlapping full ``seg``-token segments of
+    array ``toks`` (the partial tail is dropped; empty when shorter)."""
+    return (
+        f"CASE WHEN size({toks}) >= {seg} THEN "
+        f"transform(sequence(0, size({toks}) div {seg} - 1), "
+        f"i -> array_join(slice({toks}, i * {seg} + 1, {seg}), ' ')) "
+        f"ELSE array() END"
+    )
+
+
+def segments_duck(toks: str, seg: int) -> str:
+    return (
+        f"CASE WHEN len({toks}) >= {seg} THEN "
+        f"list_transform(range(0, CAST(len({toks}) // {seg} AS BIGINT)), "
+        f"i -> array_to_string({toks}[CAST(i * {seg} + 1 AS INT):"
+        f"CAST(i * {seg} + {seg} AS INT)], ' ')) "
+        f"ELSE CAST([] AS VARCHAR[]) END"
+    )
+
+
+def chunks_spark(n: str, k: str, length: int, overlap: int) -> tuple[str, str, str]:
+    """Overlapping ``length``-token chunks at stride ``length -
+    overlap`` over an ``n``-token document: (the BIGINT chunk ids
+    0..last as an array, chunk ``k``'s start token, its end token
+    clamped to ``n``). The count is 1 for n <= length, else the
+    smallest cover 1 + ceil((n - length) / stride); callers drop
+    empty documents."""
+    stride = length - overlap
+    ids = (
+        f"sequence(CAST(0 AS BIGINT), CASE WHEN {n} <= {length} THEN CAST(0 AS BIGINT) "
+        f"ELSE ({n} - {overlap} - 1) div {stride} END)"
+    )
+    return ids, f"{k} * {stride}", f"least({k} * {stride} + {length}, {n})"
+
+
+def chunks_duck(n: str, k: str, length: int, overlap: int) -> tuple[str, str, str]:
+    stride = length - overlap
+    ids = (
+        f"generate_series(0, CAST(CASE WHEN {n} <= {length} THEN 0 "
+        f"ELSE ({n} - {overlap} - 1) // {stride} END AS BIGINT))"
+    )
+    return ids, f"{k} * {stride}", f"LEAST({k} * {stride} + {length}, {n})"
+
+
+def pack_spans_spark(cum: str, n: str, length: int) -> dict[str, str]:
+    """A document's place in a token stream packed into ``length``-
+    token windows, from its inclusive running token total ``cum`` and
+    its token count ``n``: the window its first token lands in, the
+    offset there, and the windows it spans (0 for an empty document)."""
+    return {
+        "window_id": f"({cum} - {n}) div {length}",
+        "offset_in_window": f"({cum} - {n}) % {length}",
+        "windows_spanned": (
+            f"CASE WHEN {n} = 0 THEN 0 ELSE "
+            f"({cum} - 1) div {length} - ({cum} - {n}) div {length} + 1 END"
+        ),
+    }
+
+
+def pack_spans_duck(cum: str, n: str, length: int) -> dict[str, str]:
+    return {
+        "window_id": f"({cum} - {n}) // {length}",
+        "offset_in_window": f"({cum} - {n}) % {length}",
+        "windows_spanned": (
+            f"CASE WHEN {n} = 0 THEN 0 ELSE "
+            f"({cum} - 1) // {length} - ({cum} - {n}) // {length} + 1 END"
+        ),
+    }
+
+
+# --- 60-bit md5 hashes -------------------------------------------------------
+
+def hex60_spark(expr: str) -> str:
+    """md5 of ``expr`` → its first 15 hex digits as a BIGINT."""
+    return f"CAST(conv(substr(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def hex60_duck(expr: str) -> str:
+    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+
+
+#: The epoch shuffle key: 60-bit md5 of ``doc_id|epoch``.
+EPOCH_HASH_SPARK = hex60_spark("concat(CAST(doc_id AS STRING), '|', CAST(epoch AS STRING))")
+EPOCH_HASH_DUCK = hex60_duck("CAST(doc_id AS VARCHAR) || '|' || CAST(epoch AS VARCHAR)")
 
 
 # --- word shingles --------------------------------------------------------
@@ -87,17 +231,15 @@ def minhash_params(n_perm: int = 16) -> list[tuple[int, int]]:
 
 
 def shingle_int_hash_spark(col: str) -> str:
-    """Shingle → 31-bit int: md5 computed ONCE, 60-bit hex prefix via
-    ``conv``, reduced mod P. One digest per shingle — the permutations
-    are then pure codegen'd integer arithmetic (vs. one md5 PER
-    permutation in the string-min scheme: ~n_perm× less hashing)."""
-    return f"CAST(conv(substr(md5({col}), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P}"
+    """Shingle → 31-bit int: md5 computed ONCE, its 60-bit prefix
+    reduced mod P. One digest per shingle — the permutations are then
+    pure codegen'd integer arithmetic (vs. one md5 PER permutation in
+    the string-min scheme: ~n_perm× less hashing)."""
+    return f"{hex60_spark(col)} % {MINHASH_P}"
 
 
 def shingle_int_hash_duck(expr: str) -> str:
-    """DuckDB mirror: ``'0x' || hex-prefix`` string cast — same 60-bit
-    prefix, same mod, bit-identical int."""
-    return f"(CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT) % {MINHASH_P})"
+    return f"({hex60_duck(expr)} % {MINHASH_P})"
 
 
 def minhash_int_duck(shingles_expr: str, n_perm: int = 16) -> str:

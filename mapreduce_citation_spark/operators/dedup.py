@@ -29,16 +29,20 @@ from pyspark.sql import functions as F
 from ..cache import cache_corpus
 from ..functions.text_funcs import (
     MINHASH_P,
+    TOK_DUCK,
+    TOK_SPARK,
+    hex60_duck,
+    hex60_spark,
     minhash_int_duck,
     minhash_int_spark,
     minhash_params,
+    segments_duck,
+    segments_spark,
     shingle_int_hash_spark,
     shingles_duck,
     shingles_spark,
     simhash_duck,
     simhash_spark,
-    tokens_duck,
-    tokens_spark,
 )
 from ..registry import register
 from ..sources.readers import load_table
@@ -938,7 +942,7 @@ def ingest_report_against_base(
 @register(
     "dedup_simhash",
     oracle=f"""
-SELECT doc_id, {simhash_duck(tokens_duck('text'))} AS simhash
+SELECT doc_id, {simhash_duck(TOK_DUCK)} AS simhash
 FROM documents
 """,
     tags=("dedup", "simhash"),
@@ -949,14 +953,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance pairing is covered in pytest (near-dup docs differ in
     ≤ a few bits)."""
     d = _docs(spark, sf_dir)
-    return d.select("doc_id", F.expr(simhash_spark(tokens_spark("text"))).alias("simhash"))
+    return d.select("doc_id", F.expr(simhash_spark(TOK_SPARK)).alias("simhash"))
 
 
 @register(
     "dedup_simhash_pairs",
     oracle=f"""
 WITH s AS (
-  SELECT doc_id, {simhash_duck(tokens_duck('text'))} AS simhash FROM documents
+  SELECT doc_id, {simhash_duck(TOK_DUCK)} AS simhash FROM documents
 )
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash::BIT, b.simhash::BIT)) AS BIGINT) AS hamming
@@ -979,7 +983,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted HOF in the pair path."""
     d = _docs(spark, sf_dir)
     s = d.select(
-        "doc_id", F.expr(simhash_spark(tokens_spark("text"))).alias("simhash")
+        "doc_id", F.expr(simhash_spark(TOK_SPARK)).alias("simhash")
     )
     # materialize: the block self-join would otherwise run the (HOF,
     # interpreted) simhash pipeline once per side
@@ -1324,6 +1328,8 @@ def dedup_semantic_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # because it never forms pairs — per-doc work is linear in |text|.
 
 _ESK = 40       # char-gram length == minimum duplicated-span length
+#: the DuckDB 60-bit digest of the _ESK-char gram at offset i
+_ES_DIGEST_DUCK = hex60_duck(f"substr(text, CAST(i AS INT), {_ESK})")
 _ES_MAXDF = 1000  # pairs-query boilerplate guard (df cap per digest)
 
 
@@ -1352,10 +1358,9 @@ def _char_grams(d: DataFrame, k: int = _ESK) -> DataFrame:
         .select(
             "doc_id",
             "i",
-            F.expr(
-                f"CAST(conv(substr(md5(CAST(substring(text, i, {k}) AS BINARY)), "
-                "1, 15), 16, 10) AS BIGINT)"
-            ).alias("dg"),
+            F.expr(hex60_spark(f"CAST(substring(text, i, {k}) AS BINARY)")).alias(
+                "dg"
+            ),
         )
     )
 
@@ -1377,10 +1382,7 @@ def _doc_distinct_grams(d: DataFrame, k: int = _ESK) -> DataFrame:
     document's gram count, the explode emits already-unique pairs,
     and both the partial aggregate and the distinct's shuffle
     disappear. 9× wall-time win at 500k docs, identical output."""
-    digest = (
-        f"CAST(conv(substr(md5(CAST(substring(text, i, {k}) AS BINARY)), "
-        "1, 15), 16, 10) AS BIGINT)"
-    )
+    digest = hex60_spark(f"CAST(substring(text, i, {k}) AS BINARY)")
     return (
         d.where(F.length("text") >= k)
         .repartition(F.col("doc_id"))
@@ -1408,7 +1410,7 @@ WITH pos AS (
   FROM documents WHERE length(text) >= {k}
 ),
 g AS (
-  SELECT DISTINCT doc_id, CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), {k})), 1, 15)) AS BIGINT) AS dg
+  SELECT DISTINCT doc_id, {hex60_duck(f"substr(text, CAST(i AS INT), {k})")} AS dg
   FROM pos
 ),
 eligible AS (
@@ -1496,7 +1498,7 @@ WITH pos AS (
 ),
 g AS (
   SELECT doc_id, CAST(i AS INT) AS i,
-         CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), {_ESK})), 1, 15)) AS BIGINT) AS dg
+         {_ES_DIGEST_DUCK} AS dg
   FROM pos
 ),
 dup_dg AS (SELECT dg FROM g GROUP BY dg HAVING count(*) >= 2),
@@ -1622,7 +1624,7 @@ WITH pos AS (
   FROM documents WHERE length(text) >= {_ESK}
 ),
 g AS (
-  SELECT DISTINCT doc_id, CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), {_ESK})), 1, 15)) AS BIGINT) AS dg
+  SELECT DISTINCT doc_id, {_ES_DIGEST_DUCK} AS dg
   FROM pos
 ),
 bench AS (SELECT doc_id, dg FROM g WHERE doc_id % 10 = 0),
@@ -1680,7 +1682,7 @@ WITH pos AS (
 ),
 g AS (
   SELECT doc_id, CAST(i AS INT) AS i,
-         CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), {_ESK})), 1, 15)) AS BIGINT) AS dg
+         {_ES_DIGEST_DUCK} AS dg
   FROM pos
 ),
 dup_dg AS (SELECT dg FROM g GROUP BY dg HAVING count(*) >= 2),
@@ -1780,27 +1782,17 @@ def dedup_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: segment is counted in token totals but is not a paragraph).
 PARA_SEG = 16
 
-_PARA_TOK_D = tokens_duck("text")
-_PARA_TOK_S = tokens_spark("text")
-
 
 #: Shared DuckDB CTE prefix for the paragraph family: tokenize,
-#: segment, MinHash, band, verify, and derive the removed set — the
-#: report and the strip oracle differ only in their final SELECT.
-def _para_ctes() -> str:
-    seg = PARA_SEG
-    return f"""
+#: segment, shingle, MinHash and band every paragraph — the batch
+#: near-dup/strip pair and the ingest oracle differ only after it.
+_PARA_BANDS_CTES = f"""
 WITH toks AS (
-  SELECT doc_id, {_PARA_TOK_D} AS t FROM documents
+  SELECT doc_id, {TOK_DUCK} AS t FROM documents
 ),
 base AS (
   SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n_tok,
-         CASE WHEN len(t) >= {seg} THEN
-           list_transform(range(0, CAST(len(t) // {seg} AS BIGINT)),
-             i -> array_to_string(
-               t[CAST(i * {seg} + 1 AS INT):CAST(i * {seg} + {seg} AS INT)],
-               ' '))
-         ELSE CAST([] AS VARCHAR[]) END AS segs
+         {segments_duck('t', PARA_SEG)} AS segs
   FROM toks
 ),
 paras AS (
@@ -1825,7 +1817,16 @@ bands AS (
                      b * {MINHASH_ROWS_PER_BAND} + {MINHASH_ROWS_PER_BAND}],
                   ','))) AS band_key
   FROM sigs
-),
+)"""
+
+
+def _para_ctes() -> str:
+    """:data:`_PARA_BANDS_CTES` plus the batch family's verified pairs
+    and the removed (doc_id, pidx) set — the report and the strip
+    oracle differ only in their final SELECT."""
+    return (
+        _PARA_BANDS_CTES
+        + """,
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, a.pidx AS pidx_a,
                   b.doc_id AS doc_b, b.pidx AS pidx_b
@@ -1841,13 +1842,13 @@ pairs AS (
           / len(list_distinct(list_concat(x.shingles, y.shingles))) >= 0.8
 ),
 removed AS (SELECT DISTINCT doc_b AS doc_id, pidx_b AS pidx FROM pairs)"""
+    )
 
 
-def _para_neardup_oracle() -> str:
-    seg = PARA_SEG
-    return (
-        _para_ctes()
-        + f""",
+#: The neardup report's tail over ``base`` and ``removed``: per-doc
+#: paragraph and removed counts, surviving tokens and the md5 digest
+#: of the sorted removed indices.
+_PARA_REPORT_SQL = f""",
 rem AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_paras,
          md5(array_to_string(list_transform(list_sort(list(pidx)),
@@ -1857,12 +1858,15 @@ rem AS (
 SELECT b.doc_id,
        CAST(len(b.segs) AS BIGINT) AS n_paras,
        CAST(COALESCE(r.n_dup_paras, 0) AS BIGINT) AS n_dup_paras,
-       CAST(b.n_tok - COALESCE(r.n_dup_paras, 0) * {seg} AS BIGINT)
+       CAST(b.n_tok - COALESCE(r.n_dup_paras, 0) * {PARA_SEG} AS BIGINT)
          AS kept_tokens,
        COALESCE(r.removed_digest, md5('')) AS removed_digest
 FROM base b LEFT JOIN rem r USING (doc_id)
 """
-    )
+
+
+def _para_neardup_oracle() -> str:
+    return _para_ctes() + _PARA_REPORT_SQL
 
 
 @register(
@@ -1929,20 +1933,14 @@ def _doc_segs(d: DataFrame, with_tokens: bool = False) -> DataFrame:
     documents, UNPERSISTED: callers cache per their own reuse shape
     (the r7 rule — the batch family persists it, the ingest base
     consumes it exactly once)."""
-    seg = PARA_SEG
     cols = [
         "doc_id",
         F.size("t").cast("long").alias("n_tok"),
-        F.expr(
-            f"CASE WHEN size(t) >= {seg} THEN "
-            f"transform(sequence(0, size(t) div {seg} - 1), "
-            f"i -> array_join(slice(t, i * {seg} + 1, {seg}), ' ')) "
-            f"ELSE array() END"
-        ).alias("segs"),
+        F.expr(segments_spark("t", PARA_SEG)).alias("segs"),
     ]
     if with_tokens:
         cols.append("t")
-    return d.select("doc_id", F.expr(_PARA_TOK_S).alias("t")).select(*cols)
+    return d.select("doc_id", F.expr(TOK_SPARK).alias("t")).select(*cols)
 
 
 def _paragraph_base(
@@ -2220,48 +2218,14 @@ def paragraph_ingest_report(
 
 
 def _para_ingest_oracle() -> str:
-    """DuckDB mirror of the paragraph ingest pipeline: identical
-    segmentation/shingles/MinHash/bands as ``_para_ctes`` (same module
-    constants), candidates restricted to delta(doc_id % 8 = 0) ×
-    base(% 8 <> 0), per-pair ``list_intersect`` verify, and the
-    neardup report shape over delta docs only."""
-    seg = PARA_SEG
-    return f"""
-WITH toks AS (
-  SELECT doc_id, {_PARA_TOK_D} AS t FROM documents
-),
-base AS (
-  SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n_tok,
-         CASE WHEN len(t) >= {seg} THEN
-           list_transform(range(0, CAST(len(t) // {seg} AS BIGINT)),
-             i -> array_to_string(
-               t[CAST(i * {seg} + 1 AS INT):CAST(i * {seg} + {seg} AS INT)],
-               ' '))
-         ELSE CAST([] AS VARCHAR[]) END AS segs
-  FROM toks
-),
-paras AS (
-  SELECT doc_id,
-         CAST(unnest(range(0, CAST(len(segs) AS BIGINT))) AS BIGINT) AS pidx,
-         unnest(segs) AS ptext
-  FROM base
-),
-sh AS (
-  SELECT doc_id, pidx, {shingles_duck('ptext', 3)} AS shingles FROM paras
-),
-sigs AS (
-  SELECT doc_id, pidx, shingles,
-         {minhash_int_duck('shingles', MINHASH_N_PERM)} AS mh FROM sh
-),
-bands AS (
-  SELECT doc_id, pidx,
-         unnest(list_transform(generate_series(0, {MINHASH_N_BANDS - 1}),
-                b -> b || ':' || array_to_string(
-                  mh[b * {MINHASH_ROWS_PER_BAND} + 1:
-                     b * {MINHASH_ROWS_PER_BAND} + {MINHASH_ROWS_PER_BAND}],
-                  ','))) AS band_key
-  FROM sigs
-),
+    """DuckDB mirror of the paragraph ingest pipeline: the family's
+    segmentation/shingles/MinHash/bands (:data:`_PARA_BANDS_CTES`),
+    candidates restricted to delta(doc_id % 8 = 0) × base(% 8 <> 0),
+    per-pair ``list_intersect`` verify, and the neardup report over
+    delta docs only."""
+    return (
+        _PARA_BANDS_CTES
+        + """,
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_d, a.pidx AS pidx_d,
                   b.doc_id AS doc_b, b.pidx AS pidx_b
@@ -2277,22 +2241,10 @@ pairs AS (
           / (len(x.shingles) + len(y.shingles)
              - len(list_intersect(x.shingles, y.shingles))) >= 0.8
 ),
-removed AS (SELECT DISTINCT doc_d AS doc_id, pidx_d AS pidx FROM pairs),
-rem AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_paras,
-         md5(array_to_string(list_transform(list_sort(list(pidx)),
-             x -> CAST(x AS VARCHAR)), ',')) AS removed_digest
-  FROM removed GROUP BY doc_id
-)
-SELECT b.doc_id,
-       CAST(len(b.segs) AS BIGINT) AS n_paras,
-       CAST(COALESCE(r.n_dup_paras, 0) AS BIGINT) AS n_dup_paras,
-       CAST(b.n_tok - COALESCE(r.n_dup_paras, 0) * {seg} AS BIGINT)
-         AS kept_tokens,
-       COALESCE(r.removed_digest, md5('')) AS removed_digest
-FROM base b LEFT JOIN rem r USING (doc_id)
-WHERE b.doc_id % 8 = 0
-"""
+removed AS (SELECT DISTINCT doc_d AS doc_id, pidx_d AS pidx FROM pairs)"""
+        + _PARA_REPORT_SQL
+        + "WHERE b.doc_id % 8 = 0\n"
+    )
 
 
 @register(

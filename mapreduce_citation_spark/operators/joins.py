@@ -525,11 +525,19 @@ def _warehouse_table(
     same source — e.g. month- vs week-partitioned — never share a
     table). Staleness = exact float mtime + total byte size in
     TBLPROPERTIES, so a fixture regenerated within the same second is
-    still detected."""
+    still detected.
+
+    The database lives in a temp dir made when this SparkContext's
+    in-memory catalog first creates it and removed at exit: under the
+    shared ``spark-warehouse`` dir, two processes started from one
+    working directory would each overwrite the tables the other is
+    reading."""
+    import atexit
     import hashlib
     import os
     import re
     import shutil
+    import tempfile
 
     def _tree_size(p: str) -> int:
         if os.path.isfile(p):
@@ -539,23 +547,10 @@ def _warehouse_table(
             for d, _, fs in os.walk(p) for f in fs
         )
 
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {_BUCKET_DB}")
-    # one-time prune of pre-r5b naming ({table}_bk_{8-hex path tag},
-    # no basename segment): those tables are orphaned under the
-    # current realpath|spec token scheme and would accumulate on disk.
-    # Anchored on the literal fixture table names so a current-scheme
-    # dir can never match (that would need an EMPTY sanitized
-    # basename segment, which the token format cannot produce).
-    _FIXTURES = (
-        "region|nation|customer|supplier|part|orders|lineitem|"
-        "events|documents|embeddings"
-    )
-    wh_dir = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    db_dir = os.path.join(wh_dir, f"{_BUCKET_DB}.db")
-    if os.path.isdir(db_dir):
-        for entry in os.listdir(db_dir):
-            if re.fullmatch(rf"({_FIXTURES})_(bk|pt)_[0-9a-f]{{8}}", entry):
-                shutil.rmtree(os.path.join(db_dir, entry), ignore_errors=True)
+    if not spark.catalog.databaseExists(_BUCKET_DB):
+        loc = tempfile.mkdtemp(prefix="spark-graft-warehouse-")
+        atexit.register(shutil.rmtree, loc, True)
+        spark.sql(f"CREATE DATABASE {_BUCKET_DB} LOCATION '{loc}'")
     real = os.path.realpath(sf_dir.rstrip("/"))
     tag = hashlib.md5(f"{real}|{spec_tag}".encode()).hexdigest()[:8]
     token = re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(real)) + "_" + tag
@@ -569,14 +564,6 @@ def _warehouse_table(
         }
         if props.get("src_mtime") == src_mtime:
             return spark.table(tbl)
-    else:
-        # warehouse dir persists across sessions while the in-memory
-        # catalog does not — clear any stale uncataloged location
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(
-            os.path.join(wh, f"{_BUCKET_DB}.db", tbl.split(".", 1)[1]),
-            ignore_errors=True,
-        )
     write(spark.read.parquet(src), tbl)
     spark.sql(f"ALTER TABLE {tbl} SET TBLPROPERTIES ('src_mtime'='{src_mtime}')")
     return spark.table(tbl)

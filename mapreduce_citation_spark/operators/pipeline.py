@@ -15,9 +15,10 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text_funcs import TOK_DUCK, TOK_SPARK
 from ..registry import register
 from ..sources.readers import load_table
-from .text import _TOK_D, _TOK_S, _argmax_case, _score_d, _score_s
+from .text import _argmax_case, _score_d, _score_s
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -34,7 +35,7 @@ staged AS (
   SELECT d.doc_id,
          CASE
            WHEN d.doc_id <> k.keep_id THEN '1_exact_dup'
-           WHEN len({_TOK_D}) < 16 THEN '2_too_short'
+           WHEN len({TOK_DUCK}) < 16 THEN '2_too_short'
            WHEN ({_argmax_case(_score_d)}) <> d.lang THEN '3_lang_mismatch'
            ELSE '4_kept'
          END AS stage
@@ -65,7 +66,7 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.md5(F.col("text").cast("binary")).alias("grp"),
-        F.expr(f"size({_TOK_S})").alias("ntok"),
+        F.expr(f"size({TOK_SPARK})").alias("ntok"),
         F.expr(_argmax_case(_score_s)).alias("pred"),
     )
     keep_id = F.min("doc_id").over(Window.partitionBy("grp"))
@@ -157,7 +158,7 @@ def corpus_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_pack_bins",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, lang, CAST(len({_TOK_D}) AS BIGINT) AS ntok FROM documents
+  SELECT doc_id, lang, CAST(len({TOK_DUCK}) AS BIGINT) AS ntok FROM documents
 ),
 c AS (
   SELECT doc_id, lang, ntok,
@@ -182,7 +183,7 @@ def corpus_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
-    ntok = F.expr(f"size({_TOK_S})").cast("long")
+    ntok = F.expr(f"size({TOK_SPARK})").cast("long")
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -205,7 +206,7 @@ def corpus_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH per_src AS (
   SELECT source,
          COUNT(*) AS n_docs,
-         CAST(SUM(len({_TOK_D})) AS BIGINT) AS n_tokens
+         CAST(SUM(len({TOK_DUCK})) AS BIGINT) AS n_tokens
   FROM documents
   GROUP BY source
 ),
@@ -242,7 +243,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per_src = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.expr(f"CAST(SUM(size({_TOK_S})) AS BIGINT)").alias("n_tokens"),
+        F.expr(f"CAST(SUM(size({TOK_SPARK})) AS BIGINT)").alias("n_tokens"),
     )
     per_src = per_src.localCheckpoint()  # feeds the fold AND the output
     # two-step fold: totals first, then the sqrt terms (sqrt is
@@ -333,7 +334,7 @@ def _curation_funnel_oracle() -> str:
     operator docstring), and the ``decontaminate_eval_overlap``
     40-char-gram criterion (60-bit integer digests, benchmark =
     ``doc_id % 10 = 0``)."""
-    from .dedup import _COMPONENTS_CTES, _ESK, _MINHASH_PAIRS_CTES
+    from .dedup import _COMPONENTS_CTES, _ES_DIGEST_DUCK, _ESK, _MINHASH_PAIRS_CTES
     from .text import QG_KEEP_DUCK
 
     return f"""
@@ -364,8 +365,7 @@ pos AS (
   FROM documents WHERE length(text) >= {_ESK}
 ),
 g AS (
-  SELECT DISTINCT doc_id,
-         CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), {_ESK})), 1, 15)) AS BIGINT) AS dg
+  SELECT DISTINCT doc_id, {_ES_DIGEST_DUCK} AS dg
   FROM pos
 ),
 contaminated AS (

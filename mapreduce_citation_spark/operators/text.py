@@ -1,34 +1,56 @@
 """Text-analysis operators over ``documents``: token statistics,
-quality scoring, language ID, fingerprinting, and regex (BPE-ish)
-token counting — the per-document featurization stage of an LLM data
-pipeline.
+quality scoring, language ID, fingerprinting, n-gram language models,
+BPE training and encoding, chunking, packing, epoch shuffles, data
+selection and BM25 retrieval — the featurization, curation and
+retrieval stages of an LLM data pipeline.
 
-Everything is a map-side projection or a low-cardinality aggregate:
-no UDFs, no shuffles beyond the final groupBy, so at 100 TB the cost
-is one scan. All ratios are int/int divisions → bit-identical doubles
-in both engines.
+Most operators are a map-side projection plus a low-cardinality
+aggregate: no UDFs, and at 100 TB the cost is one scan. The rest
+shuffle or join where the answer needs it — BPE and the bigram
+families count on the n-gram key and join counts back, BM25 joins
+query-term postings to df, boilerplate strip counts segment hashes
+and joins them back per document, packing and the epoch shuffles run
+keyed windows — and each docstring names its exchanges. Bigrams,
+token segments, chunk and pack spans and the 60-bit hashes come from
+the ``functions/text_funcs`` twins, so each is spelled once per
+engine. All ratios are int/int divisions → bit-identical doubles in
+both engines.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import (
+    EPOCH_HASH_DUCK,
+    EPOCH_HASH_SPARK,
+    TOK_DUCK,
+    TOK_SPARK,
+    bigram_strings_duck,
+    bigram_strings_spark,
+    bigrams_duck,
+    bigrams_spark,
     bottomk_fingerprint_duck,
     bottomk_fingerprint_spark,
+    chunks_duck,
+    chunks_spark,
+    hex60_duck,
+    hex60_spark,
+    pack_spans_duck,
+    pack_spans_spark,
+    segments_duck,
+    segments_spark,
     shingles_duck,
     shingles_spark,
     tokens_duck,
-    tokens_spark,
 )
 from ..registry import register
 from ..sources.readers import load_table
 from .dedup import PARA_SEG
-
-_TOK_S = tokens_spark("text")
-_TOK_D = tokens_duck("text")
 
 #: Stopword profiles for the marker-based language scorer. The fixture
 #: vocabulary is synthetic, so the scores are about engine semantics
@@ -55,8 +77,8 @@ def _in_list(langwords: tuple[str, ...]) -> str:
     oracle=f"""
 SELECT lang, source,
        COUNT(*) AS n_docs,
-       CAST(SUM(len({_TOK_D})) AS BIGINT) AS total_tokens,
-       CAST(SUM(len({_TOK_D})) AS DOUBLE) / COUNT(*) AS avg_tokens,
+       CAST(SUM(len({TOK_DUCK})) AS BIGINT) AS total_tokens,
+       CAST(SUM(len({TOK_DUCK})) AS DOUBLE) / COUNT(*) AS avg_tokens,
        CAST(SUM(n_chars) AS BIGINT) AS total_chars
 FROM documents
 GROUP BY lang, source
@@ -67,7 +89,7 @@ GROUP BY lang, source
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus statistics per (lang, source): doc/token/char totals."""
     d = _docs(spark, sf_dir)
-    ntok = F.expr(f"size({_TOK_S})")
+    ntok = F.expr(f"size({TOK_SPARK})")
     return (
         d.select("lang", "source", ntok.alias("ntok"), "n_chars")
         .groupBy("lang", "source")
@@ -84,14 +106,14 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality_scores",
     oracle=f"""
 SELECT doc_id,
-       CAST(len({_TOK_D}) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct({_TOK_D})) AS BIGINT) AS n_types,
-       CAST(len(list_distinct({_TOK_D})) AS DOUBLE) / len({_TOK_D}) AS type_token_ratio,
-       CAST(len(list_filter({_TOK_D}, t -> t IN ('the', 'a', 'of'))) AS DOUBLE)
-         / len({_TOK_D}) AS stopword_ratio,
-       CAST(length(replace(text, ' ', '')) AS DOUBLE) / len({_TOK_D}) AS avg_token_len
+       CAST(len({TOK_DUCK}) AS BIGINT) AS n_tokens,
+       CAST(len(list_distinct({TOK_DUCK})) AS BIGINT) AS n_types,
+       CAST(len(list_distinct({TOK_DUCK})) AS DOUBLE) / len({TOK_DUCK}) AS type_token_ratio,
+       CAST(len(list_filter({TOK_DUCK}, t -> t IN ('the', 'a', 'of'))) AS DOUBLE)
+         / len({TOK_DUCK}) AS stopword_ratio,
+       CAST(length(replace(text, ' ', '')) AS DOUBLE) / len({TOK_DUCK}) AS avg_token_len
 FROM documents
-WHERE len({_TOK_D}) > 0
+WHERE len({TOK_DUCK}) > 0
 """,
     tags=("text", "quality"),
 )
@@ -100,9 +122,9 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio, stopword ratio, mean token length — the standard cheap
     quality-filter signals (all exact int/int ratios)."""
     d = _docs(spark, sf_dir)
-    ntok = F.expr(f"size({_TOK_S})")
-    ntypes = F.expr(f"size(array_distinct({_TOK_S}))")
-    nstop = F.expr(f"size(filter({_TOK_S}, t -> t IN ('the', 'a', 'of')))")
+    ntok = F.expr(f"size({TOK_SPARK})")
+    ntypes = F.expr(f"size(array_distinct({TOK_SPARK}))")
+    nstop = F.expr(f"size(filter({TOK_SPARK}, t -> t IN ('the', 'a', 'of')))")
     nchars_nospace = F.length(F.regexp_replace("text", " ", ""))
     return (
         d.select(
@@ -118,11 +140,11 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _score_s(words: tuple[str, ...]) -> str:
-    return f"size(filter({_TOK_S}, t -> t IN ({_in_list(words)})))"
+    return f"size(filter({TOK_SPARK}, t -> t IN ({_in_list(words)})))"
 
 
 def _score_d(words: tuple[str, ...]) -> str:
-    return f"len(list_filter({_TOK_D}, t -> t IN ({_in_list(words)})))"
+    return f"len(list_filter({TOK_DUCK}, t -> t IN ({_in_list(words)})))"
 
 
 def _argmax_case(score_fn) -> str:
@@ -250,13 +272,13 @@ def text_redact_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_tfidf_top_terms",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest(list_distinct({_TOK_D})) AS term,
-         len({_TOK_D}) AS doc_len
+  SELECT doc_id, unnest(list_distinct({TOK_DUCK})) AS term,
+         len({TOK_DUCK}) AS doc_len
   FROM documents
 ),
 tf AS (
   SELECT d.doc_id, t.term, t.doc_len,
-         len(list_filter({_TOK_D.replace('text', 'd.text')}, x -> x = t.term)) AS tf
+         len(list_filter({TOK_DUCK.replace('text', 'd.text')}, x -> x = t.term)) AS tf
   FROM documents d JOIN tok t ON d.doc_id = t.doc_id
 ),
 df AS (
@@ -291,7 +313,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     count()."""
     d = _docs(spark, sf_dir)
     tf = (
-        d.select("doc_id", F.explode(F.expr(_TOK_S)).alias("term"))
+        d.select("doc_id", F.explode(F.expr(TOK_SPARK)).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -323,7 +345,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_winnowing_fingerprints",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, {_TOK_D} AS t FROM documents
+  SELECT doc_id, {TOK_DUCK} AS t FROM documents
 ),
 grams AS (
   SELECT doc_id,
@@ -374,7 +396,7 @@ def winnowed_fingerprints(d: DataFrame) -> DataFrame:
     minimum — shared by ``doc_winnowing_fingerprints`` (per-doc
     sketch) and ``dedup_winnowing_pairs`` (pairing)."""
     tok = d.repartition(F.col("doc_id")).select(
-        "doc_id", F.posexplode(F.expr(_TOK_S)).alias("pos", "w0")
+        "doc_id", F.posexplode(F.expr(TOK_SPARK)).alias("pos", "w0")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     grams = (
@@ -427,9 +449,9 @@ def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "doc_length_histogram",
     oracle=f"""
-SELECT CAST((len({_TOK_D}) // 16) * 16 AS BIGINT) AS bucket_lo,
+SELECT CAST((len({TOK_DUCK}) // 16) * 16 AS BIGINT) AS bucket_lo,
        COUNT(*) AS n_docs,
-       CAST(SUM(len({_TOK_D})) AS BIGINT) AS total_tokens
+       CAST(SUM(len({TOK_DUCK})) AS BIGINT) AS total_tokens
 FROM documents
 GROUP BY 1
 """,
@@ -441,7 +463,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer bucket arithmetic (DIV), so both engines land every doc in
     the same bucket; one map-side projection + tiny rollup."""
     d = _docs(spark, sf_dir)
-    ntok = F.expr(f"size({_TOK_S})").cast("long")
+    ntok = F.expr(f"size({TOK_SPARK})").cast("long")
     return (
         d.select(((ntok / 16).cast("long") * 16).alias("bucket_lo"), ntok.alias("nt"))
         .groupBy("bucket_lo")
@@ -455,7 +477,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _grams_duck(k: int = 3) -> str:
     """Word k-grams WITH multiplicity (DuckDB) — shingles_duck minus
     the list_distinct, for repetition measurement."""
-    t = _TOK_D
+    t = TOK_DUCK
     return (
         f"list_transform(generate_series(1, greatest(len({t}) - {k - 1}, 0)), "
         f"i -> array_to_string(({t})[i:i+{k - 1}], ' '))"
@@ -515,7 +537,7 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_unigram_rarity",
     oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOK_D}) AS term FROM documents
+  SELECT doc_id, unnest({TOK_DUCK}) AS term FROM documents
 ),
 cnt AS (SELECT term, count(*) AS c FROM tok GROUP BY term),
 bits AS (
@@ -552,7 +574,7 @@ def text_unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     token→count join, which AQE broadcast-converts when the
     vocabulary fits."""
     d = _docs(spark, sf_dir)
-    tok = d.select("doc_id", F.explode(F.expr(_TOK_S)).alias("term"))
+    tok = d.select("doc_id", F.explode(F.expr(TOK_SPARK)).alias("term"))
     cnt = tok.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     bits = tok.join(cnt, "term").select(
         "doc_id",
@@ -569,11 +591,10 @@ def text_unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bigram_lm",
     oracle=f"""
 WITH t AS (
-  SELECT {_TOK_D} AS toks FROM documents
+  SELECT {TOK_DUCK} AS toks FROM documents
 ),
 bg AS (
-  SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS b
+  SELECT unnest({bigrams_duck('toks')}) AS b
   FROM t WHERE len(toks) >= 2
 ),
 c AS (
@@ -602,16 +623,10 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-100. Linear in token count; the LM-table shape (shuffle on
     the n-gram, re-key on the prefix) is the same at any n."""
     d = _docs(spark, sf_dir)
-    toks = d.select(F.expr(_TOK_S).alias("toks")).where(F.size("toks") >= 2)
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> struct(element_at(toks, i) AS w1, "
-                "element_at(toks, i + 1) AS w2))"
-            )
-        ).alias("b")
-    ).select("b.w1", "b.w2")
+    toks = d.select(F.expr(TOK_SPARK).alias("toks")).where(F.size("toks") >= 2)
+    bg = toks.select(F.explode(F.expr(bigrams_spark("toks"))).alias("b")).select(
+        "b.w1", "b.w2"
+    )
     c = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
     w = Window.partitionBy("w1")
     return (
@@ -637,7 +652,7 @@ _WINNOW_MAXDF = 1000  # boilerplate guard, same rationale as dedup._ES_MAXDF
     "dedup_winnowing_pairs",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, {_TOK_D} AS t FROM documents
+  SELECT doc_id, {TOK_DUCK} AS t FROM documents
 ),
 grams AS (
   SELECT doc_id,
@@ -764,22 +779,22 @@ _QG_DIGITS_S = "length(regexp_replace(text, '[^0-9]', ''))"
 _QG_DIGITS_D = "length(regexp_replace(text, '[^0-9]', '', 'g'))"
 
 QG_RULES_SPARK: dict[str, str] = {
-    "r_len": f"size({_TOK_S}) BETWEEN 5 AND 500",
+    "r_len": f"size({TOK_SPARK}) BETWEEN 5 AND 500",
     "r_word_len": (
-        f"2 * size({_TOK_S}) <= {_QG_TOKCHARS_S}"
-        f" AND {_QG_TOKCHARS_S} <= 12 * size({_TOK_S})"
+        f"2 * size({TOK_SPARK}) <= {_QG_TOKCHARS_S}"
+        f" AND {_QG_TOKCHARS_S} <= 12 * size({TOK_SPARK})"
     ),
     "r_symbol": f"5 * {_QG_DIGITS_S} <= {_QG_TOKCHARS_S}",
-    "r_stop": f"arrays_overlap({_TOK_S}, array('the', 'a', 'of'))",
+    "r_stop": f"arrays_overlap({TOK_SPARK}, array('the', 'a', 'of'))",
 }
 QG_RULES_DUCK: dict[str, str] = {
-    "r_len": f"len({_TOK_D}) BETWEEN 5 AND 500",
+    "r_len": f"len({TOK_DUCK}) BETWEEN 5 AND 500",
     "r_word_len": (
-        f"2 * len({_TOK_D}) <= {_QG_TOKCHARS_D}"
-        f" AND {_QG_TOKCHARS_D} <= 12 * len({_TOK_D})"
+        f"2 * len({TOK_DUCK}) <= {_QG_TOKCHARS_D}"
+        f" AND {_QG_TOKCHARS_D} <= 12 * len({TOK_DUCK})"
     ),
     "r_symbol": f"5 * {_QG_DIGITS_D} <= {_QG_TOKCHARS_D}",
-    "r_stop": f"list_has_any({_TOK_D}, ['the', 'a', 'of'])",
+    "r_stop": f"list_has_any({TOK_DUCK}, ['the', 'a', 'of'])",
 }
 #: conjunction of all rules (the keep decision)
 QG_KEEP_SPARK = " AND ".join(f"({e})" for e in QG_RULES_SPARK.values())
@@ -857,160 +872,19 @@ def corpus_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: never share boundary bytes). Control chars: ASCII fixture text
 #: cannot contain them.
 _BPE_SEP1, _BPE_SEP2 = chr(31), chr(30)
+_BPE_SYMS_DUCK = "string_split(trim(s, chr(31)||chr(30)), chr(30)||chr(31))"
+#: merges learned (and applied) by the registered BPE queries
+_BPE_MERGES = 3
 
 
-def _bpe_oracle(n_merges: int) -> str:
-    """Unrolled DuckDB replay of ``text_bpe_merges`` — the same
-    iteration-unrolling strategy as the pagerank/k-means oracles.
-    Validated against a classic python BPE implementation (tuple
-    symbols, greedy left-to-right merge) before registration."""
-    s1, s2 = "chr(31)", "chr(30)"
-
-    def pairs(src: str, p: str, t: str) -> str:
-        return f"""
-{p} AS (
-  SELECT z.pr[1] AS l, z.pr[2] AS r, CAST(SUM(freq) AS BIGINT) AS cnt
-  FROM (
-    SELECT unnest(list_zip(ls[1:len(ls)-1], ls[2:len(ls)])) AS pr, freq
-    FROM (SELECT string_split(trim(s, {s1}||{s2}), {s2}||{s1}) AS ls, freq
-          FROM {src})
-  ) z
-  GROUP BY 1, 2
-),
-{t} AS (SELECT l, r, cnt FROM {p} ORDER BY cnt DESC, l ASC, r ASC LIMIT 1)"""
-
-    def merge(src: str, t: str, dst: str) -> str:
-        return f"""
-{dst} AS (
-  SELECT replace(s, {s1}||t.l||{s2}||{s1}||t.r||{s2},
-                 {s1}||t.l||t.r||{s2}) AS s, freq
-  FROM {src}, {t} t
-)"""
-
-    ctes = [
-        f"""words AS (
-  SELECT word, COUNT(*) AS freq FROM (
-    SELECT unnest(string_split_regex(text, '\\s+')) AS word FROM documents
-  ) WHERE word <> '' GROUP BY word
-),
-it0 AS (
-  SELECT regexp_replace(word, '(.)', {s1}||'\\1'||{s2}, 'g') AS s, freq
-  FROM words
-)"""
-    ]
-    outs = []
-    for i in range(1, n_merges + 1):
-        ctes.append(pairs(f"it{i - 1}", f"p{i}", f"t{i}"))
-        if i < n_merges:
-            ctes.append(merge(f"it{i - 1}", f"t{i}", f"it{i}"))
-        outs.append(
-            f"SELECT {i} AS it, l AS left_sym, r AS right_sym, "
-            f"cnt AS pair_count, l || r AS new_token FROM t{i}"
-        )
-    return "WITH " + ",".join(ctes) + "\n" + "\nUNION ALL ".join(outs)
-
-
-def bpe_merge_table(docs: DataFrame, n_merges: int) -> DataFrame:
-    """Learn ``n_merges`` BPE merges from the corpus — the TRAINING
-    loop of a byte-pair-encoding tokenizer, as a declarative
-    fixed-iteration plan:
-
-    1. corpus → word-frequency dict (the classic compression: every
-       subsequent pass touches the VOCABULARY, not the corpus — at
-       100 TB this is the only corpus-wide shuffle);
-    2. per iteration: adjacent-symbol pair counts weighted by word
-       freq → global argmax (count desc, pair asc — deterministic
-       tie-break) → merge applied to the dict via sentinel-wrapped
-       ``F.replace`` (leftmost non-overlapping = classic BPE's greedy
-       scan), with the 1-row winner cross-joined on (the vetted
-       scalar-fold pattern — no driver round-trip, no collect).
-
-    Output: one row per learned merge (it, left_sym, right_sym,
-    pair_count, new_token). Integer counts only — no floats."""
-    sep1, sep2 = F.lit(_BPE_SEP1), F.lit(_BPE_SEP2)
-    words = (
-        docs.select(F.explode(F.split("text", r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    # wrap every char as SEP1+c+SEP2 ($1 = regex group in Spark's
-    # replacement syntax; the oracle's RE2 spelling is \1)
-    wrapped = words.select(
-        F.regexp_replace(
-            "word", "(.)", _BPE_SEP1 + "$1" + _BPE_SEP2
-        ).alias("s"),
-        "freq",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    out = None
-    cur = wrapped
-    for i in range(1, n_merges + 1):
-        ls = F.split(F.expr(f"trim(BOTH '{_BPE_SEP1}{_BPE_SEP2}' FROM s)"),
-                     _BPE_SEP2 + _BPE_SEP1)
-        toks = cur.select(ls.alias("ls"), "freq")
-        pairs = (
-            toks.select(
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(F.col("ls"), 1, F.size("ls") - 1).alias("l"),
-                        F.slice(F.col("ls"), 2, F.size("ls") - 1).alias("r"),
-                    )
-                ).alias("pr"),
-                "freq",
-            )
-            .groupBy(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
-            .agg(F.sum("freq").cast("long").alias("cnt"))
-        )
-        top = pairs.orderBy(
-            F.col("cnt").desc(), F.col("l").asc(), F.col("r").asc()
-        ).limit(1)
-        row = top.select(
-            F.lit(i).alias("it"),
-            F.col("l").alias("left_sym"),
-            F.col("r").alias("right_sym"),
-            F.col("cnt").alias("pair_count"),
-            F.concat("l", "r").alias("new_token"),
-        )
-        out = row if out is None else out.unionAll(row)
-        if i < n_merges:
-            t = top.select(F.col("l").alias("_ml"), F.col("r").alias("_mr"))
-            cur = (
-                cur.crossJoin(t)
-                .select(
-                    F.replace(
-                        F.col("s"),
-                        F.concat(sep1, F.col("_ml"), sep2, sep1, F.col("_mr"), sep2),
-                        F.concat(sep1, F.col("_ml"), F.col("_mr"), sep2),
-                    ).alias("s"),
-                    "freq",
-                )
-                .localCheckpoint()
-            )
-    return out
-
-
-@register(
-    "text_bpe_merges",
-    oracle=_bpe_oracle(3),
-    tags=("text", "bpe", "tokenizer", "iterative", "llm"),
-)
-def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three BPE merges learned from the documents corpus (see
-    ``bpe_merge_table``); the oracle unrolls the same three
-    iterations in SQL, so the pair counting, the argmax tie-break,
-    AND the greedy merge application are all hash-gated."""
-    return bpe_merge_table(load_table(spark, sf_dir, "documents"), 3)
-
-
-def _bpe_encode_oracle(n_merges: int) -> str:
-    """Unrolled DuckDB replay of ``text_bpe_encode``: the SAME
-    training CTEs as ``_bpe_oracle`` (pair counts, deterministic
-    argmax, greedy sentinel-wrapped merge) but carrying the WORD
-    through every iteration and applying ALL merges (the trainer
-    stops short of applying the last one — training only needs its
-    identity, encoding needs its effect), then joining per-word token
-    counts back onto each document's word stream."""
+def _bpe_ctes(n_merges: int) -> str:
+    """Unrolled DuckDB replay of :func:`_bpe_merge_loop` — the same
+    iteration-unrolling strategy as the pagerank/k-means oracles:
+    ``it0`` is the sentinel-wrapped word-frequency dict, and merge i
+    adds the weighted pair counts ``p{i}``, the winner ``t{i}`` and
+    ``it{i}``, the dict with the merge applied. Validated against a
+    classic python BPE implementation (tuple symbols, greedy
+    left-to-right merge) before registration."""
     s1, s2 = "chr(31)", "chr(30)"
     ctes = [
         f"""words AS (
@@ -1029,8 +903,7 @@ p{i} AS (
   SELECT z.pr[1] AS l, z.pr[2] AS r, CAST(SUM(freq) AS BIGINT) AS cnt
   FROM (
     SELECT unnest(list_zip(ls[1:len(ls)-1], ls[2:len(ls)])) AS pr, freq
-    FROM (SELECT string_split(trim(s, {s1}||{s2}), {s2}||{s1}) AS ls, freq
-          FROM it{i - 1})
+    FROM (SELECT {_BPE_SYMS_DUCK} AS ls, freq FROM it{i - 1})
   ) z
   GROUP BY 1, 2
 ),
@@ -1041,13 +914,140 @@ it{i} AS (
                  {s1}||t.l||t.r||{s2}) AS s, freq
   FROM it{i - 1}, t{i} t
 )""")
-    return (
-        "WITH " + ",".join(ctes) + f""",
-vocab AS (
-  SELECT word,
-         len(string_split(trim(s, {s1}||{s2}), {s2}||{s1})) AS n_tok
-  FROM it{n_merges}
+    return "WITH " + ",".join(ctes)
+
+
+def _bpe_symbols() -> Column:
+    """The symbol list of a sentinel-wrapped word ``s``."""
+    return F.split(
+        F.expr(f"trim(BOTH '{_BPE_SEP1}{_BPE_SEP2}' FROM s)"), _BPE_SEP2 + _BPE_SEP1
+    )
+
+
+def _bpe_apply(cur: DataFrame, top: DataFrame) -> DataFrame:
+    """``cur`` (word, s, freq) with the merge in the 1-row ``top``
+    applied: replace(SEP1 l SEP2 SEP1 r SEP2 → SEP1 lr SEP2) —
+    leftmost non-overlapping, classic BPE's greedy scan. The winner
+    folds in by crossJoin (the vetted scalar-fold pattern — no driver
+    round-trip, no collect)."""
+    sep1, sep2 = F.lit(_BPE_SEP1), F.lit(_BPE_SEP2)
+    t = top.select(F.col("l").alias("_ml"), F.col("r").alias("_mr"))
+    return cur.crossJoin(t).select(
+        "word",
+        F.replace(
+            F.col("s"),
+            F.concat(sep1, F.col("_ml"), sep2, sep1, F.col("_mr"), sep2),
+            F.concat(sep1, F.col("_ml"), F.col("_mr"), sep2),
+        ).alias("s"),
+        "freq",
+    )
+
+
+def _bpe_merge_loop(
+    docs: DataFrame, n_merges: int
+) -> tuple[list[DataFrame], DataFrame]:
+    """The BPE TRAINING loop of the trainer and the encoder, as a
+    declarative fixed-iteration plan:
+
+    1. corpus → word-frequency dict (the classic compression: every
+       subsequent pass touches the VOCABULARY, not the corpus — at
+       100 TB this is the only corpus-wide shuffle), every char
+       wrapped as SEP1+c+SEP2;
+    2. per iteration: the previous winner applied to the dict
+       (:func:`_bpe_apply`, checkpointed — vocab-sized state), then
+       adjacent-symbol pair counts weighted by word freq → global
+       argmax (count desc, pair asc — deterministic tie-break).
+
+    Returns the ``n_merges`` 1-row winners (l, r, cnt) and the
+    (word, s, freq) dict with all but the last merge applied: training
+    needs only the last winner's identity, encoding its effect too."""
+    words = (
+        docs.select(F.explode(F.split("text", r"\s+")).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+    # $1 = regex group in Spark's replacement syntax; the oracle's RE2
+    # spelling is \1
+    cur = words.select(
+        "word",
+        F.regexp_replace("word", "(.)", _BPE_SEP1 + "$1" + _BPE_SEP2).alias("s"),
+        "freq",
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    tops = []
+    for _ in range(n_merges):
+        if tops:
+            cur = _bpe_apply(cur, tops[-1]).localCheckpoint()
+        ls = F.col("ls")
+        pairs = (
+            cur.select(_bpe_symbols().alias("ls"), "freq")
+            .select(
+                F.explode(
+                    F.arrays_zip(
+                        F.slice(ls, 1, F.size(ls) - 1).alias("l"),
+                        F.slice(ls, 2, F.size(ls) - 1).alias("r"),
+                    )
+                ).alias("pr"),
+                "freq",
+            )
+            .groupBy(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
+            .agg(F.sum("freq").cast("long").alias("cnt"))
+        )
+        tops.append(
+            pairs.orderBy(F.col("cnt").desc(), F.col("l").asc(), F.col("r").asc())
+            .limit(1)
+        )
+    return tops, cur
+
+
+def bpe_merge_table(docs: DataFrame, n_merges: int) -> DataFrame:
+    """Learn ``n_merges`` BPE merges from the corpus — the TRAINING
+    loop of a byte-pair-encoding tokenizer (:func:`_bpe_merge_loop`).
+
+    Output: one row per learned merge (it, left_sym, right_sym,
+    pair_count, new_token). Integer counts only — no floats."""
+    tops, _ = _bpe_merge_loop(docs, n_merges)
+    return reduce(
+        DataFrame.unionAll,
+        [
+            top.select(
+                F.lit(i).alias("it"),
+                F.col("l").alias("left_sym"),
+                F.col("r").alias("right_sym"),
+                F.col("cnt").alias("pair_count"),
+                F.concat("l", "r").alias("new_token"),
+            )
+            for i, top in enumerate(tops, 1)
+        ],
+    )
+
+
+@register(
+    "text_bpe_merges",
+    oracle=_bpe_ctes(_BPE_MERGES)
+    + "\n"
+    + "\nUNION ALL ".join(
+        f"SELECT {i} AS it, l AS left_sym, r AS right_sym, "
+        f"cnt AS pair_count, l || r AS new_token FROM t{i}"
+        for i in range(1, _BPE_MERGES + 1)
+    ),
+    tags=("text", "bpe", "tokenizer", "iterative", "llm"),
 )
+def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Three BPE merges learned from the documents corpus (see
+    ``bpe_merge_table``); the oracle unrolls the same three
+    iterations in SQL, so the pair counting, the argmax tie-break,
+    AND the greedy merge application are all hash-gated."""
+    return bpe_merge_table(load_table(spark, sf_dir, "documents"), _BPE_MERGES)
+
+
+@register(
+    "text_bpe_encode",
+    # per-word token counts after all merges, joined back onto each
+    # document's word stream
+    oracle=_bpe_ctes(_BPE_MERGES)
+    + f""",
+vocab AS (SELECT word, len({_BPE_SYMS_DUCK}) AS n_tok FROM it{_BPE_MERGES})
 SELECT d.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_words,
        CAST(SUM(v.n_tok) AS BIGINT) AS n_tokens
@@ -1055,13 +1055,7 @@ FROM (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS word
       FROM documents) d
 JOIN vocab v ON d.word = v.word
 WHERE d.word <> ''
-GROUP BY d.doc_id"""
-    )
-
-
-@register(
-    "text_bpe_encode",
-    oracle=_bpe_encode_oracle(3),
+GROUP BY d.doc_id""",
     tags=("text", "bpe", "tokenizer", "apply", "llm"),
 )
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,7 +1074,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the apply join carries no broadcast hint — the vocab is
     data-dependent, so AQE picks the strategy from measured sizes.
     Integer outputs only — hash-exact against the unrolled oracle."""
-    return bpe_encode_counts(load_table(spark, sf_dir, "documents"), 3)
+    return bpe_encode_counts(load_table(spark, sf_dir, "documents"), _BPE_MERGES)
 
 
 def bpe_encode_counts(docs: DataFrame, n_merges: int) -> DataFrame:
@@ -1088,61 +1082,10 @@ def bpe_encode_counts(docs: DataFrame, n_merges: int) -> DataFrame:
     ``text_bpe_encode`` (the registered 3-merge instance) for the
     plan shape and scale notes. Pytest replays this against a classic
     tuple-symbol python BPE on a planted corpus."""
-    sep1, sep2 = F.lit(_BPE_SEP1), F.lit(_BPE_SEP2)
-    words = (
-        docs.select(F.explode(F.split("text", r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
+    tops, cur = _bpe_merge_loop(docs, n_merges)
+    vocab = _bpe_apply(cur, tops[-1]).select(
+        "word", F.size(_bpe_symbols()).alias("n_tok")
     )
-    cur = words.select(
-        "word",
-        F.regexp_replace(
-            "word", "(.)", _BPE_SEP1 + "$1" + _BPE_SEP2
-        ).alias("s"),
-        "freq",
-    ).localCheckpoint()
-    for _ in range(n_merges):
-        ls = F.split(F.expr(f"trim(BOTH '{_BPE_SEP1}{_BPE_SEP2}' FROM s)"),
-                     _BPE_SEP2 + _BPE_SEP1)
-        pairs = (
-            cur.select(F.col("s"), "freq")
-            .select(ls.alias("ls"), "freq")
-            .select(
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(F.col("ls"), 1, F.size("ls") - 1).alias("l"),
-                        F.slice(F.col("ls"), 2, F.size("ls") - 1).alias("r"),
-                    )
-                ).alias("pr"),
-                "freq",
-            )
-            .groupBy(F.col("pr.l").alias("l"), F.col("pr.r").alias("r"))
-            .agg(F.sum("freq").cast("long").alias("cnt"))
-        )
-        t = (
-            pairs.orderBy(F.col("cnt").desc(), F.col("l").asc(),
-                          F.col("r").asc())
-            .limit(1)
-            .select(F.col("l").alias("_ml"), F.col("r").alias("_mr"))
-        )
-        cur = (
-            cur.crossJoin(t)
-            .select(
-                "word",
-                F.replace(
-                    F.col("s"),
-                    F.concat(sep1, F.col("_ml"), sep2,
-                             sep1, F.col("_mr"), sep2),
-                    F.concat(sep1, F.col("_ml"), F.col("_mr"), sep2),
-                ).alias("s"),
-                "freq",
-            )
-            .localCheckpoint()  # per-iteration state (vocab-sized)
-        )
-    ls = F.split(F.expr(f"trim(BOTH '{_BPE_SEP1}{_BPE_SEP2}' FROM s)"),
-                 _BPE_SEP2 + _BPE_SEP1)
-    vocab = cur.select("word", F.size(ls).alias("n_tok"))
     return (
         docs.select(
             "doc_id", F.explode(F.split("text", r"\s+")).alias("word")
@@ -1161,7 +1104,7 @@ def bpe_encode_counts(docs: DataFrame, n_merges: int) -> DataFrame:
     "text_pmi_collocations",
     oracle=f"""
 WITH t AS (
-  SELECT {_TOK_D} AS toks FROM documents
+  SELECT {TOK_DUCK} AS toks FROM documents
 ),
 u AS (
   SELECT unnest(toks) AS w FROM t
@@ -1169,8 +1112,7 @@ u AS (
 uc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM u GROUP BY w),
 nu AS (SELECT CAST(SUM(c) AS BIGINT) AS n_uni FROM uc),
 bg AS (
-  SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS b
+  SELECT unnest({bigrams_duck('toks')}) AS b
   FROM t WHERE len(toks) >= 2
 ),
 bc AS (
@@ -1214,7 +1156,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-20. The documents double-scan is the two-role
     token stream (unigram + bigram passes over the same column)."""
     d = _docs(spark, sf_dir)
-    toks = d.select(F.expr(_TOK_S).alias("toks"))
+    toks = d.select(F.expr(TOK_SPARK).alias("toks"))
     # both count tables are vocabulary-sized and feed 2-3 consumers
     # each; materialized once so the corpus tokenization runs exactly
     # twice (unigram pass + bigram pass), not once per consumer (the
@@ -1228,15 +1170,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     nu = uc.agg(F.expr("CAST(SUM(c) AS BIGINT)").alias("n_uni"))
     bc = (
         toks.where(F.size("toks") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> struct(element_at(toks, i) AS w1, "
-                    "element_at(toks, i + 1) AS w2))"
-                )
-            ).alias("b")
-        )
+        .select(F.explode(F.expr(bigrams_spark("toks"))).alias("b"))
         .select("b.w1", "b.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
@@ -1269,12 +1203,19 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: spans arithmetic stay exercised at every SF.
 PACK_CONTEXT_LEN = 512
 
+#: window_id, offset_in_window and windows_spanned over (cum, n_tokens)
+_PACK_SPANS_SPARK = pack_spans_spark("cum", "n_tokens", PACK_CONTEXT_LEN)
+_PACK_SPANS_DUCK = ",\n       ".join(
+    f"CAST({e} AS BIGINT) AS {a}"
+    for a, e in pack_spans_duck("cum", "n_tokens", PACK_CONTEXT_LEN).items()
+)
+
 
 @register(
     "corpus_sequence_packing",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, CAST(len({_TOK_D}) AS BIGINT) AS n_tokens FROM documents
+  SELECT doc_id, CAST(len({TOK_DUCK}) AS BIGINT) AS n_tokens FROM documents
 ),
 c AS (
   SELECT doc_id, n_tokens,
@@ -1283,12 +1224,7 @@ c AS (
   FROM t
 )
 SELECT doc_id, n_tokens,
-       CAST((cum - n_tokens) // {PACK_CONTEXT_LEN} AS BIGINT) AS window_id,
-       CAST((cum - n_tokens) % {PACK_CONTEXT_LEN} AS BIGINT) AS offset_in_window,
-       CAST(CASE WHEN n_tokens = 0 THEN 0
-            ELSE (cum - 1) // {PACK_CONTEXT_LEN}
-                 - (cum - n_tokens) // {PACK_CONTEXT_LEN} + 1 END
-            AS BIGINT) AS windows_spanned
+       {_PACK_SPANS_DUCK}
 FROM c
 """,
     # bench since r10 (r9 verdict #5): round-over-round tracking for
@@ -1321,51 +1257,38 @@ def corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
-        F.size(F.expr(_TOK_S)).cast("long").alias("n_tokens"),
+        F.size(F.expr(TOK_SPARK)).cast("long").alias("n_tokens"),
     )
     g = with_global_order(t, ["doc_id"], cumsum={"cum": "n_tokens"})
-    L = PACK_CONTEXT_LEN
-    before = F.col("cum") - F.col("n_tokens")
     return g.select(
         "doc_id",
         "n_tokens",
-        F.expr(f"(cum - n_tokens) div {L}").cast("long").alias("window_id"),
-        (before % L).cast("long").alias("offset_in_window"),
-        F.when(F.col("n_tokens") == 0, F.lit(0))
-        .otherwise(
-            F.expr(f"(cum - 1) div {L} - (cum - n_tokens) div {L} + 1")
-        )
-        .cast("long")
-        .alias("windows_spanned"),
+        *[F.expr(e).cast("long").alias(a) for a, e in _PACK_SPANS_SPARK.items()],
     )
 
 
 #: Chunking geometry: 64-token chunks, 16-token overlap (stride 48).
 CHUNK_LEN, CHUNK_OVERLAP = 64, 16
+_CHUNK_IDS_DUCK, _CHUNK_START_DUCK, _CHUNK_END_DUCK = chunks_duck(
+    "n", "k", CHUNK_LEN, CHUNK_OVERLAP
+)
 
 
 @register(
     "doc_chunk_windows",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, CAST(len({_TOK_D}) AS BIGINT) AS n_tokens FROM documents
+  SELECT doc_id, CAST(len({TOK_DUCK}) AS BIGINT) AS n FROM documents
 ),
 ks AS (
   -- scalar generate_series returns a LIST, so column arguments are
   -- fine here (the table-function form rejects lateral columns)
-  SELECT doc_id, n_tokens,
-         unnest(generate_series(0, CAST(
-           CASE WHEN n_tokens <= {CHUNK_LEN} THEN 0
-                ELSE (n_tokens - {CHUNK_OVERLAP} - 1)
-                     // {CHUNK_LEN - CHUNK_OVERLAP}
-           END AS BIGINT))) AS k
-  FROM t WHERE n_tokens > 0
+  SELECT doc_id, n, unnest({_CHUNK_IDS_DUCK}) AS k FROM t WHERE n > 0
 )
 SELECT doc_id,
        CAST(k AS BIGINT) AS chunk_id,
-       CAST(k * {CHUNK_LEN - CHUNK_OVERLAP} AS BIGINT) AS start_tok,
-       CAST(LEAST(k * {CHUNK_LEN - CHUNK_OVERLAP} + {CHUNK_LEN}, n_tokens)
-            AS BIGINT) AS end_tok
+       CAST({_CHUNK_START_DUCK} AS BIGINT) AS start_tok,
+       CAST({_CHUNK_END_DUCK} AS BIGINT) AS end_tok
 FROM ks
 """,
     # bench since r10 (r9 verdict #5)
@@ -1388,30 +1311,18 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk-count expression ⌈(n−o−…)⌉ is shared with the DuckDB
     ``generate_series`` oracle via the same BIGINT arithmetic."""
     d = load_table(spark, sf_dir, "documents")
-    stride = CHUNK_LEN - CHUNK_OVERLAP
     t = d.select(
         "doc_id",
-        F.size(F.expr(_TOK_S)).cast("long").alias("n_tokens"),
+        F.size(F.expr(TOK_SPARK)).cast("long").alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
-    last_k = F.when(F.col("n_tokens") <= CHUNK_LEN, F.lit(0).cast("long")).otherwise(
-        F.expr(f"(n_tokens - {CHUNK_OVERLAP} - 1) div {stride}")
-    )
-    return (
-        t.select(
-            "doc_id",
-            "n_tokens",
-            F.explode(F.sequence(F.lit(0).cast("long"), last_k)).alias("chunk_id"),
-        )
-        .select(
-            "doc_id",
-            F.col("chunk_id").cast("long").alias("chunk_id"),
-            (F.col("chunk_id") * stride).cast("long").alias("start_tok"),
-            F.least(
-                F.col("chunk_id") * stride + CHUNK_LEN, F.col("n_tokens")
-            )
-            .cast("long")
-            .alias("end_tok"),
-        )
+    ids, start, end = chunks_spark("n_tokens", "chunk_id", CHUNK_LEN, CHUNK_OVERLAP)
+    return t.select(
+        "doc_id", "n_tokens", F.explode(F.expr(ids)).alias("chunk_id")
+    ).select(
+        "doc_id",
+        F.col("chunk_id").cast("long").alias("chunk_id"),
+        F.expr(start).cast("long").alias("start_tok"),
+        F.expr(end).cast("long").alias("end_tok"),
     )
 
 
@@ -1425,16 +1336,11 @@ BOILER_SEG, BOILER_MIN_DOCS = 8, 2
     "text_boilerplate_strip",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, {_TOK_D} AS t FROM documents
+  SELECT doc_id, {TOK_DUCK} AS t FROM documents
 ),
 base AS (
   SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tok,
-         CASE WHEN len(t) >= {BOILER_SEG} THEN
-           list_transform(range(0, CAST(len(t) // {BOILER_SEG} AS BIGINT)),
-             i -> array_to_string(
-               t[CAST(i * {BOILER_SEG} + 1 AS INT):CAST(i * {BOILER_SEG} + {BOILER_SEG} AS INT)],
-               ' '))
-         ELSE CAST([] AS VARCHAR[]) END AS segs
+         {segments_duck('t', BOILER_SEG)} AS segs
   FROM toks
 ),
 ph AS (
@@ -1492,15 +1398,10 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     that doc's (tiny) boilerplate set — never a token-level join."""
     d = _docs(spark, sf_dir)
     seg = BOILER_SEG
-    base = d.select("doc_id", F.expr(_TOK_S).alias("t")).select(
+    base = d.select("doc_id", F.expr(TOK_SPARK).alias("t")).select(
         "doc_id",
         F.size("t").cast("long").alias("n_tok"),
-        F.expr(
-            f"CASE WHEN size(t) >= {seg} THEN "
-            f"transform(sequence(0, size(t) div {seg} - 1), "
-            f"i -> array_join(slice(t, i * {seg} + 1, {seg}), ' ')) "
-            f"ELSE array() END"
-        ).alias("segs"),
+        F.expr(segments_spark("t", seg)).alias("segs"),
     )
     # two consumers (hash stream + apply join) — cache so the
     # tokenize/segment pass runs once (r7 rule; AB_R15_SF1.json)
@@ -1556,12 +1457,11 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bigram_surprisal",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, {_TOK_D} AS toks FROM documents
+  SELECT doc_id, {TOK_DUCK} AS toks FROM documents
 ),
 bg AS (
   SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS b
+         unnest({bigrams_duck('toks')}) AS b
   FROM t WHERE len(toks) >= 2
 ),
 p AS (
@@ -1607,18 +1507,9 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable."""
     d = _docs(spark, sf_dir)
     bg = (
-        d.select("doc_id", F.expr(_TOK_S).alias("toks"))
+        d.select("doc_id", F.expr(TOK_SPARK).alias("toks"))
         .where(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> struct(element_at(toks, i) AS w1, "
-                    "element_at(toks, i + 1) AS w2))"
-                )
-            ).alias("b"),
-        )
+        .select("doc_id", F.explode(F.expr(bigrams_spark("toks"))).alias("b"))
         .select("doc_id", "b.w1", "b.w2")
     )
     # vocab-sized count table, referenced twice (scoring join + the
@@ -1664,16 +1555,35 @@ CLF_WEIGHTS: tuple[tuple[str, int], ...] = (
 )
 
 
+def _clf_feats_spark(ntok: str) -> list:
+    """The classifier's integer document features: token count (as
+    ``ntok``), marker-stopword count ``f_stop``, digit count ``f_dig``."""
+    return [
+        F.expr(f"CAST(size({TOK_SPARK}) AS BIGINT)").alias(ntok),
+        F.expr(
+            f"CAST(size(filter({TOK_SPARK}, "
+            f"x -> x = 'the' OR x = 'a' OR x = 'of')) AS BIGINT)"
+        ).alias("f_stop"),
+        (F.length("text") - F.length(F.regexp_replace("text", "[0-9]", "")))
+        .cast("long")
+        .alias("f_dig"),
+    ]
+
+
+def _clf_feats_duck(ntok: str) -> str:
+    return f"""CAST(len({TOK_DUCK}) AS BIGINT) AS {ntok},
+         CAST(len(list_filter({TOK_DUCK},
+              x -> x = 'the' OR x = 'a' OR x = 'of')) AS BIGINT) AS f_stop,
+         CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
+              AS BIGINT) AS f_dig"""
+
+
 @register(
     "corpus_classifier_scores",
     oracle=f"""
 WITH feats AS (
   SELECT doc_id,
-         CAST(len({_TOK_D}) AS BIGINT) AS f_tok,
-         CAST(len(list_filter({_TOK_D},
-              x -> x = 'the' OR x = 'a' OR x = 'of')) AS BIGINT) AS f_stop,
-         CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-              AS BIGINT) AS f_dig,
+         {_clf_feats_duck('f_tok')},
          CAST(1 AS BIGINT) AS bias
   FROM documents
 ),
@@ -1714,19 +1624,7 @@ def corpus_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decision boundary) bit-identical cross-engine."""
     d = _docs(spark, sf_dir)
     feats = d.select(
-        "doc_id",
-        F.expr(f"CAST(size({_TOK_S}) AS BIGINT)").alias("f_tok"),
-        F.expr(
-            f"CAST(size(filter({_TOK_S}, "
-            f"x -> x = 'the' OR x = 'a' OR x = 'of')) AS BIGINT)"
-        ).alias("f_stop"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace("text", "[0-9]", ""))
-        )
-        .cast("long")
-        .alias("f_dig"),
-        F.lit(1).cast("long").alias("bias"),
+        "doc_id", *_clf_feats_spark("f_tok"), F.lit(1).cast("long").alias("bias")
     )
     unp = feats.select(
         "doc_id",
@@ -1753,18 +1651,37 @@ def corpus_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHUFFLE_EPOCHS, SHUFFLE_SHARDS = 2, 8
 
 
+def _epoch_keyed(d: DataFrame, *cols) -> tuple[DataFrame, Window]:
+    """Every document once per epoch with its shuffle key: (doc_id,
+    *cols, epoch, hv) rows, hv the 60-bit md5(doc_id|epoch), and the
+    window both epoch shuffles rank in — per (epoch, shard), ordered
+    by (hv, doc_id)."""
+    e = d.select(
+        "doc_id",
+        *cols,
+        F.explode(F.sequence(F.lit(0), F.lit(SHUFFLE_EPOCHS - 1))).alias("epoch"),
+    )
+    h = e.select(*e.columns, F.expr(EPOCH_HASH_SPARK).alias("hv"))
+    w = Window.partitionBy("epoch", F.expr(f"hv % {SHUFFLE_SHARDS}")).orderBy(
+        "hv", "doc_id"
+    )
+    return h, w
+
+
+def _epoch_keyed_ctes(*cols: str) -> str:
+    """DuckDB twin of :func:`_epoch_keyed`: CTE ``h`` with (doc_id,
+    *cols, epoch, hv)."""
+    sel = "".join(f"{c}, " for c in cols)
+    return f"""e AS (
+  SELECT doc_id, {sel}unnest(range(0, {SHUFFLE_EPOCHS})) AS epoch FROM documents
+),
+h AS (SELECT *, {EPOCH_HASH_DUCK} AS hv FROM e)"""
+
+
 @register(
     "corpus_epoch_shuffle",
     oracle=f"""
-WITH e AS (
-  SELECT doc_id, unnest(range(0, {SHUFFLE_EPOCHS})) AS epoch FROM documents
-),
-h AS (
-  SELECT doc_id, epoch,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '|' ||
-              CAST(epoch AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-  FROM e
-)
+WITH {_epoch_keyed_ctes()}
 SELECT CAST(epoch AS BIGINT) AS epoch,
        doc_id,
        CAST(hv % {SHUFFLE_SHARDS} AS BIGINT) AS shard,
@@ -1789,20 +1706,7 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     window PARTITIONED BY (epoch, shard) — 16 independent partitions,
     never an Exchange SinglePartition (the packing operator's trap,
     avoided by construction here because positions are per-shard)."""
-    d = _docs(spark, sf_dir)
-    hv = (
-        f"CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), '|', "
-        f"CAST(epoch AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-    )
-    h = d.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(SHUFFLE_EPOCHS - 1))).alias(
-            "epoch"
-        ),
-    ).select("doc_id", "epoch", F.expr(hv).alias("hv"))
-    w = Window.partitionBy(
-        "epoch", F.expr(f"hv % {SHUFFLE_SHARDS}")
-    ).orderBy("hv", "doc_id")
+    h, w = _epoch_keyed(_docs(spark, sf_dir))
     return h.select(
         F.col("epoch").cast("long").alias("epoch"),
         "doc_id",
@@ -1820,11 +1724,7 @@ SELECT_BUDGET_TOKENS = 2000
     oracle=f"""
 WITH feats AS (
   SELECT doc_id, source,
-         CAST(len({_TOK_D}) AS BIGINT) AS n_tokens,
-         CAST(len(list_filter({_TOK_D},
-              x -> x = 'the' OR x = 'a' OR x = 'of')) AS BIGINT) AS f_stop,
-         CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-              AS BIGINT) AS f_dig
+         {_clf_feats_duck('n_tokens')}
   FROM documents
 ),
 scored AS (
@@ -1866,21 +1766,7 @@ def corpus_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     an INTEGER cumsum, exempt from the float segment-tree hazard the
     house rules flag for running aggregates."""
     d = _docs(spark, sf_dir)
-    feats = d.select(
-        "doc_id",
-        "source",
-        F.expr(f"CAST(size({_TOK_S}) AS BIGINT)").alias("n_tokens"),
-        F.expr(
-            f"CAST(size(filter({_TOK_S}, "
-            f"x -> x = 'the' OR x = 'a' OR x = 'of')) AS BIGINT)"
-        ).alias("f_stop"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace("text", "[0-9]", ""))
-        )
-        .cast("long")
-        .alias("f_dig"),
-    )
+    feats = d.select("doc_id", "source", *_clf_feats_spark("n_tokens"))
     scored = feats.select(
         "doc_id",
         "source",
@@ -1917,17 +1803,7 @@ def corpus_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "corpus_epoch_packed_shuffle",
     oracle=f"""
-WITH e AS (
-  SELECT doc_id, CAST(len({_TOK_D}) AS BIGINT) AS n_tokens,
-         unnest(range(0, {SHUFFLE_EPOCHS})) AS epoch
-  FROM documents
-),
-h AS (
-  SELECT doc_id, n_tokens, epoch,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '|' ||
-              CAST(epoch AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-  FROM e
-),
+WITH {_epoch_keyed_ctes(f"CAST(len({TOK_DUCK}) AS BIGINT) AS n_tokens")},
 r AS (
   SELECT epoch, doc_id, n_tokens, hv % {SHUFFLE_SHARDS} AS shard,
          ROW_NUMBER() OVER (
@@ -1944,13 +1820,7 @@ SELECT CAST(epoch AS BIGINT) AS epoch,
        CAST(shard AS BIGINT) AS shard,
        CAST(pos_in_shard AS BIGINT) AS pos_in_shard,
        n_tokens,
-       CAST((cum - n_tokens) // {PACK_CONTEXT_LEN} AS BIGINT) AS window_id,
-       CAST((cum - n_tokens) % {PACK_CONTEXT_LEN} AS BIGINT)
-         AS offset_in_window,
-       CAST(CASE WHEN n_tokens = 0 THEN 0
-            ELSE (cum - 1) // {PACK_CONTEXT_LEN}
-                 - (cum - n_tokens) // {PACK_CONTEXT_LEN} + 1 END
-            AS BIGINT) AS windows_spanned
+       {_PACK_SPANS_DUCK}
 FROM r
 """,
     tags=("text", "shuffle", "packing", "llm", "training"),
@@ -1978,23 +1848,11 @@ def corpus_epoch_packed_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery unnecessary here — the partition key IS the parallelism
     unit). All arithmetic BIGINT, so the DuckDB window mirror is a
     hard hash match."""
-    d = _docs(spark, sf_dir)
-    hv = (
-        f"CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), '|', "
-        f"CAST(epoch AS STRING))), 1, 15), 16, 10) AS BIGINT)"
+    h, w = _epoch_keyed(
+        _docs(spark, sf_dir),
+        F.expr(f"CAST(size({TOK_SPARK}) AS BIGINT)").alias("n_tokens"),
     )
-    h = d.select(
-        "doc_id",
-        F.expr(f"CAST(size({_TOK_S}) AS BIGINT)").alias("n_tokens"),
-        F.explode(F.sequence(F.lit(0), F.lit(SHUFFLE_EPOCHS - 1))).alias(
-            "epoch"
-        ),
-    ).select("doc_id", "n_tokens", "epoch", F.expr(hv).alias("hv"))
-    w = Window.partitionBy(
-        "epoch", F.expr(f"hv % {SHUFFLE_SHARDS}")
-    ).orderBy("hv", "doc_id")
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    L = PACK_CONTEXT_LEN
     g = h.select(
         F.col("epoch").cast("long").alias("epoch"),
         "doc_id",
@@ -2009,16 +1867,7 @@ def corpus_epoch_packed_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shard",
         "pos_in_shard",
         "n_tokens",
-        F.expr(f"(cum - n_tokens) div {L}").cast("long").alias("window_id"),
-        ((F.col("cum") - F.col("n_tokens")) % L)
-        .cast("long")
-        .alias("offset_in_window"),
-        F.when(F.col("n_tokens") == 0, F.lit(0))
-        .otherwise(
-            F.expr(f"(cum - 1) div {L} - (cum - n_tokens) div {L} + 1")
-        )
-        .cast("long")
-        .alias("windows_spanned"),
+        *[F.expr(e).cast("long").alias(a) for a, e in _PACK_SPANS_SPARK.items()],
     )
 
 
@@ -2032,18 +1881,16 @@ DSIR_BUCKETS, DSIR_TARGET = 64, "src0"
     "corpus_dsir_weights",
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, source, {_TOK_D} AS toks FROM documents
+  SELECT doc_id, source, {TOK_DUCK} AS toks FROM documents
 ),
 bg AS (
   SELECT doc_id, source,
-         unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> toks[i] || '|' || toks[i + 1])) AS g
+         unnest({bigram_strings_duck('toks')}) AS g
   FROM t WHERE len(toks) >= 2
 ),
 f AS (
   SELECT doc_id, source,
-         CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT)
-           % {DSIR_BUCKETS} AS b
+         {hex60_duck('g')} % {DSIR_BUCKETS} AS b
   FROM bg
 ),
 counts AS (
@@ -2103,26 +1950,18 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     B = DSIR_BUCKETS
     d = _docs(spark, sf_dir)
     bg = (
-        d.select("doc_id", "source", F.expr(_TOK_S).alias("toks"))
+        d.select("doc_id", "source", F.expr(TOK_SPARK).alias("toks"))
         .where(F.size("toks") >= 2)
         .select(
             "doc_id",
             "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1), "
-                    "i -> concat(element_at(toks, i), '|', "
-                    "element_at(toks, i + 1)))"
-                )
-            ).alias("g"),
+            F.explode(F.expr(bigram_strings_spark("toks"))).alias("g"),
         )
     )
     f = bg.select(
         "doc_id",
         "source",
-        F.expr(
-            f"CAST(conv(substr(md5(g), 1, 15), 16, 10) AS BIGINT) % {B}"
-        ).alias("b"),
+        F.expr(f"{hex60_spark('g')} % {B}").alias("b"),
     )
     counts = f.groupBy("b").agg(
         F.count(F.lit(1)).cast("long").alias("n_r"),
@@ -2179,17 +2018,10 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_dup_paragraph_stats",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, {_TOK_D} AS t FROM documents
+  SELECT doc_id, {TOK_DUCK} AS t FROM documents
 ),
 segd AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= {{seg}} THEN
-           list_transform(range(0, CAST(len(t) // {{seg}} AS BIGINT)),
-             i -> array_to_string(
-               t[CAST(i * {{seg}} + 1 AS INT):CAST(i * {{seg}} + {{seg}} AS INT)],
-               ' '))
-         ELSE CAST([] AS VARCHAR[]) END AS segs
-  FROM toks
+  SELECT doc_id, {segments_duck('t', PARA_SEG)} AS segs FROM toks
 )
 SELECT doc_id,
        CAST(len(segs) AS BIGINT) AS n_paras,
@@ -2198,7 +2030,7 @@ SELECT doc_id,
             d -> len(list_filter(segs, s -> s = d)))), 0) AS BIGINT)
          AS top_para_count
 FROM segd
-""".replace("{seg}", str(PARA_SEG)),
+""",
     tags=("text", "quality", "paragraph", "llm"),
 )
 def text_dup_paragraph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2218,19 +2050,10 @@ def text_dup_paragraph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(p²) HOF over a ~dozen-paragraph array, constant per row). At
     100 TB this is a pure map pass a curation run gets for free on
     the same scan as the other per-doc featurizers."""
-    seg = PARA_SEG  # dedup.py's paragraph grain — same stand-in (r11 ADVICE)
     d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        F.expr(_TOK_S).alias("t"),
-    ).select(
-        "doc_id",
-        F.expr(
-            f"CASE WHEN size(t) >= {seg} THEN "
-            f"transform(sequence(0, size(t) div {seg} - 1), "
-            f"i -> array_join(slice(t, i * {seg} + 1, {seg}), ' ')) "
-            f"ELSE array() END"
-        ).alias("segs"),
+    # dedup.py's paragraph grain — same stand-in (r11 ADVICE)
+    return d.select("doc_id", F.expr(TOK_SPARK).alias("t")).select(
+        "doc_id", F.expr(segments_spark("t", PARA_SEG)).alias("segs")
     ).select(
         "doc_id",
         F.size("segs").cast("long").alias("n_paras"),
@@ -2285,7 +2108,7 @@ def bm25_scores(d: DataFrame, queries=BM25_QUERIES) -> DataFrame:
     convention). BIGINT headroom: bits·22·tf·T stays under 2^63 up to
     ~10^12 corpus tokens; past that the T factor pair (22·tf·T, 10·T·tf
     + …) would rescale by gcd 2T without changing any ratio."""
-    toks = d.select("doc_id", F.expr(_TOK_S).alias("t"))
+    toks = d.select("doc_id", F.expr(TOK_SPARK).alias("t"))
     return bm25_scores_tokens(toks, queries=queries)
 
 
@@ -2359,57 +2182,63 @@ def bm25_scores_tokens(
     )
 
 
-def _bm25_oracle(queries=BM25_QUERIES, topk: int = BM25_TOPK) -> str:
-    vals = ", ".join(f"('{qid}', '{qt}')" for qid, qt in queries)
-    qvocab = sorted({w for _, qt in queries for w in qt.split()})
+def _bm25_oracle(keys: tuple[str, ...], units: str) -> str:
+    """DuckDB mirror of :func:`bm25_scores_tokens` plus the top-k rank
+    over ``units``: CTEs ending in ``units(<keys>, t)``, one row per
+    retrieval unit with its token list."""
+    vals = ", ".join(f"('{qid}', '{qt}')" for qid, qt in BM25_QUERIES)
+    qvocab = sorted({w for _, qt in BM25_QUERIES for w in qt.split()})
     inlist = ", ".join(f"'{w}'" for w in qvocab)
+    ks = ", ".join(keys)
     return f"""
 WITH q(query_id, qtext) AS (VALUES {vals}),
 qterms AS (
   SELECT DISTINCT query_id, unnest({tokens_duck('qtext')}) AS term FROM q
 ),
-toks AS (SELECT doc_id, {_TOK_D} AS t FROM documents),
+{units},
 stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_units,
          CAST(SUM(len(t)) AS BIGINT) AS t_tot
-  FROM toks
+  FROM units
 ),
 posting AS (
-  SELECT doc_id, CAST(len(t) AS BIGINT) AS dl, unnest(t) AS term FROM toks
+  SELECT {ks}, CAST(len(t) AS BIGINT) AS dl, unnest(t) AS term FROM units
 ),
 tf AS (
-  SELECT doc_id, term, dl, CAST(COUNT(*) AS BIGINT) AS tf
+  SELECT {ks}, term, dl, CAST(COUNT(*) AS BIGINT) AS tf
   FROM posting WHERE term IN ({inlist})
-  GROUP BY doc_id, term, dl
+  GROUP BY {ks}, term, dl
 ),
 df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
 contrib AS (
-  SELECT qt.query_id, tf.doc_id,
-         CAST(CAST(length(bin(2 * s.n_docs + 2))
+  SELECT qt.query_id, {", ".join(f"tf.{k}" for k in keys)},
+         CAST(CAST(length(bin(2 * s.n_units + 2))
                    - length(bin(2 * df.df + 1)) AS BIGINT)
               * 22 * tf.tf * s.t_tot AS DOUBLE)
-         / (10 * s.t_tot * tf.tf + 3 * s.t_tot + 9 * tf.dl * s.n_docs) AS c
+         / (10 * s.t_tot * tf.tf + 3 * s.t_tot + 9 * tf.dl * s.n_units) AS c
   FROM tf JOIN qterms qt USING (term) JOIN df USING (term) CROSS JOIN stats s
 ),
 scored AS (
-  SELECT query_id, doc_id,
+  SELECT query_id, {ks},
          list_reduce(list_sort(list(c)), (a, b) -> a + b) AS score,
          CAST(COUNT(*) AS BIGINT) AS n_terms
-  FROM contrib GROUP BY query_id, doc_id
+  FROM contrib GROUP BY query_id, {ks}
 )
-SELECT query_id, doc_id, score, n_terms, CAST(rn AS INT) AS rank
+SELECT query_id, {ks}, score, n_terms, CAST(rn AS INT) AS rank
 FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY score DESC, doc_id ASC) AS rn
+               ORDER BY score DESC, {", ".join(f"{k} ASC" for k in keys)}) AS rn
   FROM scored
 ) z
-WHERE rn <= {topk}
+WHERE rn <= {BM25_TOPK}
 """
 
 
 @register(
     "text_bm25_topk",
-    oracle=_bm25_oracle(),
+    oracle=_bm25_oracle(
+        ("doc_id",), f"units AS (SELECT doc_id, {TOK_DUCK} AS t FROM documents)"
+    ),
     tags=("text", "retrieval", "bm25", "llm"),
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2431,80 +2260,21 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_chunk_oracle(queries=BM25_QUERIES, topk: int = BM25_TOPK) -> str:
-    """DuckDB mirror of :func:`text_bm25_chunk_topk`: the
-    ``doc_chunk_windows`` geometry slices each token list into
-    overlapping chunks, then the document-grain BM25 pipeline runs
-    verbatim with (doc_id, chunk_id) as the retrieval unit."""
-    stride = CHUNK_LEN - CHUNK_OVERLAP
-    vals = ", ".join(f"('{qid}', '{qt}')" for qid, qt in queries)
-    qvocab = sorted({w for _, qt in queries for w in qt.split()})
-    inlist = ", ".join(f"'{w}'" for w in qvocab)
-    return f"""
-WITH q(query_id, qtext) AS (VALUES {vals}),
-qterms AS (
-  SELECT DISTINCT query_id, unnest({tokens_duck('qtext')}) AS term FROM q
-),
-toks AS (SELECT doc_id, {_TOK_D} AS t FROM documents),
-tn AS (
-  SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n FROM toks WHERE len(t) > 0
-),
-ks AS (
-  SELECT doc_id, t, n,
-         unnest(generate_series(0, CAST(
-           CASE WHEN n <= {CHUNK_LEN} THEN 0
-                ELSE (n - {CHUNK_OVERLAP} - 1) // {stride}
-           END AS BIGINT))) AS k
-  FROM tn
-),
-ch AS (
-  SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
-         t[CAST(k * {stride} + 1 AS BIGINT)
-           :CAST(LEAST(k * {stride} + {CHUNK_LEN}, n) AS BIGINT)] AS ct
-  FROM ks
-),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_units,
-         CAST(SUM(len(ct)) AS BIGINT) AS t_tot
-  FROM ch
-),
-posting AS (
-  SELECT doc_id, chunk_id, CAST(len(ct) AS BIGINT) AS dl, unnest(ct) AS term
-  FROM ch
-),
-tf AS (
-  SELECT doc_id, chunk_id, term, dl, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM posting WHERE term IN ({inlist})
-  GROUP BY doc_id, chunk_id, term, dl
-),
-df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
-contrib AS (
-  SELECT qt.query_id, tf.doc_id, tf.chunk_id,
-         CAST(CAST(length(bin(2 * s.n_units + 2))
-                   - length(bin(2 * df.df + 1)) AS BIGINT)
-              * 22 * tf.tf * s.t_tot AS DOUBLE)
-         / (10 * s.t_tot * tf.tf + 3 * s.t_tot + 9 * tf.dl * s.n_units) AS c
-  FROM tf JOIN qterms qt USING (term) JOIN df USING (term) CROSS JOIN stats s
-),
-scored AS (
-  SELECT query_id, doc_id, chunk_id,
-         list_reduce(list_sort(list(c)), (a, b) -> a + b) AS score,
-         CAST(COUNT(*) AS BIGINT) AS n_terms
-  FROM contrib GROUP BY query_id, doc_id, chunk_id
-)
-SELECT query_id, doc_id, chunk_id, score, n_terms, CAST(rn AS INT) AS rank
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY score DESC, doc_id ASC, chunk_id ASC) AS rn
-  FROM scored
-) z
-WHERE rn <= {topk}
-"""
-
-
 @register(
     "text_bm25_chunk_topk",
-    oracle=_bm25_chunk_oracle(),
+    oracle=_bm25_oracle(
+        ("doc_id", "chunk_id"),
+        f"""tn AS (
+  SELECT doc_id, t, CAST(len(t) AS BIGINT) AS n
+  FROM (SELECT doc_id, {TOK_DUCK} AS t FROM documents) WHERE len(t) > 0
+),
+ks AS (SELECT doc_id, t, n, unnest({_CHUNK_IDS_DUCK}) AS k FROM tn),
+units AS (
+  SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
+         t[CAST({_CHUNK_START_DUCK} + 1 AS BIGINT):CAST({_CHUNK_END_DUCK} AS BIGINT)] AS t
+  FROM ks
+)""",
+    ),
     tags=("text", "retrieval", "bm25", "rag", "chunking", "llm"),
 )
 def text_bm25_chunk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2519,33 +2289,18 @@ def text_bm25_chunk_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice — no shuffle, no UDF); tie-break score desc, doc_id asc,
     chunk_id asc is part of the contract."""
     d = _docs(spark, sf_dir)
-    stride = CHUNK_LEN - CHUNK_OVERLAP
     t = (
-        d.select("doc_id", F.expr(_TOK_S).alias("t"))
+        d.select("doc_id", F.expr(TOK_SPARK).alias("t"))
         .select("doc_id", "t", F.size("t").cast("long").alias("n"))
         .filter(F.col("n") > 0)
     )
-    last_k = F.when(
-        F.col("n") <= CHUNK_LEN, F.lit(0).cast("long")
-    ).otherwise(F.expr(f"(n - {CHUNK_OVERLAP} - 1) div {stride}"))
-    chunks = (
-        t.select(
-            "doc_id",
-            "t",
-            "n",
-            F.explode(
-                F.sequence(F.lit(0).cast("long"), last_k)
-            ).alias("chunk_id"),
-        )
-        .select(
-            "doc_id",
-            F.col("chunk_id").cast("long").alias("chunk_id"),
-            F.expr(
-                f"slice(t, chunk_id * {stride} + 1, "
-                f"least(chunk_id * {stride} + {CHUNK_LEN}, n) "
-                f"- chunk_id * {stride})"
-            ).alias("t"),
-        )
+    ids, start, end = chunks_spark("n", "chunk_id", CHUNK_LEN, CHUNK_OVERLAP)
+    chunks = t.select(
+        "doc_id", "t", "n", F.explode(F.expr(ids)).alias("chunk_id")
+    ).select(
+        "doc_id",
+        F.col("chunk_id").cast("long").alias("chunk_id"),
+        F.expr(f"slice(t, {start} + 1, {end} - {start})").alias("t"),
     )
     scored = bm25_scores_tokens(chunks, key_cols=("doc_id", "chunk_id"))
     w = Window.partitionBy("query_id").orderBy(

@@ -94,6 +94,7 @@ def test_bucketed_table_rebuilds_on_source_change(spark, tmp_path):
     mtime -> rebuild (results track the new data)."""
     import os
     import shutil
+    from urllib.parse import urlparse
 
     from mapreduce_citation_spark.operators.joins import bucketed_table
 
@@ -104,6 +105,12 @@ def test_bucketed_table_rebuilds_on_source_change(spark, tmp_path):
     )
     t1 = bucketed_table(spark, str(src_dir), "orders", "o_orderkey", n_buckets=2)
     assert t1.count() == 10
+    # the table lives in this process's own dir, never the shared
+    # warehouse dir two processes from one working directory would
+    # both write
+    shared = os.path.realpath("spark-warehouse") + os.sep
+    files = [urlparse(f).path for f in t1.inputFiles()]
+    assert files and not any(os.path.realpath(f).startswith(shared) for f in files)
     # regenerate with different content and a newer mtime
     shutil.rmtree(str(src_dir / "orders.parquet"))
     spark.range(0, 7).selectExpr("id AS o_orderkey").write.parquet(

@@ -1700,6 +1700,106 @@ def test_chunk_windows_match_python_replay(spark):
     assert saw_multi  # fixture long docs exist
 
 
+def _twin_cases():
+    """(name, Spark expression, DuckDB expression) per text_funcs twin,
+    over a row with columns doc_id, epoch, text, t (its tokens), n
+    (token count) and cum (running token total in doc_id order).
+    Bigrams carry their callers' ``>= 2`` guard."""
+    from mapreduce_citation_spark.functions import text_funcs as tf
+    from mapreduce_citation_spark.operators.dedup import PARA_SEG
+    from mapreduce_citation_spark.operators.text import (
+        BOILER_SEG,
+        CHUNK_LEN,
+        CHUNK_OVERLAP,
+        PACK_CONTEXT_LEN,
+    )
+
+    s_ids, s_start, s_end = tf.chunks_spark("n", "k", CHUNK_LEN, CHUNK_OVERLAP)
+    d_ids, d_start, d_end = tf.chunks_duck("n", "k", CHUNK_LEN, CHUNK_OVERLAP)
+    s_pack = tf.pack_spans_spark("cum", "n", PACK_CONTEXT_LEN).values()
+    d_pack = tf.pack_spans_duck("cum", "n", PACK_CONTEXT_LEN).values()
+    return [
+        ("tokens", tf.TOK_SPARK, tf.TOK_DUCK),
+        ("bigrams",
+         f"CASE WHEN size(t) >= 2 THEN {tf.bigrams_spark('t')} END",
+         f"CASE WHEN len(t) >= 2 THEN {tf.bigrams_duck('t')} END"),
+        ("bigram_strings",
+         f"CASE WHEN size(t) >= 2 THEN {tf.bigram_strings_spark('t')} END",
+         f"CASE WHEN len(t) >= 2 THEN {tf.bigram_strings_duck('t')} END"),
+        ("segments_boiler",
+         tf.segments_spark("t", BOILER_SEG), tf.segments_duck("t", BOILER_SEG)),
+        ("segments_para",
+         tf.segments_spark("t", PARA_SEG), tf.segments_duck("t", PARA_SEG)),
+        ("chunks",
+         f"transform({s_ids}, k -> array({s_start}, {s_end}))",
+         f"list_transform({d_ids}, k -> [{d_start}, {d_end}])"),
+        ("pack_spans",
+         f"array({', '.join(s_pack)})", f"[{', '.join(d_pack)}]"),
+        ("hex60", tf.hex60_spark("text"), tf.hex60_duck("text")),
+        ("epoch_hash", tf.EPOCH_HASH_SPARK, tf.EPOCH_HASH_DUCK),
+    ]
+
+
+@pytest.mark.parametrize("case", [c[0] for c in _twin_cases()])
+def test_text_twins_agree_on_edge_inputs(spark, case):
+    """Each text_funcs Spark twin, evaluated in Spark, equals its
+    DuckDB twin, evaluated in DuckDB, on planted rows: 0, 1 and 2
+    tokens; seg - 1, seg and seg + 1 tokens for both segment grains;
+    CHUNK_LEN, CHUNK_LEN + 1 and one-stride-past tokens; and running
+    totals that hold an empty document, a document ending exactly on
+    a PACK_CONTEXT_LEN boundary and one straddling it."""
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import Row
+
+    from mapreduce_citation_spark.functions.text_funcs import TOK_DUCK, TOK_SPARK
+    from mapreduce_citation_spark.operators.text import (
+        CHUNK_LEN,
+        CHUNK_OVERLAP,
+        PACK_CONTEXT_LEN,
+    )
+
+    _, spark_expr, duck_expr = next(c for c in _twin_cases() if c[0] == case)
+    stride = CHUNK_LEN - CHUNK_OVERLAP
+    sizes = [0, 1, 2, 7, 8, 9, 15, 16, 17, CHUNK_LEN, CHUNK_LEN + 1,
+             CHUNK_LEN + stride, CHUNK_LEN + stride + 1]
+    # the next doc ends exactly on the first window boundary, an empty
+    # doc follows there, then one straddles the second boundary
+    sizes += [PACK_CONTEXT_LEN - sum(sizes), 0, PACK_CONTEXT_LEN - 10, 20]
+    rows, cum = [], 0
+    for i, n in enumerate(sizes):
+        cum += n
+        # a repeated token so segments and bigrams repeat within a doc
+        text = " ".join(f"w{j % 5}" for j in range(n))
+        rows.append((i, i % 2, f"  {text} " if i % 3 else text, n, cum))
+    L = PACK_CONTEXT_LEN
+    assert [c for *_, c in rows][-4:] == [L, L, 2 * L - 10, 2 * L + 10]
+    cols = ["doc_id", "epoch", "text", "n", "cum"]
+
+    sdf = spark.createDataFrame(rows, cols).select("*", F.expr(TOK_SPARK).alias("t"))
+    got = [
+        r["v"] for r in sdf.select("doc_id", F.expr(spark_expr).alias("v"))
+        .orderBy("doc_id").collect()
+    ]
+
+    def plain(v):
+        if isinstance(v, Row):
+            return {k: plain(x) for k, x in v.asDict().items()}
+        if isinstance(v, list):
+            return [plain(x) for x in v]
+        return v
+
+    with duckdb.connect() as con:
+        con.register("planted", pd.DataFrame(rows, columns=cols))
+        want = [
+            r[0] for r in con.execute(
+                f"SELECT {duck_expr} AS v FROM "
+                f"(SELECT *, {TOK_DUCK} AS t FROM planted) ORDER BY doc_id"
+            ).fetchall()
+        ]
+    assert [plain(v) for v in got] == want
+
+
 def test_boilerplate_strip_removes_planted_cross_doc_segments(spark):
     """text_boilerplate_strip on a planted corpus: an 8-token footer
     shared (segment-aligned) by two docs is stripped from BOTH; a

@@ -20,6 +20,14 @@ QUERIES = (
     "q21_waiting_suppliers",
     "corpus_curation_funnel",
     "text_boilerplate_strip",
+    "text_bpe_merges",
+    "text_bpe_encode",
+    "text_bm25_topk",
+    "text_bm25_chunk_topk",
+    "doc_chunk_windows",
+    "corpus_epoch_packed_shuffle",
+    "text_dup_paragraph_stats",
+    "corpus_dsir_weights",
     "dedup_incremental_ingest",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
