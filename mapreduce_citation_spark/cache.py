@@ -10,10 +10,12 @@ for per-iteration lineage truncation in iterative operators.
 
 The module exists so the corpus-cache policy lives in one place:
 call :func:`cache_corpus` rather than naming a storage level. Every
-cache in ``operators/dedup.py`` goes through it, as do the audio
-MinHash units, the graph edge list, the IVF assignment and the
-coordinated-sample orders; call sites in the other operator modules
-still spell ``MEMORY_AND_DISK`` themselves.
+cache in ``operators/dedup.py`` goes through it, among them the
+Hamming signature cache of ``hamming_pairs`` (the SimHash, image-dHash
+and audio-fingerprint pair joins), as do the audio MinHash units, the
+graph edge list, the IVF assignment and the coordinated-sample orders;
+call sites in the other operator modules still spell
+``MEMORY_AND_DISK`` themselves.
 """
 
 from __future__ import annotations

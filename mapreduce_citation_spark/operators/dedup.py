@@ -23,6 +23,9 @@ integer coefficients; SimHash reads md5 hex digits as sign bits.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -266,6 +269,85 @@ def pair_overlap(
         .groupBy(a, b)
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
+
+
+# --- shared Hamming ≤ 2 pair join over bit signatures ----------------------
+
+
+def hamming_pairs(
+    sigs: DataFrame, id_col: str, out_a: str, out_b: str, bits: int
+) -> DataFrame:
+    """Pairs of ``bits``-bit signatures within Hamming distance ≤ 2 by
+    PIGEONHOLE blocking, never all-pairs — the one pair join of the
+    SimHash, image-dHash and audio-fingerprint near-dup families.
+
+    The bits split into 3 near-equal blocks (``divmod(bits, 3)``:
+    11/11/10 at 32 bits, 22/21/21 at 64, 43/43/42 at 128). A pair
+    within Hamming ≤ 2 differs in at most 2 blocks, so it matches
+    EXACTLY on at least one: total recall by construction (unlike
+    probabilistic LSH), which is why the all-pairs DuckDB twin
+    (:func:`hamming_pairs_duck`) stays exact at any scale factor.
+    Candidates come from a self-equi-join on (block#, block bits); the
+    exact distance is codegen'd ``bit_count(xor)`` summed over the
+    ``bits // 32`` 32-bit words (``conv`` of a 64-char binary string
+    would wrap a signed LONG; 32-bit words stay positive) — no
+    interpreted HOF in the pair path. The signature table is cached:
+    the block self-join would otherwise run the whole signature
+    pipeline once per side.
+
+    ``sigs``: (id_col, dh), dh a ``bits``-char '0'/'1' string with
+    ``bits`` a multiple of 32. Output: (out_a, out_b, hamming) with
+    out_a < out_b, hamming ≤ 2."""
+    sigs = cache_corpus(sigs)
+    q, r = divmod(bits, 3)
+    widths = [q + (b < r) for b in range(3)]
+    blocks = [
+        F.concat_ws(
+            ":", F.lit(b), F.substring("dh", 1 + sum(widths[:b]), widths[b])
+        ).alias(f"blk{b}")
+        for b in range(3)
+    ]
+    n_words = bits // 32
+    keyed = sigs.select(
+        F.col(id_col),
+        *[
+            F.conv(F.substring("dh", 1 + 32 * i, 32), 2, 10).cast("long").alias(f"w{i}")
+            for i in range(n_words)
+        ],
+        F.explode(F.array(*blocks)).alias("block_key"),
+    )
+    ham = reduce(
+        operator.add,
+        [F.bit_count(F.col(f"a{i}").bitwiseXOR(F.col(f"b{i}"))) for i in range(n_words)],
+    )
+    return (
+        keyed.alias("x")
+        .join(
+            keyed.alias("y"),
+            (F.col("x.block_key") == F.col("y.block_key"))
+            & _key_lt([id_col], "x", "y"),
+        )
+        .select(
+            F.col(f"x.{id_col}").alias(out_a),
+            F.col(f"y.{id_col}").alias(out_b),
+            *[F.col(f"x.w{i}").alias(f"a{i}") for i in range(n_words)],
+            *[F.col(f"y.w{i}").alias(f"b{i}") for i in range(n_words)],
+        )
+        .distinct()
+        .select(out_a, out_b, ham.cast("long").alias("hamming"))
+        .filter(F.col("hamming") <= 2)
+    )
+
+
+def hamming_pairs_duck(sigs_cte: str, id_col: str, out_a: str, out_b: str) -> str:
+    """DuckDB twin of :func:`hamming_pairs`: the ALL-PAIRS Hamming ≤ 2
+    scan over CTE ``sigs_cte`` (id_col, dh) — the exact ground truth
+    the pigeonhole plan must reproduce at fixture scale."""
+    ham = "bit_count(xor(a.dh::BIT, b.dh::BIT))"
+    return f"""SELECT a.{id_col} AS {out_a}, b.{id_col} AS {out_b},
+       CAST({ham} AS BIGINT) AS hamming
+FROM {sigs_cte} a JOIN {sigs_cte} b ON a.{id_col} < b.{id_col}
+WHERE {ham} <= 2"""
 
 
 @register(
@@ -959,65 +1041,22 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_simhash_pairs",
     oracle=f"""
-WITH s AS (
-  SELECT doc_id, {simhash_duck(TOK_DUCK)} AS simhash FROM documents
+WITH sigs AS (
+  SELECT doc_id, {simhash_duck(TOK_DUCK)} AS dh FROM documents
 )
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash::BIT, b.simhash::BIT)) AS BIGINT) AS hamming
-FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash::BIT, b.simhash::BIT)) <= 2
+{hamming_pairs_duck("sigs", "doc_id", "doc_a", "doc_b")}
 """,
     tags=("dedup", "simhash"),
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: Hamming distance ≤ 2 over the 32-bit
-    fingerprint, found by PIGEONHOLE blocking — never all-pairs.
-
-    Split the 32 bits into 3 blocks (11/11/10); any pair within
-    Hamming ≤ 2 differs in at most 2 blocks, so it matches EXACTLY on
-    at least one block — total recall is guaranteed by construction
-    (unlike probabilistic LSH), which is why the all-pairs DuckDB
-    oracle stays exact at any scale factor. Candidates come from a
-    self-equi-join on (block#, block bits); the exact distance is one
-    codegen'd ``bit_count(xor)`` over the packed fingerprints — no
-    interpreted HOF in the pair path."""
+    fingerprint, found by the shared pigeonhole block join
+    (:func:`hamming_pairs`, 3 blocks of 11/11/10 bits) — never
+    all-pairs, total recall by construction, which is why the
+    all-pairs DuckDB oracle stays exact at any scale factor."""
     d = _docs(spark, sf_dir)
-    s = d.select(
-        "doc_id", F.expr(simhash_spark(TOK_SPARK)).alias("simhash")
-    )
-    # materialize: the block self-join would otherwise run the (HOF,
-    # interpreted) simhash pipeline once per side
-    s = cache_corpus(s)
-    blocks = [(0, 1, 11), (1, 12, 11), (2, 23, 10)]  # (id, start, len), 1-based
-    block_cols = [
-        F.concat_ws(":", F.lit(i), F.substring("simhash", st, ln)).alias(f"blk{i}")
-        for i, st, ln in blocks
-    ]
-    bands = s.select(
-        "doc_id",
-        F.conv("simhash", 2, 10).cast("long").alias("bits"),
-        F.explode(F.array(*block_cols)).alias("block_key"),
-    )
-    ham = F.bit_count(
-        F.col("bits_a").bitwiseXOR(F.col("bits_b"))
-    ).cast("long").alias("hamming")
-    return (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.block_key") == F.col("y.block_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.bits").alias("bits_a"),
-            F.col("y.bits").alias("bits_b"),
-        )
-        .distinct()
-        .select("doc_a", "doc_b", ham)
-        .filter(F.col("hamming") <= 2)
-    )
+    sigs = d.select("doc_id", F.expr(simhash_spark(TOK_SPARK)).alias("dh"))
+    return hamming_pairs(sigs, "doc_id", "doc_a", "doc_b", 32)
 
 
 def _embedding_cosine_oracle() -> str:
@@ -1328,8 +1367,6 @@ def dedup_semantic_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # because it never forms pairs — per-doc work is linear in |text|.
 
 _ESK = 40       # char-gram length == minimum duplicated-span length
-#: the DuckDB 60-bit digest of the _ESK-char gram at offset i
-_ES_DIGEST_DUCK = hex60_duck(f"substr(text, CAST(i AS INT), {_ESK})")
 _ES_MAXDF = 1000  # pairs-query boilerplate guard (df cap per digest)
 
 
@@ -1398,21 +1435,31 @@ def _doc_distinct_grams(d: DataFrame, k: int = _ESK) -> DataFrame:
     )
 
 
-def _es_pairs_oracle(maxdf: int = _ES_MAXDF, k: int = _ESK) -> str:
-    """DuckDB mirror of :func:`exact_substring_pairs`, parameterized on
-    the boilerplate df cap so the pytest boundary cases (df == cap vs
-    df == cap + 1, planted fixtures) can run the SAME oracle the
-    driver gate uses."""
-    return f"""
-WITH pos AS (
+def _char_gram_ctes(distinct: bool = True, k: int = _ESK) -> str:
+    """DuckDB twin of the char-gram front-end: CTE ``pos`` (doc_id,
+    text, i) over every k-char gram offset and CTE ``g`` with the same
+    60-bit digest ``dg`` as :func:`_char_grams` — (doc_id, dg) distinct
+    per document like :func:`_doc_distinct_grams` when ``distinct``,
+    else positioned (doc_id, i, dg) rows like :func:`_char_grams`."""
+    cols = "DISTINCT doc_id" if distinct else "doc_id, CAST(i AS INT) AS i"
+    return f"""pos AS (
   SELECT doc_id, text,
          unnest(generate_series(1, length(text) - {k} + 1)) AS i
   FROM documents WHERE length(text) >= {k}
 ),
 g AS (
-  SELECT DISTINCT doc_id, {hex60_duck(f"substr(text, CAST(i AS INT), {k})")} AS dg
+  SELECT {cols}, {hex60_duck(f"substr(text, CAST(i AS INT), {k})")} AS dg
   FROM pos
-),
+)"""
+
+
+def _es_pairs_oracle(maxdf: int = _ES_MAXDF, k: int = _ESK) -> str:
+    """DuckDB mirror of :func:`exact_substring_pairs`, parameterized on
+    the boilerplate df cap so the pytest boundary cases (df == cap vs
+    df == cap + 1, planted fixtures) can run the SAME oracle the
+    oracle gate uses."""
+    return f"""
+WITH {_char_gram_ctes(k=k)},
 eligible AS (
   SELECT dg FROM g GROUP BY dg HAVING count(*) BETWEEN 2 AND {maxdf}
 ),
@@ -1488,19 +1535,11 @@ def exact_substring_pairs(
     )
 
 
-@register(
-    "dedup_substring_spans",
-    oracle=f"""
-WITH pos AS (
-  SELECT doc_id, text,
-         unnest(generate_series(1, length(text) - {_ESK} + 1)) AS i
-  FROM documents WHERE length(text) >= {_ESK}
-),
-g AS (
-  SELECT doc_id, CAST(i AS INT) AS i,
-         {_ES_DIGEST_DUCK} AS dg
-  FROM pos
-),
+#: DuckDB twin of :func:`_merged_dup_spans` over positioned grams: CTEs
+#: pos → g → dup_dg → dup → marked → spanned → spans, the last
+#: (doc_id, span_id, s, e) — the prefix of the span-stats and
+#: span-strip oracles.
+_DUP_SPANS_CTES = f"""{_char_gram_ctes(distinct=False)},
 dup_dg AS (SELECT dg FROM g GROUP BY dg HAVING count(*) >= 2),
 dup AS (SELECT g.doc_id, g.i FROM g JOIN dup_dg USING (dg)),
 marked AS (
@@ -1518,7 +1557,13 @@ spanned AS (
 spans AS (
   SELECT doc_id, span_id, MIN(i) AS s, MAX(i) AS e
   FROM spanned GROUP BY doc_id, span_id
-),
+)"""
+
+
+@register(
+    "dedup_substring_spans",
+    oracle=f"""
+WITH {_DUP_SPANS_CTES},
 per_doc AS (
   SELECT doc_id, count(*) AS n_dup_spans,
          CAST(SUM(e - s + {_ESK}) AS BIGINT) AS dup_chars
@@ -1618,15 +1663,7 @@ def _merged_dup_spans(g: DataFrame, k: int) -> DataFrame:
 @register(
     "decontaminate_eval_overlap",
     oracle=f"""
-WITH pos AS (
-  SELECT doc_id, text,
-         unnest(generate_series(1, length(text) - {_ESK} + 1)) AS i
-  FROM documents WHERE length(text) >= {_ESK}
-),
-g AS (
-  SELECT DISTINCT doc_id, {_ES_DIGEST_DUCK} AS dg
-  FROM pos
-),
+WITH {_char_gram_ctes()},
 bench AS (SELECT doc_id, dg FROM g WHERE doc_id % 10 = 0),
 train AS (SELECT doc_id, dg FROM g WHERE doc_id % 10 <> 0)
 SELECT t.doc_id,
@@ -1675,34 +1712,7 @@ def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_substring_strip",
     oracle=f"""
-WITH pos AS (
-  SELECT doc_id, text,
-         unnest(generate_series(1, length(text) - {_ESK} + 1)) AS i
-  FROM documents WHERE length(text) >= {_ESK}
-),
-g AS (
-  SELECT doc_id, CAST(i AS INT) AS i,
-         {_ES_DIGEST_DUCK} AS dg
-  FROM pos
-),
-dup_dg AS (SELECT dg FROM g GROUP BY dg HAVING count(*) >= 2),
-dup AS (SELECT g.doc_id, g.i FROM g JOIN dup_dg USING (dg)),
-marked AS (
-  SELECT doc_id, i,
-         CASE WHEN lag(i) OVER w IS NULL
-                   OR i - lag(i) OVER w > {_ESK} THEN 1 ELSE 0 END AS brk
-  FROM dup WINDOW w AS (PARTITION BY doc_id ORDER BY i)
-),
-spanned AS (
-  SELECT doc_id, i,
-         SUM(brk) OVER (PARTITION BY doc_id ORDER BY i
-                        ROWS UNBOUNDED PRECEDING) AS span_id
-  FROM marked
-),
-spans AS (
-  SELECT doc_id, span_id, MIN(i) AS s, MAX(i) AS e
-  FROM spanned GROUP BY doc_id, span_id
-),
+WITH {_DUP_SPANS_CTES},
 -- brute-force per-character complement: a position survives iff no
 -- merged span covers it ([s, e + k - 1]); fine at oracle scale
 cov AS (

@@ -12,6 +12,18 @@ from the construction definition — an independent check of the full
 encode→decode loop. The Spark-side shape is what has to be right at
 100 TB: payload bytes never shuffle; features are computed in place
 via ``mapInPandas`` and only the small feature columns move.
+
+One kit per job. ``_media_parsers()`` is the only container parser
+(the BMP header, the RIFF chunk walk, the WAV data span and the
+planted first-sample perturb); the codec, the dHash, fingerprint and
+PCM kits and the resizer build on it. ``planted_units`` is the one
+loop that turns a kit into (id, signature) rows, base assets plus
+their planted near-identical variants, and every bit-signature
+near-dup family (image dHash, 64- and 128-bit audio fingerprints)
+pairs through the pigeonhole join shared with ``dedup_simhash_pairs``,
+``dedup.hamming_pairs`` / ``hamming_pairs_duck``. The oracles read
+the codec's construction (length, width, height, channels, rate) from
+one DuckDB CTE, ``_MEDIA_CTE``.
 """
 
 from __future__ import annotations
@@ -20,7 +32,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -36,7 +47,13 @@ from pyspark.sql.types import (
 from ..cache import cache_corpus
 from ..registry import register
 from ..sources.readers import load_table
-from .dedup import minhash_lsh_candidates, pair_overlap, verified_pairs
+from .dedup import (
+    hamming_pairs,
+    hamming_pairs_duck,
+    minhash_lsh_candidates,
+    pair_overlap,
+    verified_pairs,
+)
 
 #: Schema of an ingested multimodal asset: payload + typed metadata.
 ASSET_SCHEMA = StructType(
@@ -48,6 +65,7 @@ ASSET_SCHEMA = StructType(
         StructField("checksum", StringType()),
     ]
 )
+
 
 def ingest_assets(docs: DataFrame) -> DataFrame:
     """documents → multimodal asset table: the text payload stands in
@@ -62,6 +80,57 @@ def ingest_assets(docs: DataFrame) -> DataFrame:
         F.octet_length("text").cast("long").alias("n_bytes"),
         F.md5(F.encode("text", "UTF-8")).alias("checksum"),
     )
+
+
+def _media_parsers():
+    """The container parsing every media kit shares: returns
+    ``(bmp, riff_chunks, data_span, perturb)``.
+
+    - ``bmp(p) -> (offset, w, h, ch, stride)`` reads the BMP header:
+      pixel-array offset, width, |height|, bytes per pixel and the row
+      stride padded to the 4-byte boundary.
+    - ``riff_chunks(p) -> {chunk id: (offset, size)}`` walks the RIFF
+      chunk list from byte 12 (sizes padded to even), first chunk of
+      each id.
+    - ``data_span(p) -> (offset, size)`` is the WAV ``data`` chunk.
+    - ``perturb(p) -> bytes`` is the planted near-identical recording:
+      the low bit of the FIRST data-chunk sample flipped (an empty
+      chunk is left as is).
+
+    Factory-nested like the kits: each kit calls it inside its own
+    factory, so cloudpickle captures these functions by value with the
+    kit (see make_media_codec)."""
+    import struct
+
+    def bmp(p: bytes) -> tuple[int, int, int, int, int]:
+        offset = struct.unpack_from("<I", p, 10)[0]
+        w = struct.unpack_from("<i", p, 18)[0]
+        h = abs(struct.unpack_from("<i", p, 22)[0])
+        ch = struct.unpack_from("<H", p, 28)[0] // 8
+        return offset, w, h, ch, ((w * ch + 3) // 4) * 4
+
+    def riff_chunks(p: bytes) -> dict[bytes, tuple[int, int]]:
+        chunks, pos = {}, 12
+        while pos + 8 <= len(p):
+            sz = struct.unpack_from("<I", p, pos + 4)[0]
+            chunks.setdefault(p[pos : pos + 4], (pos + 8, sz))
+            pos += 8 + sz + (sz % 2)
+        return chunks
+
+    def data_span(p: bytes) -> tuple[int, int]:
+        span = riff_chunks(p).get(b"data")
+        if span is None:
+            raise ValueError("RIFF/WAVE missing data chunk")
+        return span
+
+    def perturb(p: bytes) -> bytes:
+        off, sz = data_span(p)
+        v = bytearray(p)
+        if sz > 0:
+            v[off] ^= 1
+        return bytes(v)
+
+    return bmp, riff_chunks, data_span, perturb
 
 
 def make_media_codec():
@@ -93,6 +162,8 @@ def make_media_codec():
     N/A fields are 0, not NULL, to keep integer columns integer on
     both sides of the driver's hash compare."""
     import struct
+
+    bmp, riff_chunks, _data_span, _perturb = _media_parsers()
 
     def build(doc_id: int, text: str):
         b = text.encode("utf-8")
@@ -137,12 +208,7 @@ def make_media_codec():
 
     def decode(payload: bytes) -> dict:
         if payload[:2] == b"BM":
-            offset = struct.unpack_from("<I", payload, 10)[0]
-            w = struct.unpack_from("<i", payload, 18)[0]
-            h = abs(struct.unpack_from("<i", payload, 22)[0])
-            bpp = struct.unpack_from("<H", payload, 28)[0]
-            ch = bpp // 8
-            stride = ((w * ch + 3) // 4) * 4
+            offset, w, h, ch, stride = bmp(payload)
             total = 0
             for r in range(h):
                 total += sum(payload[offset + r * stride : offset + r * stride + w * ch])
@@ -152,19 +218,13 @@ def make_media_codec():
                 "mean_value": total / (w * h * ch),
             }
         if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            pos, fmt, data = 12, None, None
-            while pos + 8 <= len(payload):
-                cid = payload[pos : pos + 4]
-                sz = struct.unpack_from("<I", payload, pos + 4)[0]
-                if cid == b"fmt ":
-                    fmt = payload[pos + 8 : pos + 8 + sz]
-                elif cid == b"data":
-                    data = payload[pos + 8 : pos + 8 + sz]
-                pos += 8 + sz + (sz % 2)
-            if fmt is None or data is None:
+            chunks = riff_chunks(payload)
+            if b"fmt " not in chunks or b"data" not in chunks:
                 raise ValueError("RIFF/WAVE missing fmt or data chunk")
-            audio_fmt, ch, rate = struct.unpack_from("<HHI", fmt, 0)
-            bits = struct.unpack_from("<H", fmt, 14)[0]
+            fmt, (off, sz) = chunks[b"fmt "][0], chunks[b"data"]
+            data = payload[off : off + sz]
+            audio_fmt, ch, rate = struct.unpack_from("<HHI", payload, fmt)
+            bits = struct.unpack_from("<H", payload, fmt + 14)[0]
             if audio_fmt != 1:
                 raise ValueError(f"unsupported WAV format {audio_fmt}")
             n_samples = len(data) // (ch * (bits // 8))
@@ -331,7 +391,7 @@ def make_image_dhash():
       it exactly from the codec's construction definition.
 
     Factory-nested for cloudpickle capture (see make_media_codec)."""
-    import struct
+    bmp = _media_parsers()[0]
 
     def perturb(payload: bytes) -> bytes:
         v = bytearray(payload)
@@ -340,11 +400,7 @@ def make_image_dhash():
         return bytes(v)
 
     def dhash(p: bytes) -> str:
-        offset = struct.unpack_from("<I", p, 10)[0]
-        w = struct.unpack_from("<i", p, 18)[0]
-        h = abs(struct.unpack_from("<i", p, 22)[0])
-        ch = struct.unpack_from("<H", p, 28)[0] // 8
-        stride = ((w * ch + 3) // 4) * 4
+        offset, w, h, ch, stride = bmp(p)
         xs = [(i * w) // 9 for i in range(9)]
         ys = [(j * h) // 8 for j in range(8)]
         bits = []
@@ -358,31 +414,65 @@ def make_image_dhash():
     return perturb, dhash
 
 
-#: Per-image perceptual-hash signature (planted variants included).
-DHASH_SCHEMA = StructType(
-    [StructField("img_id", LongType()), StructField("dh", StringType())]
-)
-
-
-def image_dhash_signatures(assets: DataFrame) -> DataFrame:
-    """BMP assets → (img_id, 64-bit dHash string) rows: every image
-    under img_id = 2·doc_id, plus — for each doc_id % 10 == 0 — a
-    planted low-bit-perturbed variant under img_id = 2·doc_id + 1.
-    One Arrow-batched pass; payload bytes are hashed in place and
-    never shuffle — only the 64-char signatures move."""
-    perturb, dhash = make_image_dhash()
+def planted_units(
+    assets: DataFrame, kit, id_col: str, col: str, planted: int
+) -> DataFrame:
+    """Media assets → (id_col, col) rows through one kit ``(perturb,
+    fn)``: ``fn(payload)`` of every asset under id 2·doc_id, plus —
+    for each doc_id % 10 == ``planted`` — the planted near-identical
+    variant ``fn(perturb(payload))`` under 2·doc_id + 1. An asset whose
+    ``fn`` is None (nothing to sign) is skipped with its variant. One
+    Arrow-batched pass; payload bytes are read in place and never
+    shuffle — only the signatures move. The batch function closes over
+    the kit's own functions, so workers need not import this package
+    (see make_media_codec)."""
+    perturb, fn = kit
+    schema = StructType(
+        [StructField(id_col, LongType()), StructField(col, StringType())]
+    )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 p = bytes(payload)
-                rows.append((int(doc_id) * 2, dhash(p)))
-                if doc_id % 10 == 0:
-                    rows.append((int(doc_id) * 2 + 1, dhash(perturb(p))))
-            yield pd.DataFrame(rows, columns=["img_id", "dh"])
+                s = fn(p)
+                if s is None:
+                    continue
+                rows.append((int(doc_id) * 2, s))
+                if doc_id % 10 == planted:
+                    rows.append((int(doc_id) * 2 + 1, fn(perturb(p))))
+            yield pd.DataFrame(rows, columns=[id_col, col])
 
-    return assets.select("doc_id", "payload").mapInPandas(batches, DHASH_SCHEMA)
+    return assets.select("doc_id", "payload").mapInPandas(batches, schema)
+
+
+#: The codec's construction per document (``make_media_codec``'s
+#: ``build``) as one DuckDB CTE ``media``: text length L, image width
+#: w and height h, audio channels c and sample rate sr.
+_MEDIA_CTE = """media AS (
+  SELECT doc_id, text, length(text) AS L,
+         8 + CAST(doc_id % 8 AS INT) AS w,
+         8 + CAST(length(text) % 8 AS INT) AS h,
+         CAST(1 + (doc_id // 2) % 2 AS INT) AS c,
+         8000 + 500 * CAST(doc_id % 8 AS INT) AS sr
+  FROM documents
+)"""
+
+
+def _planted_units_duck(id_col: str, planted: int, cond: str) -> str:
+    """DuckDB twin of :func:`planted_units` over ``_MEDIA_CTE``: CTE
+    ``units`` (id_col, media columns…, pert) — every document of the
+    family (doc_id of ``planted``'s parity) meeting ``cond`` under
+    2·doc_id, and its planted variant (``pert``) under 2·doc_id + 1
+    when doc_id % 10 == ``planted``."""
+    return f"""units AS (
+  SELECT doc_id * 2 AS {id_col}, *, FALSE AS pert
+  FROM media WHERE doc_id % 2 = {planted % 2} AND {cond}
+  UNION ALL
+  SELECT doc_id * 2 + 1, *, TRUE
+  FROM media WHERE doc_id % 10 = {planted} AND {cond}
+)"""
 
 
 def _phash_oracle() -> str:
@@ -401,17 +491,8 @@ def _phash_oracle() -> str:
 
     g = " + ".join(code(ch) for ch in range(3))
     return f"""
-WITH imgs AS (
-  SELECT doc_id, text, length(text) AS L,
-         8 + CAST(doc_id % 8 AS INT) AS w,
-         8 + CAST(length(text) % 8 AS INT) AS h
-  FROM documents WHERE doc_id % 2 = 0
-),
-units AS (
-  SELECT doc_id * 2 AS img_id, text, L, w, h, FALSE AS pert FROM imgs
-  UNION ALL
-  SELECT doc_id * 2 + 1, text, L, w, h, TRUE FROM imgs WHERE doc_id % 10 = 0
-),
+WITH {_MEDIA_CTE},
+{_planted_units_duck("img_id", 0, "TRUE")},
 cells AS (
   SELECT u.img_id, j, i, {g} AS gray
   FROM units u, range(0, 8) tj(j), range(0, 9) ti(i)
@@ -428,10 +509,7 @@ sigs AS (
   FROM cmp WHERE i < 8
   GROUP BY img_id
 )
-SELECT a.img_id AS img_a, b.img_id AS img_b,
-       CAST(bit_count(xor(a.dh::BIT, b.dh::BIT)) AS BIGINT) AS hamming
-FROM sigs a JOIN sigs b ON a.img_id < b.img_id
-WHERE bit_count(xor(a.dh::BIT, b.dh::BIT)) <= 2
+{hamming_pairs_duck("sigs", "img_id", "img_a", "img_b")}
 """
 
 
@@ -448,69 +526,17 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants (every planted pair differs in ≤ 1 dHash bit, so total
     recall of the planted set is part of the hash gate).
 
-    Pairing is the SimHash pigeonhole strategy
-    (``dedup_simhash_pairs``): 3 blocks of 22/21/21 bits — a pair
-    within Hamming ≤ 2 matches exactly on ≥ 1 block — so candidates
-    come from a block equi-join, never all-pairs; the exact distance
-    is codegen'd bit_count(xor) over the two 32-bit signature halves.
+    Pairing is the pigeonhole block join shared with
+    ``dedup_simhash_pairs`` (``hamming_pairs``): 3 blocks of 22/21/21
+    bits — a pair within Hamming ≤ 2 matches exactly on ≥ 1 block — so
+    candidates come from a block equi-join, never all-pairs; the exact
+    distance is codegen'd bit_count(xor) over the two 32-bit words.
     At 100 TB: signatures are 64 bits per image (payloads never
     shuffle), the block join is the only exchange, and recall is
     guaranteed by construction rather than probabilistic."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
-    sigs = image_dhash_signatures(build_media_assets(d))
-    return hamming_band_pairs(sigs, "img_id", "img_a", "img_b")
-
-
-def hamming_band_pairs(
-    sigs: DataFrame, id_col: str, out_a: str, out_b: str
-) -> DataFrame:
-    """Pairs of 64-bit signatures within Hamming distance ≤ 2 via the
-    SimHash pigeonhole strategy (``dedup_simhash_pairs``): 3 blocks
-    of 22/21/21 bits — any pair within Hamming ≤ 2 agrees exactly on
-    ≥ 1 block — so candidates come from a block equi-join, never
-    all-pairs; the exact distance is codegen'd bit_count(xor) over the
-    two 32-bit signature halves. Shared by the image-dHash and
-    audio-fingerprint near-dup operators.
-
-    ``sigs``: (id_col, dh) with dh a 64-char '0'/'1' string. Output:
-    (out_a, out_b, hamming) with out_a < out_b, hamming ≤ 2."""
-    # materialize: the block self-join below would otherwise run the
-    # whole encode+fingerprint pandas pipeline once per side
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    blocks = [(0, 1, 22), (1, 23, 21), (2, 44, 21)]  # (id, start, len), 1-based
-    block_cols = [
-        F.concat_ws(":", F.lit(i), F.substring("dh", st, ln)).alias(f"blk{i}")
-        for i, st, ln in blocks
-    ]
-    bands = sigs.select(
-        F.col(id_col),
-        F.conv(F.substring("dh", 1, 32), 2, 10).cast("long").alias("hi"),
-        F.conv(F.substring("dh", 33, 32), 2, 10).cast("long").alias("lo"),
-        F.explode(F.array(*block_cols)).alias("block_key"),
-    )
-    ham = (
-        F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-        + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-    ).cast("long").alias("hamming")
-    return (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.block_key") == F.col("y.block_key"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias(out_a),
-            F.col(f"y.{id_col}").alias(out_b),
-            F.col("x.hi").alias("hi_a"),
-            F.col("x.lo").alias("lo_a"),
-            F.col("y.hi").alias("hi_b"),
-            F.col("y.lo").alias("lo_b"),
-        )
-        .distinct()
-        .select(out_a, out_b, ham)
-        .filter(F.col("hamming") <= 2)
-    )
+    sigs = planted_units(build_media_assets(d), make_image_dhash(), "img_id", "dh", 0)
+    return hamming_pairs(sigs, "img_id", "img_a", "img_b", 64)
 
 
 def _phash_clusters_oracle() -> str:
@@ -584,15 +610,8 @@ def multimodal_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_decode_features",
-    oracle="""
-WITH base AS (
-  SELECT doc_id, text, length(text) AS L,
-         8 + CAST(doc_id % 8 AS INT) AS w,
-         8 + CAST(length(text) % 8 AS INT) AS h,
-         CAST(1 + (doc_id // 2) % 2 AS INT) AS c,
-         8000 + 500 * CAST(doc_id % 8 AS INT) AS sr
-  FROM documents
-),
+    oracle=f"""
+WITH {_MEDIA_CTE},
 img AS (
   SELECT doc_id, 'image/bmp' AS mime,
          w AS width, h AS height, CAST(3 AS INT) AS n_channels,
@@ -601,7 +620,7 @@ img AS (
          CAST((SELECT SUM(ascii(substr(b.text, CAST(j % b.L AS INT) + 1, 1)))
                FROM unnest(range(0, CAST(b.w * b.h * 3 AS BIGINT))) AS t(j))
               AS DOUBLE) / (w * h * 3) AS mean_value
-  FROM base b WHERE doc_id % 2 = 0
+  FROM media b WHERE doc_id % 2 = 0
 ),
 wav AS (
   SELECT doc_id, 'audio/wav' AS mime,
@@ -612,7 +631,7 @@ wav AS (
          CAST((SELECT SUM(ABS(ascii(substr(b.text, CAST(j AS INT) + 1, 1)) - 128))
                FROM unnest(range(0, CAST(b.L - b.L % b.c AS BIGINT))) AS t(j))
               AS DOUBLE) / (L - L % c) AS mean_value
-  FROM base b WHERE doc_id % 2 = 1
+  FROM media b WHERE doc_id % 2 = 1
 )
 SELECT * FROM img UNION ALL SELECT * FROM wav
 """,
@@ -635,91 +654,45 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_media_features(assets)
 
 
-def make_audio_fingerprint():
+def make_audio_fingerprint(n_seg: int = 65):
     """Pure-python audio-fingerprint kit: returns ``(perturb, fp)``.
 
     - ``perturb(payload) -> bytes`` flips the low bit of the FIRST
       sample byte of the WAV's data chunk (located by a real RIFF
-      chunk walk) — a planted near-identical recording whose
-      fingerprint differs from the base's in at most ONE bit (only
-      segment 0's energy moves, by exactly ±1).
+      chunk walk, ``_media_parsers``) — a planted near-identical
+      recording whose fingerprint differs from the base's in at most
+      ONE bit (only segment 0's energy moves, by exactly ±1).
     - ``fp(payload) -> str | None`` is the 1-D analogue of dHash over
       the decoded PCM: chunk-walk to the data bytes, split them into
-      65 segments (byte j → segment (j·65)//nd — the same
+      ``n_seg`` segments (byte j → segment (j·n_seg)//nd — the same
       nearest-boundary partition the image grid uses), integer energy
       = Σ|x − 128| per segment, bit i = energy(i+1) > energy(i) —
-      64 bits as a '0'/'1' string. Pure integer arithmetic
-      end-to-end, so the DuckDB oracle replays it exactly from the
-      codec's construction definition. Returns None for an empty
-      data chunk (no samples to fingerprint).
+      n_seg − 1 bits as a '0'/'1' string (64 by default; the 128-bit
+      family passes 129). Pure integer arithmetic end-to-end, so the
+      DuckDB oracle replays it exactly from the codec's construction
+      definition. Returns None for an empty data chunk (no samples to
+      fingerprint).
 
     Factory-nested for cloudpickle capture (see make_media_codec)."""
-    import struct
-
-    def _data_span(payload: bytes) -> tuple[int, int]:
-        pos = 12
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            sz = struct.unpack_from("<I", payload, pos + 4)[0]
-            if cid == b"data":
-                return pos + 8, sz
-            pos += 8 + sz + (sz % 2)
-        raise ValueError("RIFF/WAVE missing data chunk")
-
-    def perturb(payload: bytes) -> bytes:
-        off, sz = _data_span(payload)
-        v = bytearray(payload)
-        if sz > 0:
-            v[off] ^= 1
-        return bytes(v)
+    _bmp, _chunks, data_span, perturb = _media_parsers()
 
     def fp(payload: bytes) -> str | None:
-        off, sz = _data_span(payload)
+        off, sz = data_span(payload)
         data = payload[off : off + sz]
         nd = len(data)
         if nd == 0:
             return None
-        energy = [0] * 65
+        energy = [0] * n_seg
         for j, x in enumerate(data):
-            energy[(j * 65) // nd] += abs(x - 128)
+            energy[(j * n_seg) // nd] += abs(x - 128)
         return "".join(
-            "1" if energy[i + 1] > energy[i] else "0" for i in range(64)
+            "1" if energy[i + 1] > energy[i] else "0" for i in range(n_seg - 1)
         )
 
     return perturb, fp
 
 
-#: Per-recording fingerprint signature (planted variants included).
-AUDIO_FP_SCHEMA = StructType(
-    [StructField("aud_id", LongType()), StructField("dh", StringType())]
-)
-
-
-def audio_fingerprint_signatures(assets: DataFrame) -> DataFrame:
-    """WAV assets → (aud_id, 64-bit fingerprint) rows: every recording
-    under aud_id = 2·doc_id, plus — for each doc_id % 10 == 5 — a
-    planted low-bit-perturbed variant under aud_id = 2·doc_id + 1.
-    One Arrow-batched pass; payload bytes are fingerprinted in place
-    and never shuffle — only the 64-char signatures move."""
-    perturb, fp = make_audio_fingerprint()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                s = fp(p)
-                if s is None:
-                    continue
-                rows.append((int(doc_id) * 2, s))
-                if doc_id % 10 == 5:
-                    rows.append((int(doc_id) * 2 + 1, fp(perturb(p))))
-            yield pd.DataFrame(rows, columns=["aud_id", "dh"])
-
-    return assets.select("doc_id", "payload").mapInPandas(batches, AUDIO_FP_SCHEMA)
-
-
-def _audio_fp_sigs_sql(n_seg: int = 65) -> str:
+def _audio_fp_sigs_sql(n_seg: int) -> str:
     """CTE body reconstructing every audio fingerprint from the
     construction definition: sample byte j of doc_id's WAV is text
     byte j (j < nd = L − L%channels; low bit xor'd for the planted
@@ -728,19 +701,12 @@ def _audio_fp_sigs_sql(n_seg: int = 65) -> str:
     segments i+1 vs i (n_seg−1 bits). Ends with a
     ``sigs(aud_id, dh)`` CTE."""
     return f"""
-auds AS (
-  SELECT doc_id, text, length(text) AS L,
-         CAST(1 + (doc_id // 2) % 2 AS INT) AS c
-  FROM documents WHERE doc_id % 2 = 1
+{_MEDIA_CTE},
+{_planted_units_duck("aud_id", 5, "L - L % c > 0")},
+grid AS (
+  SELECT u.aud_id, u.text, u.L - u.L % u.c AS nd, u.pert, s
+  FROM units u, range(0, {n_seg}) t(s)
 ),
-units AS (
-  SELECT doc_id * 2 AS aud_id, text, L - L % c AS nd, FALSE AS pert
-  FROM auds WHERE L - L % c > 0
-  UNION ALL
-  SELECT doc_id * 2 + 1, text, L - L % c, TRUE
-  FROM auds WHERE doc_id % 10 = 5 AND L - L % c > 0
-),
-grid AS (SELECT u.aud_id, u.text, u.nd, u.pert, s FROM units u, range(0, {n_seg}) t(s)),
 seg AS (
   SELECT g.aud_id, g.s AS seg,
          COALESCE((
@@ -766,15 +732,19 @@ sigs AS (
 """
 
 
+def _audio_fp_pairs(spark: SparkSession, sf_dir: str, n_seg: int) -> DataFrame:
+    """(aud_a, aud_b, hamming) near-dup recordings of the
+    ``n_seg``-segment fingerprint through the shared pigeonhole join."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
+    kit = make_audio_fingerprint(n_seg)
+    sigs = planted_units(build_media_assets(d), kit, "aud_id", "dh", 5)
+    return hamming_pairs(sigs, "aud_id", "aud_a", "aud_b", n_seg - 1)
+
+
 @register(
     "multimodal_audio_fp_pairs",
-    oracle="WITH "
-    + _audio_fp_sigs_sql()
-    + """
-SELECT a.aud_id AS aud_a, b.aud_id AS aud_b,
-       CAST(bit_count(xor(a.dh::BIT, b.dh::BIT)) AS BIGINT) AS hamming
-FROM sigs a JOIN sigs b ON a.aud_id < b.aud_id
-WHERE bit_count(xor(a.dh::BIT, b.dh::BIT)) <= 2
+    oracle=f"""WITH {_audio_fp_sigs_sql(65)}
+{hamming_pairs_duck("sigs", "aud_id", "aud_a", "aud_b")}
 """,
     tags=("multimodal", "dedup", "audio", "fingerprint", "pandas-udf"),
 )
@@ -789,14 +759,12 @@ def multimodal_audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted set is part of the hash gate).
 
     Pairing is the shared pigeonhole block join
-    (``hamming_band_pairs``) — candidates from a 3-block equi-join,
+    (``hamming_pairs``) — candidates from a 3-block equi-join,
     never all-pairs; the oracle's all-pairs scan is exact ground
     truth at fixture scale. At 100 TB: 64-bit signatures per
     recording, payload bytes never shuffle, recall guaranteed by
     construction."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    sigs = audio_fingerprint_signatures(build_media_assets(d))
-    return hamming_band_pairs(sigs, "aud_id", "aud_a", "aud_b")
+    return _audio_fp_pairs(spark, sf_dir, 65)
 
 
 #: Per-image resize output: fixed 4×4 thumbnail summarized in scalars
@@ -826,18 +794,15 @@ def resize_images(assets: DataFrame, side: int = 4) -> DataFrame:
     doubles), so the full resample is hash-gated without array
     columns."""
     import hashlib
-    import struct
+
+    bmp = _media_parsers()[0]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = []
         for pdf in it:
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
                 p = bytes(p)
-                offset = struct.unpack_from("<I", p, 10)[0]
-                w = struct.unpack_from("<i", p, 18)[0]
-                h = abs(struct.unpack_from("<i", p, 22)[0])
-                ch = struct.unpack_from("<H", p, 28)[0] // 8
-                stride = ((w * ch + 3) // 4) * 4
+                offset, w, h, ch, stride = bmp(p)
                 pix = []
                 sums = [0, 0, 0]
                 for j in range(side):
@@ -867,28 +832,24 @@ def resize_images(assets: DataFrame, side: int = 4) -> DataFrame:
 
 @register(
     "multimodal_resize_thumbs",
-    oracle="""
-WITH imgs AS (
-  SELECT doc_id, text, length(text) AS L,
-         8 + CAST(doc_id % 8 AS INT) AS w,
-         8 + CAST(length(text) % 8 AS INT) AS h
-  FROM documents WHERE doc_id % 2 = 0
-),
+    oracle=f"""
+WITH {_MEDIA_CTE},
 px AS (
-  SELECT m.doc_id, m.w, m.h, j, i, c,
+  SELECT m.doc_id, m.w, m.h, j, i, k,
          ascii(substr(m.text,
            CAST((((j * m.h) // 4) * m.w * 3
-                 + ((i * m.w) // 4) * 3 + c) % m.L AS INT) + 1, 1)) AS v
-  FROM imgs m, range(0, 4) tj(j), range(0, 4) ti(i), range(0, 3) tc(c)
+                 + ((i * m.w) // 4) * 3 + k) % m.L AS INT) + 1, 1)) AS v
+  FROM media m, range(0, 4) tj(j), range(0, 4) ti(i), range(0, 3) tk(k)
+  WHERE m.doc_id % 2 = 0
 )
 SELECT doc_id,
        CAST(MIN(w) AS INT) AS src_w,
        CAST(MIN(h) AS INT) AS src_h,
        md5(string_agg(CAST(v AS VARCHAR), ','
-                      ORDER BY j, i, c)) AS thumb_digest,
-       CAST(SUM(CASE WHEN c = 0 THEN v END) AS DOUBLE) / 16 AS mean_c0,
-       CAST(SUM(CASE WHEN c = 1 THEN v END) AS DOUBLE) / 16 AS mean_c1,
-       CAST(SUM(CASE WHEN c = 2 THEN v END) AS DOUBLE) / 16 AS mean_c2
+                      ORDER BY j, i, k)) AS thumb_digest,
+       CAST(SUM(CASE WHEN k = 0 THEN v END) AS DOUBLE) / 16 AS mean_c0,
+       CAST(SUM(CASE WHEN k = 1 THEN v END) AS DOUBLE) / 16 AS mean_c1,
+       CAST(SUM(CASE WHEN k = 2 THEN v END) AS DOUBLE) / 16 AS mean_c2
 FROM px GROUP BY doc_id
 """,
     tags=("multimodal", "resize", "thumbnail", "pandas-udf"),
@@ -903,126 +864,10 @@ def multimodal_resize_thumbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_images(build_media_assets(d), side=4)
 
 
-def hamming_band_pairs_128(
-    sigs: DataFrame, id_col: str, out_a: str, out_b: str
-) -> DataFrame:
-    """128-bit generalization of ``hamming_band_pairs``: 3 pigeonhole
-    blocks of 43/43/42 bits (total recall at Hamming ≤ 2), exact
-    distance summed over FOUR 32-bit quarters (``conv`` of a 64-char
-    binary string would wrap a signed LONG; 32-bit quarters stay
-    safely positive)."""
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    blocks = [(0, 1, 43), (1, 44, 43), (2, 87, 42)]
-    block_cols = [
-        F.concat_ws(":", F.lit(i), F.substring("dh", st, ln)).alias(f"blk{i}")
-        for i, st, ln in blocks
-    ]
-    quarters = [
-        F.conv(F.substring("dh", 1 + 32 * i, 32), 2, 10)
-        .cast("long")
-        .alias(f"q{i}")
-        for i in range(4)
-    ]
-    bands = sigs.select(
-        F.col(id_col), *quarters, F.explode(F.array(*block_cols)).alias("block_key")
-    )
-    ham = sum(
-        F.bit_count(F.col(f"qa{i}").bitwiseXOR(F.col(f"qb{i}")))
-        for i in range(4)
-    ).cast("long").alias("hamming")
-    sel_a = [F.col(f"x.q{i}").alias(f"qa{i}") for i in range(4)]
-    sel_b = [F.col(f"y.q{i}").alias(f"qb{i}") for i in range(4)]
-    return (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.block_key") == F.col("y.block_key"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias(out_a),
-            F.col(f"y.{id_col}").alias(out_b),
-            *sel_a,
-            *sel_b,
-        )
-        .distinct()
-        .select(out_a, out_b, ham)
-        .filter(F.col("hamming") <= 2)
-    )
-
-
-def make_audio_fingerprint128():
-    """129-segment (128-bit) variant of ``make_audio_fingerprint`` —
-    the SIGNATURE-ENTROPY fix the 500k-doc corpus run demanded: the
-    64-bit contour saturates at ~250k recordings (9.4M incidental
-    Hamming≤2 pairs); doubling the contour resolution makes
-    incidental near-collisions exponentially rarer while the planted
-    ±1-energy variants still differ in ≤1 bit. Same parsing, same
-    segment rule (byte j → segment (j·129)//nd)."""
-    perturb, _fp64 = make_audio_fingerprint()
-    import struct
-
-    def _data_span(payload: bytes):
-        pos = 12
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            sz = struct.unpack_from("<I", payload, pos + 4)[0]
-            if cid == b"data":
-                return pos + 8, sz
-            pos += 8 + sz + (sz % 2)
-        raise ValueError("RIFF/WAVE missing data chunk")
-
-    def fp(payload: bytes):
-        off, sz = _data_span(payload)
-        data = payload[off : off + sz]
-        nd = len(data)
-        if nd == 0:
-            return None
-        energy = [0] * 129
-        for j, x in enumerate(data):
-            energy[(j * 129) // nd] += abs(x - 128)
-        return "".join(
-            "1" if energy[i + 1] > energy[i] else "0" for i in range(128)
-        )
-
-    return perturb, fp
-
-
-def audio_fingerprint128_signatures(assets: DataFrame) -> DataFrame:
-    """(aud_id, 128-bit fingerprint) rows with the same planted-variant
-    scheme as the 64-bit path."""
-    perturb, fp = make_audio_fingerprint128()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                s = fp(p)
-                if s is None:
-                    continue
-                rows.append((int(doc_id) * 2, s))
-                if doc_id % 10 == 5:
-                    rows.append((int(doc_id) * 2 + 1, fp(perturb(p))))
-            yield pd.DataFrame(rows, columns=["aud_id", "dh"])
-
-    return assets.select("doc_id", "payload").mapInPandas(batches, AUDIO_FP_SCHEMA)
-
-
-def _audio_fp128_sigs_sql() -> str:
-    """129-segment variant of ``_audio_fp_sigs_sql``."""
-    return _audio_fp_sigs_sql(129)
-
-
 @register(
     "multimodal_audio_fp128_pairs",
-    oracle="WITH "
-    + _audio_fp128_sigs_sql()
-    + """
-SELECT a.aud_id AS aud_a, b.aud_id AS aud_b,
-       CAST(bit_count(xor(a.dh::BIT, b.dh::BIT)) AS BIGINT) AS hamming
-FROM sigs a JOIN sigs b ON a.aud_id < b.aud_id
-WHERE bit_count(xor(a.dh::BIT, b.dh::BIT)) <= 2
+    oracle=f"""WITH {_audio_fp_sigs_sql(129)}
+{hamming_pairs_duck("sigs", "aud_id", "aud_a", "aud_b")}
 """,
     tags=("multimodal", "dedup", "audio", "fingerprint", "entropy",
           "pandas-udf"),
@@ -1034,12 +879,12 @@ def multimodal_audio_fp128_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs while planted recall held). Twice the contour resolution
     makes incidental near-collisions exponentially rarer; the
     planted ±1-energy variants still differ in ≤1 bit, so total
-    recall of the planted set stays part of the hash gate. Pairing
-    via ``hamming_band_pairs_128`` (3 pigeonhole blocks of 43/43/42
-    bits; exact distance over four 32-bit quarters)."""
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    sigs = audio_fingerprint128_signatures(build_media_assets(d))
-    return hamming_band_pairs_128(sigs, "aud_id", "aud_a", "aud_b")
+    recall of the planted set stays part of the hash gate. Same
+    kit and pair join as the 64-bit path at 129 segments
+    (``make_audio_fingerprint(129)``; ``hamming_pairs`` with 3
+    pigeonhole blocks of 43/43/42 bits, exact distance over four
+    32-bit words)."""
+    return _audio_fp_pairs(spark, sf_dir, 129)
 
 
 # --- gram-sketch audio near-dup (MinHash over PCM byte shingles) ----------
@@ -1049,17 +894,12 @@ _AMH_K = 8
 #: exact-Jaccard verification threshold on candidate pairs.
 _AMH_J = 0.9
 
-#: Decoded PCM stream per recording (planted variants included).
-AUDIO_PCM_SCHEMA = StructType(
-    [StructField("aud_id", LongType()), StructField("pcm", StringType())]
-)
-
 
 def make_audio_pcm():
     """Pure-python PCM extractor kit: returns ``(perturb, pcm)``.
 
     - ``perturb`` is the shared planted-variant rule (first data-chunk
-      sample byte xor 1 — same as ``make_audio_fingerprint``).
+      sample byte xor 1, ``_media_parsers``).
     - ``pcm(payload) -> str | None`` chunk-walks the RIFF container to
       the data bytes and returns them as a latin-1 string (the codec
       builds from ASCII text, and ascii^1 stays ASCII, so the byte→char
@@ -1067,57 +907,16 @@ def make_audio_pcm():
       the data chunk is shorter than one ``_AMH_K``-byte gram.
 
     Factory-nested for cloudpickle capture (see make_media_codec)."""
-    import struct
-
-    def _data_span(payload: bytes) -> tuple[int, int]:
-        pos = 12
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            sz = struct.unpack_from("<I", payload, pos + 4)[0]
-            if cid == b"data":
-                return pos + 8, sz
-            pos += 8 + sz + (sz % 2)
-        raise ValueError("RIFF/WAVE missing data chunk")
-
-    def perturb(payload: bytes) -> bytes:
-        off, sz = _data_span(payload)
-        v = bytearray(payload)
-        if sz > 0:
-            v[off] ^= 1
-        return bytes(v)
+    _bmp, _chunks, data_span, perturb = _media_parsers()
 
     def pcm(payload: bytes) -> str | None:
-        off, sz = _data_span(payload)
+        off, sz = data_span(payload)
         data = payload[off : off + sz]
         if len(data) < _AMH_K:
             return None
         return data.decode("latin-1")
 
     return perturb, pcm
-
-
-def audio_pcm_units(assets: DataFrame) -> DataFrame:
-    """WAV assets → (aud_id, pcm) rows: every recording's decoded data
-    chunk under aud_id = 2·doc_id, plus — for each doc_id % 10 == 5 —
-    the planted low-bit-perturbed variant under aud_id = 2·doc_id + 1
-    (the scheme shared with the contour-fingerprint families). One
-    Arrow-batched decode pass; payload bytes never shuffle."""
-    perturb, pcm = make_audio_pcm()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                s = pcm(p)
-                if s is None:
-                    continue
-                rows.append((int(doc_id) * 2, s))
-                if doc_id % 10 == 5:
-                    rows.append((int(doc_id) * 2 + 1, pcm(perturb(p))))
-            yield pd.DataFrame(rows, columns=["aud_id", "pcm"])
-
-    return assets.select("doc_id", "payload").mapInPandas(batches, AUDIO_PCM_SCHEMA)
 
 
 def _audio_minhash_oracle() -> str:
@@ -1143,24 +942,20 @@ def _audio_minhash_oracle() -> str:
         " / len(list_distinct(list_concat(x.grams, y.grams)))"
     )
     return f"""
-WITH auds AS (
-  SELECT doc_id, text, length(text) AS L,
-         CAST(1 + (doc_id // 2) % 2 AS INT) AS c
-  FROM documents WHERE doc_id % 2 = 1
-),
-units AS (
-  SELECT doc_id * 2 AS aud_id, substr(text, 1, L - L % c) AS pcm
-  FROM auds WHERE L - L % c >= {_AMH_K}
-  UNION ALL
-  SELECT doc_id * 2 + 1,
-         chr(xor(ascii(substr(text, 1, 1)), 1)) || substr(text, 2, L - L % c - 1)
-  FROM auds WHERE doc_id % 10 = 5 AND L - L % c >= {_AMH_K}
+WITH {_MEDIA_CTE},
+{_planted_units_duck("aud_id", 5, f"L - L % c >= {_AMH_K}")},
+pcms AS (
+  SELECT aud_id,
+         CASE WHEN pert
+              THEN chr(xor(ascii(substr(text, 1, 1)), 1)) || substr(text, 2, L - L % c - 1)
+              ELSE substr(text, 1, L - L % c) END AS pcm
+  FROM units
 ),
 g AS (
   SELECT aud_id,
          list_distinct(list_transform(
            generate_series(1, length(pcm) - {_AMH_K - 1}), i -> {dg})) AS grams
-  FROM units
+  FROM pcms
 ),
 sigs AS (SELECT aud_id, grams, [{mins}] AS mh FROM g),
 bands AS (
@@ -1218,7 +1013,9 @@ def multimodal_audio_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     from ..functions.text_funcs import shingle_int_hash_spark
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    units = cache_corpus(audio_pcm_units(build_media_assets(d)))
+    units = cache_corpus(
+        planted_units(build_media_assets(d), make_audio_pcm(), "aud_id", "pcm", 5)
+    )
     dg = shingle_int_hash_spark(f"substring(pcm, i, {_AMH_K})")
     grams = F.explode(
         F.expr(

@@ -334,7 +334,7 @@ def _curation_funnel_oracle() -> str:
     operator docstring), and the ``decontaminate_eval_overlap``
     40-char-gram criterion (60-bit integer digests, benchmark =
     ``doc_id % 10 = 0``)."""
-    from .dedup import _COMPONENTS_CTES, _ES_DIGEST_DUCK, _ESK, _MINHASH_PAIRS_CTES
+    from .dedup import _COMPONENTS_CTES, _MINHASH_PAIRS_CTES, _char_gram_ctes
     from .text import QG_KEEP_DUCK
 
     return f"""
@@ -359,15 +359,7 @@ s3 AS MATERIALIZED (
   LEFT JOIN surviving_keeper k ON c.cluster_id = k.cluster_id
   WHERE c.doc_id IS NULL OR s2.doc_id = k.keeper
 ),
-pos AS (
-  SELECT doc_id, text,
-         unnest(generate_series(1, length(text) - {_ESK} + 1)) AS i
-  FROM documents WHERE length(text) >= {_ESK}
-),
-g AS (
-  SELECT DISTINCT doc_id, {_ES_DIGEST_DUCK} AS dg
-  FROM pos
-),
+{_char_gram_ctes()},
 contaminated AS (
   SELECT DISTINCT doc_id FROM g
   WHERE doc_id % 10 <> 0

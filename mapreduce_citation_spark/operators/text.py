@@ -19,6 +19,7 @@ both engines.
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 
 from pyspark import StorageLevel
@@ -1578,6 +1579,22 @@ def _clf_feats_duck(ntok: str) -> str:
               AS BIGINT) AS f_dig"""
 
 
+#: The column each ``CLF_WEIGHTS`` feature reads in a
+#: ``_clf_feats_*("n_tokens")`` frame; the bias reads the constant 1.
+_CLF_COLS = {"f_tok": "n_tokens", "f_stop": "f_stop", "f_dig": "f_dig", "bias": "1"}
+
+
+def _clf_score_spark() -> Column:
+    """The classifier's dot product ``CLF_WEIGHTS`` · features over the
+    ``_clf_feats_spark("n_tokens")`` columns."""
+    return reduce(operator.add, [F.expr(_CLF_COLS[f]) * wt for f, wt in CLF_WEIGHTS])
+
+
+def _clf_score_duck() -> str:
+    """DuckDB twin of :func:`_clf_score_spark`."""
+    return " + ".join(f"{_CLF_COLS[f]} * ({wt})" for f, wt in CLF_WEIGHTS)
+
+
 @register(
     "corpus_classifier_scores",
     oracle=f"""
@@ -1729,7 +1746,7 @@ WITH feats AS (
 ),
 scored AS (
   SELECT doc_id, source, n_tokens,
-         2 * n_tokens + 10 * f_stop - 3 * f_dig - 60 AS score
+         {_clf_score_duck()} AS score
   FROM feats
 ),
 ranked AS (
@@ -1771,9 +1788,7 @@ def corpus_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "n_tokens",
-        (
-            2 * F.col("n_tokens") + 10 * F.col("f_stop") - 3 * F.col("f_dig") - 60
-        ).alias("score"),
+        _clf_score_spark().alias("score"),
     )
     w = (
         Window.partitionBy("source")

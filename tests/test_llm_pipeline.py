@@ -223,6 +223,61 @@ def test_simhash_locality(spark):
     assert ham(sh[1], sh[3]) > ham(sh[1], sh[2])
 
 
+def _hamming_boundary_sigs(bits: int, base_id: int) -> dict[int, str]:
+    """Planted ``bits``-bit signatures for the pigeonhole boundary test:
+    two random bases, each with variants at distance 0, 1, 2 and 3
+    whose flipped bits sit on both sides of every block boundary
+    (widths from divmod(bits, 3)) and of every 32-bit word boundary,
+    plus the first and last bit."""
+    import random
+
+    rnd = random.Random(bits)
+    q, r = divmod(bits, 3)
+    starts = [0, q + (r > 0), 2 * q + (r > 0) + (r > 1)]
+    cuts = starts[1:] + list(range(32, bits, 32))
+    pos = sorted({0, bits - 1} | {c for b in cuts for c in (b - 1, b)})
+    flips = [(), ()] + [(p,) for p in pos]  # () twice: an exact duplicate
+    flips += list(itertools.combinations(pos, 2))
+    flips += [(starts[0], starts[1], starts[2]),  # one flip per block
+              (starts[1] - 1, starts[1], starts[1] + 1),
+              (bits - 3, bits - 2, bits - 1)]
+    sigs, nid = {}, base_id
+    for _ in range(2):
+        base = [rnd.randint(0, 1) for _ in range(bits)]
+        for f in flips:
+            v = list(base)
+            for p in f:
+                v[p] ^= 1
+            sigs[nid] = "".join(map(str, v))
+            nid += 1
+    return sigs
+
+
+@pytest.mark.parametrize("bits", [32, 64, 128])
+def test_hamming_pairs_exact_at_block_and_word_boundaries(spark, bits):
+    """hamming_pairs against a brute-force all-pairs scan on planted
+    signatures whose flips straddle the pigeonhole block boundaries and
+    the 32-bit word boundaries: every pair within distance 2 is found
+    with its exact distance, and no pair at distance 3 is returned."""
+    from mapreduce_citation_spark.operators.dedup import hamming_pairs
+
+    sigs = _hamming_boundary_sigs(bits, 1000)
+    ham = lambda a, b: sum(x != y for x, y in zip(a, b))  # noqa: E731
+    dist = {
+        (a, b): ham(sigs[a], sigs[b])
+        for a, b in itertools.combinations(sorted(sigs), 2)
+    }
+    assert {0, 1, 2, 3} <= set(dist.values())
+    expected = {(a, b, d) for (a, b), d in dist.items() if d <= 2}
+    df = spark.createDataFrame(sorted(sigs.items()), ["sig_id", "dh"])
+    got = {
+        (r["a"], r["b"], r["hamming"])
+        for r in hamming_pairs(df, "sig_id", "a", "b", bits).collect()
+    }
+    assert got == expected
+    assert not any(dist[(a, b)] == 3 for a, b, _ in got)
+
+
 # ---------------------------------------------------------------------------
 # similarity search
 # ---------------------------------------------------------------------------
@@ -1229,6 +1284,55 @@ def test_audio_pcm_units_round_trip_and_perturb_locality(spark):
         assert len(gb - gv) <= 1 and len(gv - gb) <= 1
 
 
+_MEDIA_WORKER_CHILD = r"""
+import importlib.util, json, sys
+sys.path.insert(0, sys.argv[1])  # the Spark driver only: workers get no path
+from mapreduce_citation_spark.registry import all_specs
+from mapreduce_citation_spark.session import get_spark
+
+spark = get_spark("media-workers", cpus=2, shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+probe = spark.sparkContext.parallelize([0], 1).map(
+    lambda _: importlib.util.find_spec("mapreduce_citation_spark") is None
+)
+out = {"workers_blind": probe.collect() == [True]}
+for name in sys.argv[3:]:
+    out[name] = len(all_specs()[name].fn(spark, sys.argv[2]).collect())
+print(json.dumps(out))
+"""
+
+
+def test_media_kits_run_on_workers_without_the_package(tmp_path, sf_dir):
+    """Every media family's mapInPandas closure carries its kit by
+    value: in a fresh session whose Python workers cannot import this
+    package (PYTHONPATH unset, a temp working dir, the repo on the
+    Spark driver's sys.path only), the pair, decode and resize
+    families run to completion."""
+    import json
+    import subprocess
+    import sys as _sys
+
+    names = [
+        "multimodal_phash_pairs",
+        "multimodal_audio_fp_pairs",
+        "multimodal_audio_fp128_pairs",
+        "multimodal_audio_minhash_pairs",
+        "multimodal_decode_features",
+        "multimodal_resize_thumbs",
+    ]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [_sys.executable, "-c", _MEDIA_WORKER_CHILD, repo, sf_dir, *names],
+        capture_output=True, text=True, timeout=600, cwd=tmp_path, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got.pop("workers_blind"), "workers could import the package"
+    assert set(got) == set(names) and all(n > 0 for n in got.values()), got
+
+
 def test_audio_minhash_pairs_recover_planted(spark, sf_dir):
     """Every planted (base, variant) recording pair must survive the
     full sketch→band→verify pipeline with Jaccard ≥ 0.9 (the variant
@@ -1962,6 +2066,41 @@ def test_classifier_scores_match_python_replay(spark):
     }
     assert got == expected
     assert {p for _, p in got.values()} <= {0, 1}
+
+
+def test_budget_score_reads_classifier_weights(spark, sf_dir):
+    """The selection's score expressions — Spark and DuckDB, both built
+    from CLF_WEIGHTS over the n_tokens feature frame — equal
+    corpus_classifier_scores' score for every fixture doc."""
+    import duckdb
+
+    from mapreduce_citation_spark.operators.text import (
+        _clf_feats_duck,
+        _clf_feats_spark,
+        _clf_score_duck,
+        _clf_score_spark,
+        corpus_classifier_scores,
+    )
+
+    want = {
+        r["doc_id"]: r["score"]
+        for r in corpus_classifier_scores(spark, sf_dir).collect()
+    }
+    feats = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", *_clf_feats_spark("n_tokens")
+    )
+    got = {
+        r["doc_id"]: r["score"]
+        for r in feats.select("doc_id", _clf_score_spark().alias("score")).collect()
+    }
+    duck = dict(
+        duckdb.sql(
+            f"SELECT doc_id, {_clf_score_duck()} AS score FROM ("
+            f"SELECT doc_id, {_clf_feats_duck('n_tokens')} "
+            f"FROM '{sf_dir}/documents.parquet')"
+        ).fetchall()
+    )
+    assert want and got == want and duck == want
 
 
 def test_epoch_shuffle_matches_python_replay(spark):

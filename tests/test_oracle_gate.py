@@ -52,6 +52,15 @@ QUERIES = (
     "dedup_paragraph_ingest",
     "multimodal_audio_minhash_pairs",
     "streaming_ingest_dedup_near",
+    "dedup_simhash_pairs",
+    "multimodal_phash_pairs",
+    "multimodal_audio_fp_pairs",
+    "multimodal_audio_fp128_pairs",
+    "multimodal_decode_features",
+    "multimodal_resize_thumbs",
+    "corpus_budget_selection",
+    "dedup_substring_strip",
+    "decontaminate_eval_overlap",
 )
 
 #: Iterative queries rerun at other partition counts (citation_scc_layers
