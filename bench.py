@@ -9,7 +9,8 @@ Runs the registry's bench-flagged headline queries on
 
 Each query is executed to completion (results drained via the noop
 sink) — timings measure the full distributed plan, not lazy
-construction. Each query gets a cache-isolated block: clearCache, one
+construction. Each query gets a cache-isolated block: clearCache and
+the memory-sink tables of earlier streaming queries dropped, one
 untimed rewarm (primes JVM/codegen AND the query's own persisted
 frames), then FIVE timed runs with the MEDIAN reported — a single GC
 pause or compilation stall on a contended 32-thread local JVM must
@@ -307,6 +308,7 @@ def main() -> None:
 
     from mapreduce_citation_spark.registry import bench_queries
     from mapreduce_citation_spark.session import get_spark
+    from mapreduce_citation_spark.streaming.events import drop_memory_sinks
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -349,6 +351,7 @@ def main() -> None:
             # briefly recreating the exact co-residency the clear
             # exists to remove.
             spark.catalog.clearCache()
+            drop_memory_sinks(spark)
             drain(spec.fn(spark, sf_dir))
             runs: list[float] = []
             counts: set[int] = set()

@@ -293,7 +293,11 @@ def hamming_pairs(
     would wrap a signed LONG; 32-bit words stay positive) — no
     interpreted HOF in the pair path. The signature table is cached:
     the block self-join would otherwise run the whole signature
-    pipeline once per side.
+    pipeline once per side on every read. The cache is filled lazily,
+    so on a cold cache both sides can still compute it at once (a
+    ``BlockManager ... already exists`` WARN); an eager ``count()``
+    fill removed that but cost a job and was not faster at sf0.01
+    (``AB_HAMMING_FILL_pr17*.json``).
 
     ``sigs``: (id_col, dh), dh a ``bits``-char '0'/'1' string with
     ``bits`` a multiple of 32. Output: (out_a, out_b, hamming) with

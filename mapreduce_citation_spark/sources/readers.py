@@ -4,12 +4,13 @@ The reference's only source is a line-delimited tab-separated edge
 list with ``#`` comment lines, blank lines, and malformed rows that
 are dropped rather than fatal (reference: worker/mapper/mapper.py:74-80,
 master/master.py:96-106, check.py:15-25). Here that whole pipeline is a
-declarative scan: Spark plans FileScan → Filter → Project with
-whole-stage codegen, splits the file by byte ranges (no driver-resident
-partitioning pass like master/master.py:91-127), and pushes the
-projection down. The parse cuts each trimmed line at the first
-separator with ``instr``/``substr`` — literal, character-counting
-string built-ins — not with a regex ``split``.
+declarative scan: Spark plans FileScan → Project → Generate → Filter
+→ Project in one whole-stage-codegen span, splits the file by byte
+ranges (no driver-resident partitioning pass like
+master/master.py:91-127), and pushes the projection down. The parse
+cuts each trimmed line at the first separator with ``instr``/``substr``
+— literal, character-counting string built-ins — not with a regex
+``split``.
 
 Fixture tables are columnar parquet (TESTDATA.md); ``load_table``
 is the one place scan options live.
@@ -78,23 +79,28 @@ def read_edges_text(
       can count/quarantine them (dead-letter pattern).
 
     Everything stays JVM-side in one whole-stage-codegen span of
-    codegen'd built-ins: ``trim`` and ``startswith``, then one
-    ``instr`` for the separator's position in its own projection, then
-    two ``substr`` of it with a constant length. ``instr``, ``substr``,
-    ``length`` and ``locate`` are literal and count characters on the
-    ``UTF8String`` itself, so non-ASCII IDs parse as they read.
-    ``split`` is not used: it compiles ``sep`` as a Java regex, converts
-    every line to a ``java.lang.String`` and back and allocates an array
-    per line, which made the parse most of the citation count's CPU.
+    codegen'd built-ins, and per line it evaluates one ``trim``, one
+    ``instr`` for the separator's position, one ``startswith`` and an
+    empty test for the comment/blank skip, two ``substr`` of the
+    trimmed line, and one ``locate`` over ``to_paper`` alone for a
+    second separator. ``instr``, ``substr`` and ``locate`` are literal
+    and count characters on the ``UTF8String`` itself, so non-ASCII IDs
+    parse as they read. ``split`` is not used: it compiles ``sep`` as a
+    Java regex, converts every line to a ``java.lang.String`` and back
+    and allocates an array per line, which made the parse most of the
+    citation count's CPU.
 
-    Two things keep each expression evaluated once per line where it
-    can be. Common-subexpression elimination reaches neither into
-    ``CASE WHEN`` branches nor into a ``Filter``, so the position is its
-    own ``select`` rather than recomputed per field. And Catalyst pushes
-    the validity filter below those projections, so the rule is stated
-    on the position (``_pos > 1``, the second field's start within
-    ``length``, no ``sep`` from there on) instead of on the two
-    substrings, which the filter would otherwise copy again.
+    The parsed fields come out of a one-row ``inline`` ``Generate``,
+    and every filter reads only the generator's output. The ``Generate``
+    is the barrier: Catalyst's Filter pushdown has no cost guard, so a
+    filter on the trimmed line or the position would be pushed below
+    the projections with their alias bodies substituted, and Filter
+    codegen has no common-subexpression elimination, so each copy would
+    run again per line (over plain projections the rule compiles to 8
+    ``trim`` and 4 ``instr`` per valid line, plus ``length`` and
+    ``locate`` over the whole line). A filter on a generator's output
+    cannot move below the ``Generate``, so it reads the parsed columns.
+    The same shape serves all three policies.
     """
     if not sep:
         raise ValueError("sep must be a non-empty string")
@@ -103,30 +109,39 @@ def read_edges_text(
     if malformed not in ("drop", "fail", "keep"):
         raise ValueError(f"malformed policy must be drop|fail|keep, got {malformed!r}")
     line, pos = F.col("_line"), F.col("_pos")
-    lines = (
+    parsed = (
         spark.read.text(path)
         .select(F.trim(F.col("value")).alias("_line"))
-        .filter((line != F.lit("")) & ~line.startswith(comment))
+        .select(line, F.instr(line, sep).alias("_pos"))
+        .select(
+            line,
+            F.inline(
+                F.array(
+                    F.struct(
+                        ((line == F.lit("")) | line.startswith(comment)).alias("_skip"),
+                        pos.alias("_pos"),
+                        line.substr(F.lit(1), pos - 1).alias("from_paper"),
+                        line.substr(pos + len(sep), F.lit(_INT_MAX)).alias("to_paper"),
+                    )
+                )
+            ),
+        )
+        .filter(~F.col("_skip"))
     )
-    located = lines.select(line, F.instr(line, sep).alias("_pos"))
-    start = pos + len(sep)  # first character of to_paper
+    from_paper, to_paper = F.col("from_paper"), F.col("to_paper")
     ok = (
         (pos > 1)
-        & (start <= F.length(line))
-        & (F.call_function("locate", F.lit(sep), line, start) == 0)
+        & (to_paper != F.lit(""))
+        & (F.call_function("locate", F.lit(sep), to_paper) == 0)
     )
-    from_paper = line.substr(F.lit(1), pos - 1)
-    to_paper = line.substr(start, F.lit(_INT_MAX))
     if malformed == "drop":
-        return located.filter(ok).select(
-            from_paper.alias("from_paper"), to_paper.alias("to_paper")
-        )
+        return parsed.filter(ok).select(from_paper, to_paper)
     if malformed == "fail":
         bad = F.raise_error(F.concat(F.lit("malformed edge row: "), line))
         from_paper = F.when(ok, from_paper).otherwise(bad)
     else:
         from_paper, to_paper = F.when(ok, from_paper), F.when(ok, to_paper)
-    return located.select(from_paper.alias("from_paper"), to_paper.alias("to_paper"))
+    return parsed.select(from_paper.alias("from_paper"), to_paper.alias("to_paper"))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

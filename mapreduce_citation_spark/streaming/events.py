@@ -360,6 +360,18 @@ def run_to_memory_sink(
     return df.sparkSession.table(name)
 
 
+def drop_memory_sinks(spark: SparkSession) -> None:
+    """Drop every table :func:`run_to_memory_sink` left in ``spark``.
+
+    Each sink table holds its drained rows on the driver for as long as
+    it is registered. The returned frames read their sink lazily, so a
+    sink cannot be dropped when its family returns; a harness calls this
+    at the start of a run instead, next to ``clearCache``."""
+    for t in spark.catalog.listTables(pattern="memory_sink_*"):
+        if t.isTemporary:
+            spark.catalog.dropTempView(t.name)
+
+
 def run_epochs(
     stream: DataFrame, report, arts, out: str, ckpt: str
 ) -> list[float]:

@@ -7,7 +7,7 @@ import re
 
 import pytest
 
-from mapreduce_citation_spark.plans import assert_in_plan, assert_not_in_plan
+from mapreduce_citation_spark.plans import assert_in_plan, assert_not_in_plan, explain_str
 from mapreduce_citation_spark.sources.edgelist_datasource import (
     EdgeListSimpleStreamReader,
     register_edgelist_source,
@@ -145,9 +145,47 @@ def test_reader_rejects_bad_arguments_before_reading(spark, tmp_path, kwargs, me
         read_edges_text(spark, missing, **kwargs)
 
 
+def _filter_conditions(plan):
+    """The ``Condition`` line of every Filter node of a formatted plan."""
+    return [
+        m.group(1)
+        for node in plan.split("\n\n")
+        if re.match(r"\(\d+\) Filter\b", node.strip())
+        for m in [re.search(r"^Condition : (.*)$", node, re.M)]
+        if m
+    ]
+
+
 @pytest.mark.parametrize("malformed", ["drop", "fail", "keep"])
 def test_parse_plan_uses_instr_not_split(spark, tmp_path, malformed):
+    """Each line is trimmed once and searched for ``sep`` once, and no
+    filter re-derives the parse: Catalyst pushes a filter on the trimmed
+    line below the projections with the alias bodies copied in."""
     path = _write(tmp_path, ["1\t2"])
     df = read_edges_text(spark, path, malformed=malformed)
+    df.collect()
     assert_not_in_plan(df, "split(")
-    assert_in_plan(df, "instr(")
+    plan = assert_in_plan(df, "instr(")
+    assert plan.count("trim(") == 1, plan
+    assert plan.count("instr(") == 1, plan
+    conditions = _filter_conditions(plan)
+    assert conditions, plan
+    for cond in conditions:
+        for fn in ("trim(", "instr(", "length("):
+            assert fn not in cond, f"{fn} in filter condition {cond!r}"
+
+
+def test_counts_codegen_parses_each_line_once(spark, tmp_path):
+    """The generated code of the citation count holds one ``trim`` and
+    one ``instr`` (the expression classes name them in the source)."""
+    from mapreduce_citation_spark.citations import CitationAnalytics
+
+    path = _write(tmp_path, ["1\t2", "# c", "3\t2"])
+    key, prev = "spark.sql.adaptive.enabled", spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set(key, "false")  # AQE plans show no codegen before they run
+    try:
+        code = explain_str(CitationAnalytics.from_text(spark, path).citation_counts(), "codegen")
+    finally:
+        spark.conf.set(key, prev)
+    assert code.count("StringTrim") == 1, code
+    assert code.count("StringInstr") == 1, code

@@ -1310,6 +1310,25 @@ _PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 _STATE = "org.apache.spark.sql.execution.streaming.state."
 
 
+def test_drop_memory_sinks_unregisters_every_sink(spark, sf_dir):
+    """Each drained family leaves its ``memory_sink_N`` table registered
+    until a harness drops it; after two runs of one family and the
+    helper, the catalog holds no sink table."""
+    from mapreduce_citation_spark.operators.streaming_queries import (
+        streaming_dedup_watermark,
+    )
+    from mapreduce_citation_spark.streaming.events import drop_memory_sinks
+
+    def sinks():
+        return [t.name for t in spark.catalog.listTables() if t.name.startswith("memory_sink_")]
+
+    runs = [streaming_dedup_watermark(spark, sf_dir) for _ in range(2)]
+    assert runs[0].count() == runs[1].count() > 0
+    assert len(sinks()) >= 2
+    drop_memory_sinks(spark)
+    assert sinks() == []
+
+
 def test_drain_restores_confs_and_stops_queries(spark, sf_dir, stream_dir):
     """Every live family drains through ``streaming/events.py:_drain``.
     After a family with sized partitions, the provider-conf family and

@@ -19,7 +19,8 @@ two JVMs at the session's 8g default next to a third JVM can exhaust a
 16 GB host.
 
 Per query: one untimed warm run per side, then 5 pairs, alternating
-base/change and change/base. A run clears the SQL cache, then builds
+base/change and change/base. A run clears the SQL cache and drops the
+memory-sink tables of earlier streaming runs, then builds
 the frame and drains it to the noop sink, counting every job the JVM
 launched meanwhile (streaming micro-batches included), then takes an
 untimed digest: row count plus the decimal sum of ``xxhash64`` over
@@ -80,8 +81,13 @@ def run_query(spark, fn, sf_dir: str) -> dict:
     the JVM runs one query at a time, which a worker does."""
     from pyspark.sql import functions as F
 
+    from mapreduce_citation_spark.streaming import events
+
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     spark.catalog.clearCache()
+    # a base revision older than the helper has none to call
+    if hasattr(events, "drop_memory_sinks"):
+        events.drop_memory_sinks(spark)
     jobs0, t0 = dag.numTotalJobs(), time.perf_counter()
     df = fn(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()

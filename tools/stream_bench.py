@@ -88,6 +88,7 @@ def main(args: list[str]) -> int:
 
     from mapreduce_citation_spark.registry import all_specs
     from mapreduce_citation_spark.session import get_spark
+    from mapreduce_citation_spark.streaming.events import drop_memory_sinks
 
     spark = get_spark("stream-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -121,6 +122,7 @@ def main(args: list[str]) -> int:
                 # first committed r8 artifact for the multi-run
                 # families)
                 settle(len(col.events))
+            drop_memory_sinks(spark)  # the previous run's sink table
             mark = len(col.events)
             t0 = time.perf_counter()
             fn(spark, sf_dir).count()
